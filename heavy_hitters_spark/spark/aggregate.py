@@ -50,7 +50,7 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-from ..core.base import Sketch, pack_state, unpack_state
+from ..core.base import Sketch, merge_all, pack_state, unpack_state
 
 PARTIAL_SCHEMA = StructType(
     [
@@ -65,35 +65,7 @@ PARTIAL_SCHEMA = StructType(
 )
 
 
-def publish_state_file(side_dir: str, packed: bytes, ctx) -> None:
-    """Task-side half of the side-channel streaming merge: atomically
-    rename the packed state into the shared directory so the driver's
-    DirFold can fold it while sibling tasks are still running. Attempt
-    number in the name keeps retries/speculation collision-free (the
-    state is deterministic per partition; DirFold folds the first)."""
-    pid = ctx.partitionId() if ctx else 0
-    att = ctx.attemptNumber() if ctx else 0
-    tmp = os.path.join(side_dir, f".tmp_p{pid}_a{att}.bin")
-    with open(tmp, "wb") as f:
-        f.write(packed)
-    os.rename(tmp, os.path.join(side_dir, f"state_p{pid}_a{att}.bin"))
-
-
-def resolve_side_channel(df: DataFrame, side_channel: bool | None) -> bool:
-    """None -> True under a local[*] master (executors share the
-    driver's filesystem); on a cluster the side channel needs a shared
-    directory, so it stays opt-in there. ``SKETCH_SIDECH=0|1`` in the
-    environment overrides the default (kill-switch for A/B isolation);
-    an explicit ``side_channel=`` argument still wins over both."""
-    if side_channel is not None:
-        return side_channel
-    env = os.environ.get("SKETCH_SIDECH")
-    if env in ("0", "1"):
-        return env == "1"
-    return df.sparkSession.conf.get("spark.master", "").startswith("local")
-
-
-def _partial_fn(template_bytes: bytes, id_col: str, weight_col: str | None, side_dir: str | None = None):
+def _partial_fn(template_bytes: bytes, id_col: str, weight_col: str | None):
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from pyspark import TaskContext
 
@@ -115,9 +87,6 @@ def _partial_fn(template_bytes: bytes, id_col: str, weight_col: str | None, side
         raw = sk.to_bytes()
         state = pack_state_bytes(raw)  # ship packed; account raw (SPACE)
         ctx = TaskContext.get()
-        if side_dir is not None:
-            publish_state_file(side_dir, state, ctx)
-            state = b""
         yield pd.DataFrame(
             {
                 "part_id": [ctx.partitionId() if ctx else -1],
@@ -138,6 +107,7 @@ def _merge_group(pdf: pd.DataFrame) -> pd.DataFrame:
     from ..core.base import pack_state_bytes, unpack_state
 
     t0 = time.perf_counter()
+    pdf = pdf.sort_values("part_id", kind="stable")  # shuffle order varies run to run
     acc = unpack_state(pdf["state"].iloc[0])
     for blob in pdf["state"].iloc[1:]:
         acc = acc.merge(unpack_state(blob))
@@ -163,14 +133,11 @@ def partial_states(
     id_col: str = "id",
     weight_col: str | None = None,
     with_lineage: bool = True,
-    side_dir: str | None = None,
 ) -> DataFrame:
     """Stage 1: one serialized sketch-state row per input partition."""
     cols = [id_col] + ([weight_col] if weight_col else [])
     sel = df.select(*cols, F.input_file_name().alias("__file")) if with_lineage else df.select(*cols)
-    return sel.mapInPandas(
-        _partial_fn(pack_state(template), id_col, weight_col, side_dir=side_dir), PARTIAL_SCHEMA
-    )
+    return sel.mapInPandas(_partial_fn(pack_state(template), id_col, weight_col), PARTIAL_SCHEMA)
 
 
 WINDOWED_PARTIAL_SCHEMA = StructType(
@@ -241,7 +208,10 @@ def windowed_partial_states(
 
 
 def tree_merge(partials: DataFrame, fanin: int = 16, n_hint: int | None = None) -> tuple[Sketch, dict]:
-    """Stage 2: fan-in rounds until <= fanin rows, then driver fold.
+    """Stage 2: fan-in rounds until <= fanin rows, then a driver fold in
+    ``part_id`` order, so the same partials give the same state bytes
+    whatever order the tasks finish in (MisraGries, KLL, t-digest and
+    conservative CountMin merges are order-sensitive).
 
     Returns (merged sketch, aggregate metrics)."""
     cur = partials
@@ -254,7 +224,7 @@ def tree_merge(partials: DataFrame, fanin: int = 16, n_hint: int | None = None) 
             .applyInPandas(lambda pdf: _merge_group(pdf.drop(columns=["g"])), PARTIAL_SCHEMA)
         )
         n = groups
-    rows = cur.collect()
+    rows = sorted(cur.collect(), key=lambda r: r["part_id"])
     if not rows:
         raise ValueError("no partial states (empty input?)")
     acc = _driver_fold([r["state"] for r in rows])
@@ -267,109 +237,12 @@ def tree_merge(partials: DataFrame, fanin: int = 16, n_hint: int | None = None) 
     return acc, metrics
 
 
-class DirFold:
-    """Incremental driver-side fold over a side-channel directory.
-
-    Partial-build tasks (``fused._fused_fn(side_dir=...)``) atomically
-    rename their packed state into ``dir_path`` the moment their kernel
-    finishes; this watcher unpacks and left-folds each state WHILE the
-    remaining tasks are still running, so by job end the merge is
-    already done — the driver fold and the state transfer disappear
-    from the job's serial (Amdahl) tail. On a cluster the directory is
-    any shared filesystem (the same requirement as
-    ``build_sketch_checkpointed``'s durable partials); in local mode it
-    is a local tmp dir.
-
-    Deduplication: a file is ``state_p{partition}_a{attempt}.bin``; the
-    kernel is deterministic per partition, so retried/speculative
-    attempts write byte-identical states and only the first file per
-    partition is folded.
-
-    Fold order is STRICT PARTITION-ID order (round 6; ADVICE r05 #1):
-    arrival-order folding made order-sensitive sketch states
-    (MisraGries, KLL, TDigest, conservative CountMin) thread-timing
-    dependent run to run. Out-of-order arrivals buffer as raw bytes
-    and the contiguous prefix folds as it completes, so the merge still
-    overlaps the map stage (partitions complete roughly in waves and
-    partition 0 is in the first wave); the result is the deterministic
-    sequential left fold p0..pN for EVERY sketch class."""
-
-    POLL_S = 0.004
-
-    def __init__(self, dir_path: str) -> None:
-        import threading
-
-        self.dir = dir_path
-        self.acc: Sketch | None = None
-        self.done_parts: set[int] = set()
-        self._pending: dict[int, bytes] = {}  # arrived out of order
-        self._next_part = 0
-        self._stop = threading.Event()
-        self._err: BaseException | None = None
-        self._thread = threading.Thread(target=self._run, daemon=True)
-        self._thread.start()
-
-    def _scan_once(self) -> None:
-        for name in sorted(os.listdir(self.dir)):
-            if not (name.startswith("state_p") and name.endswith(".bin")):
-                continue
-            part = int(name[7:].split("_")[0])
-            if part in self.done_parts or part in self._pending:
-                continue
-            with open(os.path.join(self.dir, name), "rb") as f:
-                self._pending[part] = f.read()
-        # fold exactly the contiguous partition-id prefix that has
-        # arrived — deterministic sequential left fold p0, p1, ...
-        while self._next_part in self._pending:
-            sk = unpack_state(self._pending.pop(self._next_part))
-            self.acc = sk if self.acc is None else self.acc.merge(sk)
-            self.done_parts.add(self._next_part)
-            self._next_part += 1
-
-    def _run(self) -> None:
-        try:
-            while not self._stop.is_set():
-                self._scan_once()
-                self._stop.wait(self.POLL_S)
-            self._scan_once()  # final drain after the job completed
-        except BaseException as e:  # surfaced in finish()
-            self._err = e
-
-    def finish(self, expected_parts: set[int]) -> Sketch:
-        """Join the watcher and return the fold; raises if any expected
-        partition's state never arrived (a task yielded its metrics row
-        without its rename landing — should be impossible)."""
-        self._stop.set()
-        self._thread.join()
-        if self._err is not None:
-            raise self._err
-        missing = expected_parts - self.done_parts
-        if missing:
-            raise RuntimeError(f"side-channel states missing for partitions {sorted(missing)}")
-        if self.acc is None:
-            raise ValueError("no partial states (empty input?)")
-        return self.acc
-
-
 def _driver_fold(blobs: list) -> Sketch:
-    """Driver-side fold of <= fanin collected states as a THREADED
-    pairwise tree: zlib unpack and the numpy merge kernels both release
-    the GIL, so the fold overlaps across cores instead of running as
-    ~200 ms of serial per-job time (a pure Amdahl term in the N-vs-4N
-    scaling ratio). The tree shape is deterministic (adjacent pairs in
-    collect order), staying inside the documented merge-order
-    invariance classes like the distributed rounds above."""
-    from concurrent.futures import ThreadPoolExecutor
-
-    if len(blobs) == 1:
-        return unpack_state(blobs[0])
-    with ThreadPoolExecutor(max_workers=min(8, len(blobs))) as ex:
-        sks = list(ex.map(unpack_state, blobs))
-        while len(sks) > 1:
-            pairs = [(sks[i], sks[i + 1]) for i in range(0, len(sks) - 1, 2)]
-            rest = [sks[-1]] if len(sks) % 2 else []
-            sks = list(ex.map(lambda p: p[0].merge(p[1]), pairs)) + rest
-    return sks[0]
+    """Sequential left fold of the collected states, in the order given
+    (``tree_merge`` passes them in ``part_id`` order). A fixed fold
+    order keeps the order-sensitive merges byte-deterministic; at most
+    ``fanin`` states reach it, so it runs serially on the driver."""
+    return merge_all([unpack_state(b) for b in blobs])
 
 
 def build_sketch(
@@ -379,36 +252,11 @@ def build_sketch(
     weight_col: str | None = None,
     fanin: int = 16,
     with_lineage: bool = False,
-    side_channel: bool | None = None,
 ) -> tuple[Sketch, dict]:
     """End-to-end: partial build + tree merge. ``df`` must already carry
-    the uint32 id column (see spark.keys.key_id_col).
-
-    ``side_channel=None`` resolves to True under local[*] masters:
-    tasks publish their packed state via atomic rename and DirFold
-    merges them while the map stage runs, removing the collect+fold
-    serial tail (byte-identical result; see fused.build_token_sketch)."""
-    if resolve_side_channel(df, side_channel):
-        import shutil
-        import tempfile
-
-        side_dir = tempfile.mkdtemp(prefix="sketch_sidech_")
-        try:
-            partials = partial_states(df, template, id_col, weight_col, with_lineage, side_dir=side_dir)
-            fold = DirFold(side_dir)
-            rows = partials.collect()
-            if not rows:
-                fold.finish(set())  # raises "empty input"
-            sk = fold.finish({r["part_id"] for r in rows})
-            metrics = {
-                "n_rows": sum(r["n_rows"] for r in rows),
-                "n_updates": sum(r["n_updates"] for r in rows),
-                "wall_ms": sum(r["wall_ms"] for r in rows),
-                "n_partials": len(rows),
-            }
-            return sk, metrics
-        finally:
-            shutil.rmtree(side_dir, ignore_errors=True)
+    the uint32 id column (see spark.keys.key_id_col). The partial states
+    come back to the driver through ``collect`` and fold in partition
+    order (``tree_merge``)."""
     partials = partial_states(df, template, id_col, weight_col, with_lineage)
     return tree_merge(partials, fanin=fanin, n_hint=df.rdd.getNumPartitions())
 

@@ -3,8 +3,7 @@
 The naive plan (explode + xxhash64 in Catalyst, then mapInPandas over
 token ids) ships one Arrow row per TOKEN across the JVM->Python
 boundary — at ~250 tokens/doc that's 250x more rows than documents and
-the IPC dominates the build (measured: it saturates memory bandwidth at
-high core counts and kills scaling). This fused path ships one row per
+the IPC dominates the build. This fused path ships one row per
 DOCUMENT and does tokenization in pyarrow C kernels inside the worker:
 
   scan (column-pruned text)
@@ -12,7 +11,8 @@ DOCUMENT and does tokenization in pyarrow C kernels inside the worker:
        (all Arrow C) -> xxh64 only on NEW dictionary tokens (memoized
        token->id dict, Zipf vocab makes the hit rate ~100%)
     -> numpy sketch update on the id array
-    -> one serialized state row per partition
+    -> one packed state row per partition
+    -> collect + left fold in partition order (aggregate.tree_merge)
 
 The ids are the same xxhash64&mask32 ids as spark.keys.key_id_col, so
 fused-built sketches are interchangeable with explode-built ones
@@ -29,40 +29,17 @@ import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from ..core.base import Sketch, pack_state
 from .aggregate import PARTIAL_SCHEMA, tree_merge
 
 
-def _fused_fn(
-    template_bytes: bytes,
-    text_col: str,
-    split: str = " ",
-    blob_col: str | None = None,
-    side_dir: str | None = None,
-    path_col: str | None = None,
-):
-    """``blob_col``: when set, incoming rows carry pre-serialized Arrow
-    IPC streams (see ``pack_arrow_blobs``) instead of raw text; each
-    blob is decoded in Arrow C and fed to the same tokenize->sketch
-    loop. The JVM then serves a handful of opaque binary rows per
-    partition instead of converting ~10^5 string rows per build — the
-    per-row columnar->Arrow conversion overhead was measured at ~17 us
-    per row, a pure serving-side tax at high parallelism.
-
-    ``path_col``: when set, incoming rows carry PATHS to Arrow IPC
-    stream files (see ``materialize_arrow_files``); each task
-    memory-maps its file and iterates batches zero-copy, so the input
-    bytes never cross the JVM->Python socket at all — the JVM ships
-    one short string per task. This is the local-mode analog of
-    executors reading their own split from shared storage (and of
-    PySpark 4's Python Data Source API, where the scan itself runs in
-    the Python worker); measured motivation in BENCH/BASELINE.md: at
-    local[8] x 800k pages the workers spent up to 109 core-seconds per
-    pass BLOCKED on JVM blob serving in degraded host-bandwidth phases
-    (vs ~7 s clean), the single largest noise amplifier in the N-vs-4N
-    ratio."""
+def _fused_fn(template_bytes: bytes, text_col: str, split: str = " "):
+    """The per-partition kernel for ``mapInArrow``: splits ``text_col``
+    on ``split``, updates a fresh copy of the packed template with the
+    token ids and yields one ``PARTIAL_SCHEMA`` row holding the packed
+    state. With ``SKETCH_PROF_DIR`` set, each task also writes a JSON
+    record of its phase times (serve, kernel, to_bytes, pack) there."""
 
     def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         from pyspark import TaskContext
@@ -73,7 +50,7 @@ def _fused_fn(
 
         prof_dir = os.environ.get("SKETCH_PROF_DIR")
         prof = {"enter_epoch": time.time()} if prof_dir else None
-        t_serve = t_kernel = 0.0
+        t_serve = 0.0
 
         sk = unpack_state(template_bytes)
         t0 = time.perf_counter()
@@ -93,28 +70,7 @@ def _fused_fn(
         preagg_targets = [s for s in children if s.PREAGG_SAFE]
         raw_targets = [s for s in children if not s.PREAGG_SAFE]
 
-        def text_batches():
-            for b in batches:
-                if path_col is not None:
-                    for p in b.column(path_col).to_pylist():
-                        # zero-copy: batches are slices over the mapping
-                        # (tmpfs pages, no socket transfer, no copy); the
-                        # map must stay open while its batches are
-                        # consumed — each yielded batch is fully
-                        # processed before the generator resumes
-                        with pa.memory_map(p, "r") as mm:
-                            yield from pa.ipc.open_stream(mm)
-                elif blob_col is None:
-                    yield b
-                else:
-                    for blob in b.column(blob_col):
-                        # zero-copy: parse the IPC stream from the Arrow
-                        # buffer view (as_py() would copy the multi-MB
-                        # blob into Python bytes first)
-                        reader = pa.ipc.open_stream(pa.BufferReader(blob.as_buffer()))
-                        yield from reader
-
-        src = text_batches()
+        src = iter(batches)
         while True:
             tb0 = time.perf_counter()
             batch = next(src, None)
@@ -179,11 +135,6 @@ def _fused_fn(
         t_tb = time.perf_counter() - t0 - t_loop
         state = pack_state_bytes(raw)  # ship packed; account raw (SPACE)
         t_pk = time.perf_counter() - t0 - t_loop - t_tb
-        if side_dir is not None:
-            from .aggregate import publish_state_file
-
-            publish_state_file(side_dir, state, ctx)
-            state = b""
         if prof is not None:
             prof.update(
                 part=ctx.partitionId() if ctx else -1,
@@ -192,7 +143,7 @@ def _fused_fn(
                 kernel_s=round(t_loop - t_serve, 4),
                 to_bytes_s=round(t_tb, 4),
                 pack_s=round(t_pk, 4),
-                publish_s=round(time.perf_counter() - t0 - t_loop - t_tb - t_pk, 4),
+                publish_s=0.0,  # the state travels in the row below
                 exit_epoch=time.time(),
             )
             import json as _json
@@ -232,234 +183,13 @@ def build_token_sketch(
     text_col: str = "text",
     fanin: int = 64,
     n_hint: int | None = None,
-    blob_col: str | None = None,
-    side_channel: bool | None = None,
-    path_col: str | None = None,
 ) -> tuple[Sketch, dict]:
     """One-pass fused build over a text column; returns (sketch, metrics).
     Equivalent result to tokens(df) -> key_id_col -> build_sketch, at a
-    fraction of the JVM->Python transfer. With ``blob_col``, ``df`` is a
-    pre-packed blob table from ``pack_arrow_blobs`` (same sketch values
-    for all linear sketches; merge-shape classes unchanged). With
-    ``path_col``, ``df`` carries Arrow-IPC file paths from
-    ``materialize_arrow_files`` and each task memory-maps its file
-    (input bytes never cross the JVM->Python socket).
-
-    ``side_channel=None`` (default) resolves to True under a local[*]
-    master — executors share the driver's filesystem, so the streaming
-    DirFold merge (states published by atomic rename, folded while the
-    map stage runs) is strictly better than collect+fold. On a cluster
-    it stays False unless the caller opts in (requires a shared
-    filesystem; same requirement as build_sketch_checkpointed)."""
-    col = blob_col or path_col or text_col
-    from .aggregate import resolve_side_channel
-
-    if resolve_side_channel(df, side_channel):
-        return _build_side_channel(df, template, text_col, col, blob_col, path_col)
-    partials = df.select(col).mapInArrow(
-        _fused_fn(pack_state(template), text_col, blob_col=blob_col, path_col=path_col),
-        PARTIAL_SCHEMA,
-    )
+    fraction of the JVM->Python transfer. Each task ships one packed
+    state; ``tree_merge`` folds them in partition order, so the same
+    input and template give byte-equal states on every run."""
+    partials = df.select(text_col).mapInArrow(_fused_fn(pack_state(template), text_col), PARTIAL_SCHEMA)
     if n_hint is None:
         n_hint = df.rdd.getNumPartitions()
     return tree_merge(partials, fanin=fanin, n_hint=n_hint)
-
-
-def _build_side_channel(df, template, text_col, col, blob_col, path_col=None):
-    """Streaming-merge build: tasks publish their packed state through
-    an atomic file rename in a driver-visible directory and the driver
-    folds states AS THEY ARRIVE (aggregate.DirFold), overlapping the
-    entire merge with the map stage instead of paying collect+fold as a
-    serial tail after the last task. Requires a filesystem both driver
-    and executors can reach — free in local mode; on a cluster this is
-    the same shared-storage requirement as build_sketch_checkpointed's
-    durable partials (whose files double as a resume checkpoint)."""
-    import shutil
-    import tempfile
-
-    from .aggregate import DirFold
-
-    side_dir = tempfile.mkdtemp(prefix="sketch_sidech_")
-    try:
-        partials = df.select(col).mapInArrow(
-            _fused_fn(
-                pack_state(template), text_col, blob_col=blob_col,
-                side_dir=side_dir, path_col=path_col,
-            ),
-            PARTIAL_SCHEMA,
-        )
-        fold = DirFold(side_dir)
-        rows = partials.collect()
-        if not rows:
-            fold.finish(set())  # raises "empty input"
-        sk = fold.finish({r["part_id"] for r in rows})
-        metrics = {
-            "n_rows": sum(r["n_rows"] for r in rows),
-            "n_updates": sum(r["n_updates"] for r in rows),
-            "wall_ms": sum(r["wall_ms"] for r in rows),
-            "n_partials": len(rows),
-        }
-        return sk, metrics
-    finally:
-        shutil.rmtree(side_dir, ignore_errors=True)
-
-
-class TokenSketchBuilder:
-    """Prepared repeated build: analyze the plan ONCE, run it many
-    times (the micro-batch / scheduled-rebuild production shape).
-
-    ``build_token_sketch`` constructs a fresh DataFrame per call, so
-    every build re-pays driver-side analysis + task-closure setup —
-    measured ~0.35 s of pure per-job serial on this host (time from
-    action start to the first task entering the worker: 0.45 s cold
-    vs 0.09-0.12 s re-collecting the same DataFrame object, whose
-    analyzed/optimized plan Spark caches). For a one-shot build that
-    cost is irrelevant; for repeated builds over a stable input
-    (streaming micro-batches, per-window rebuilds, benchmarking) it is
-    a pure Amdahl term, so this builder keeps ONE partials DataFrame
-    with a FIXED side-channel directory and re-collects it per run.
-    Each run still unpacks a fresh sketch from the template bytes in
-    every task — runs are independent; states are byte-identical to
-    ``build_token_sketch`` (same kernel closure, pinned in
-    tests/test_fused.py)."""
-
-    def __init__(
-        self,
-        df: DataFrame,
-        template: Sketch,
-        text_col: str = "text",
-        fanin: int = 64,
-        n_hint: int | None = None,
-        blob_col: str | None = None,
-        side_channel: bool | None = None,
-        path_col: str | None = None,
-    ) -> None:
-        import tempfile
-
-        from .aggregate import resolve_side_channel
-
-        col = blob_col or path_col or text_col
-        self._fanin = fanin
-        self._n_hint = n_hint if n_hint is not None else df.rdd.getNumPartitions()
-        self._side = resolve_side_channel(df, side_channel)
-        self._side_dir = tempfile.mkdtemp(prefix="sketch_sidech_") if self._side else None
-        self._partials = df.select(col).mapInArrow(
-            _fused_fn(
-                pack_state(template), text_col, blob_col=blob_col,
-                side_dir=self._side_dir, path_col=path_col,
-            ),
-            PARTIAL_SCHEMA,
-        )
-
-    def run(self) -> tuple[Sketch, dict]:
-        from .aggregate import DirFold
-
-        if not self._side:
-            return tree_merge(self._partials, fanin=self._fanin, n_hint=self._n_hint)
-        for name in os.listdir(self._side_dir):
-            os.unlink(os.path.join(self._side_dir, name))
-        fold = DirFold(self._side_dir)
-        rows = self._partials.collect()
-        if not rows:
-            fold.finish(set())  # raises "empty input"
-        sk = fold.finish({r["part_id"] for r in rows})
-        metrics = {
-            "n_rows": sum(r["n_rows"] for r in rows),
-            "n_updates": sum(r["n_updates"] for r in rows),
-            "wall_ms": sum(r["wall_ms"] for r in rows),
-            "n_partials": len(rows),
-        }
-        return sk, metrics
-
-    def close(self) -> None:
-        import shutil
-
-        if self._side_dir is not None:
-            shutil.rmtree(self._side_dir, ignore_errors=True)
-            self._side_dir = None
-
-    def __enter__(self) -> "TokenSketchBuilder":
-        return self
-
-    def __exit__(self, *exc) -> None:
-        self.close()
-
-
-def pack_arrow_blobs(df: DataFrame, cols: list[str] | None = None) -> DataFrame:
-    """Pre-materialize the input as Arrow IPC stream blobs, one blob
-    per incoming Arrow batch, PARTITION-PRESERVING (mapInArrow is
-    per-partition, so every blob stays in its source partition and the
-    work distribution of a downstream build is unchanged).
-
-    Purpose: executor-storage input caching whose SERVING cost is a few
-    opaque binary rows per partition instead of a per-row
-    columnar->Arrow conversion on every pass — on a real cluster this
-    is the standard pattern of caching decoded scan output in its wire
-    format and letting the worker decode in Arrow C (zero-copy IPC)."""
-
-    def pack(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        import io
-
-        for b in batches:
-            sink = io.BytesIO()
-            with pa.ipc.new_stream(sink, b.schema) as w:
-                w.write_batch(b)
-            yield pa.RecordBatch.from_pydict({"blob": [sink.getvalue()]})
-
-    sel = df.select(*cols) if cols else df
-    return sel.mapInArrow(pack, "blob binary")
-
-
-def materialize_arrow_files(
-    df: DataFrame, out_dir: str, cols: list[str] | None = None
-) -> list[str]:
-    """Write each partition's batches as ONE Arrow IPC stream file under
-    ``out_dir`` (atomic tmp+rename, partition-preserving — one file per
-    input partition, batches in order). Returns the file paths sorted by
-    partition id. Empty partitions produce no file.
-
-    Pairs with ``path_col`` builds: point ``out_dir`` at RAM-backed
-    storage (tmpfs — unevictable without swap, same rationale as the
-    SPARK_GRAFT_LOCAL_DIR hook) and downstream timed builds read the
-    input via per-task memory maps instead of JVM->Python Arrow
-    serving. On a cluster the analog is a shared-storage staging dir —
-    the same requirement as build_sketch_checkpointed's durable
-    partials; or skip staging entirely and scan with a Python-side
-    reader (PySpark 4 Python Data Source API)."""
-
-    def write(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        from pyspark import TaskContext
-
-        ctx = TaskContext.get()
-        pid = ctx.partitionId() if ctx else 0
-        att = ctx.attemptNumber() if ctx else 0
-        tmp = os.path.join(out_dir, f".tmp_p{pid}_a{att}")
-        writer = None
-        n = 0
-        with open(tmp, "wb") as f:
-            for b in batches:
-                if writer is None:
-                    writer = pa.ipc.new_stream(f, b.schema)
-                writer.write_batch(b)
-                n += b.num_rows
-            if writer is not None:
-                writer.close()
-        if writer is None:  # empty partition: no schema, no file
-            os.unlink(tmp)
-            return
-        final = os.path.join(out_dir, f"part_{pid:05d}.arrow")
-        os.rename(tmp, final)
-        yield pa.RecordBatch.from_pydict({"part_id": [pid], "path": [final]})
-
-    sel = df.select(*cols) if cols else df
-    rows = sel.mapInArrow(write, "part_id long, path string").collect()
-    return [r["path"] for r in sorted(rows, key=lambda r: r["part_id"])]
-
-
-def paths_df(spark, paths: list[str]) -> DataFrame:
-    """One-row-per-slice paths DataFrame: exactly one task per file in
-    a downstream ``path_col`` build (sc.parallelize with an explicit
-    slice count — createDataFrame of a local collection costs ~200 ms
-    PER SLICE in this sandbox, see functions/multimodal.py)."""
-    rdd = spark.sparkContext.parallelize([(p,) for p in paths], max(len(paths), 1))
-    return spark.createDataFrame(rdd, "path string")

@@ -22,16 +22,15 @@ def get_spark(
     shuffle_partitions: int | None = None,
     arrow_batch: int = 8192,  # small batches keep worker temps cache-resident
 ) -> SparkSession:
-    """Build (or get) the session.
+    """Build (or get) the session. Without ``master``, the session runs
+    on ``local[$SPARK_GRAFT_CPUS]``, or on ``local[*]`` when that is unset.
 
     NOTE: ``getOrCreate`` only applies JVM-launch options (the GC flags
     below, driver memory) when THIS call actually starts the JVM. If any
     SparkSession already exists in the process, those flags are silently
-    ignored and the benchmarked configuration depends on call order —
-    the bench runs every measured configuration in a FRESH subprocess
-    for exactly this reason (bench.py build_run_subprocess)."""
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    master = master or f"local[{cpus}]"
+    ignored, so a measured configuration must start in a fresh process."""
+    cpus = os.environ.get("SPARK_GRAFT_CPUS")
+    master = master or (f"local[{cpus}]" if cpus else "local[*]")
     try:
         n_threads = int(master.split("[")[1].rstrip("]")) if "[" in master else 32
     except ValueError:  # local[*] and cluster masters
@@ -52,29 +51,14 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         # throughput collector: Arrow serialization allocates heavily and
         # G1's pause pattern penalizes many concurrent local task threads.
-        # ParallelGCThreads=8 for NARROW sessions only (n_threads <= 8):
-        # the default (~5/8 of vCPUs = ~23 threads here) makes GC bursts
-        # oversubscribe the box (16 busy cores + 23 GC threads at
-        # local[8]), stalling Python workers mid-kernel — capping it
-        # tightened local[8] build walls in interleaved A/B (4.2-6.3s
-        # spread -> 4.0-4.8s). At WIDE sessions (local[32]) the box is
-        # already saturated and more GC threads = shorter pauses — the
-        # cap measured ~1.3x SLOWER there (media_features 0.9 -> 1.3s),
-        # so wide sessions keep the JVM default. SPARK_GRAFT_JAVA_OPTS
-        # appends extra flags (A/B tuning in fresh subprocesses — JVM
-        # options only apply when THIS call launches the JVM;
-        # getOrCreate on an existing session ignores them, see docstring)
+        # Eight GC threads keep GC bursts from oversubscribing the cores
+        # the Python workers run on. SPARK_GRAFT_JAVA_OPTS is appended
+        # last, and HotSpot keeps the last value of a repeated flag, so a
+        # ParallelGCThreads given there wins. JVM options only apply when
+        # THIS call launches the JVM (see docstring).
         .config(
             "spark.driver.extraJavaOptions",
-            ("-XX:+UseParallelGC "
-             # an explicit ParallelGCThreads in SPARK_GRAFT_JAVA_OPTS
-             # suppresses the built-in cap so A/B harnesses can measure
-             # a true uncapped baseline
-             + ("-XX:ParallelGCThreads=8 "
-                if n_threads <= 8
-                and "ParallelGCThreads"
-                not in os.environ.get("SPARK_GRAFT_JAVA_OPTS", "")
-                else "")
+            ("-XX:+UseParallelGC -XX:ParallelGCThreads=8 "
              + os.environ.get("SPARK_GRAFT_JAVA_OPTS", "")).strip(),
         )
         # serve cached input without per-read lz4 decode: the decompress

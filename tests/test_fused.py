@@ -33,81 +33,6 @@ def test_fused_partition_invariance(spark):
     assert a.to_bytes() == b.to_bytes()
 
 
-def test_blob_input_build_matches_text_build(spark):
-    """pack_arrow_blobs + blob_col build must produce the IDENTICAL
-    merged sketch as the plain text-column build (linear sketches are
-    bit-equal; doc/update counts equal) — the blob layer only changes
-    the wire representation of the input, never the stream."""
-    import numpy as np
-
-    from heavy_hitters_spark.core import CountMin, HLL, MultiSketch, SeedStream
-    from heavy_hitters_spark.spark.fused import build_token_sketch, pack_arrow_blobs
-
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet").select("text").repartition(4)
-
-    def tmpl():
-        return MultiSketch({
-            "cm": CountMin(width=1 << 12, depth=3, seed_stream=SeedStream(1, 2)),
-            "hll": HLL(p=12),
-        })
-
-    sk_t, m_t = build_token_sketch(docs, tmpl(), text_col="text", n_hint=4)
-    blobs = pack_arrow_blobs(docs, ["text"])
-    assert blobs.rdd.getNumPartitions() == 4  # partition-preserving
-    sk_b, m_b = build_token_sketch(blobs, tmpl(), text_col="text", n_hint=4, blob_col="blob")
-    assert m_t["n_rows"] == m_b["n_rows"]
-    assert m_t["n_updates"] == m_b["n_updates"]
-    assert np.array_equal(sk_t["cm"].table, sk_b["cm"].table)
-    assert float(sk_t["hll"].estimate()) == float(sk_b["hll"].estimate())
-
-
-def test_side_channel_build_matches_collect_build(spark):
-    """side_channel=True (DirFold streaming merge: tasks publish states
-    via atomic rename, driver folds during the job) must produce the
-    byte-identical sketch and identical metrics as the collect path —
-    the side channel only changes WHERE the states travel and WHEN the
-    fold runs, never the folded values."""
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet").repartition(5)
-    a, ma = build_token_sketch(docs, _tmpl(), text_col="text")
-    b, mb = build_token_sketch(docs, _tmpl(), text_col="text", side_channel=True)
-    assert a.to_bytes() == b.to_bytes()
-    assert (ma["n_rows"], ma["n_updates"], ma["n_partials"]) == (
-        mb["n_rows"], mb["n_updates"], mb["n_partials"])
-
-
-def test_build_sketch_side_channel_matches_collect(spark):
-    """The generic (non-fused) build_sketch must also produce the
-    byte-identical sketch through the DirFold side channel."""
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    ids = tokens(docs).withColumn("id", key_id_col("token")).repartition(5)
-    a, ma = build_sketch(ids, _tmpl(), id_col="id", side_channel=False)
-    b, mb = build_sketch(ids, _tmpl(), id_col="id", side_channel=True)
-    assert a.to_bytes() == b.to_bytes()
-    assert (ma["n_rows"], ma["n_updates"]) == (mb["n_rows"], mb["n_updates"])
-
-
-def test_dirfold_missing_partition_raises(tmp_path):
-    """DirFold.finish must fail loudly if an expected partition's state
-    file never arrived, and dedupe retried attempts by partition id."""
-    import pytest as _pytest
-
-    from heavy_hitters_spark.core.base import pack_state
-    from heavy_hitters_spark.spark.aggregate import DirFold
-
-    cm = CountMin(width=1 << 8, depth=3, seed_stream=SeedStream(1, 2))
-    cm.update_batch(np.arange(100, dtype=np.uint64))
-    blob = pack_state(cm)
-    (tmp_path / "state_p0_a0.bin").write_bytes(blob)
-    (tmp_path / "state_p0_a1.bin").write_bytes(blob)  # retry: must not double-count
-    fold = DirFold(str(tmp_path))
-    sk = fold.finish({0})
-    assert np.array_equal(sk.table, cm.table)  # folded once, not twice
-
-    fold2 = DirFold(str(tmp_path))
-    with _pytest.raises(RuntimeError, match="missing for partitions"):
-        fold2.finish({0, 3})
-
-
 def test_fused_preagg_routing_mixed_template(spark):
     """The map-side duplicate collapse (PREAGG_SAFE routing) must leave
     every sketch's SEMANTICS intact when a template mixes safe and
@@ -192,98 +117,42 @@ def test_raw_path_empty_filter_is_slot_based(monkeypatch):
     assert kll.n == 3
 
 
-def test_prepared_builder_matches_one_shot(spark):
-    """TokenSketchBuilder (plan analyzed once, re-collected per run)
-    must produce the byte-identical sketch and metrics as the one-shot
-    build_token_sketch, and successive runs must be independent (equal
-    bytes run-to-run — each task unpacks a fresh template)."""
-    from heavy_hitters_spark.spark.fused import TokenSketchBuilder
+def test_build_is_deterministic_partition_order_fold(spark):
+    """Same input and template give byte-equal states run to run, and
+    those states are the left fold p0..p4 of the per-partition kernel
+    outputs — MisraGries (small k) and KLL merges are order-sensitive,
+    so any other fold order or shape shows up in the bytes."""
+    import pyarrow as pa
 
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet").repartition(5)
-    one, m1 = build_token_sketch(docs, _tmpl(), text_col="text")
-    with TokenSketchBuilder(docs, _tmpl(), text_col="text") as b:
-        r1, mr1 = b.run()
-        r2, mr2 = b.run()
-    assert r1.to_bytes() == one.to_bytes()
-    assert r2.to_bytes() == one.to_bytes()
-    assert (mr1["n_rows"], mr1["n_updates"]) == (m1["n_rows"], m1["n_updates"])
-    assert (mr2["n_rows"], mr2["n_updates"]) == (m1["n_rows"], m1["n_updates"])
-
-
-def test_prepared_builder_collect_path(spark):
-    """side_channel=False builder goes through tree_merge and must
-    agree byte-for-byte too."""
-    from heavy_hitters_spark.spark.fused import TokenSketchBuilder
-
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet").repartition(3)
-    one, _ = build_token_sketch(docs, _tmpl(), text_col="text", side_channel=False)
-    with TokenSketchBuilder(docs, _tmpl(), text_col="text", side_channel=False) as b:
-        r1, _m = b.run()
-    assert r1.to_bytes() == one.to_bytes()
-
-
-def test_mmap_input_build_matches_text_build(spark, tmp_path):
-    """materialize_arrow_files + path_col build must produce the
-    IDENTICAL merged sketch as the plain text-column build — the
-    side-file layer only changes where tasks READ the input from
-    (memory-mapped Arrow IPC files instead of JVM->Python serving),
-    never the stream. One file per non-empty partition, in partition
-    order; empty partitions produce no file."""
-    import numpy as np
-
-    from heavy_hitters_spark.core import CountMin, HLL, MultiSketch, SeedStream
-    from heavy_hitters_spark.spark.fused import (
-        build_token_sketch,
-        materialize_arrow_files,
-        paths_df,
-    )
-
-    docs = (
-        spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-        .select("text")
-        .repartition(4)
-    )
+    from heavy_hitters_spark.core import KLL, MisraGries
+    from heavy_hitters_spark.core.base import merge_all, pack_state, unpack_state
+    from heavy_hitters_spark.spark.fused import _fused_fn
 
     def tmpl():
         return MultiSketch({
-            "cm": CountMin(width=1 << 12, depth=3, seed_stream=SeedStream(1, 2)),
-            "hll": HLL(p=12),
+            "cm": CountMin(width=1 << 12, depth=5, seed_stream=SeedStream(1, 2)),
+            "mg": MisraGries(k=16),
+            "kll": KLL(k=200, seed=7),
         })
 
-    sk_t, m_t = build_token_sketch(docs, tmpl(), text_col="text", n_hint=4)
-    paths = materialize_arrow_files(docs, str(tmp_path), ["text"])
-    assert len(paths) == 4 and paths == sorted(paths)  # partition order
-    pdf = paths_df(spark, paths)
-    assert pdf.rdd.getNumPartitions() == 4  # one file per task
-    sk_p, m_p = build_token_sketch(pdf, tmpl(), text_col="text", n_hint=4, path_col="path")
-    assert m_t["n_rows"] == m_p["n_rows"]
-    assert m_t["n_updates"] == m_p["n_updates"]
-    assert np.array_equal(sk_t["cm"].table, sk_p["cm"].table)
-    assert float(sk_t["hll"].estimate()) == float(sk_p["hll"].estimate())
+    rng = np.random.default_rng(5)
+    vocab = np.array([f"w{i}" for i in range(300)])
+    texts = [" ".join(vocab[rng.zipf(1.3, 60) % 300]) for _ in range(500)]
+    docs = spark.createDataFrame([(t,) for t in texts], "text string").repartition(5)
+    a, ma = build_token_sketch(docs, tmpl(), text_col="text")
+    b, _ = build_token_sketch(docs, tmpl(), text_col="text")
+    assert ma["n_partials"] == 5
+    assert a.to_bytes() == b.to_bytes()
 
-
-def test_materialize_arrow_files_empty_partition(spark, tmp_path):
-    """A partition with no rows yields no side file (no schema to
-    write); the build over the remaining files still covers every row
-    exactly once."""
-    from heavy_hitters_spark.core import CountMin, SeedStream
-    from heavy_hitters_spark.spark.fused import (
-        build_token_sketch,
-        materialize_arrow_files,
-        paths_df,
-    )
-
-    docs = spark.createDataFrame([("a b c",), ("a d",)], "text string")
-    # range-partition 2 rows into 8 partitions -> >= 6 empty ones
-    docs8 = docs.repartition(8)
-    paths = materialize_arrow_files(docs8, str(tmp_path), ["text"])
-    assert 1 <= len(paths) <= 2
-    sk, m = build_token_sketch(
-        paths_df(spark, paths),
-        CountMin(width=1 << 10, depth=3, seed_stream=SeedStream(1, 2)),
-        text_col="text",
-        path_col="path",
-        n_hint=len(paths),
-    )
-    assert m["n_rows"] == 2
-    assert m["n_updates"] == 5
+    # each partition is one Arrow batch (100 docs < the 8192-row batch)
+    parts = docs.rdd.glom().collect()
+    fn = _fused_fn(pack_state(tmpl()), "text")
+    states = []
+    for rows in parts:
+        (out,) = list(fn(iter([pa.RecordBatch.from_pydict({"text": [r.text for r in rows]})])))
+        states.append(out.column("state")[0].as_py())
+    in_order = merge_all([unpack_state(s) for s in states])
+    assert a.to_bytes() == in_order.to_bytes()
+    # the fixture can tell fold orders apart
+    reversed_fold = merge_all([unpack_state(s) for s in reversed(states)])
+    assert reversed_fold.to_bytes() != in_order.to_bytes()

@@ -174,19 +174,16 @@ def test_near_dup_groups_fallback_matches_fast_path(spark, rng, monkeypatch):
     assert (1000, 0) in fast and (2000, 0) in fast
 
 
-def test_dirfold_folds_in_partition_order(tmp_path):
-    """DirFold must produce the deterministic sequential left fold
-    p0..pN regardless of arrival order (ADVICE r05 #1: arrival-order
-    folding made order-sensitive sketch states thread-timing
-    dependent). Scrambled writes of MisraGries states — an
-    order-SENSITIVE merge — must equal the in-order fold exactly."""
-    import time
-
+def test_tree_merge_folds_in_partition_order(spark):
+    """tree_merge must fold the collected partials in part_id order,
+    whatever order they arrive in, so order-sensitive states come out
+    deterministic. MisraGries(k=4) rows in a scrambled part_id order
+    must equal the in-order left fold byte for byte."""
     import numpy as np
 
     from heavy_hitters_spark.core import MisraGries
     from heavy_hitters_spark.core.base import pack_state, unpack_state
-    from heavy_hitters_spark.spark.aggregate import DirFold
+    from heavy_hitters_spark.spark.aggregate import PARTIAL_SCHEMA, tree_merge
 
     rng = np.random.default_rng(3)
     blobs = []
@@ -194,17 +191,25 @@ def test_dirfold_folds_in_partition_order(tmp_path):
         mg = MisraGries(k=4)  # tiny k forces decrements -> order matters
         mg.update_batch(rng.integers(0, 50, size=400, dtype=np.uint64))
         blobs.append(pack_state(mg))  # snapshot BEFORE any merge mutates
-    ref = unpack_state(blobs[0])
-    for b in blobs[1:]:
-        ref = ref.merge(unpack_state(b))
 
-    d = tmp_path / "side"
-    d.mkdir()
-    fold = DirFold(str(d))
-    for p in [3, 0, 5, 1, 4, 2]:  # adversarial arrival order
-        tmp = d / f".tmp_{p}"
-        tmp.write_bytes(blobs[p])
-        tmp.rename(d / f"state_p{p}_a0.bin")
-        time.sleep(0.02)
-    got = fold.finish(set(range(6)))
+    def fold(ps):
+        acc = unpack_state(blobs[ps[0]])
+        for p in ps[1:]:
+            acc = acc.merge(unpack_state(blobs[p]))
+        return acc
+
+    ref = fold(range(6))
+    order = [3, 0, 5, 1, 4, 2]  # adversarial arrival order
+    rows = [(p, blobs[p], 400, 400, 0.0, 0, "") for p in order]
+    partials = spark.createDataFrame(rows, PARTIAL_SCHEMA)
+    assert [r["part_id"] for r in partials.collect()] == order
+    got, m = tree_merge(partials, fanin=16, n_hint=len(order))
+    assert m["n_partials"] == 6
     assert got.to_bytes() == ref.to_bytes()
+
+    # one fan-in round (groups part_id % 2) folds each group in part_id
+    # order too: (p0 p2 p4) then (p1 p3 p5)
+    ref2 = fold([0, 2, 4]).merge(fold([1, 3, 5]))
+    got2, m2 = tree_merge(partials, fanin=3, n_hint=len(order))
+    assert m2["n_partials"] == 2
+    assert got2.to_bytes() == ref2.to_bytes()

@@ -129,25 +129,3 @@ def test_driver_side_key_parity(spark):
     rows = df.withColumn("id", key_id_col("token")).collect()
     for r in rows:
         assert key_id(r["token"]) == r["id"]
-
-
-def test_side_channel_env_killswitch(spark, ids_df, monkeypatch):
-    """SKETCH_SIDECH=0|1 overrides the local-master default (A/B
-    isolation hook, tools/exp_sidech_query.py); an explicit argument
-    still wins over the environment."""
-    from heavy_hitters_spark.spark.aggregate import resolve_side_channel
-
-    monkeypatch.delenv("SKETCH_SIDECH", raising=False)
-    assert resolve_side_channel(ids_df, None) is True  # local master
-    monkeypatch.setenv("SKETCH_SIDECH", "0")
-    assert resolve_side_channel(ids_df, None) is False
-    assert resolve_side_channel(ids_df, True) is True  # arg beats env
-    monkeypatch.setenv("SKETCH_SIDECH", "1")
-    assert resolve_side_channel(ids_df, None) is True
-    assert resolve_side_channel(ids_df, False) is False
-    # both routes produce byte-identical states
-    monkeypatch.setenv("SKETCH_SIDECH", "0")
-    sk_off, _ = build_sketch(ids_df.repartition(8), _tmpl(), id_col="id")
-    monkeypatch.setenv("SKETCH_SIDECH", "1")
-    sk_on, _ = build_sketch(ids_df.repartition(8), _tmpl(), id_col="id")
-    assert sk_off.to_bytes() == sk_on.to_bytes()
