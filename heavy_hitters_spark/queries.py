@@ -107,7 +107,7 @@ def topk_tokens(spark: SparkSession, sf_dir: str, k: int = 20, kc: int = 4096) -
 
     The MG pass runs on the FUSED build path (spark/fused.py: one Arrow
     row per document, tokenize/dictionary-encode in Arrow C) — ~250x
-    less JVM->Python transfer than exploding tokens through mapInPandas.
+    less JVM->Python transfer than exploding tokens into partial_states.
     The exact rescoring pass is pure Catalyst (explode + broadcast join
     + groupBy)."""
     mg, _ = build_token_sketch(_docs(spark, sf_dir), MisraGries(k=kc))

@@ -6,15 +6,19 @@ custom partial state between the map and reduce sides, so the two-stage
 shape is explicit here — and it is *better* at scale because each stage
 is a plain DataFrame with checkpointable rows:
 
-  stage 1 (partial):  mapInPandas over the input partitions; each task
+  stage 1 (partial):  mapInArrow over the input partitions; each task
       folds its Arrow batches into ONE sketch state (numpy kernels,
       zero per-row Python) and emits a single serialized-state row with
       lineage (partition id, input files, row count, wall time)
   stage 2 (merge):    iterative fan-in rounds — groupBy(pid % g) +
-      applyInPandas merging each group to one row — until <= fanin rows
+      applyInArrow merging each group to one row — until <= fanin rows
       remain, then a driver-side fold. This is the treeAggregate
       pattern expressed on DataFrames so intermediate rounds are
       inspectable and durable.
+
+Every stage (and the fused kernel in spark.fused) emits its rows
+through ``state_row`` in the Arrow form of ``PARTIAL_SCHEMA``, so the
+state row format is decided here alone.
 
 All sketches here merge associatively (linear tables / lattice maxes /
 bound-preserving summaries), so the merge-tree shape never changes the
@@ -37,9 +41,12 @@ import os
 import time
 from collections.abc import Callable, Iterator
 
-import pandas as pd
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import (
     BinaryType,
     DoubleType,
@@ -50,6 +57,7 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from ..core import base
 from ..core.base import Sketch, merge_all, pack_state, unpack_state
 
 PARTIAL_SCHEMA = StructType(
@@ -63,68 +71,84 @@ PARTIAL_SCHEMA = StructType(
         StructField("files", StringType()),
     ]
 )
+WINDOWED_PARTIAL_SCHEMA = StructType(
+    [*PARTIAL_SCHEMA.fields, StructField("window_start", TimestampType())]
+)
+PARTIAL_ARROW = to_arrow_schema(PARTIAL_SCHEMA)
+WINDOWED_PARTIAL_ARROW = to_arrow_schema(WINDOWED_PARTIAL_SCHEMA)
+
+
+def state_row(raw: bytes, part_id: int, n_rows: int, n_updates: int, wall_ms: float, files: str = "") -> dict:
+    """Makes the one ``PARTIAL_SCHEMA`` row every stage emits: it
+    ships the raw state packed and accounts its raw size (SPACE)."""
+    return {
+        "part_id": part_id,
+        "state": base.pack_state_bytes(raw),
+        "n_rows": n_rows,
+        "n_updates": n_updates,
+        "wall_ms": wall_ms,
+        "state_bytes": len(raw),
+        "files": files,
+    }
+
+
+def task_part_id() -> int:
+    """Partition id of the running Spark task (-1 outside a task)."""
+    from pyspark import TaskContext
+
+    ctx = TaskContext.get()
+    return ctx.partitionId() if ctx else -1
+
+
+def _update(sk: Sketch, batch: pa.RecordBatch, id_col: str, weight_col: str | None) -> int:
+    """Fold one batch into ``sk``; returns its update count."""
+    ids = batch.column(id_col).to_numpy(zero_copy_only=False)
+    w = batch.column(weight_col).to_numpy(zero_copy_only=False) if weight_col else None
+    sk.update_batch(ids, w)
+    return len(ids) if w is None else int(abs(w).sum())
 
 
 def _partial_fn(template_bytes: bytes, id_col: str, weight_col: str | None):
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pyspark import TaskContext
-
+    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         from ..core import memtune  # noqa: F401  (mallopt inside the worker)
-        from ..core.base import pack_state_bytes, unpack_state
 
         sk = unpack_state(template_bytes)
         t0 = time.perf_counter()
         n_rows = n_upd = 0
         files: set[str] = set()
-        for pdf in batches:
-            ids = pdf[id_col].to_numpy()
-            w = pdf[weight_col].to_numpy() if weight_col else None
-            if "__file" in pdf.columns and len(pdf):
-                files.update(pdf["__file"].unique().tolist())
-            sk.update_batch(ids, w)
-            n_rows += len(pdf)
-            n_upd += len(ids) if w is None else int(abs(w).sum())
-        raw = sk.to_bytes()
-        state = pack_state_bytes(raw)  # ship packed; account raw (SPACE)
-        ctx = TaskContext.get()
-        yield pd.DataFrame(
-            {
-                "part_id": [ctx.partitionId() if ctx else -1],
-                "state": [state],
-                "n_rows": [n_rows],
-                "n_updates": [n_upd],
-                "wall_ms": [(time.perf_counter() - t0) * 1000.0],
-                "state_bytes": [len(raw)],
-                "files": [",".join(sorted(files))],
-            }
+        for batch in batches:
+            if "__file" in batch.schema.names and batch.num_rows:
+                files.update(pc.unique(batch.column("__file")).to_pylist())
+            n_upd += _update(sk, batch, id_col, weight_col)
+            n_rows += batch.num_rows
+        row = state_row(
+            sk.to_bytes(), task_part_id(), n_rows, n_upd,
+            (time.perf_counter() - t0) * 1000.0, ",".join(sorted(files)),
         )
+        yield pa.RecordBatch.from_pylist([row], schema=PARTIAL_ARROW)
 
     return fn
 
 
-def _merge_group(pdf: pd.DataFrame) -> pd.DataFrame:
+def _merge_group(t: pa.Table) -> pa.Table:
     from ..core import memtune  # noqa: F401
-    from ..core.base import pack_state_bytes, unpack_state
 
     t0 = time.perf_counter()
-    pdf = pdf.sort_values("part_id", kind="stable")  # shuffle order varies run to run
-    acc = unpack_state(pdf["state"].iloc[0])
-    for blob in pdf["state"].iloc[1:]:
+    t = t.sort_by("part_id")  # stable; shuffle order varies run to run
+    blobs = t.column("state").to_pylist()
+    acc = unpack_state(blobs[0])
+    for blob in blobs[1:]:
         acc = acc.merge(unpack_state(blob))
-    raw = acc.to_bytes()
-    state = pack_state_bytes(raw)
-    files = ",".join(sorted({f for f in pdf["files"] if f}))[:65536]
-    return pd.DataFrame(
-        {
-            "part_id": [int(pdf["part_id"].min())],
-            "state": [state],
-            "n_rows": [int(pdf["n_rows"].sum())],
-            "n_updates": [int(pdf["n_updates"].sum())],
-            "wall_ms": [float(pdf["wall_ms"].sum()) + (time.perf_counter() - t0) * 1000.0],
-            "state_bytes": [len(raw)],
-            "files": [files],
-        }
+    files = ",".join(sorted({f for f in t.column("files").to_pylist() if f}))[:65536]
+    row = state_row(
+        acc.to_bytes(),
+        pc.min(t.column("part_id")).as_py(),
+        pc.sum(t.column("n_rows")).as_py(),
+        pc.sum(t.column("n_updates")).as_py(),
+        pc.sum(t.column("wall_ms")).as_py() + (time.perf_counter() - t0) * 1000.0,
+        files,
     )
+    return pa.Table.from_pylist([row], schema=PARTIAL_ARROW)
 
 
 def partial_states(
@@ -137,54 +161,37 @@ def partial_states(
     """Stage 1: one serialized sketch-state row per input partition."""
     cols = [id_col] + ([weight_col] if weight_col else [])
     sel = df.select(*cols, F.input_file_name().alias("__file")) if with_lineage else df.select(*cols)
-    return sel.mapInPandas(_partial_fn(pack_state(template), id_col, weight_col), PARTIAL_SCHEMA)
-
-
-WINDOWED_PARTIAL_SCHEMA = StructType(
-    [*PARTIAL_SCHEMA.fields, StructField("window_start", TimestampType())]
-)
+    return sel.mapInArrow(_partial_fn(pack_state(template), id_col, weight_col), PARTIAL_SCHEMA)
 
 
 def _windowed_partial_fn(template_bytes: bytes, id_col: str, weight_col: str | None):
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pyspark import TaskContext
-
+    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         from ..core import memtune  # noqa: F401
-        from ..core.base import pack_state_bytes, unpack_state
 
         t0 = time.perf_counter()
-        sketches: dict = {}  # window_start -> [sketch, n_rows, n_updates]
-        for pdf in batches:
-            for w, sub in pdf.groupby("window_start", sort=False):
+        sketches: dict = {}  # window_start (epoch us) -> [sketch, n_rows, n_updates]
+        for batch in batches:
+            ws = batch.column("window_start")
+            if ws.null_count:  # null event times belong to no window
+                batch = batch.filter(pc.is_valid(ws))
+            # group on the int64 epoch microseconds: they round-trip
+            # into the output timestamp column unchanged
+            keys = batch.column("window_start").cast(pa.int64()).to_numpy()
+            for w in np.unique(keys).tolist():
                 ent = sketches.get(w)
                 if ent is None:
                     ent = sketches[w] = [unpack_state(template_bytes), 0, 0]
-                ids = sub[id_col].to_numpy()
-                wts = sub[weight_col].to_numpy() if weight_col else None
-                ent[0].update_batch(ids, wts)
-                ent[1] += len(sub)
-                ent[2] += len(ids) if wts is None else int(abs(wts).sum())
-        ctx = TaskContext.get()
-        pid = ctx.partitionId() if ctx else -1
-        wall = (time.perf_counter() - t0) * 1000.0
-        rows = []
-        for w, (sk, n_rows, n_upd) in sketches.items():
-            raw = sk.to_bytes()
-            state = pack_state_bytes(raw)
-            rows.append(
-                {
-                    "part_id": pid,
-                    "state": state,
-                    "n_rows": n_rows,
-                    "n_updates": n_upd,
-                    "wall_ms": wall / max(1, len(sketches)),
-                    "state_bytes": len(raw),
-                    "files": "",
-                    "window_start": w,
-                }
-            )
+                sub = batch.filter(pa.array(keys == w))
+                ent[2] += _update(ent[0], sub, id_col, weight_col)
+                ent[1] += sub.num_rows
+        pid = task_part_id()
+        wall = (time.perf_counter() - t0) * 1000.0 / max(1, len(sketches))
+        rows = [
+            {**state_row(sk.to_bytes(), pid, n_rows, n_upd, wall), "window_start": w}
+            for w, (sk, n_rows, n_upd) in sketches.items()
+        ]
         if rows:
-            yield pd.DataFrame(rows)
+            yield pa.RecordBatch.from_pylist(rows, schema=WINDOWED_PARTIAL_ARROW)
 
     return fn
 
@@ -201,7 +208,7 @@ def windowed_partial_states(
     bounded — hours/days — so state stays small). No shuffle, no
     per-window rescan of the input."""
     cols = ["window_start", id_col] + ([weight_col] if weight_col else [])
-    return df.select(*cols).mapInPandas(
+    return df.select(*cols).mapInArrow(
         _windowed_partial_fn(pack_state(template), id_col, weight_col),
         WINDOWED_PARTIAL_SCHEMA,
     )
@@ -221,7 +228,7 @@ def tree_merge(partials: DataFrame, fanin: int = 16, n_hint: int | None = None) 
         cur = (
             cur.withColumn("g", F.col("part_id") % groups)
             .groupBy("g")
-            .applyInPandas(lambda pdf: _merge_group(pdf.drop(columns=["g"])), PARTIAL_SCHEMA)
+            .applyInArrow(_merge_group, PARTIAL_SCHEMA)
         )
         n = groups
     rows = sorted(cur.collect(), key=lambda r: r["part_id"])
@@ -250,7 +257,6 @@ def build_sketch(
     template: Sketch,
     id_col: str = "id",
     weight_col: str | None = None,
-    fanin: int = 16,
     with_lineage: bool = False,
 ) -> tuple[Sketch, dict]:
     """End-to-end: partial build + tree merge. ``df`` must already carry
@@ -258,7 +264,7 @@ def build_sketch(
     come back to the driver through ``collect`` and fold in partition
     order (``tree_merge``)."""
     partials = partial_states(df, template, id_col, weight_col, with_lineage)
-    return tree_merge(partials, fanin=fanin, n_hint=df.rdd.getNumPartitions())
+    return tree_merge(partials, n_hint=df.rdd.getNumPartitions())
 
 
 # ----------------------------------------------------------------------
@@ -274,7 +280,6 @@ def build_sketch_checkpointed(
     checkpoint_dir: str,
     id_col: str = "id",
     weight_col: str | None = None,
-    fanin: int = 16,
 ) -> tuple[Sketch, dict]:
     """Resumable build: lineage is the input FILE set. Completed files'
     partial states are durable parquet under ``checkpoint_dir``; a rerun
@@ -303,7 +308,7 @@ def build_sketch_checkpointed(
         partials.write.mode("append").parquet(part_dir)
     all_partials = spark.read.parquet(part_dir)
     n = all_partials.count()
-    sketch, metrics = tree_merge(all_partials, fanin=fanin, n_hint=n)
+    sketch, metrics = tree_merge(all_partials, n_hint=n)
     metrics["resumed_files_skipped"] = len(input_paths) - len(missing)
     metrics["files_processed_this_run"] = len(missing)
     return sketch, metrics

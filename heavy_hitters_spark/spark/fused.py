@@ -1,7 +1,7 @@
 """Fused tokenize -> hash -> sketch partials over raw text rows.
 
-The naive plan (explode + xxhash64 in Catalyst, then mapInPandas over
-token ids) ships one Arrow row per TOKEN across the JVM->Python
+The naive plan (explode + xxhash64 in Catalyst, then a per-token Arrow
+UDF over token ids) ships one Arrow row per TOKEN across the JVM->Python
 boundary — at ~250 tokens/doc that's 250x more rows than documents and
 the IPC dominates the build. This fused path ships one row per
 DOCUMENT and does tokenization in pyarrow C kernels inside the worker:
@@ -31,7 +31,10 @@ import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 
 from ..core.base import Sketch, pack_state
-from .aggregate import PARTIAL_SCHEMA, tree_merge
+from .aggregate import PARTIAL_ARROW, PARTIAL_SCHEMA, state_row, task_part_id, tree_merge
+
+# fan-in of the fused build's merge rounds (aggregate.tree_merge)
+FANIN = 64
 
 
 def _fused_fn(template_bytes: bytes, text_col: str, split: str = " "):
@@ -42,10 +45,8 @@ def _fused_fn(template_bytes: bytes, text_col: str, split: str = " "):
     record of its phase times (serve, kernel, to_bytes, pack) there."""
 
     def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        from pyspark import TaskContext
-
         from ..core import memtune  # noqa: F401
-        from ..core.base import pack_state_bytes, unpack_state
+        from ..core.base import unpack_state
         from .keys import MASK32, xxh64
 
         prof_dir = os.environ.get("SKETCH_PROF_DIR")
@@ -129,15 +130,15 @@ def _fused_fn(template_bytes: bytes, text_col: str, split: str = " "):
                 n_batch = len(ids)
             n_rows += len(texts)
             n_upd += n_batch
-        ctx = TaskContext.get()
+        part_id = task_part_id()
         t_loop = time.perf_counter() - t0
         raw = sk.to_bytes()
         t_tb = time.perf_counter() - t0 - t_loop
-        state = pack_state_bytes(raw)  # ship packed; account raw (SPACE)
+        row = state_row(raw, part_id, n_rows, n_upd, (t_loop + t_tb) * 1000.0)
         t_pk = time.perf_counter() - t0 - t_loop - t_tb
         if prof is not None:
             prof.update(
-                part=ctx.partitionId() if ctx else -1,
+                part=part_id,
                 pid=os.getpid(),
                 serve_s=round(t_serve, 4),
                 kernel_s=round(t_loop - t_serve, 4),
@@ -148,31 +149,10 @@ def _fused_fn(template_bytes: bytes, text_col: str, split: str = " "):
             )
             import json as _json
 
-            pn = os.path.join(prof_dir, f"prof_{prof['part']}_{os.getpid()}_{int(time.time()*1e6)}.json")
+            pn = os.path.join(prof_dir, f"prof_{part_id}_{os.getpid()}_{int(time.time()*1e6)}.json")
             with open(pn, "w") as pf:
                 _json.dump(prof, pf)
-        yield pa.RecordBatch.from_pydict(
-            {
-                "part_id": [ctx.partitionId() if ctx else -1],
-                "state": [state],
-                "n_rows": [n_rows],
-                "n_updates": [n_upd],
-                "wall_ms": [(time.perf_counter() - t0) * 1000.0],
-                "state_bytes": [len(raw)],
-                "files": [""],
-            },
-            schema=pa.schema(
-                [
-                    ("part_id", pa.int64()),
-                    ("state", pa.binary()),
-                    ("n_rows", pa.int64()),
-                    ("n_updates", pa.int64()),
-                    ("wall_ms", pa.float64()),
-                    ("state_bytes", pa.int64()),
-                    ("files", pa.string()),
-                ]
-            ),
-        )
+        yield pa.RecordBatch.from_pylist([row], schema=PARTIAL_ARROW)
 
     return fn
 
@@ -181,8 +161,6 @@ def build_token_sketch(
     df: DataFrame,
     template: Sketch,
     text_col: str = "text",
-    fanin: int = 64,
-    n_hint: int | None = None,
 ) -> tuple[Sketch, dict]:
     """One-pass fused build over a text column; returns (sketch, metrics).
     Equivalent result to tokens(df) -> key_id_col -> build_sketch, at a
@@ -190,6 +168,4 @@ def build_token_sketch(
     state; ``tree_merge`` folds them in partition order, so the same
     input and template give byte-equal states on every run."""
     partials = df.select(text_col).mapInArrow(_fused_fn(pack_state(template), text_col), PARTIAL_SCHEMA)
-    if n_hint is None:
-        n_hint = df.rdd.getNumPartitions()
-    return tree_merge(partials, fanin=fanin, n_hint=n_hint)
+    return tree_merge(partials, fanin=FANIN, n_hint=df.rdd.getNumPartitions())

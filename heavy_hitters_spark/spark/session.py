@@ -2,11 +2,14 @@
 
 Designed for a 1000-executor cluster but testable on local[N]:
 - AQE on (runtime re-plan, skew-join splitting)
-- Arrow on, batch size aligned with the numpy kernels' chunk size so a
-  pandas-UDF batch flows straight into one warm-memory kernel pass
+- Arrow on, batch size aligned with the numpy kernels' chunk size so an
+  Arrow-UDF batch flows straight into one warm-memory kernel pass
 - shuffle partitions sized for the local harness; on a real cluster
-  this is overridden by --conf (documented in BENCH/BASELINE.md)
-- malloc tuning propagated to Python workers via executorEnv
+  this is overridden by --conf
+
+The worker-side tunings (malloc, zipimport, gc.freeze) need no session
+config: core.memtune applies them in every Python worker that imports
+the package, which every sketch kernel does.
 """
 
 from __future__ import annotations
@@ -35,7 +38,7 @@ def get_spark(
         n_threads = int(master.split("[")[1].rstrip("]")) if "[" in master else 32
     except ValueError:  # local[*] and cluster masters
         n_threads = os.cpu_count() or 32
-    b = (
+    return (
         SparkSession.builder.master(master)
         .appName(app)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions or n_threads))
@@ -43,9 +46,6 @@ def get_spark(
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", str(arrow_batch))
-        .config("spark.executorEnv.MALLOC_MMAP_MAX_", "0")
-        .config("spark.executorEnv.MALLOC_TRIM_THRESHOLD_", "-1")
-        .config("spark.yarn.appMasterEnv.MALLOC_MMAP_MAX_", "0")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         .config("spark.sql.files.maxPartitionBytes", "134217728")
         .config("spark.ui.enabled", "false")
@@ -67,14 +67,5 @@ def get_spark(
         # at high local parallelism (local[8] build walls ~6.3-8.0 s
         # compressed vs ~5.2-5.9 s uncompressed, same host phase)
         .config("spark.sql.inMemoryColumnarStorage.compressed", "false")
+        .getOrCreate()
     )
-    # shuffle/spill directory override (A/B hook): this sandbox has no
-    # swap, so only FILE-BACKED pages are reclaimable and the host's
-    # page-cache reclaim can force shuffle reads back to the slow virtio
-    # disk mid-query; a tmpfs local.dir keeps shuffle blocks RAM-resident
-    # (tmpfs pages are unevictable without swap). JVM-launch config —
-    # only applies when THIS call starts the JVM (see docstring).
-    local_dir = os.environ.get("SPARK_GRAFT_LOCAL_DIR")
-    if local_dir:
-        b = b.config("spark.local.dir", local_dir)
-    return b.getOrCreate()

@@ -21,6 +21,8 @@ and keeps per-batch work map-side only.
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -31,6 +33,36 @@ from ..spark.aggregate import (
     tree_merge,
     windowed_partial_states,
 )
+
+
+def _start_sink(
+    stream_df: DataFrame,
+    state_dir: str,
+    checkpoint_dir: str,
+    trigger_available_now: bool,
+    partials_of: Callable[[DataFrame], DataFrame],
+):
+    """The durable-append writer every sink shares: each micro-batch's
+    partial-state rows (``partials_of(batch_df)``) are written with
+    dynamic batch_id-partition overwrite, so a foreachBatch replay after
+    failure overwrites its batch instead of double-counting it."""
+
+    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
+        (
+            partials_of(batch_df)
+            .withColumn("batch_id", F.lit(batch_id))
+            .write.mode("overwrite")  # idempotent per batch on replay
+            .partitionBy("batch_id")
+            .option("partitionOverwriteMode", "dynamic")
+            .parquet(state_dir)
+        )
+
+    writer = stream_df.writeStream.foreachBatch(process_batch).option(
+        "checkpointLocation", checkpoint_dir
+    )
+    if trigger_available_now:
+        writer = writer.trigger(availableNow=True)
+    return writer.start()
 
 
 def sketch_sink(
@@ -46,23 +78,10 @@ def sketch_sink(
 
     Returns the StreamingQuery; await it (or stop it) then read the
     merged sketch with ``merged_sketch(spark, state_dir)``."""
-
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        partials = partial_states(batch_df, template, id_col, weight_col, with_lineage=False)
-        (
-            partials.withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")  # idempotent per batch on replay
-            .partitionBy("batch_id")
-            .option("partitionOverwriteMode", "dynamic")
-            .parquet(state_dir)
-        )
-
-    writer = stream_df.writeStream.foreachBatch(process_batch).option(
-        "checkpointLocation", checkpoint_dir
+    return _start_sink(
+        stream_df, state_dir, checkpoint_dir, trigger_available_now,
+        lambda b: partial_states(b, template, id_col, weight_col, with_lineage=False),
     )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def token_sketch_sink(
@@ -90,24 +109,10 @@ def token_sketch_sink(
     from ..spark.fused import _fused_fn
 
     tb = pack_state(template)
-
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        wide = _widen_narrow_scan(batch_df.select(text_col))
-        partials = wide.mapInArrow(_fused_fn(tb, text_col), PARTIAL_SCHEMA)
-        (
-            partials.withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")  # idempotent per batch on replay
-            .partitionBy("batch_id")
-            .option("partitionOverwriteMode", "dynamic")
-            .parquet(state_dir)
-        )
-
-    writer = stream_df.writeStream.foreachBatch(process_batch).option(
-        "checkpointLocation", checkpoint_dir
+    return _start_sink(
+        stream_df, state_dir, checkpoint_dir, trigger_available_now,
+        lambda b: _widen_narrow_scan(b.select(text_col)).mapInArrow(_fused_fn(tb, text_col), PARTIAL_SCHEMA),
     )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def windowed_sketch_sink(
@@ -128,26 +133,13 @@ def windowed_sketch_sink(
     no watermark finalization needed). States are written with dynamic
     batch_id-partition overwrite so a foreachBatch replay after failure
     is idempotent (same exactly-once contract as sketch_sink)."""
-
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        wb = batch_df.withColumn(
-            "window_start", F.window(F.col(ts_col), window)["start"]
-        )
-        partials = windowed_partial_states(wb, template, id_col, weight_col)
-        (
-            partials.withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")  # idempotent per batch on replay
-            .partitionBy("batch_id")
-            .option("partitionOverwriteMode", "dynamic")
-            .parquet(state_dir)
-        )
-
-    writer = stream_df.writeStream.foreachBatch(process_batch).option(
-        "checkpointLocation", checkpoint_dir
+    return _start_sink(
+        stream_df, state_dir, checkpoint_dir, trigger_available_now,
+        lambda b: windowed_partial_states(
+            b.withColumn("window_start", F.window(F.col(ts_col), window)["start"]),
+            template, id_col, weight_col,
+        ),
     )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def merged_sketch(
@@ -158,5 +150,5 @@ def merged_sketch(
         states = states.where(F.col("window_start") == F.lit(window_start))
     states = states.select([f.name for f in PARTIAL_SCHEMA.fields])
     n = states.count()
-    sk, _ = tree_merge(states, fanin=16, n_hint=n)
+    sk, _ = tree_merge(states, n_hint=n)
     return sk

@@ -66,3 +66,40 @@ def test_freeze_import_graph_gated_and_reversible(monkeypatch):
     finally:
         gc.unfreeze()
         memtune._gc_frozen = was_frozen
+
+
+def test_tunings_reach_real_workers(spark):
+    """No session config carries the tunings: a real Spark Python worker
+    gets all three from importing the package, as every kernel does."""
+    from heavy_hitters_spark.core import CountMin, SeedStream
+    from heavy_hitters_spark.spark.fused import build_token_sketch
+
+    docs = spark.createDataFrame([(f"a b c{i % 7}",) for i in range(64)], "text string")
+    build_token_sketch(docs.repartition(2), CountMin(width=64, depth=2, seed_stream=SeedStream(1, 2)))
+
+    def probe(batches):
+        import gc as _gc
+        import os as _os
+        import zipimport as _zipimport
+
+        import pyarrow as pa
+
+        from heavy_hitters_spark.core import memtune as mt
+
+        for _ in batches:
+            pass
+        patched = _zipimport.zipimporter.invalidate_caches.__module__ == mt.__name__
+        yield pa.RecordBatch.from_pylist([{
+            "pid": _os.getpid(),
+            "malloc": mt._done,
+            "zip": patched,
+            "frozen": _gc.get_freeze_count(),
+        }])
+
+    rows = docs.repartition(2).mapInArrow(
+        probe, "pid long, malloc boolean, zip boolean, frozen long"
+    ).collect()
+    assert len(rows) == 2
+    for r in rows:
+        assert r["pid"] != os.getpid()
+        assert r["malloc"] and r["zip"] and r["frozen"] > 0, r
