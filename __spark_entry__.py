@@ -522,7 +522,7 @@ def _q_phi_heavy_users_const(spark, sf):
     deterministic, same oracle as phi_heavy_users."""
     from heavy_hitters_spark.core import SeedStream
     from heavy_hitters_spark.hh import ConstSketchHH
-    from heavy_hitters_spark.spark import build_sketch
+    from heavy_hitters_spark.queries import _verified_heavy_users
     from heavy_hitters_spark.spark.keys import MASK32
 
     phi = 0.005
@@ -531,18 +531,7 @@ def _q_phi_heavy_users_const(spark, sf):
     )
     hh = ConstSketchHH(phi=phi, epsilon=phi / 2, delta=0.05, m=MASK32, gran=8,
                        seed_stream=SeedStream(1234, 5678))
-    merged, _ = build_sketch(ev, hh, id_col="id")
-    cand = [int(i) for i, _ in merged.query()]
-    if not cand:
-        return spark.createDataFrame([], "user_id long, freq long")
-    cand_df = spark.createDataFrame([(c,) for c in cand], "id long")
-    return (
-        ev.join(F.broadcast(cand_df), "id")
-        .groupBy("user_id")
-        .agg(F.count("*").alias("freq"))
-        .where(F.col("freq") >= phi * merged.norm)
-        .orderBy(F.asc("user_id"))
-    )
+    return _verified_heavy_users(spark, ev, hh)
 
 
 def _q_phi_heavy_users_cs(spark, sf):
@@ -556,7 +545,7 @@ def _q_phi_heavy_users_cs(spark, sf):
     prune; the filter is the exact net count."""
     from heavy_hitters_spark.core import SeedStream
     from heavy_hitters_spark.hh import DyadicHH
-    from heavy_hitters_spark.spark import build_sketch
+    from heavy_hitters_spark.queries import _verified_heavy_users
     from heavy_hitters_spark.spark.keys import MASK32
 
     phi = 0.005
@@ -578,19 +567,7 @@ def _q_phi_heavy_users_cs(spark, sf):
         sketch_type="count_sketch", seed_stream=SeedStream(1234, 5678),
         width=1 << 16, depth=7,
     )
-    merged, _ = build_sketch(ev, hh, id_col="id", weight_col="w")
-    cand = [int(i) for i, _ in merged.query()]
-    if not cand:
-        return spark.createDataFrame([], "user_id long, net_freq long")
-    cand_df = spark.createDataFrame([(c,) for c in cand], "id long")
-    total = merged.norm  # exact net L1 (linear, tracked through merges)
-    return (
-        ev.join(F.broadcast(cand_df), "id")
-        .groupBy("user_id")
-        .agg(F.sum("w").alias("net_freq"))
-        .where(F.col("net_freq") >= phi * total)
-        .orderBy(F.asc("user_id"))
-    )
+    return _verified_heavy_users(spark, ev, hh, weight_col="w")
 
 
 def _q_phi_heavy_users_binary(spark, sf):
@@ -602,7 +579,7 @@ def _q_phi_heavy_users_binary(spark, sf):
     CS hierarchy are gated elsewhere)."""
     from heavy_hitters_spark.core import SeedStream
     from heavy_hitters_spark.hh import DyadicHH
-    from heavy_hitters_spark.spark import build_sketch
+    from heavy_hitters_spark.queries import _verified_heavy_users
     from heavy_hitters_spark.spark.keys import MASK32
 
     phi = 0.005
@@ -613,18 +590,7 @@ def _q_phi_heavy_users_binary(spark, sf):
         phi=phi, epsilon=phi / 2, delta=0.05, m=MASK32, gran=1,
         seed_stream=SeedStream(1234, 5678),
     )
-    merged, _ = build_sketch(ev, hh, id_col="id")
-    cand = [int(i) for i, _ in merged.query()]
-    if not cand:
-        return spark.createDataFrame([], "user_id long, freq long")
-    cand_df = spark.createDataFrame([(c,) for c in cand], "id long")
-    return (
-        ev.join(F.broadcast(cand_df), "id")
-        .groupBy("user_id")
-        .agg(F.count("*").alias("freq"))
-        .where(F.col("freq") >= phi * merged.norm)
-        .orderBy(F.asc("user_id"))
-    )
+    return _verified_heavy_users(spark, ev, hh)
 
 
 def _q_hot_shingle_stats(spark, sf):

@@ -162,6 +162,34 @@ def chunked_update(fn, items: np.ndarray, counts: np.ndarray | None) -> None:
         fn(items[i : i + CHUNK], None if counts is None else counts[i : i + CHUNK])
 
 
+def scatter_add(table: np.ndarray, idx: np.ndarray, weights: np.ndarray | None = None) -> None:
+    """``table[idx] += weights`` (1 per index when ``weights`` is None),
+    exact in int64. Dense unweighted batches amortize one full-table
+    bincount; sparse ones touch only their own cells via ``np.add.at``.
+    Weighted batches always take ``np.add.at``: a float64-weighted
+    bincount loses integer precision past 2^53, which would silently
+    corrupt turnstile counters."""
+    if weights is None and len(idx) >= 2 * len(table):
+        table += np.bincount(idx, minlength=len(table))
+    else:
+        np.add.at(table, idx, 1 if weights is None else weights)
+
+
+def frame(blobs) -> bytes:
+    """Concatenate blobs, each prefixed with its u64 little-endian length."""
+    return b"".join(struct.pack("<Q", len(b)) + b for b in blobs)
+
+
+def unframe(data: bytes) -> list[bytes]:
+    """Inverse of ``frame``."""
+    out, off = [], 0
+    while off < len(data):
+        (n,) = struct.unpack_from("<Q", data, off)
+        out.append(data[off + 8 : off + 8 + n])
+        off += 8 + n
+    return out
+
+
 def pack_i64(arr: np.ndarray) -> bytes:
     """Serialize an int64 array at the smallest width that fits its
     range (1-byte dtype tag prefix). Partial-state counter tables are

@@ -1,4 +1,4 @@
-"""Count-Min sketch (plain + conservative-update), vectorized numpy state.
+"""Count-Min sketch (plain + conservative-update) on the hashed table.
 
 Semantics parity with the reference ``src/sketch/count_min.c``:
 
@@ -6,23 +6,18 @@ Semantics parity with the reference ``src/sketch/count_min.c``:
   ``d = ceil(log2(1/delta)/log2(b))``            (count_min.c:20-21)
 - dims (published Cormode-Muthukrishnan parameterization, selectable):
   ``w = ceil(e/eps)``, ``d = ceil(ln(1/delta))`` (BASELINE.md)
-- explicit ``width=``/``depth=`` override mirrors the reference's global
-  ``-w/-h`` flags (sketch.h:48-56)
 - update: ``table[d][h_d(i)] += c`` (count_min.c:64-81); the
   conservative-update variant (Estan-Varghese) is our addition per
   BASELINE.json north_rule — batched: per unique key,
   ``table[d][h] = max(table[d][h], min_d(table) + c)``
 - point: ``min_d table[d][h_d(i)]`` (count_min.c:83-111)
 - above_threshold: point >= th  (count_min.c:124-145)
-- range_sum: naive point-sum     (count_min.c:147-156)
 - HH threshold policy: identity (count_min.h:45-50) — CM never
   underestimates.
 
-Merge: elementwise table add (CM is linear), so the distributed
-partial+final aggregation is exactly merge-order-invariant. The
-conservative variant is conservative *within* a partition and plain-add
-*across* partitions (documented in SURVEY.md §7): estimates stay between
-exact and plain-CM.
+The conservative variant is conservative *within* a partition and
+plain-add *across* partitions (documented in SURVEY.md §7): estimates
+stay between exact and plain-CM.
 """
 
 from __future__ import annotations
@@ -31,9 +26,9 @@ import math
 
 import numpy as np
 
-from .base import Sketch, as_i64, as_u64, chunked_update, pack_i64, register, unpack_i64
-from .hashing import FAMILIES, POW2_FAMILIES, hash_M, next_pow_2
+from .base import as_i64, as_u64, register, scatter_add
 from .prng import SeedStream
+from .table import HashedTable
 
 
 def cm_dims(
@@ -55,8 +50,10 @@ def cm_dims(
 
 
 @register
-class CountMin(Sketch):
+class CountMin(HashedTable):
     TYPE = "count_min"
+    dims = staticmethod(cm_dims)
+    FLAGS = ("conservative",)
 
     def __init__(
         self,
@@ -71,129 +68,33 @@ class CountMin(Sketch):
         conservative: bool = False,
         parameterization: str = "reference",
     ) -> None:
-        fam = FAMILIES[hash_family]
-        if (width is None) != (depth is None):
-            # a partial override would silently fall back to the
-            # (eps, delta)-derived dims (ADVICE r04 #1)
-            raise ValueError("width and depth must be overridden together")
-        if width is not None and depth is not None:
-            w, d = width, depth
-        else:
-            w, d = cm_dims(epsilon, delta, b, fam.c, parameterization)
-            if fam.name in POW2_FAMILIES:
-                w = next_pow_2(w)  # pow2-only families; wider never hurts
-        self.w, self.d = int(w), int(d)
-        self.M = hash_M(self.w)
-        self.epsilon, self.delta, self.b = epsilon, delta, b
-        self.family = fam
         self.conservative = conservative
-        if seeds is None:
-            stream = seed_stream or SeedStream()
-            seeds = [fam.gen_seeds(stream, self.M) for _ in range(self.d)]
-        self.seeds = [(int(a), int(bb)) for a, bb in seeds]
-        self.table = np.zeros((self.d, self.w), dtype=np.int64)
-        self.norm = 0  # running L1, as src/hh/sketch.c:121
+        super().__init__(epsilon, delta, b, hash_family, width, depth, seed_stream, seeds, parameterization)
 
-    # ------------------------------------------------------------------
-    def _rows(self, items: np.ndarray) -> np.ndarray:
-        """d x n matrix of bucket indices."""
-        return np.stack(
-            [self.family(items, self.w, self.M, a, b) for a, b in self.seeds]
-        )
-
-    def update_batch(self, items, counts=None) -> None:
-        chunked_update(self._update_chunk, as_u64(items), None if counts is None else np.asarray(counts))
-
-    def _update_chunk(self, items, counts) -> None:
-        x = as_u64(items)
-        if counts is None:
-            c = None
-            self.norm += len(x)
-        else:
-            c = as_i64(counts, len(x))
-            self.norm += int(c.sum())
+    def _update_chunk(self, x, counts) -> None:
+        c = None if counts is None else as_i64(counts, len(x))
+        self.norm += len(x) if c is None else int(c.sum())
         if self.conservative:
             # pre-aggregate duplicates so each key is applied once
             ux, inv = np.unique(x, return_inverse=True)
             uc = np.zeros(len(ux), dtype=np.int64)
-            np.add.at(uc, inv, 1 if c is None else c)
+            scatter_add(uc, inv, c)
             h = self._rows(ux)
-            est = self.table[np.arange(self.d)[:, None], h].min(axis=0)
-            target = est + uc
+            target = self._cells(h).min(axis=0) + uc
             for di in range(self.d):
                 np.maximum.at(self.table[di], h[di], target)
         else:
-            h = self._rows(x)
-            flat = (h + (np.arange(self.d, dtype=np.int64) * self.w)[:, None]).ravel()
-            ft = self.table.reshape(-1)
-            # density-adaptive scatter: sparse batches touch only their
-            # own cells (np.add.at); dense unweighted batches amortize a
-            # full-table bincount pass. Weighted batches always go through
-            # np.add.at: float64-weighted bincount loses integer precision
-            # past 2^53, which would silently corrupt turnstile counters.
-            if counts is None:
-                if len(x) >= 2 * self.w:
-                    ft += np.bincount(flat, minlength=self.d * self.w)
-                else:
-                    np.add.at(ft, flat, 1)
-            else:
-                cc = np.broadcast_to(c, (self.d, len(c))).ravel()
-                np.add.at(ft, flat, cc)
+            cc = None if c is None else np.broadcast_to(c, (self.d, len(c))).ravel()
+            scatter_add(self.table.reshape(-1), self._flat(self._rows(x)), cc)
 
     def point(self, items) -> np.ndarray:
         """Batch point query: min over rows (count_min.c:83-111)."""
-        x = as_u64(np.atleast_1d(np.asarray(items)))
-        h = self._rows(x)
-        return self.table[np.arange(self.d)[:, None], h].min(axis=0)
+        return self._cells(self._rows(as_u64(np.atleast_1d(np.asarray(items))))).min(axis=0)
 
     def above_threshold(self, items, th: int) -> np.ndarray:
         return self.point(items) >= th
-
-    def range_sum(self, lo: int, hi: int) -> int:
-        """Naive point-sum parity op (count_min.c:147-156); the scalable
-        range query lives in hh.dyadic."""
-        return int(self.point(np.arange(lo, hi + 1, dtype=np.uint64)).sum())
 
     @staticmethod
     def hh_threshold(l1: int, epsilon: float, th: float) -> float:
         """CM policy: identity (count_min.h:45-50)."""
         return th
-
-    # ------------------------------------------------------------------
-    def merge(self, other: "CountMin") -> "CountMin":
-        assert self.seeds == other.seeds and self.w == other.w and self.d == other.d
-        self.table += other.table
-        self.norm += other.norm
-        return self
-
-    def _header(self):
-        return {
-            "w": self.w,
-            "d": self.d,
-            "b": self.b,
-            "epsilon": self.epsilon,
-            "delta": self.delta,
-            "family": self.family.name,
-            "seeds": self.seeds,
-            "norm": self.norm,
-            "conservative": self.conservative,
-        }
-
-    def _payload(self) -> bytes:
-        return pack_i64(self.table)
-
-    @classmethod
-    def _from_parts(cls, header, payload) -> "CountMin":
-        s = cls(
-            epsilon=header["epsilon"],
-            delta=header["delta"],
-            b=header["b"],
-            hash_family=header["family"],
-            width=header["w"],
-            depth=header["d"],
-            seeds=[tuple(x) for x in header["seeds"]],
-            conservative=header["conservative"],
-        )
-        s.table = unpack_i64(payload).reshape(s.d, s.w)
-        s.norm = header["norm"]
-        return s

@@ -1,4 +1,4 @@
-"""Count-Sketch (the reference's "count-median"), vectorized numpy state.
+"""Count-Sketch (the reference's "count-median") on the hashed table.
 
 Parity with ``src/sketch/count_median.c``:
 
@@ -18,7 +18,6 @@ Parity with ``src/sketch/count_median.c``:
 - L2 norm (src/norm/l2-sketch.c, computed associatively on the merged
   table instead of incrementally): ``lower_median_d sqrt(sum_j table[d][j]^2)``
 
-Linear in updates ⇒ merge = elementwise add, merge-order-invariant.
 A conservative-update variant makes no sense for signed sketches, so the
 conservative knob lives only on CountMin.
 """
@@ -29,9 +28,10 @@ import math
 
 import numpy as np
 
-from .base import Sketch, as_i64, as_u64, chunked_update, pack_i64, register, unpack_i64
-from .hashing import FAMILIES, POW2_FAMILIES, hash_M, next_pow_2, sign_ms
+from .base import as_i64, as_u64, register
+from .hashing import sign_ms
 from .prng import SeedStream
+from .table import HashedTable
 
 
 def cs_dims(
@@ -62,8 +62,9 @@ def lower_median(v: np.ndarray, axis: int = 0) -> np.ndarray:
 
 
 @register
-class CountSketch(Sketch):
+class CountSketch(HashedTable):
     TYPE = "count_sketch"
+    dims = staticmethod(cs_dims)
 
     def __init__(
         self,
@@ -77,54 +78,24 @@ class CountSketch(Sketch):
         seeds: list[tuple[int, int, int, int]] | None = None,
         parameterization: str = "reference",
     ) -> None:
-        fam = FAMILIES[hash_family]
-        if (width is None) != (depth is None):
-            # a partial override would silently fall back to the
-            # (eps, delta)-derived dims (ADVICE r04 #1)
-            raise ValueError("width and depth must be overridden together")
-        if width is not None and depth is not None:
-            w, d = width, depth
-        else:
-            w, d = cs_dims(epsilon, delta, b, fam.c, parameterization)
-            if fam.name in POW2_FAMILIES:
-                w = next_pow_2(w)  # pow2-only families; wider never hurts
-        self.w, self.d = int(w), int(d)
-        self.M = hash_M(self.w)
-        self.epsilon, self.delta, self.b = epsilon, delta, b
-        self.family = fam
-        if seeds is None:
-            stream = seed_stream or SeedStream()
-            seeds = []
-            for _ in range(self.d):  # draw order per count_median.c:47-52
-                a, bb = fam.gen_seeds(stream, self.M)
-                sa = stream.sign_ms_agen()
-                sb = stream.sign_ms_bgen()
-                seeds.append((a, bb, sa, sb))
-        self.seeds = [tuple(int(v) for v in s) for s in seeds]
-        self.table = np.zeros((self.d, self.w), dtype=np.int64)
-        self.norm = 0
+        super().__init__(epsilon, delta, b, hash_family, width, depth, seed_stream, seeds, parameterization)
 
-    def _rows_signs(self, items: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
-        hs, ss = [], []
-        for a, b, sa, sb in self.seeds:
-            hs.append(self.family(items, self.w, self.M, a, b))
-            ss.append(sign_ms(items, sa, sb))
-        return np.stack(hs), np.stack(ss)
+    def _draw_seeds(self, stream) -> tuple[int, ...]:
+        # bucket hash, then sign hash (count_median.c:47-52)
+        return (*super()._draw_seeds(stream), stream.sign_ms_agen(), stream.sign_ms_bgen())
 
-    def update_batch(self, items, counts=None) -> None:
-        chunked_update(self._update_chunk, as_u64(items), None if counts is None else np.asarray(counts))
+    def _signs(self, items: np.ndarray) -> np.ndarray:
+        """d x n matrix of +-1 signs."""
+        return np.stack([sign_ms(items, sa, sb) for _, _, sa, sb in self.seeds])
 
-    def _update_chunk(self, items, counts) -> None:
-        x = as_u64(items)
+    def _update_chunk(self, x, counts) -> None:
         c = as_i64(counts, len(x))
         self.norm += int(c.sum())
-        h, s = self._rows_signs(x)
-        flat = (h + (np.arange(self.d, dtype=np.int64) * self.w)[:, None]).ravel()
-        cc = (s * c).ravel()  # d x n signed weights
+        flat = self._flat(self._rows(x))
+        cc = (self._signs(x) * c).ravel()  # d x n signed weights
         ft = self.table.reshape(-1)
-        # dense unweighted batches: two exact unweighted bincounts (one per
-        # sign); weighted batches use np.add.at — float64-weighted bincount
-        # truncates integer sums past 2^53 (turnstile corruption)
+        # scatter_add's density rule, split by sign: dense unweighted
+        # batches take two exact unweighted bincounts, the rest np.add.at
         if counts is None and len(x) >= 2 * self.w:
             pos = cc > 0
             ft += np.bincount(flat[pos], minlength=self.d * self.w)
@@ -134,9 +105,7 @@ class CountSketch(Sketch):
 
     def point(self, items) -> np.ndarray:
         x = as_u64(np.atleast_1d(np.asarray(items)))
-        h, s = self._rows_signs(x)
-        est = self.table[np.arange(self.d)[:, None], h] * s
-        return lower_median(est, axis=0)
+        return lower_median(self._cells(self._rows(x)) * self._signs(x), axis=0)
 
     def point_partial(self, items, row: int) -> np.ndarray:
         """Single-row estimate (count_median.c:126-143)."""
@@ -144,9 +113,6 @@ class CountSketch(Sketch):
         a, b, sa, sb = self.seeds[row]
         h = self.family(x, self.w, self.M, a, b)
         return self.table[row, h] * sign_ms(x, sa, sb)
-
-    def range_sum(self, lo: int, hi: int) -> int:
-        return int(self.point(np.arange(lo, hi + 1, dtype=np.uint64)).sum())
 
     @staticmethod
     def hh_threshold(l1: int, epsilon: float, th: float) -> float:
@@ -158,39 +124,3 @@ class CountSketch(Sketch):
         of the reference's incremental l2-sketch (l2-sketch.c:35-80)."""
         sums = (self.table.astype(np.float64) ** 2).sum(axis=1)
         return float(lower_median(np.sqrt(sums)))
-
-    def merge(self, other: "CountSketch") -> "CountSketch":
-        assert self.seeds == other.seeds and self.w == other.w and self.d == other.d
-        self.table += other.table
-        self.norm += other.norm
-        return self
-
-    def _header(self):
-        return {
-            "w": self.w,
-            "d": self.d,
-            "b": self.b,
-            "epsilon": self.epsilon,
-            "delta": self.delta,
-            "family": self.family.name,
-            "seeds": self.seeds,
-            "norm": self.norm,
-        }
-
-    def _payload(self) -> bytes:
-        return pack_i64(self.table)
-
-    @classmethod
-    def _from_parts(cls, header, payload) -> "CountSketch":
-        s = cls(
-            epsilon=header["epsilon"],
-            delta=header["delta"],
-            b=header["b"],
-            hash_family=header["family"],
-            width=header["w"],
-            depth=header["d"],
-            seeds=[tuple(x) for x in header["seeds"]],
-        )
-        s.table = unpack_i64(payload).reshape(s.d, s.w)
-        s.norm = header["norm"]
-        return s

@@ -6,9 +6,7 @@ component-wise, so it inherits each component's invariance class."""
 
 from __future__ import annotations
 
-import struct
-
-from .base import Sketch, register
+from .base import Sketch, frame, register, unframe
 
 
 @register
@@ -35,19 +33,8 @@ class MultiSketch(Sketch):
         return {"names": list(self.sketches.keys())}
 
     def _payload(self) -> bytes:
-        parts = []
-        for s in self.sketches.values():
-            blob = s.to_bytes()
-            parts.append(struct.pack("<Q", len(blob)))
-            parts.append(blob)
-        return b"".join(parts)
+        return frame(s.to_bytes() for s in self.sketches.values())
 
     @classmethod
     def _from_parts(cls, header, payload) -> "MultiSketch":
-        out, off = {}, 0
-        for name in header["names"]:
-            (ln,) = struct.unpack("<Q", payload[off : off + 8])
-            off += 8
-            out[name] = Sketch.from_bytes(payload[off : off + ln])
-            off += ln
-        return cls(out)
+        return cls({n: Sketch.from_bytes(b) for n, b in zip(header["names"], unframe(payload))})

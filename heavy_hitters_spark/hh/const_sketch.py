@@ -1,36 +1,34 @@
-"""'Constant-time' hierarchical heavy hitters, semantics-parity with the
-reference's ``hh_const_sketch`` (src/hh/const_sketch.c):
+"""'Constant-time' hierarchical heavy hitters on the level hierarchy
+(``hh.levels``), semantics-parity with the reference's
+``hh_const_sketch`` (src/hh/const_sketch.c):
 
 - per-level SINGLE-ROW hash arrays of width ``ceil(1/(eps*0.25))``
-  (per-level error 1/4; const_sketch.c:15-71) instead of full sketches
-- exact dense arrays for the top levels (as hh_sketch)
+  (per-level error 1/4; const_sketch.c:15-71) instead of full sketches,
+  held as depth-1 CountMin tables and serialized as bare counter rows
+  plus their ``level_seeds``
 - one shared VERIFICATION Count-Min sketch with ``delta' =
-  delta^2 * phi / 16`` (const_sketch.c:38)
-- update: verification sketch + per-level rows + exact tops; norm += c
+  delta^2 * phi / 16`` (const_sketch.c:38); the exact-level cutoff is
+  ``next_pow_2(w*d)`` of that sketch
+- update: verification sketch + per-level rows + exact tops
   (const_sketch.c:101-134)
 - query: BFS down the levels on the cheap rows; a candidate leaf is
   emitted only if the verification sketch confirms
   ``above_threshold(phi*L1)`` (const_sketch.c:217-286)
-
-Everything is linear, so merge = elementwise add + CM merge and the
-structure is exactly merge-order-invariant.
 """
 
 from __future__ import annotations
 
 import math
 
-import numpy as np
-
-from ..core.base import Sketch, as_i64, as_u64, chunked_update, pack_i64, register, unpack_i64
+from ..core.base import Sketch, as_i64, frame, pack_i64, register, unframe, unpack_i64
 from ..core.countmin import CountMin
-from ..core.hashing import FAMILIES, hash_M, next_pow_2
+from ..core.hashing import next_pow_2
 from ..core.prng import SeedStream
-from .dyadic import UNIVERSE_32
+from .levels import UNIVERSE_32, LevelHierarchy
 
 
 @register
-class ConstSketchHH(Sketch):
+class ConstSketchHH(LevelHierarchy):
     TYPE = "const_sketch_hh"
 
     def __init__(
@@ -45,109 +43,40 @@ class ConstSketchHH(Sketch):
         seed_stream: SeedStream | None = None,
         _state: tuple | None = None,
     ) -> None:
-        if epsilon is None:
-            epsilon = phi / 2.0
-        assert phi > epsilon
-        self.phi, self.epsilon, self.delta = phi, epsilon, delta
-        self.m, self.gran = int(m), int(gran)
-        self.k = 1 << gran
-        self.b, self.hash_family = b, hash_family
-        self.family = FAMILIES[hash_family]
-        self.logm = int(math.floor(math.log(max(self.m, 2), self.k))) + 1
-        self.norm = 0
-
+        super().__init__(phi, epsilon, delta, m, gran, b, hash_family)
         if _state is not None:
-            self.verify, self.levels, self.level_seeds = _state
+            self.verify, self.levels = _state
             return
 
         stream = seed_stream or SeedStream()
-        # verification sketch, delta' = delta^2 * phi / 16 (const_sketch.c:38)
         self.verify = CountMin(
-            epsilon=epsilon, delta=delta * delta * phi / 16.0, b=b,
+            epsilon=self.epsilon, delta=delta * delta * phi / 16.0, b=b,
             hash_family=hash_family, seed_stream=stream,
         )
-        row_w = next_pow_2(int(math.ceil(1.0 / (epsilon * 0.25))))
-        cutoff = next_pow_2(self.verify.w * self.verify.d)
-        self.levels = []  # ("exact", arr) | ("row", arr)
-        self.level_seeds = []  # (a, b) per "row" level, None for exact
-        for lvl in range(self.logm):
-            universe = (self.m >> (self.gran * lvl)) + 1
-            if universe <= cutoff:
-                self.levels.append(("exact", np.zeros(universe, dtype=np.int64)))
-                self.level_seeds.append(None)
-            else:
-                self.levels.append(("row", np.zeros(row_w, dtype=np.int64)))
-                self.level_seeds.append(self.family.gen_seeds(stream, hash_M(row_w)))
+        row_w = next_pow_2(int(math.ceil(1.0 / (self.epsilon * 0.25))))
+        self.levels = self._layout(
+            next_pow_2(self.verify.w * self.verify.d), "row",
+            lambda: CountMin(width=row_w, depth=1, hash_family=hash_family, seed_stream=stream),
+        )
 
     # ------------------------------------------------------------------
-    def update_batch(self, items, counts=None) -> None:
-        chunked_update(self._update_chunk, as_u64(items), None if counts is None else np.asarray(counts))
+    def _update_chunk(self, x, counts) -> None:
+        self.verify.update_batch(x, as_i64(counts, len(x)))
+        super()._update_chunk(x, counts)
 
-    def _update_chunk(self, items, counts) -> None:
-        x = as_u64(items)
-        c = as_i64(counts, len(x))
-        self.norm += int(c.sum())
-        self.verify.update_batch(x, c)
-        for lvl, (kind, state) in enumerate(self.levels):
-            pref = x >> np.uint64(self.gran * lvl)
-            if kind == "exact":
-                # dense unweighted: exact unweighted bincount; weighted:
-                # np.add.at (float64-weighted bincount truncates > 2^53)
-                if counts is None and len(x) >= 2 * len(state):
-                    state += np.bincount(pref.astype(np.int64), minlength=len(state))
-                else:
-                    np.add.at(state, pref.astype(np.int64), c)
-            else:
-                a, bb = self.level_seeds[lvl]
-                h = self.family(pref, len(state), hash_M(len(state)), a, bb)
-                np.add.at(state, h, c)
+    def _confirm(self, ids, est, th):
+        # leaf: confirm against the verification sketch (const_sketch.c:267)
+        est = self.verify.point(ids)
+        ok = est >= th
+        return ids[ok], est[ok]
 
-    def _estimate(self, lvl: int, ids: np.ndarray) -> np.ndarray:
-        kind, state = self.levels[lvl]
-        if kind == "exact":
-            return state[ids.astype(np.int64)]
-        a, bb = self.level_seeds[lvl]
-        h = self.family(ids, len(state), hash_M(len(state)), a, bb)
-        return state[h]
-
-    def query(self, phi: float | None = None) -> list[tuple[int, int]]:
-        phi = self.phi if phi is None else phi
-        th = phi * self.norm
-        if self.norm == 0:
-            return []
-        top = self.logm - 1
-        cand = np.arange((self.m >> (self.gran * top)) + 1, dtype=np.uint64)
-        for lvl in range(top, -1, -1):
-            if len(cand) == 0:
-                return []
-            keep = cand[self._estimate(lvl, cand) >= th]
-            if lvl == 0:
-                # leaf: confirm against the verification sketch
-                # (const_sketch.c:267)
-                est = self.verify.point(keep)
-                ok = est >= th
-                return [
-                    (int(i), int(e)) for i, e in zip(keep[ok].tolist(), est[ok].tolist())
-                ]
-            children = (keep[:, None] << np.uint64(self.gran)) + np.arange(
-                self.k, dtype=np.uint64
-            )
-            cand = children.ravel()
-            cand = cand[cand <= (self.m >> (self.gran * (lvl - 1)))]
-        return []
-
-    def point(self, items) -> np.ndarray:
+    def point(self, items):
         return self.verify.point(items)
 
     # ------------------------------------------------------------------
     def merge(self, other: "ConstSketchHH") -> "ConstSketchHH":
-        assert (self.m, self.gran, self.level_seeds) == (other.m, other.gran, other.level_seeds)
         self.verify.merge(other.verify)
-        for (ka, sa), (kb, sb) in zip(self.levels, other.levels):
-            assert ka == kb
-            sa += sb
-        self.norm += other.norm
-        return self
+        return super().merge(other)
 
     def _header(self):
         return {
@@ -155,41 +84,30 @@ class ConstSketchHH(Sketch):
             "m": self.m, "gran": self.gran, "b": self.b,
             "family": self.hash_family, "norm": self.norm,
             "level_kinds": [k for k, _ in self.levels],
-            "level_seeds": self.level_seeds,
+            "level_seeds": [None if k == "exact" else s.seeds[0] for k, s in self.levels],
         }
 
-    def _payload(self) -> bytes:
-        import struct
+    def _pack_table(self, table) -> bytes:
+        return pack_i64(table.table)
 
-        parts = []
-        vb = self.verify.to_bytes()
-        parts.append(struct.pack("<Q", len(vb)))
-        parts.append(vb)
-        for _, state in self.levels:
-            blob = pack_i64(state)
-            parts.append(struct.pack("<Q", len(blob)))
-            parts.append(blob)
-        return b"".join(parts)
+    def _payload(self) -> bytes:
+        return frame([self.verify.to_bytes(), *self._level_blobs()])
 
     @classmethod
     def _from_parts(cls, header, payload) -> "ConstSketchHH":
-        import struct
-
-        (ln,) = struct.unpack("<Q", payload[:8])
-        off = 8
-        verify = Sketch.from_bytes(payload[off : off + ln])
-        off += ln
+        verify, *blobs = unframe(payload)
         levels = []
-        for kind in header["level_kinds"]:
-            (ln,) = struct.unpack("<Q", payload[off : off + 8])
-            off += 8
-            levels.append((kind, unpack_i64(payload[off : off + ln])))
-            off += ln
-        seeds = [tuple(s) if s else None for s in header["level_seeds"]]
+        for kind, blob, seed in zip(header["level_kinds"], blobs, header["level_seeds"]):
+            counts = unpack_i64(blob)
+            if kind != "exact":
+                row = CountMin(width=len(counts), depth=1, hash_family=header["family"], seeds=[seed])
+                row.table, row.norm = counts.reshape(1, -1), header["norm"]
+                counts = row
+            levels.append((kind, counts))
         s = cls(
             phi=header["phi"], epsilon=header["epsilon"], delta=header["delta"],
             m=header["m"], gran=header["gran"], b=header["b"],
-            hash_family=header["family"], _state=(verify, levels, seeds),
+            hash_family=header["family"], _state=(Sketch.from_bytes(verify), levels),
         )
         s.norm = header["norm"]
         return s

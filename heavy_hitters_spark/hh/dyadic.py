@@ -1,49 +1,32 @@
 """Hierarchical k-ary (dyadic when gran=1) heavy-hitter structure +
-dyadic range queries, semantics-parity with the reference's ``src/hh/``:
+dyadic range queries on the level hierarchy (``hh.levels``), with a
+full Count-Min or Count-Sketch table per hashed level:
 
-- level decomposition over prefixes ``x >> (gran*level)`` with branch
-  factor ``k = 2^gran`` (hh_ktree: ktree.c:19-22,54-68; gran=1 gives the
-  binary ``hh_sketch`` of sketch.c:47-70; reference CLI default gran=8,
-  precision_hh.c:116)
 - per-level failure budget ``delta' = delta*phi/(k*logm)`` (ktree.c:26;
-  binary case sketch.c's ``delta*phi/(2*logm)``)
-- exact dense counter arrays for top levels whose universe is at most
-  ``next_pow_2(w*d)`` — the reference's exact-top-levels space/accuracy
-  trade (sketch.c:48-70, cormode_cmh.c:89-93)
-- query: breadth-first search from the top level, expanding children
-  whose level estimate >= threshold; threshold = ``phi * L1`` adjusted
-  by the sketch's policy (CM: identity, count_min.h:45-50; CS:
-  ``th - eps*L1``, count_median.h:46-49); emit leaves >= threshold
-  (sketch.c:204-262)
+  binary case sketch.c's ``delta*phi/(2*logm)``); the exact-level cutoff
+  is ``next_pow_2(w*d)`` of those level tables
 - guarantee (phi-HH): every item with freq >= phi*L1 reported (recall),
   nothing below (phi-eps)*L1 reported (precision), w.p. >= 1-delta
 - ``range_count(lo, hi)``: sum over O(k·log_k m) canonical k-ary
   intervals — the scalable range query the level decomposition exists
   for (the reference only exposes the naive per-point ``*_range_sum``,
   count_min.c:147-156)
-
-All levels are updated in a single pass over each batch (one shift per
-level), and the whole structure is linear ⇒ merge-order-invariant when
-the underlying sketches are (CM plain / CS).
 """
 
 from __future__ import annotations
 
-import math
-
 import numpy as np
 
-from ..core.base import Sketch, as_i64, as_u64, chunked_update, register
+from ..core.base import Sketch, as_u64, frame, register, unframe, unpack_i64
 from ..core.countmin import CountMin
 from ..core.countsketch import CountSketch
 from ..core.hashing import next_pow_2
 from ..core.prng import SeedStream
-
-UNIVERSE_32 = (1 << 32) - 1
+from .levels import UNIVERSE_32, LevelHierarchy
 
 
 @register
-class DyadicHH(Sketch):
+class DyadicHH(LevelHierarchy):
     TYPE = "dyadic_hh"
 
     def __init__(
@@ -65,32 +48,17 @@ class DyadicHH(Sketch):
         """``width``/``depth``: global per-level sketch dimension
         override — the reference's ``-w``/``-h`` CLI flags, which apply
         inside ``sketch_create`` to EVERY sketch including the
-        hierarchy's level sketches (precision_hh.c:116-150). The
-        (ε, δ′)-derived dims are the guarantee-carrying default; the
-        override is the reference's own space/accuracy trade (essential
-        for the count-sketch hierarchy, whose δ′ sizing is quadratic in
-        1/ε — callers that verify candidates exactly only need recall,
-        not the full (ε, δ) estimate guarantee)."""
-        if epsilon is None:
-            epsilon = phi / 2.0  # reference experiment convention
-        assert phi > epsilon, "reference guard: phi must exceed epsilon (sketch.c:27)"
-        if (width is None) != (depth is None):
-            raise ValueError(
-                "width/depth override must be given together (the reference's "
-                "-w/-h flags always travel as a pair); a lone value would "
-                "silently fall back to (eps, delta)-derived dimensions"
-            )
-        self.phi, self.epsilon, self.delta = phi, epsilon, delta
-        self.m, self.gran = int(m), int(gran)
-        self.k = 1 << gran
+        hierarchy's level sketches (precision_hh.c:116-150); like those
+        flags they travel as a pair. The (ε, δ′)-derived dims are the
+        guarantee-carrying default; the override is the reference's own
+        space/accuracy trade (essential for the count-sketch hierarchy,
+        whose δ′ sizing is quadratic in 1/ε — callers that verify
+        candidates exactly only need recall, not the full (ε, δ)
+        estimate guarantee)."""
+        super().__init__(phi, epsilon, delta, m, gran, b, hash_family)
         self.sketch_type = sketch_type
-        self.b, self.hash_family = b, hash_family
         self.conservative = conservative
         self.width, self.depth = width, depth
-        # logm = floor(log_k(m)) + 1 levels of gran-bit prefixes (ktree.c:19-22)
-        self.logm = int(math.floor(math.log(max(self.m, 2), self.k))) + 1
-        self.norm = 0
-
         if _levels is not None:
             self.levels = _levels
             return
@@ -99,14 +67,9 @@ class DyadicHH(Sketch):
         stream = seed_stream or SeedStream()
         # reference sizes the exact-level cutoff from the leaf sketch dims
         proto = self._make_sketch(delta_lvl, SeedStream(1, 2))
-        cutoff = next_pow_2(proto.w * proto.d)
-        self.levels = []  # index = level; entry = ("exact", np.array) | ("sketch", Sketch)
-        for lvl in range(self.logm):
-            universe = (self.m >> (self.gran * lvl)) + 1
-            if universe <= cutoff:
-                self.levels.append(("exact", np.zeros(universe, dtype=np.int64)))
-            else:
-                self.levels.append(("sketch", self._make_sketch(delta_lvl, stream)))
+        self.levels = self._layout(
+            next_pow_2(proto.w * proto.d), "sketch", lambda: self._make_sketch(delta_lvl, stream)
+        )
 
     def _make_sketch(self, delta_lvl: float, stream: SeedStream):
         if self.sketch_type == "count_min":
@@ -123,67 +86,6 @@ class DyadicHH(Sketch):
                 width=self.width, depth=self.depth,
             )
         raise ValueError(self.sketch_type)
-
-    # ------------------------------------------------------------------
-    def update_batch(self, items, counts=None) -> None:
-        chunked_update(self._update_chunk, as_u64(items), None if counts is None else np.asarray(counts))
-
-    def _update_chunk(self, items, counts) -> None:
-        x = as_u64(items)
-        c = as_i64(counts, len(x))
-        self.norm += int(c.sum())
-        for lvl, (kind, state) in enumerate(self.levels):
-            pref = x >> np.uint64(self.gran * lvl)
-            if kind == "exact":
-                # dense unweighted: exact unweighted bincount; weighted:
-                # np.add.at (float64-weighted bincount truncates > 2^53)
-                if counts is None and len(x) >= 2 * len(state):
-                    state += np.bincount(pref.astype(np.int64), minlength=len(state))
-                else:
-                    np.add.at(state, pref.astype(np.int64), c)
-            else:
-                state.update_batch(pref, c)
-
-    def _estimate(self, lvl: int, ids: np.ndarray) -> np.ndarray:
-        kind, state = self.levels[lvl]
-        if kind == "exact":
-            return state[ids.astype(np.int64)]
-        return state.point(ids)
-
-    def _threshold(self, lvl: int, th: float) -> float:
-        """Per-sketch threshold policy (count_min.h:45-50 / count_median.h:46-49)."""
-        kind, state = self.levels[lvl]
-        if kind == "exact" or self.sketch_type == "count_min":
-            return th
-        return th - self.epsilon * self.norm
-
-    # ------------------------------------------------------------------
-    def query(self, phi: float | None = None) -> list[tuple[int, int]]:
-        """phi-heavy hitters: [(item, estimate)] sorted by item id.
-
-        Top-down BFS, batch-vectorized per level (sketch.c:204-262)."""
-        phi = self.phi if phi is None else phi
-        th = phi * self.norm
-        if self.norm == 0:
-            return []
-        top = self.logm - 1
-        universe_top = (self.m >> (self.gran * top)) + 1
-        cand = np.arange(universe_top, dtype=np.uint64)
-        for lvl in range(top, -1, -1):
-            if len(cand) == 0:
-                return []
-            est = self._estimate(lvl, cand)
-            keep = cand[est >= self._threshold(lvl, th)]
-            if lvl == 0:
-                est0 = self._estimate(0, keep)
-                return [(int(i), int(e)) for i, e in zip(keep.tolist(), est0.tolist())]
-            # expand each surviving prefix into its k children
-            children = (keep[:, None] << np.uint64(self.gran)) + np.arange(
-                self.k, dtype=np.uint64
-            )
-            cand = children.ravel()
-            cand = cand[cand <= ((self.m >> (self.gran * (lvl - 1))))]
-        return []
 
     def point(self, items) -> np.ndarray:
         return self._estimate(0, as_u64(np.atleast_1d(np.asarray(items))))
@@ -217,17 +119,6 @@ class DyadicHH(Sketch):
         return total
 
     # ------------------------------------------------------------------
-    def merge(self, other: "DyadicHH") -> "DyadicHH":
-        assert (self.m, self.gran, self.sketch_type) == (other.m, other.gran, other.sketch_type)
-        for (ka, sa), (kb, sb) in zip(self.levels, other.levels):
-            assert ka == kb
-            if ka == "exact":
-                sa += sb
-            else:
-                sa.merge(sb)
-        self.norm += other.norm
-        return self
-
     def _header(self):
         return {
             "phi": self.phi, "epsilon": self.epsilon, "delta": self.delta,
@@ -240,34 +131,18 @@ class DyadicHH(Sketch):
             ],
         }
 
+    def _pack_table(self, table) -> bytes:
+        return table.to_bytes()
+
     def _payload(self) -> bytes:
-        import struct
-
-        from ..core.base import pack_i64
-
-        parts = []
-        for kind, state in self.levels:
-            blob = pack_i64(state) if kind == "exact" else state.to_bytes()
-            parts.append(struct.pack("<Q", len(blob)))
-            parts.append(blob)
-        return b"".join(parts)
+        return frame(self._level_blobs())
 
     @classmethod
     def _from_parts(cls, header, payload) -> "DyadicHH":
-        import struct
-
-        levels, off = [], 0
-        for kind in header["level_kinds"]:
-            (ln,) = struct.unpack("<Q", payload[off : off + 8])
-            off += 8
-            blob = payload[off : off + ln]
-            off += ln
-            if kind == "exact":
-                from ..core.base import unpack_i64
-
-                levels.append(("exact", unpack_i64(blob)))
-            else:
-                levels.append(("sketch", Sketch.from_bytes(blob)))
+        levels = [
+            (kind, unpack_i64(blob) if kind == "exact" else Sketch.from_bytes(blob))
+            for kind, blob in zip(header["level_kinds"], unframe(payload))
+        ]
         s = cls(
             phi=header["phi"], epsilon=header["epsilon"], delta=header["delta"],
             m=header["m"], gran=header["gran"], sketch_type=header["sketch_type"],

@@ -145,6 +145,30 @@ def phi_heavy_tokens(spark: SparkSession, sf_dir: str, phi: float = 0.02) -> Dat
     )
 
 
+def _verified_heavy_users(
+    spark: SparkSession, ev: DataFrame, hh, weight_col: str | None = None
+) -> DataFrame:
+    """The candidate-to-verify path of every phi-heavy-user query: build
+    the hierarchy template ``hh`` over ``ev``'s ``id`` column, broadcast
+    its ``query()`` candidates into a join with ``ev``, and keep the
+    user_ids whose exact count (``freq``; with ``weight_col``, the net
+    sum ``net_freq``) reaches ``phi * L1``."""
+    name = "freq" if weight_col is None else "net_freq"
+    merged, _ = build_sketch(ev, hh, id_col="id", weight_col=weight_col)
+    cand = [int(i) for i, _ in merged.query()]
+    if not cand:
+        return spark.createDataFrame([], f"user_id long, {name} long")
+    cand_df = spark.createDataFrame([(c,) for c in cand], "id long")
+    exact = F.count("*") if weight_col is None else F.sum(weight_col)
+    return (
+        ev.join(F.broadcast(cand_df), "id")
+        .groupBy("user_id")
+        .agg(exact.alias(name))
+        .where(F.col(name) >= merged.phi * merged.norm)
+        .orderBy(F.asc("user_id"))
+    )
+
+
 def phi_heavy_users(spark: SparkSession, sf_dir: str, phi: float = 0.005) -> DataFrame:
     """phi-heavy-hitter user_ids over events, via the hierarchical
     dyadic structure (reference semantics: recall of everything >=
@@ -154,19 +178,7 @@ def phi_heavy_users(spark: SparkSession, sf_dir: str, phi: float = 0.005) -> Dat
         phi=phi, epsilon=phi / 2, delta=0.05, m=MASK32, gran=8,
         seed_stream=SeedStream(1234, 5678),
     )
-    merged, _ = build_sketch(ev, hh, id_col="id")
-    cand = [int(i) for i, _ in merged.query()]
-    if not cand:
-        return spark.createDataFrame([], "user_id long, freq long")
-    cand_df = spark.createDataFrame([(c,) for c in cand], "id long")
-    total = merged.norm
-    return (
-        ev.join(F.broadcast(cand_df), "id")
-        .groupBy("user_id")
-        .agg(F.count("*").alias("freq"))
-        .where(F.col("freq") >= phi * total)
-        .orderBy(F.asc("user_id"))
-    )
+    return _verified_heavy_users(spark, ev, hh)
 
 
 def topk_event_types(spark: SparkSession, sf_dir: str, k: int = 5) -> DataFrame:

@@ -123,6 +123,23 @@ def test_const_sketch_planted_and_merge(rng):
     assert sorted(r.query()) == sorted(bulk.query())
 
 
+@pytest.mark.parametrize("cls", [DyadicHH, ConstSketchHH])
+@pytest.mark.parametrize("n", [10, 50000])
+def test_out_of_universe_ids_rejected_before_any_update(cls, n):
+    """An id above m must raise ValueError before norm or any level is
+    touched, for sparse and for dense (multi-chunk) batches."""
+    m = (1 << 20) - 1
+    hh = cls(phi=0.05, epsilon=0.01, delta=0.1, m=m, gran=8, seed_stream=SeedStream(1, 2))
+    hh.update_batch(np.arange(1000, dtype=np.uint64))
+    before, norm = hh.to_bytes(), hh.norm
+    bad = np.full(n, 7, dtype=np.uint64)
+    bad[-1] = m + 1
+    with pytest.raises(ValueError, match=f"m={m}"):
+        hh.update_batch(bad)
+    assert hh.norm == norm
+    assert hh.to_bytes() == before
+
+
 def test_phi_guard():
     with pytest.raises(AssertionError):
         DyadicHH(phi=0.01, epsilon=0.02, delta=0.1)  # phi must exceed eps

@@ -16,7 +16,7 @@ from heavy_hitters_spark.core import (
     SeedStream,
     merge_all,
 )
-from heavy_hitters_spark.hh import DyadicHH
+from heavy_hitters_spark.hh import ConstSketchHH, DyadicHH
 
 
 def _parts(data, n_parts, scheme, rng):
@@ -57,6 +57,15 @@ LINEAR_FACTORIES = {
     "hll": lambda: HLL(p=10),
     "bloom": lambda: Bloom(capacity=10000),
     "dyadic_hh": lambda: DyadicHH(
+        phi=0.05, epsilon=0.01, delta=0.1, m=(1 << 20) - 1, gran=8,
+        seed_stream=SeedStream(1, 2),
+    ),
+    "dyadic_hh_count_sketch": lambda: DyadicHH(
+        phi=0.05, epsilon=0.01, delta=0.1, m=(1 << 20) - 1, gran=8,
+        sketch_type="count_sketch", seed_stream=SeedStream(1, 2),
+        width=1 << 12, depth=5,
+    ),
+    "const_sketch_hh": lambda: ConstSketchHH(
         phi=0.05, epsilon=0.01, delta=0.1, m=(1 << 20) - 1, gran=8,
         seed_stream=SeedStream(1, 2),
     ),
