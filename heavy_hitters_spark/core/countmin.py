@@ -91,6 +91,21 @@ class CountMin(HashedTable):
         """Batch point query: min over rows (count_min.c:83-111)."""
         return self._cells(self._rows(as_u64(np.atleast_1d(np.asarray(items))))).min(axis=0)
 
+    def point_ge(self, items, th: float) -> tuple[np.ndarray, np.ndarray]:
+        """Row-pruned ``point`` >= ``th``: the min over rows is >= th
+        only if every row is, so each row hashes only the survivors of
+        the rows before it."""
+        x = as_u64(np.atleast_1d(np.asarray(items)))
+        idx = np.arange(len(x))
+        est = None
+        for r in range(self.d):
+            a, b = self.seeds[r][:2]
+            v = self.table[r].take(self.family(x, self.w, self.M, a, b))
+            est = v if est is None else np.minimum(est, v)
+            keep = np.flatnonzero(est >= th)
+            idx, x, est = idx[keep], x[keep], est[keep]
+        return idx, est
+
     def above_threshold(self, items, th: int) -> np.ndarray:
         return self.point(items) >= th
 

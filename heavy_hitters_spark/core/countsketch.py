@@ -86,7 +86,7 @@ class CountSketch(HashedTable):
 
     def _signs(self, items: np.ndarray) -> np.ndarray:
         """d x n matrix of +-1 signs."""
-        return np.stack([sign_ms(items, sa, sb) for _, _, sa, sb in self.seeds])
+        return sign_ms(items, self._seed_cols[2], self._seed_cols[3])
 
     def _update_chunk(self, x, counts) -> None:
         c = as_i64(counts, len(x))
@@ -112,7 +112,7 @@ class CountSketch(HashedTable):
         x = as_u64(np.atleast_1d(np.asarray(items)))
         a, b, sa, sb = self.seeds[row]
         h = self.family(x, self.w, self.M, a, b)
-        return self.table[row, h] * sign_ms(x, sa, sb)
+        return self.table[row].take(h) * sign_ms(x, sa, sb)
 
     @staticmethod
     def hh_threshold(l1: int, epsilon: float, th: float) -> float:

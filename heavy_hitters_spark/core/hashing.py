@@ -10,9 +10,14 @@ Families (``c`` = universality width factor, hash.h:25):
 - ``cw2``/``cw2p2`` 2-wise CW      (hash.c:123-143)
 - ``sign_ms`` / ``sign_cw`` ±1     (hash.h:74-93 / 45-55)
 
-All kernels operate on ``np.uint64`` arrays with explicit uint32/uint64
-wraparound (numpy unsigned arithmetic wraps, matching C). ``M`` is
-``floor(log2(w))`` (hash.c:203-205).
+The multiply-shift family (``ms``, ``ms2``, ``sign_ms``) runs in
+``np.uint32`` lanes: uint32 arithmetic wraps mod 2^32, which is exactly
+hash.c's ``(uint32)`` cast, and ids at or above 2^32 keep their low 32
+bits, as ``(uint32)(a*x+b)`` does for a 64-bit ``x``. The Carter-Wegman
+family runs in ``np.uint64`` lanes with the mod-p mask. Seeds may be
+scalars or ``(d, 1)`` columns; a column broadcasts against the ``n``
+ids into a ``d x n`` result. ``M`` is ``floor(log2(w))``
+(hash.c:203-205).
 """
 
 from __future__ import annotations
@@ -24,7 +29,6 @@ import numpy as np
 from .prng import MOD_P, SeedStream
 
 _U64 = np.uint64
-_M32 = _U64(0xFFFFFFFF)
 _MODP = _U64(MOD_P)
 
 
@@ -37,54 +41,54 @@ def _is_pow2(w: int) -> bool:
     return w > 0 and (w & (w - 1)) == 0
 
 
-def ms(x: np.ndarray, w: int, M: int, a: int, b: int) -> np.ndarray:
+def _u32(v) -> np.ndarray:
+    """Ids or seeds as uint32 lanes: the low 32 bits, as C's cast."""
+    return np.asarray(v, dtype=_U64).astype(np.uint32)
+
+
+def ms(x: np.ndarray, w: int, M: int, a, b) -> np.ndarray:
     """(uint32)(a*x+b) >> (32-M); requires power-of-2 w (hash.c:65-82)."""
     assert _is_pow2(w), "ms requires power-of-2 width"
-    x = x if x.dtype == _U64 else x.astype(_U64)
-    r = (_U64(a) * x + _U64(b)) & _M32
-    return (r >> _U64(32 - M)).astype(np.int64)
+    return (_u32(a) * _u32(x) + _u32(b)) >> np.uint32(32 - M)
 
 
-def ms2(x: np.ndarray, w: int, M: int, a: int, b: int) -> np.ndarray:  # noqa: ARG001
+def ms2(x: np.ndarray, w: int, M: int, a, b) -> np.ndarray:  # noqa: ARG001
     assert _is_pow2(w), "ms2 requires power-of-2 width"
-    x = x if x.dtype == _U64 else x.astype(_U64)
-    r = (_U64(a) * x) & _M32
-    return (r >> _U64(32 - M)).astype(np.int64)
+    return (_u32(a) * _u32(x)) >> np.uint32(32 - M)
 
 
-def cw(x: np.ndarray, w: int, M: int, a: int, b: int) -> np.ndarray:  # noqa: ARG001
+def cw(x: np.ndarray, w: int, M: int, a, b) -> np.ndarray:  # noqa: ARG001
     """((a*x+b) & MOD_P) % w — uint64 wraparound then mask (hash.c:13-28)."""
     r = (_U64(a) * x.astype(_U64) + _U64(b)) & _MODP
     return (r % _U64(w)).astype(np.int64)
 
 
-def cwp2(x: np.ndarray, w: int, M: int, a: int, b: int) -> np.ndarray:  # noqa: ARG001
+def cwp2(x: np.ndarray, w: int, M: int, a, b) -> np.ndarray:  # noqa: ARG001
     assert _is_pow2(w)
     r = (_U64(a) * x.astype(_U64) + _U64(b)) & _MODP
     return (r & _U64(w - 1)).astype(np.int64)
 
 
-def cw2(x: np.ndarray, w: int, M: int, a: int, b: int) -> np.ndarray:  # noqa: ARG001
+def cw2(x: np.ndarray, w: int, M: int, a, b) -> np.ndarray:  # noqa: ARG001
     r = (_U64(a) * x.astype(_U64)) & _MODP
     return (r % _U64(w)).astype(np.int64)
 
 
-def cw2p2(x: np.ndarray, w: int, M: int, a: int, b: int) -> np.ndarray:  # noqa: ARG001
+def cw2p2(x: np.ndarray, w: int, M: int, a, b) -> np.ndarray:  # noqa: ARG001
     assert _is_pow2(w)
     r = (_U64(a) * x.astype(_U64)) & _MODP
     return (r & _U64(w - 1)).astype(np.int64)
 
 
-def sign_ms(x: np.ndarray, a: int, b: int) -> np.ndarray:
+def sign_ms(x: np.ndarray, a, b) -> np.ndarray:
     """+1 if top bit of (uint32)(a*x+b) set, else -1 (hash.h:74-85).
     Branch-free form 2*bit - 1 (np.where + astype(bool) measured ~3x
     slower in the hot Count-Sketch path)."""
-    x = x if x.dtype == _U64 else x.astype(_U64)
-    r = ((_U64(a) * x + _U64(b)) & _M32) >> _U64(31)
+    r = (_u32(a) * _u32(x) + _u32(b)) >> np.uint32(31)
     return (r.astype(np.int64) << 1) - 1
 
 
-def sign_cw(x: np.ndarray, a: int, b: int) -> np.ndarray:
+def sign_cw(x: np.ndarray, a, b) -> np.ndarray:
     x = x if x.dtype == _U64 else x.astype(_U64)
     r = (_U64(a) * x + _U64(b)) & _MODP
     bit = ((r >> _U64(31)) & _U64(1)).astype(np.int64)
@@ -106,7 +110,7 @@ class HashFamily:
         b = getattr(stream, self.bgen_name)(M)
         return a, b
 
-    def __call__(self, x: np.ndarray, w: int, M: int, a: int, b: int) -> np.ndarray:
+    def __call__(self, x: np.ndarray, w: int, M: int, a, b) -> np.ndarray:
         return self.fn(x, w, M, a, b)
 
 

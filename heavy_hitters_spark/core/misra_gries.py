@@ -110,9 +110,7 @@ class MisraGries(Sketch):
         """(item, lower-bound estimate) pairs, count-desc. Any item with
         true count > N/(k+1) is guaranteed present."""
         order = np.lexsort((self.items, -self.cnts))
-        return [
-            (int(self.items[i]), int(self.cnts[i])) for i in order
-        ]
+        return list(zip(self.items[order].tolist(), self.cnts[order].tolist()))
 
     def merge(self, other: "MisraGries") -> "MisraGries":
         assert self.k == other.k

@@ -65,6 +65,9 @@ class HashedTable(Sketch):
             stream = seed_stream or SeedStream()
             seeds = [self._draw_seeds(stream) for _ in range(self.d)]
         self.seeds = [tuple(int(v) for v in s) for s in seeds]
+        # each seed as a (d, 1) column: one kernel call hashes every row
+        self._seed_cols = np.array(self.seeds, dtype=np.uint64).T[:, :, None]
+        self._offsets = (np.arange(self.d, dtype=np.int64) * self.w)[:, None]
         self.table = np.zeros((self.d, self.w), dtype=np.int64)
         self.norm = 0
 
@@ -74,15 +77,22 @@ class HashedTable(Sketch):
 
     def _rows(self, items: np.ndarray) -> np.ndarray:
         """d x n matrix of bucket indices."""
-        return np.stack([self.family(items, self.w, self.M, s[0], s[1]) for s in self.seeds])
+        return self.family(items, self.w, self.M, self._seed_cols[0], self._seed_cols[1])
 
     def _flat(self, h: np.ndarray) -> np.ndarray:
         """Bucket indices ``h`` as indices into ``table.reshape(-1)``."""
-        return (h + (np.arange(self.d, dtype=np.int64) * self.w)[:, None]).ravel()
+        return (h + self._offsets).ravel()
 
     def _cells(self, h: np.ndarray) -> np.ndarray:
         """d x n counters at bucket indices ``h``."""
-        return self.table[np.arange(self.d)[:, None], h]
+        return self.table.take(self._flat(h)).reshape(h.shape)
+
+    def point_ge(self, items, th: float) -> tuple[np.ndarray, np.ndarray]:
+        """(indices into ``items``, estimates) of the items whose point
+        estimate is >= ``th``, in input order."""
+        est = self.point(items)
+        ok = np.flatnonzero(est >= th)
+        return ok, est[ok]
 
     def update_batch(self, items, counts=None) -> None:
         chunked_update(self._update_chunk, as_u64(items), None if counts is None else np.asarray(counts))

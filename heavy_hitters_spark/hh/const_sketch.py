@@ -66,9 +66,8 @@ class ConstSketchHH(LevelHierarchy):
 
     def _confirm(self, ids, est, th):
         # leaf: confirm against the verification sketch (const_sketch.c:267)
-        est = self.verify.point(ids)
-        ok = est >= th
-        return ids[ok], est[ok]
+        ok, est = self.verify.point_ge(ids, th)
+        return ids[ok], est
 
     def point(self, items):
         return self.verify.point(items)

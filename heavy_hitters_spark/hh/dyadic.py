@@ -101,18 +101,18 @@ class DyadicHH(LevelHierarchy):
                 ids = np.arange(lo, hi + 1, dtype=np.uint64)
                 total += int(self._estimate(lvl, ids).sum())
                 break
+            # the level's partial blocks, left and right, in one estimate
+            blocks = []
             if lo % k != 0 or (hi - lo + 1) < k:
                 up = min(hi, (lo // k + 1) * k - 1)
-                ids = np.arange(lo, up + 1, dtype=np.uint64)
-                total += int(self._estimate(lvl, ids).sum())
+                blocks.append(np.arange(lo, up + 1, dtype=np.uint64))
                 lo = up + 1
-            if lo > hi:
-                break
-            if (hi + 1) % k != 0:
+            if lo <= hi and (hi + 1) % k != 0:
                 down = max(lo, (hi // k) * k)
-                ids = np.arange(down, hi + 1, dtype=np.uint64)
-                total += int(self._estimate(lvl, ids).sum())
+                blocks.append(np.arange(down, hi + 1, dtype=np.uint64))
                 hi = down - 1
+            if blocks:
+                total += int(self._estimate(lvl, np.concatenate(blocks)).sum())
             if lo > hi:
                 break
             lo, hi, lvl = lo // k, (hi + 1) // k - 1, lvl + 1

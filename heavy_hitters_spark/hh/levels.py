@@ -84,9 +84,17 @@ class LevelHierarchy(Sketch):
             return state[ids.astype(np.int64)]
         return state.point(ids)
 
-    def _threshold(self, lvl: int, th: float) -> float:
+    def _survivors(self, lvl: int, ids: np.ndarray, th: float):
+        """(ids, estimates) of the level's ``ids`` whose estimate clears
+        the level threshold: ``th`` on exact levels, else ``th`` adjusted
+        by the level table's policy."""
         kind, state = self.levels[lvl]
-        return th if kind == "exact" else state.hh_threshold(self.norm, self.epsilon, th)
+        if kind == "exact":
+            est = state[ids.astype(np.int64)]
+            ok = np.flatnonzero(est >= th)
+            return ids[ok], est[ok]
+        ok, est = state.point_ge(ids, state.hh_threshold(self.norm, self.epsilon, th))
+        return ids[ok], est
 
     def _confirm(self, ids: np.ndarray, est: np.ndarray, th: float):
         """Leaves that passed the level-0 threshold -> (ids, estimates)
@@ -96,8 +104,13 @@ class LevelHierarchy(Sketch):
     def query(self, phi: float | None = None) -> list[tuple[int, int]]:
         """phi-heavy hitters: [(item, estimate)] sorted by item id.
 
-        Top-down BFS, batch-vectorized per level (sketch.c:204-262)."""
+        Top-down BFS, batch-vectorized per level (sketch.c:204-262).
+        ``phi`` must exceed ``epsilon``, as at construction: below it a
+        count-sketch level threshold ``phi*L1 - eps*L1`` is <= 0 and
+        every prefix survives."""
         phi = self.phi if phi is None else phi
+        if phi <= self.epsilon:
+            raise ValueError(f"phi={phi} must exceed epsilon={self.epsilon} (sketch.c:27)")
         th = phi * self.norm
         if self.norm == 0:
             return []
@@ -106,13 +119,12 @@ class LevelHierarchy(Sketch):
         for lvl in range(top, -1, -1):
             if len(cand) == 0:
                 return []
-            est = self._estimate(lvl, cand)
-            ok = est >= self._threshold(lvl, th)
+            cand, est = self._survivors(lvl, cand, th)
             if lvl == 0:
-                ids, est = self._confirm(cand[ok], est[ok], th)
-                return [(int(i), int(e)) for i, e in zip(ids.tolist(), est.tolist())]
+                ids, est = self._confirm(cand, est, th)
+                return list(zip(ids.tolist(), est.tolist()))
             # expand each surviving prefix into its k children
-            children = (cand[ok][:, None] << np.uint64(self.gran)) + np.arange(self.k, dtype=np.uint64)
+            children = (cand[:, None] << np.uint64(self.gran)) + np.arange(self.k, dtype=np.uint64)
             cand = children.ravel()
             cand = cand[cand <= (self.m >> (self.gran * (lvl - 1)))]
         return []

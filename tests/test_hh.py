@@ -145,6 +145,33 @@ def test_phi_guard():
         DyadicHH(phi=0.01, epsilon=0.02, delta=0.1)  # phi must exceed eps
 
 
+@pytest.mark.parametrize(
+    "make",
+    [
+        lambda m: DyadicHH(
+            phi=0.01, delta=0.05, m=m, gran=8, sketch_type="count_sketch",
+            width=1 << 10, depth=5, seed_stream=SeedStream(1, 2),
+        ),
+        lambda m: ConstSketchHH(phi=0.01, delta=0.05, m=m, gran=8, seed_stream=SeedStream(1, 2)),
+    ],
+    ids=["dyadic_count_sketch", "const_sketch"],
+)
+def test_query_phi_guard(make):
+    """query(phi) keeps the constructor's guard phi > epsilon
+    (sketch.c:27). At or below epsilon a count-sketch level threshold
+    phi*L1 - eps*L1 is <= 0, every prefix survives, and on the 32-bit
+    universe the BFS expands every leaf; it must raise instead."""
+    m = (1 << 16) - 1
+    hh = make(m)
+    rng = np.random.default_rng(5)
+    hh.update_batch((rng.zipf(1.3, 50000) % (m + 1)).astype(np.uint64))
+    default = hh.query()
+    for phi in (hh.epsilon, 0.001):
+        with pytest.raises(ValueError, match="exceed epsilon"):
+            hh.query(phi)
+    assert default and hh.query() == default == hh.query(hh.phi)
+
+
 def test_partial_width_depth_override_raises():
     """ADVICE r04 #1: passing only one of width/depth used to silently
     fall back to the (eps, delta)-derived dims; it must raise."""

@@ -10,6 +10,7 @@ from heavy_hitters_spark.core.hashing import (
     cw,
     hash_M,
     ms,
+    ms2,
     next_pow_2,
     sign_ms,
     splitmix64,
@@ -60,6 +61,34 @@ def test_ms_uint32_wraparound():
     a, b, M = 0xDEADBEEF | 1, 12345, 10
     expected = ((((a * 0xFFFFFFFF) + b) & 0xFFFFFFFF) >> (32 - M))
     assert ms(x, 1 << M, M, a, b)[0] == expected
+
+
+def test_multiply_shift_uint32_lanes():
+    """ms, ms2 and sign_ms run in uint32 lanes. On ids at or above 2^32
+    and on (d, 1) seed columns they must equal the written-out formula
+    ((a*x+b) & 0xFFFFFFFF) >> (32-M), with b = 0 for ms2."""
+    rng = np.random.default_rng(3)
+    x = np.concatenate([
+        rng.integers(0, 1 << 32, 200, dtype=np.uint64),
+        rng.integers(1 << 32, 1 << 64, 200, dtype=np.uint64, endpoint=False),
+        np.array([0, 0xFFFFFFFF, 1 << 32, (1 << 64) - 1], dtype=np.uint64),
+    ])
+    s, M = SeedStream(11, 12), 12
+    seeds = [(s.ms_agen(), s.ms_bgen(M), s.sign_ms_agen(), s.sign_ms_bgen()) for _ in range(4)]
+    cols = np.array(seeds, dtype=np.uint64).T[:, :, None]
+
+    def formula(a, b, shift):
+        return [(((a * v + b) & 0xFFFFFFFF) >> shift) for v in x.tolist()]
+
+    ms_rows = ms(x, 1 << M, M, cols[0], cols[1])
+    ms2_rows = ms2(x, 1 << M, M, cols[0], cols[1])
+    sign_rows = sign_ms(x, cols[2], cols[3])
+    assert ms_rows.shape == ms2_rows.shape == sign_rows.shape == (4, len(x))
+    for r, (a, b, sa, sb) in enumerate(seeds):
+        assert ms_rows[r].tolist() == formula(a, b, 32 - M)
+        assert ms(x, 1 << M, M, a, b).tolist() == formula(a, b, 32 - M)
+        assert ms2_rows[r].tolist() == formula(a, 0, 32 - M)
+        assert sign_rows[r].tolist() == [2 * bit - 1 for bit in formula(sa, sb, 31)]
 
 
 def test_cw_mersenne_mask():

@@ -65,6 +65,33 @@ def test_cm_above_threshold_and_range(micro_pairs):
     assert cm.range_sum(1, 9) == int(cm.point(np.arange(1, 10)).sum())
 
 
+@pytest.mark.parametrize(
+    "make",
+    [
+        lambda: CountMin(width=256, depth=4, seed_stream=SeedStream(1, 2)),
+        lambda: CountMin(width=256, depth=4, conservative=True, seed_stream=SeedStream(1, 2)),
+        lambda: CountMin(epsilon=0.01, delta=0.05, hash_family="cw", seed_stream=SeedStream(1, 2)),
+        lambda: CountMin(width=256, depth=4, hash_family="ms2", seed_stream=SeedStream(1, 2)),
+        lambda: CountSketch(width=256, depth=5, seed_stream=SeedStream(1, 2)),
+    ],
+    ids=["cm", "cm_conservative", "cm_cw", "cm_ms2", "cs"],
+)
+def test_point_ge_equals_point_then_filter(make, rng):
+    """point_ge(items, th) -> (indices, estimates) of the items whose
+    point estimate is >= th, in input order; CountMin prunes row by
+    row, so its answer must match the full estimate then the filter."""
+    sk = make()
+    sk.update_batch((rng.zipf(1.3, 20000) % 5000).astype(np.uint64))
+    probes = np.concatenate([np.arange(300, dtype=np.uint64), rng.integers(0, 1 << 32, 300, dtype=np.uint64)])
+    est = sk.point(probes)
+    for th in (-5, 0, 1, 7.5, 40, int(est.max()), int(est.max()) + 1):
+        idx, got = sk.point_ge(probes, th)
+        want = np.flatnonzero(est >= th)
+        assert np.array_equal(idx, want) and np.array_equal(got, est[want]), th
+    idx, got = sk.point_ge(np.empty(0, dtype=np.uint64), 1)
+    assert len(idx) == 0 and len(got) == 0
+
+
 def test_cs_exact_small_and_unbiased(micro_pairs, rng):
     items, w = micro_pairs
     cs = CountSketch(epsilon=0.05, delta=0.05, b=4, seed_stream=SeedStream(1, 2))
