@@ -34,21 +34,17 @@ def register(cls):
 
 
 class Sketch:
-    """Common interface for all mergeable sketch states."""
+    """Common interface for all mergeable sketch states.
+
+    ``update_batch(items, counts)`` takes weighted updates, and every
+    type honours ``counts``: feeding a pre-aggregated (unique_items,
+    counts) batch is a valid feed of the raw stream it collapses, so
+    map-side combiners (spark/fused.py) hand every sketch the collapsed
+    batch. CM, CS, MG and KLL give equal bytes either way (MG and KLL
+    collapse every batch themselves); HLL and Bloom ignore multiplicity
+    by set semantics; t-digest keeps its error bound."""
 
     TYPE = "abstract"
-
-    # Whether feeding a pre-aggregated (unique_items, counts) batch is
-    # equivalent to feeding the raw stream. True for linear sketches
-    # (CM/CS: counter sums identical), set-semantics sketches
-    # (HLL/Bloom: duplicates are no-ops) and summaries whose contract
-    # is bounds-level rather than byte-level (MG, t-digest — their
-    # REPRESENTATION is already order/partition-dependent, only the
-    # error bound is the contract). False where weights are not
-    # supported exactly (KLL ignores ``counts``). Map-side combiners
-    # (spark/fused.py) consult this to route duplicates-collapsed
-    # batches through the weighted path.
-    PREAGG_SAFE = True
 
     # --- updates -----------------------------------------------------
     def update_batch(self, items: np.ndarray, counts: np.ndarray | None = None) -> None:
@@ -215,6 +211,18 @@ def as_u64(items) -> np.ndarray:
     if a.dtype != np.uint64:
         a = a.astype(np.int64).astype(np.uint64)  # tolerate signed inputs
     return a
+
+
+def collapse(items: np.ndarray, counts: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """Sorted (unique items, summed counts) of a weighted batch: one
+    stable argsort and one ``np.add.reduceat`` over runs of equal items
+    (exact in int64, unlike a float-weighted bincount)."""
+    order = np.argsort(items, kind="stable")
+    xs, cs = items[order], counts[order]
+    starts = np.flatnonzero(np.r_[True, xs[1:] != xs[:-1]])
+    if len(starts) < len(xs):
+        xs, cs = xs[starts], np.add.reduceat(cs, starts)
+    return xs, cs
 
 
 def as_i64(counts, n: int) -> np.ndarray:

@@ -8,12 +8,14 @@ PRNG (splitmix64), so a fixed op order reproduces exactly; merge is
 bound-preserving under any merge tree but not byte-identical
 (SURVEY.md §7 hard parts — tests assert rank-error bounds, not bytes).
 
-State is numpy float64 arrays end to end. Large batches are folded with
-ONE sort + cascaded halvings (each halving of a sorted array is a
-standard compaction applied to the batch subset, weight-preserving and
-bound-preserving) — the previous python-list compactors allocated one
-PyFloat per update (~3M objects per build partition), which both
-dominated the kernel wall and drove allocator churn.
+Updates are weighted, as in Apache DataSketches'
+``KllSketch.update(item, weight)``: a batch is collapsed to sorted
+(value, count) pairs and each value is inserted at every level h where
+bit h of its count is set, so it enters with exactly its weight. The
+insertion itself is exact; only the later compactions add rank error.
+An unweighted batch is the same batch with unit counts, so feeding raw
+items or their pre-aggregated (unique, count) form gives equal bytes.
+State is numpy float64 arrays end to end.
 
 Rank error: |est_rank - true_rank| <= eps*n with eps ~ O(1/k)
 (empirically ~1.5/k at k=200 for the constants used here).
@@ -25,7 +27,7 @@ import math
 
 import numpy as np
 
-from .base import Sketch, register
+from .base import Sketch, as_i64, collapse, register
 from .hashing import splitmix64
 
 _C = 2.0 / 3.0
@@ -35,9 +37,6 @@ _EMPTY = np.empty(0, dtype=np.float64)
 @register
 class KLL(Sketch):
     TYPE = "kll"
-    # update_batch ignores ``counts`` (unweighted sampler): collapsing
-    # duplicates before the update would change the sampled stream
-    PREAGG_SAFE = False
 
     def __init__(self, k: int = 200, seed: int = 0x5EED) -> None:
         self.k = int(k)
@@ -85,24 +84,26 @@ class KLL(Sketch):
         self.compactors[h + 1] = np.concatenate([self.compactors[h + 1], promoted])
 
     # ------------------------------------------------------------------
-    def update_batch(self, items, counts=None) -> None:  # noqa: ARG002 (unweighted)
+    def update_batch(self, items, counts=None) -> None:
         vals = np.asarray(items, dtype=np.float64)
-        self.n += len(vals)
-        # fold the batch with ONE sort + cascaded halvings: each halving
-        # of the (sorted) batch is a compaction applied to the batch
-        # subset alone — items promoted to level h+1 carry weight 2^(h+1)
-        # exactly as if level h had compacted them
-        arr = np.sort(vals)
-        h = 0
-        while len(arr) > max(2 * self.k, 4):
-            self._grow_to(h)
-            if len(arr) % 2 == 1:  # odd tail stays at this level
-                self.compactors[h] = np.concatenate([self.compactors[h], arr[-1:]])
-                arr = arr[:-1]
-            arr = arr[self._coin() :: 2]
-            h += 1
-        self._grow_to(h)
-        self.compactors[h] = np.concatenate([self.compactors[h], arr])
+        if not len(vals):
+            return
+        if counts is None:
+            vals, cnts = np.unique(vals, return_counts=True)
+        else:
+            cnts = as_i64(counts, len(vals))
+            if cnts.min() < 0:
+                # cash-register only: a deletion has no place in the
+                # compactors and would break the rank guarantee
+                raise ValueError("KLL is insert-only; negative weights rejected")
+            vals, cnts = collapse(vals, cnts)
+        self.n += int(cnts.sum())
+        # a count of w is sum(2^h for set bits h): one item per set bit
+        for h in range(int(cnts.max()).bit_length()):
+            sel = vals[(cnts >> h) & 1 == 1]
+            if len(sel):
+                self._grow_to(h)
+                self.compactors[h] = np.concatenate([self.compactors[h], sel])
         self._compress()
 
     def _weighted(self) -> tuple[np.ndarray, np.ndarray]:
@@ -140,7 +141,11 @@ class KLL(Sketch):
         return cw[idx].astype(np.int64)
 
     def merge(self, other: "KLL") -> "KLL":
-        assert self.k == other.k
+        if (self.k, self.seed) != (other.k, other.seed):
+            raise ValueError(
+                f"KLL merge needs equal k and seed: (k={self.k}, seed={self.seed}) "
+                f"vs (k={other.k}, seed={other.seed})"
+            )
         self._grow_to(len(other.compactors) - 1)
         for h, c in enumerate(other.compactors):
             if len(c):

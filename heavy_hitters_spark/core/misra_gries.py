@@ -26,7 +26,7 @@ from __future__ import annotations
 
 import numpy as np
 
-from .base import Sketch, as_i64, as_u64, register
+from .base import Sketch, as_i64, as_u64, collapse, register
 
 
 @register
@@ -89,11 +89,7 @@ class MisraGries(Sketch):
             # unweighted fast path: sorted-unique counting, no add.at
             ux, uc = np.unique(x, return_counts=True)
         else:
-            order = np.argsort(x, kind="stable")
-            xs, cs = x[order], c[order]
-            starts = np.flatnonzero(np.r_[True, xs[1:] != xs[:-1]])
-            ux = xs[starts]
-            uc = np.add.reduceat(cs, starts)
+            ux, uc = collapse(x, c)
         self._combine(ux, uc)
 
     def point(self, items) -> np.ndarray:

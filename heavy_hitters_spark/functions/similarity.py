@@ -89,26 +89,6 @@ def brute_force_topk(
     )
 
 
-def hyperplane_sig_col(vec_col, n_planes: int = 16, dim: int = 64, seed: int = 0xA11) -> object:
-    """LSH bucket id: sign pattern under n_planes random hyperplanes."""
-    from pyspark.sql.functions import pandas_udf
-
-    planes = _random_planes(n_planes, dim, seed)
-
-    @pandas_udf(LongType())
-    def _sig(s: pd.Series) -> pd.Series:
-        from ..core import memtune  # noqa: F401
-
-        if not len(s):
-            return pd.Series([], dtype="int64")
-        mat = np.stack(s.to_numpy()).astype(np.float64)
-        bits = (mat @ planes.T) > 0  # n x planes
-        weights = (1 << np.arange(n_planes, dtype=np.int64))
-        return pd.Series((bits @ weights).astype(np.int64))
-
-    return _sig(vec_col if not isinstance(vec_col, str) else F.col(vec_col))
-
-
 def _random_planes(n_planes: int, dim: int, seed: int) -> np.ndarray:
     """Deterministic gaussian-ish hyperplanes from splitmix64 bits."""
     u = splitmix64(np.arange(2 * n_planes * dim, dtype=np.uint64), seed).astype(np.float64) / 1.8446744073709552e19

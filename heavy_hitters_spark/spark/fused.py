@@ -10,7 +10,9 @@ DOCUMENT and does tokenization in pyarrow C kernels inside the worker:
     -> mapInArrow: split_pattern -> list_flatten -> dictionary_encode
        (all Arrow C) -> xxh64 only on NEW dictionary tokens (memoized
        token->id dict, Zipf vocab makes the hit rate ~100%)
-    -> numpy sketch update on the id array
+    -> bincount of the dictionary indices: the batch collapsed to
+       sorted (id, count) pairs, one weighted update_batch for the whole
+       template (every sketch type honours counts)
     -> one packed state row per partition
     -> collect + left fold in partition order (aggregate.tree_merge)
 
@@ -30,7 +32,7 @@ import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 
-from ..core.base import Sketch, pack_state
+from ..core.base import Sketch, collapse, pack_state
 from .aggregate import PARTIAL_ARROW, PARTIAL_SCHEMA, state_row, task_part_id, tree_merge
 
 # fan-in of the fused build's merge rounds (aggregate.tree_merge)
@@ -39,9 +41,10 @@ FANIN = 64
 
 def _fused_fn(template_bytes: bytes, text_col: str, split: str = " "):
     """The per-partition kernel for ``mapInArrow``: splits ``text_col``
-    on ``split``, updates a fresh copy of the packed template with the
-    token ids and yields one ``PARTIAL_SCHEMA`` row holding the packed
-    state. With ``SKETCH_PROF_DIR`` set, each task also writes a JSON
+    on ``split``, collapses each Arrow batch to its sorted (token id,
+    count) pairs, feeds them to a fresh copy of the packed template as
+    one weighted update and yields one ``PARTIAL_SCHEMA`` row holding
+    the packed state. With ``SKETCH_PROF_DIR`` set, each task also writes a JSON
     record of its phase times (serve, kernel, to_bytes, pack) there."""
 
     def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
@@ -57,20 +60,6 @@ def _fused_fn(template_bytes: bytes, text_col: str, split: str = " "):
         t0 = time.perf_counter()
         n_rows = n_upd = 0
         memo: dict[str, int] = {}
-        # map-side combine routing: sketches for which a pre-aggregated
-        # (unique_ids, counts) batch is equivalent to the raw token
-        # stream take the weighted path over ~vocab-sized batches (a
-        # Zipf token batch of ~500k collapses to ~10k uniques, cutting
-        # the per-sketch hash+scatter work and the memory traffic by
-        # that ratio); the rest (KLL: unweighted sampler) get the raw
-        # id array. Duplicate collapse happens once per Arrow batch via
-        # the dictionary indices that tokenization already produced.
-        from ..core.multi import MultiSketch
-
-        children = list(sk.sketches.values()) if isinstance(sk, MultiSketch) else [sk]
-        preagg_targets = [s for s in children if s.PREAGG_SAFE]
-        raw_targets = [s for s in children if not s.PREAGG_SAFE]
-
         src = iter(batches)
         while True:
             tb0 = time.perf_counter()
@@ -97,39 +86,22 @@ def _fused_fn(template_bytes: bytes, text_col: str, split: str = " "):
                     memo[tok] = h
                 lut[j] = h
             idx = d.indices.to_numpy(zero_copy_only=False)
-            if preagg_targets:
-                uc = np.bincount(idx, minlength=len(lut)).astype(np.int64)
-                u = lut
-                if empty_j >= 0:
-                    # drop empty-string tokens (parity with keys.tokens
-                    # filter) by DICTIONARY slot, so a real token whose
-                    # hash collides with h("") survives
-                    keep = np.ones(len(u), dtype=bool)
-                    keep[empty_j] = False
-                    u, uc = u[keep], uc[keep]
-                order = np.argsort(u, kind="stable")
-                u, uc = u[order], uc[order]
-                # collapse dictionary slots that hash to the same id
-                starts = np.flatnonzero(np.r_[True, u[1:] != u[:-1]])
-                if len(starts) < len(u):
-                    u = u[starts]
-                    uc = np.add.reduceat(uc, starts)
-                for s in preagg_targets:
-                    s.update_batch(u, uc)
-                n_batch = int(uc.sum())
-            if raw_targets:
-                if empty_j >= 0:
-                    # drop empty-string tokens by DICTIONARY slot (not by
-                    # hashed id), so a real token whose hash collides with
-                    # h("") survives — same rule as the preagg path above
-                    ids = lut[idx[idx != empty_j]]
-                else:
-                    ids = lut[idx]
-                for s in raw_targets:
-                    s.update_batch(ids)
-                n_batch = len(ids)
+            # map-side combine: the batch's (id, count) pairs, counted
+            # per dictionary slot from the indices tokenization produced
+            uc = np.bincount(idx, minlength=len(lut)).astype(np.int64)
+            u = lut
+            if empty_j >= 0:
+                # drop empty-string tokens (parity with keys.tokens
+                # filter) by DICTIONARY slot, so a real token whose
+                # hash collides with h("") survives
+                keep = np.ones(len(u), dtype=bool)
+                keep[empty_j] = False
+                u, uc = u[keep], uc[keep]
+            # sort, and collapse dictionary slots that hash to the same id
+            u, uc = collapse(u, uc)
+            sk.update_batch(u, uc)
             n_rows += len(texts)
-            n_upd += n_batch
+            n_upd += int(uc.sum())
         part_id = task_part_id()
         t_loop = time.perf_counter() - t0
         raw = sk.to_bytes()

@@ -34,14 +34,14 @@ def test_fused_partition_invariance(spark):
 
 
 def test_fused_preagg_routing_mixed_template(spark):
-    """The map-side duplicate collapse (PREAGG_SAFE routing) must leave
-    every sketch's SEMANTICS intact when a template mixes safe and
-    unsafe sketches: linear sketches stay byte-identical to the
-    exploded Catalyst path, and KLL — routed down the raw-id path
-    because collapsing duplicates would change its sampled stream —
-    must still see the full duplicated token stream (its rank
-    estimates match the true stream ranks, not the distinct-value
-    ranks, which differ grossly on a Zipf-weighted vocabulary)."""
+    """The map-side duplicate collapse must leave every sketch's
+    SEMANTICS intact when one template mixes a linear sketch, MG and
+    KLL: the linear sketch stays byte-identical to the exploded
+    Catalyst path, and KLL — fed the collapsed (id, count) batch as a
+    weighted update — must still weigh the full duplicated token stream
+    (its weight n is the stream length and its rank estimates match the
+    true stream ranks, not the distinct-value ranks, which differ
+    grossly on a Zipf-weighted vocabulary)."""
     from heavy_hitters_spark.core import KLL, MisraGries
 
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
@@ -57,7 +57,7 @@ def test_fused_preagg_routing_mixed_template(spark):
     ids_df = tokens(docs).withColumn("id", key_id_col("token"))
     exploded, m2 = build_sketch(ids_df, tmpl(), id_col="id")
     assert m1["n_updates"] == m2["n_updates"]
-    # linear sketch: byte-identical regardless of routing
+    # linear sketch: byte-identical to the exploded build
     assert np.array_equal(fused["cm"].table, exploded["cm"].table)
 
     ids = np.array([r.id for r in ids_df.select("id").collect()], dtype=np.uint64)
@@ -66,7 +66,7 @@ def test_fused_preagg_routing_mixed_template(spark):
         exact[int(i)] = exact.get(int(i), 0) + 1
     n = len(ids)
 
-    # MG (preagg path, bounds-level contract): undercount <= norm/(k+1)
+    # MG (bounds-level contract): undercount <= norm/(k+1)
     mg = fused["mg"]
     assert mg.norm == n
     top = sorted(exact.items(), key=lambda kv: -kv[1])[:20]
@@ -75,10 +75,10 @@ def test_fused_preagg_routing_mixed_template(spark):
         assert e <= cnt
         assert cnt - e <= mg.norm // (mg.k + 1) + 1
 
-    # KLL (raw path): must have consumed the RAW duplicated stream —
-    # its internal weight n equals the stream length, not the distinct
-    # count (a collapsed feed would record ~n_distinct) — and its
-    # stream-rank estimates stay inside the error bound.
+    # KLL (weighted update): its internal weight n equals the stream
+    # length, not the distinct count (a feed that dropped the counts
+    # would record ~n_distinct), and its stream-rank estimates stay
+    # inside the error bound.
     kll = fused["kll"]
     assert kll.n == n
     assert kll.n > 3 * len(exact)  # collapse would have been visible
@@ -91,11 +91,11 @@ def test_fused_preagg_routing_mixed_template(spark):
 
 def test_raw_path_empty_filter_is_slot_based(monkeypatch):
     """A real token whose xxh64&MASK32 collides with h("") must SURVIVE
-    the raw (non-PREAGG_SAFE) path's empty-token filter, matching the
-    preagg path's dictionary-slot rule — the round-5 code filtered the
-    hashed id array by value and silently dropped such a token. Forced
-    by monkeypatching the hash so 'collider' == h(''), and calling the
-    fused kernel in-process (no Spark needed)."""
+    the fused kernel's empty-token filter: empty tokens are dropped by
+    DICTIONARY slot, not by hashed id, so such a token is still counted
+    (a filter on the hashed id array by value would silently drop
+    it). Forced by monkeypatching the hash so 'collider' ==
+    h(''), and calling the fused kernel in-process (no Spark needed)."""
     from heavy_hitters_spark.core import KLL
     from heavy_hitters_spark.core.base import pack_state, unpack_state
     from heavy_hitters_spark.spark import keys as keys_mod

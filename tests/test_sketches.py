@@ -187,6 +187,133 @@ def test_kll_rank_error(rng):
     assert np.all(np.abs(est - qs * n) <= 0.02 * n)
 
 
+def _weighted_rank_error(kll, vals, counts, qs) -> float:
+    """Worst distance from each q to the rank interval [F(v-), F(v)]
+    of the weighted truth at the estimated q-quantile v."""
+    order = np.argsort(vals, kind="stable")
+    v = np.asarray(vals, dtype=np.float64)[order]
+    cum = np.cumsum(counts[order]) / counts.sum()
+    worst = 0.0
+    for q, e in zip(qs, kll.quantile(qs)):
+        lo = np.searchsorted(v, e, side="left")
+        hi = np.searchsorted(v, e, side="right")
+        below = cum[lo - 1] if lo else 0.0
+        upto = cum[hi - 1] if hi else 0.0
+        worst = max(worst, below - q, q - upto, 0.0)
+    return worst
+
+
+def test_kll_weighted_update_honours_counts(rng):
+    """``counts`` reach KLL: its weight n is the count sum and its
+    quantiles are those of the weighted stream. Negative counts raise
+    before any mutation; a zero count is a no-op."""
+    kll = KLL()
+    kll.update_batch([1, 2, 3], [1000, 1, 1])
+    assert kll.n == 1002
+    assert kll.quantile(0.5)[0] == 1.0
+
+    vals = rng.integers(0, 5000, 20000).astype(np.float64)
+    counts = rng.integers(0, 50, len(vals)).astype(np.int64)
+    kll = KLL(k=200)
+    for lo in range(0, len(vals), 5000):
+        kll.update_batch(vals[lo:lo + 5000], counts[lo:lo + 5000])
+    assert kll.n == int(counts.sum())
+    qs = np.linspace(0.01, 0.99, 21)
+    assert _weighted_rank_error(kll, vals, counts, qs) <= 0.02
+
+    before = kll.to_bytes()
+    with pytest.raises(ValueError):
+        kll.update_batch([1.0, 2.0], [3, -1])
+    kll.update_batch([7.0, 8.0], [0, 0])
+    assert kll.to_bytes() == before
+
+
+def test_kll_weighted_equals_collapsed(rng):
+    """One update contract: raw items, items with unit counts and the
+    pre-collapsed sorted (unique, counts) batch give byte-equal KLL
+    states, over one batch and over a multi-batch stream; a weighted
+    batch with duplicates equals its collapsed form."""
+    items = (rng.zipf(1.3, 20000) % 3000).astype(np.uint64)
+    w = rng.integers(0, 5, len(items)).astype(np.int64)  # includes zeros
+
+    def collapsed(xi, wi):
+        ux, inv = np.unique(xi, return_inverse=True)
+        uc = np.zeros(len(ux), dtype=np.int64)
+        np.add.at(uc, inv, wi)
+        return ux, uc
+
+    for step in (len(items), 4096):  # one batch, then five
+        raw, unit, pre = KLL(k=64), KLL(k=64), KLL(k=64)
+        wt, wt_pre = KLL(k=64), KLL(k=64)
+        for lo in range(0, len(items), step):
+            xi, wi = items[lo:lo + step], w[lo:lo + step]
+            raw.update_batch(xi)
+            unit.update_batch(xi, np.ones(len(xi), dtype=np.int64))
+            pre.update_batch(*np.unique(xi, return_counts=True))
+            wt.update_batch(xi, wi)
+            wt_pre.update_batch(*collapsed(xi, wi))
+        assert raw.to_bytes() == unit.to_bytes() == pre.to_bytes()
+        assert wt.to_bytes() == wt_pre.to_bytes()
+        assert raw.n == len(items) and wt.n == int(w.sum())
+
+
+def test_kll_zipf_weighted_and_unit_rank_error(rng):
+    """On a Zipf token stream (32-bit ids, 10k vocabulary) both the
+    unit-weight feed and a weighted feed of the collapsed stream in
+    shuffled (id, count) chunks stay within 0.02 rank error."""
+    vocab = rng.integers(0, 1 << 32, 10_000).astype(np.uint64)
+    ids = vocab[(rng.zipf(1.1, 500_000) - 1) % len(vocab)]
+    qs = np.linspace(0.01, 0.99, 21)
+    ones = np.ones(len(ids), dtype=np.int64)
+
+    unit = KLL(k=200)
+    for chunk in np.array_split(ids, 8):
+        unit.update_batch(chunk)
+    assert unit.n == len(ids)
+    assert _weighted_rank_error(unit, ids, ones, qs) <= 0.02
+
+    ux, uc = np.unique(ids, return_counts=True)
+    perm = rng.permutation(len(ux))
+    weighted = KLL(k=200)
+    for part in np.array_split(perm, 3):
+        weighted.update_batch(ux[part], uc[part])
+    assert weighted.n == len(ids)
+    assert _weighted_rank_error(weighted, ux, uc, qs) <= 0.02
+
+
+def test_kll_merge_rejects_mismatched_params():
+    """A KLL merge with a different ``k`` or ``seed`` raises ValueError
+    and leaves the receiver unchanged, also under ``python -O`` (which
+    strips asserts)."""
+    import os
+    import subprocess
+    import sys
+
+    with pytest.raises(ValueError):
+        KLL(k=200).merge(KLL(k=100))
+    code = (
+        "from heavy_hitters_spark.core import KLL\n"
+        "for other in (KLL(k=100), KLL(k=200, seed=1), KLL(k=100, seed=1)):\n"
+        "    a = KLL(k=200)\n"
+        "    a.update_batch([1.0, 2.0, 3.0])\n"
+        "    before = a.to_bytes()\n"
+        "    try:\n"
+        "        a.merge(other)\n"
+        "    except ValueError:\n"
+        "        if a.to_bytes() != before:\n"
+        "            raise SystemExit('receiver mutated')\n"
+        "    else:\n"
+        "        raise SystemExit('merge accepted')\n"
+        "print('ok')\n"
+    )
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(os.environ, PYTHONPATH=root)
+    out = subprocess.run(
+        [sys.executable, "-O", "-c", code], env=env, cwd=root, capture_output=True, text=True
+    )
+    assert out.returncode == 0 and out.stdout.strip() == "ok", out.stderr
+
+
 def test_serde_roundtrip_all(micro_pairs, rng):
     items, w = micro_pairs
     data = rng.integers(0, 1000, 10000, dtype=np.uint64)
@@ -325,7 +452,7 @@ def test_misra_gries_weighted_equals_collapsed_and_reference(rng):
     """The weighted update path (argsort + reduceat batch collapse,
     round-5 rewrite) must be byte-identical to (a) feeding the batch
     pre-collapsed to sorted (unique, counts) — the map-side-combine
-    contract PREAGG_SAFE relies on — and (b) the straightforward
+    contract the fused kernel relies on — and (b) the straightforward
     unique(return_inverse) + add.at reference collapse it replaced.
     Also: a weighted batch of unit counts == the unweighted path."""
     items = (rng.zipf(1.3, 20000) % 3000).astype(np.uint64)

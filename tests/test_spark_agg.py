@@ -74,6 +74,27 @@ def test_weighted_build(spark):
     assert np.array_equal(sk.point(np.arange(1000)), expect)
 
 
+def test_weighted_build_kll(spark):
+    """``weight_col`` reaches KLL: its weight n is the sum of the
+    weights, and its quantiles are those of the weighted stream (here
+    ids 0..9 carry 1000 each, so the weighted median is below 10 while
+    the unweighted one would be near 500)."""
+    from heavy_hitters_spark.core import KLL
+
+    ids = np.arange(1000, dtype=np.int64)
+    w = np.where(ids < 10, 1000, 1).astype(np.int64)
+    df = spark.createDataFrame(
+        [(int(i), int(c)) for i, c in zip(ids, w)], "id long, w long"
+    ).repartition(8)
+    kll, _ = build_sketch(df, KLL(k=200, seed=7), id_col="id", weight_col="w")
+    assert kll.n == int(w.sum())
+    cum = np.cumsum(w) / w.sum()
+    for q, v in zip((0.1, 0.25, 0.5, 0.75, 0.9, 0.95), kll.quantile([0.1, 0.25, 0.5, 0.75, 0.9, 0.95])):
+        hi = cum[int(v)]
+        lo = cum[int(v) - 1] if v >= 1 else 0.0
+        assert lo - 0.02 <= q <= hi + 0.02, (q, v)
+
+
 def test_lineage_and_metrics(spark):
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     ids = tokens(docs).withColumn("id", key_id_col("token"))

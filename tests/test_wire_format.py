@@ -1,4 +1,4 @@
-"""Pins the serialized state bytes of the linear sketches.
+"""Pins the serialized state bytes of the linear sketches and KLL.
 
 Durable checkpoints and streaming state stores hold ``to_bytes()``
 output, so a refactor that changes a header key order, a seed draw, a
@@ -15,7 +15,7 @@ import hashlib
 import numpy as np
 import pytest
 
-from heavy_hitters_spark.core import HLL, CountMin, CountSketch, MultiSketch, SeedStream
+from heavy_hitters_spark.core import HLL, KLL, CountMin, CountSketch, MultiSketch, SeedStream
 from heavy_hitters_spark.core.base import Sketch
 from heavy_hitters_spark.hh import ConstSketchHH, DyadicHH
 
@@ -50,6 +50,7 @@ FACTORIES = {
             "hh": _dyadic(gran=8),
         }
     ),
+    "kll": lambda: KLL(k=200, seed=7),
 }
 
 PINNED = {
@@ -62,6 +63,7 @@ PINNED = {
     "dyadic_count_sketch": "0297b46a5dd4bb4e936a295c7a91b637818d3ec175f1dd8a7b469ea2d0a3102e",
     "const_sketch_hh": "34bfb2b00aa2d2aea3ae1b18bee99ba7a16f4ecee1c8622dd3fa825c12ee46fe",
     "multi": "cac99cb2e29f272f66406fb4a4bb03e3569b672271cd549c037ca36e62bc34c8",
+    "kll": "40f2a5a159b54e76418687321233e18fc56fbda34fd1d9c0fdc967d7605488f7",
 }
 
 
