@@ -10,6 +10,22 @@ Wire format: ``b"HHS1" + <u32 header_len> + header_json + payload``.
 The JSON header carries {type, params, seeds, norm, ...}; payload is the
 raw little-endian counter table(s). This keeps states self-describing
 and mergeable across processes with zero pickling.
+
+Merge contract: ``Sketch.merge`` is the only merge entry point. It
+checks the whole state tree first: same type, equal ``IDENTITY``
+attributes (dims, seeds, params), and for composites every child too.
+Only then does it call ``_merge``, so an incompatible merge raises
+``ValueError`` naming the differing field and leaves the receiver's
+bytes as they were.
+
+Decode contract: ``from_bytes``/``unpack_state`` accept a state only
+if it is whole. A short blob, a bad magic, a header past the end, a
+non-object header, an unknown type or missing field, a packed blob
+that does not inflate, or a payload whose length disagrees with its
+header raises ``ValueError``. Payloads are cut by ``payload_arrays``,
+``unframe`` and ``unpack_i64``, which all check lengths against the
+header. Neither contract relies on ``assert``, so both hold under
+``python -O``.
 """
 
 from __future__ import annotations
@@ -42,9 +58,19 @@ class Sketch:
     map-side combiners (spark/fused.py) hand every sketch the collapsed
     batch. CM, CS, MG and KLL give equal bytes either way (MG and KLL
     collapse every batch themselves); HLL and Bloom ignore multiplicity
-    by set semantics; t-digest keeps its error bound."""
+    by set semantics; t-digest keeps its error bound.
+
+    ``merge`` is concrete here and nowhere else: it raises ValueError
+    on a different type or a differing ``IDENTITY`` attribute of the
+    state or of any of its ``_children`` before it touches either
+    state, then calls the type's ``_merge``. A composite's ``_merge``
+    calls its children's ``_merge``, so one merge checks the whole tree
+    once. ``from_bytes`` raises ValueError on any state that
+    is not whole."""
 
     TYPE = "abstract"
+    # attributes two states must share to merge (dims, seeds, params)
+    IDENTITY: tuple[str, ...] = ()
 
     # --- updates -----------------------------------------------------
     def update_batch(self, items: np.ndarray, counts: np.ndarray | None = None) -> None:
@@ -52,6 +78,25 @@ class Sketch:
 
     # --- merge (associative; same seeds required) --------------------
     def merge(self, other: "Sketch") -> "Sketch":
+        self._check_mergeable(other)
+        return self._merge(other)
+
+    def _check_mergeable(self, other: "Sketch") -> None:
+        if type(other) is not type(self):
+            raise ValueError(f"cannot merge {type(other).__name__} into {type(self).__name__}")
+        for f in self.IDENTITY:
+            a, b = getattr(self, f), getattr(other, f)
+            if a != b:
+                raise ValueError(f"cannot merge {self.TYPE} states with different {f}: {a!r} vs {b!r}")
+        for a, b in zip(self._children(), other._children()):
+            a._check_mergeable(b)
+
+    def _children(self) -> list["Sketch"]:
+        """The child states a composite merges, in a fixed order."""
+        return []
+
+    def _merge(self, other: "Sketch") -> "Sketch":
+        """Fold ``other`` in; called only after ``_check_mergeable``."""
         raise NotImplementedError
 
     # --- serde --------------------------------------------------------
@@ -73,15 +118,23 @@ class Sketch:
 
     @staticmethod
     def from_bytes(data: bytes) -> "Sketch":
-        if data[:4] != MAGIC:
-            raise ValueError("bad sketch magic")
-        (hlen,) = struct.unpack("<I", data[4:8])
-        header = json.loads(data[8 : 8 + hlen].decode())
-        payload = data[8 + hlen :]
-        if header["type"] not in _REGISTRY:
+        if len(data) < 8 or data[:4] != MAGIC:
+            raise ValueError("not a sketch state: bad magic or fewer than 8 bytes")
+        (hlen,) = struct.unpack_from("<I", data, 4)
+        if 8 + hlen > len(data):
+            raise ValueError(f"state header of {hlen} bytes runs past the {len(data)}-byte state")
+        header = json.loads(data[8 : 8 + hlen].decode())  # raises a ValueError subclass
+        if not isinstance(header, dict):
+            raise ValueError("state header is not a JSON object")
+        kind = header.get("type")
+        if kind not in _REGISTRY:
             _load_builtin_types()
-        cls = _REGISTRY[header["type"]]
-        return cls._from_parts(header, payload)
+        if kind not in _REGISTRY:
+            raise ValueError(f"unknown sketch type {kind!r}")
+        try:
+            return _REGISTRY[kind]._from_parts(header, data[8 + hlen :])
+        except KeyError as e:
+            raise ValueError(f"{kind} state header misses {e}") from None
 
 
 def pack_state(sk: "Sketch") -> bytes:
@@ -107,7 +160,10 @@ def unpack_state(data) -> "Sketch":
     output), so readers never need to know which form they hold."""
     b = bytes(data)
     if b[:4] == WIRE_MAGIC:
-        b = zlib.decompress(b[4:])
+        try:
+            b = zlib.decompress(b[4:])
+        except zlib.error as e:
+            raise ValueError(f"packed state does not inflate: {e}") from None
     return Sketch.from_bytes(b)
 
 
@@ -176,13 +232,35 @@ def frame(blobs) -> bytes:
     return b"".join(struct.pack("<Q", len(b)) + b for b in blobs)
 
 
-def unframe(data: bytes) -> list[bytes]:
-    """Inverse of ``frame``."""
+def unframe(data: bytes, n: int) -> list[bytes]:
+    """Inverse of ``frame`` for the ``n`` blobs a header declares;
+    raises ValueError unless they cover ``data`` exactly."""
     out, off = [], 0
-    while off < len(data):
-        (n,) = struct.unpack_from("<Q", data, off)
-        out.append(data[off + 8 : off + 8 + n])
-        off += 8 + n
+    for _ in range(n):
+        end = off + 8
+        if end <= len(data):
+            end += struct.unpack_from("<Q", data, off)[0]
+        if end > len(data):
+            raise ValueError(f"frame {len(out)} of {n} runs past the {len(data)}-byte payload")
+        out.append(data[off + 8 : end])
+        off = end
+    if off != len(data):
+        raise ValueError(f"payload has {len(data) - off} bytes after its {n} frames")
+    return out
+
+
+def payload_arrays(payload: bytes, parts) -> list[np.ndarray]:
+    """Cut ``payload`` into the arrays its header declares, one per
+    ``(dtype, length)`` in ``parts``, as writable copies; raises
+    ValueError unless together they cover it exactly."""
+    parts = [(np.dtype(dt), int(n)) for dt, n in parts]
+    want = sum(dt.itemsize * n for dt, n in parts)
+    if want != len(payload) or any(n < 0 for _, n in parts):
+        raise ValueError(f"payload is {len(payload)} bytes; its header declares {want}")
+    out, off = [], 0
+    for dt, n in parts:
+        out.append(np.frombuffer(payload, dtype=dt, count=n, offset=off).copy())
+        off += dt.itemsize * n
     return out
 
 
@@ -201,9 +279,13 @@ def pack_i64(arr: np.ndarray) -> bytes:
     return bytes([8]) + a.astype("<i8").tobytes()
 
 
-def unpack_i64(data: bytes) -> np.ndarray:
-    tag = data[0]
-    return np.frombuffer(data[1:], dtype=f"<i{tag}").astype(np.int64)
+def unpack_i64(data: bytes, n: int) -> np.ndarray:
+    """Inverse of ``pack_i64`` for ``n`` values; raises ValueError on
+    an unknown width tag or a length that is not ``n`` values wide."""
+    tag = data[0] if len(data) else 0
+    if tag not in (1, 2, 4, 8) or len(data) != 1 + tag * n:
+        raise ValueError(f"{len(data)}-byte packed array is not {n} values at a known width")
+    return np.frombuffer(data, dtype=f"<i{tag}", offset=1).astype(np.int64)
 
 
 def as_u64(items) -> np.ndarray:

@@ -15,7 +15,7 @@ import math
 
 import numpy as np
 
-from .base import Sketch, as_u64, chunked_update, register
+from .base import Sketch, as_u64, chunked_update, payload_arrays, register
 from .hashing import splitmix64
 
 _U64 = np.uint64
@@ -24,6 +24,7 @@ _U64 = np.uint64
 @register
 class Bloom(Sketch):
     TYPE = "bloom"
+    IDENTITY = ("n_bits", "k", "seed")
 
     def __init__(
         self,
@@ -67,8 +68,7 @@ class Bloom(Sketch):
     def fill_ratio(self) -> float:
         return float(np.unpackbits(self.bits).mean())
 
-    def merge(self, other: "Bloom") -> "Bloom":
-        assert (self.n_bits, self.k, self.seed) == (other.n_bits, other.k, other.seed)
+    def _merge(self, other: "Bloom") -> "Bloom":
         np.bitwise_or(self.bits, other.bits, out=self.bits)
         return self
 
@@ -81,5 +81,5 @@ class Bloom(Sketch):
     @classmethod
     def _from_parts(cls, header, payload) -> "Bloom":
         s = cls(n_bits=header["n_bits"], k=header["k"], seed=header["seed"], capacity=1)
-        s.bits = np.frombuffer(payload, dtype=np.uint8).copy()
+        (s.bits,) = payload_arrays(payload, [(np.uint8, s.n_bits // 8)])
         return s

@@ -42,7 +42,8 @@ def cs_dims(
     parameterization: str = "reference",
 ) -> tuple[int, int]:
     if parameterization == "reference":
-        assert b >= 3, "count_median.c:36 asserts b >= 3"
+        if b < 3:
+            raise ValueError(f"count-sketch dims need b >= 3, got {b} (count_median.c:36)")
         w = int(math.ceil(b / (epsilon * epsilon))) * hash_c
         d = int(math.ceil(math.log(1.0 / delta) / ((1.0 / 6.0) - 1.0 / (3.0 * b))))
     elif parameterization == "published":

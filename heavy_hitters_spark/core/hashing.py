@@ -37,7 +37,7 @@ def hash_M(w: int) -> int:
     return int(math.floor(math.log2(w)))
 
 
-def _is_pow2(w: int) -> bool:
+def is_pow2(w: int) -> bool:
     return w > 0 and (w & (w - 1)) == 0
 
 
@@ -46,14 +46,12 @@ def _u32(v) -> np.ndarray:
     return np.asarray(v, dtype=_U64).astype(np.uint32)
 
 
-def ms(x: np.ndarray, w: int, M: int, a, b) -> np.ndarray:
+def ms(x: np.ndarray, w: int, M: int, a, b) -> np.ndarray:  # noqa: ARG001
     """(uint32)(a*x+b) >> (32-M); requires power-of-2 w (hash.c:65-82)."""
-    assert _is_pow2(w), "ms requires power-of-2 width"
     return (_u32(a) * _u32(x) + _u32(b)) >> np.uint32(32 - M)
 
 
 def ms2(x: np.ndarray, w: int, M: int, a, b) -> np.ndarray:  # noqa: ARG001
-    assert _is_pow2(w), "ms2 requires power-of-2 width"
     return (_u32(a) * _u32(x)) >> np.uint32(32 - M)
 
 
@@ -64,7 +62,6 @@ def cw(x: np.ndarray, w: int, M: int, a, b) -> np.ndarray:  # noqa: ARG001
 
 
 def cwp2(x: np.ndarray, w: int, M: int, a, b) -> np.ndarray:  # noqa: ARG001
-    assert _is_pow2(w)
     r = (_U64(a) * x.astype(_U64) + _U64(b)) & _MODP
     return (r & _U64(w - 1)).astype(np.int64)
 
@@ -75,7 +72,6 @@ def cw2(x: np.ndarray, w: int, M: int, a, b) -> np.ndarray:  # noqa: ARG001
 
 
 def cw2p2(x: np.ndarray, w: int, M: int, a, b) -> np.ndarray:  # noqa: ARG001
-    assert _is_pow2(w)
     r = (_U64(a) * x.astype(_U64)) & _MODP
     return (r & _U64(w - 1)).astype(np.int64)
 
@@ -113,7 +109,12 @@ class HashFamily:
     def __call__(self, x: np.ndarray, w: int, M: int, a, b) -> np.ndarray:
         return self.fn(x, w, M, a, b)
 
+    def __repr__(self) -> str:
+        return repr(self.name)
 
+
+# kernels that cover only 2^M of w columns unless w is a power of 2;
+# HashedTable rejects any other width for them at construction
 POW2_FAMILIES = {"ms", "ms2", "cwp2", "cw2p2"}
 
 

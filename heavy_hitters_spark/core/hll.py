@@ -16,7 +16,7 @@ import math
 
 import numpy as np
 
-from .base import Sketch, as_u64, chunked_update, register
+from .base import Sketch, as_u64, chunked_update, payload_arrays, register
 from .hashing import splitmix64
 
 _U64 = np.uint64
@@ -64,9 +64,11 @@ def _alpha(m: int) -> float:
 @register
 class HLL(Sketch):
     TYPE = "hll"
+    IDENTITY = ("p", "seed")
 
     def __init__(self, p: int = 14, seed: int = 0xC0FFEE) -> None:
-        assert 4 <= p <= 18
+        if not 4 <= p <= 18:
+            raise ValueError(f"HLL precision p={p} is outside [4, 18]")
         self.p = int(p)
         self.m = 1 << self.p
         self.seed = int(seed)
@@ -94,8 +96,7 @@ class HLL(Sketch):
     def rel_std_error(self) -> float:
         return 1.04 / math.sqrt(self.m)
 
-    def merge(self, other: "HLL") -> "HLL":
-        assert self.p == other.p and self.seed == other.seed
+    def _merge(self, other: "HLL") -> "HLL":
         np.maximum(self.registers, other.registers, out=self.registers)
         return self
 
@@ -108,5 +109,5 @@ class HLL(Sketch):
     @classmethod
     def _from_parts(cls, header, payload) -> "HLL":
         s = cls(p=header["p"], seed=header["seed"])
-        s.registers = np.frombuffer(payload, dtype=np.uint8).copy()
+        (s.registers,) = payload_arrays(payload, [(np.uint8, s.m)])
         return s

@@ -27,7 +27,7 @@ import math
 
 import numpy as np
 
-from .base import Sketch, as_i64, collapse, register
+from .base import Sketch, as_i64, collapse, payload_arrays, register
 from .hashing import splitmix64
 
 _C = 2.0 / 3.0
@@ -37,6 +37,7 @@ _EMPTY = np.empty(0, dtype=np.float64)
 @register
 class KLL(Sketch):
     TYPE = "kll"
+    IDENTITY = ("k", "seed")
 
     def __init__(self, k: int = 200, seed: int = 0x5EED) -> None:
         self.k = int(k)
@@ -140,12 +141,7 @@ class KLL(Sketch):
         idx = np.searchsorted(v, xs, side="right")
         return cw[idx].astype(np.int64)
 
-    def merge(self, other: "KLL") -> "KLL":
-        if (self.k, self.seed) != (other.k, other.seed):
-            raise ValueError(
-                f"KLL merge needs equal k and seed: (k={self.k}, seed={self.seed}) "
-                f"vs (k={other.k}, seed={other.seed})"
-            )
+    def _merge(self, other: "KLL") -> "KLL":
         self._grow_to(len(other.compactors) - 1)
         for h, c in enumerate(other.compactors):
             if len(c):
@@ -174,10 +170,5 @@ class KLL(Sketch):
         s = cls(k=header["k"], seed=header["seed"])
         s.n = header["n"]
         s._coins = header["coins"]
-        s.compactors = []
-        off = 0
-        for ln in header["lens"]:
-            arr = np.frombuffer(payload[off : off + 8 * ln], dtype="<f8").copy()
-            s.compactors.append(arr)
-            off += 8 * ln
+        s.compactors = payload_arrays(payload, [("<f8", ln) for ln in header["lens"]])
         return s

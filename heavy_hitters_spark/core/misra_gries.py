@@ -26,12 +26,13 @@ from __future__ import annotations
 
 import numpy as np
 
-from .base import Sketch, as_i64, as_u64, collapse, register
+from .base import Sketch, as_i64, as_u64, collapse, payload_arrays, register
 
 
 @register
 class MisraGries(Sketch):
     TYPE = "misra_gries"
+    IDENTITY = ("k",)
 
     def __init__(self, k: int = 1024) -> None:
         self.k = int(k)
@@ -90,6 +91,10 @@ class MisraGries(Sketch):
             ux, uc = np.unique(x, return_counts=True)
         else:
             ux, uc = collapse(x, c)
+            if not uc.all():
+                # a zero weight must not leave a (id, 0) candidate
+                keep = uc > 0
+                ux, uc = ux[keep], uc[keep]
         self._combine(ux, uc)
 
     def point(self, items) -> np.ndarray:
@@ -108,8 +113,7 @@ class MisraGries(Sketch):
         order = np.lexsort((self.items, -self.cnts))
         return list(zip(self.items[order].tolist(), self.cnts[order].tolist()))
 
-    def merge(self, other: "MisraGries") -> "MisraGries":
-        assert self.k == other.k
+    def _merge(self, other: "MisraGries") -> "MisraGries":
         self._combine(other.items, other.cnts)
         self.norm += other.norm
         self.decrement += other.decrement
@@ -129,8 +133,7 @@ class MisraGries(Sketch):
     def _from_parts(cls, header, payload) -> "MisraGries":
         s = cls(k=header["k"])
         n = header["n"]
-        s.items = np.frombuffer(payload[: 8 * n], dtype="<u8").copy()
-        s.cnts = np.frombuffer(payload[8 * n :], dtype="<i8").copy()
+        s.items, s.cnts = payload_arrays(payload, [("<u8", n), ("<i8", n)])
         s.norm = header["norm"]
         s.decrement = header["decrement"]
         return s

@@ -12,6 +12,7 @@ from .base import Sketch, frame, register, unframe
 @register
 class MultiSketch(Sketch):
     TYPE = "multi"
+    IDENTITY = ("names",)
 
     def __init__(self, sketches: dict[str, Sketch]) -> None:
         self.sketches = dict(sketches)
@@ -19,14 +20,20 @@ class MultiSketch(Sketch):
     def __getitem__(self, name: str) -> Sketch:
         return self.sketches[name]
 
+    @property
+    def names(self) -> list[str]:
+        return list(self.sketches)
+
     def update_batch(self, items, counts=None) -> None:
         for s in self.sketches.values():
             s.update_batch(items, counts)
 
-    def merge(self, other: "MultiSketch") -> "MultiSketch":
-        assert self.sketches.keys() == other.sketches.keys()
-        for k in self.sketches:
-            self.sketches[k].merge(other.sketches[k])
+    def _children(self) -> list[Sketch]:
+        return list(self.sketches.values())
+
+    def _merge(self, other: "MultiSketch") -> "MultiSketch":
+        for a, b in zip(self._children(), other._children()):
+            a._merge(b)
         return self
 
     def _header(self):
@@ -37,4 +44,5 @@ class MultiSketch(Sketch):
 
     @classmethod
     def _from_parts(cls, header, payload) -> "MultiSketch":
-        return cls({n: Sketch.from_bytes(b) for n, b in zip(header["names"], unframe(payload))})
+        names = header["names"]
+        return cls({n: Sketch.from_bytes(b) for n, b in zip(names, unframe(payload, len(names)))})

@@ -24,7 +24,7 @@ from __future__ import annotations
 import numpy as np
 
 from .base import Sketch, as_u64, chunked_update, pack_i64, unpack_i64
-from .hashing import FAMILIES, POW2_FAMILIES, hash_M, next_pow_2
+from .hashing import FAMILIES, POW2_FAMILIES, hash_M, is_pow2, next_pow_2
 from .prng import SeedStream
 
 
@@ -33,6 +33,7 @@ class HashedTable(Sketch):
     dims = None
     # extra constructor flags carried in the header, after ``norm``
     FLAGS: tuple[str, ...] = ()
+    IDENTITY = ("family", "w", "d", "seeds")
 
     def __init__(
         self,
@@ -53,6 +54,8 @@ class HashedTable(Sketch):
             raise ValueError("width and depth must be overridden together")
         if width is not None and depth is not None:
             w, d = width, depth
+            if fam.name in POW2_FAMILIES and not is_pow2(w):
+                raise ValueError(f"hash family {fam.name!r} needs a power-of-2 width, got {w}")
         else:
             w, d = self.dims(epsilon, delta, b, fam.c, parameterization)
             if fam.name in POW2_FAMILIES:
@@ -101,8 +104,7 @@ class HashedTable(Sketch):
         return int(self.point(np.arange(lo, hi + 1, dtype=np.uint64)).sum())
 
     # ------------------------------------------------------------------
-    def merge(self, other: "HashedTable") -> "HashedTable":
-        assert self.seeds == other.seeds and self.w == other.w and self.d == other.d
+    def _merge(self, other: "HashedTable") -> "HashedTable":
         self.table += other.table
         self.norm += other.norm
         return self
@@ -135,6 +137,6 @@ class HashedTable(Sketch):
             seeds=header["seeds"],
             **{f: header[f] for f in cls.FLAGS},
         )
-        s.table = unpack_i64(payload).reshape(s.d, s.w)
+        s.table = unpack_i64(payload, s.d * s.w).reshape(s.d, s.w)
         s.norm = header["norm"]
         return s

@@ -13,12 +13,13 @@ from __future__ import annotations
 
 import numpy as np
 
-from .base import Sketch, register
+from .base import Sketch, payload_arrays, register
 
 
 @register
 class TDigest(Sketch):
     TYPE = "tdigest"
+    IDENTITY = ("compression",)
 
     def __init__(self, compression: float = 200.0) -> None:
         self.compression = float(compression)
@@ -33,7 +34,11 @@ class TDigest(Sketch):
         v = np.asarray(items, dtype=np.float64)
         if counts is not None:
             c = np.asarray(counts, dtype=np.int64)
-            v = np.repeat(v, np.maximum(c, 0))
+            if len(c) and c.min() < 0:
+                # insert-only, as MisraGries and KLL: a deletion has no
+                # centroid to leave
+                raise ValueError("TDigest is insert-only; negative weights rejected")
+            v = np.repeat(v, c)
         if not len(v):
             return
         self._buf.append(v)
@@ -91,8 +96,7 @@ class TDigest(Sketch):
         cw = np.cumsum(self.weights) - self.weights / 2.0
         return np.interp(xs, self.means, cw / self.n)
 
-    def merge(self, other: "TDigest") -> "TDigest":
-        assert self.compression == other.compression
+    def _merge(self, other: "TDigest") -> "TDigest":
         self._flush()
         other._flush()
         means = np.concatenate([self.means, other.means])
@@ -114,7 +118,6 @@ class TDigest(Sketch):
     def _from_parts(cls, header, payload) -> "TDigest":
         s = cls(compression=header["compression"])
         k = header["k"]
-        s.means = np.frombuffer(payload[: 8 * k], dtype="<f8").copy()
-        s.weights = np.frombuffer(payload[8 * k :], dtype="<i8").astype(np.int64)
+        s.means, s.weights = payload_arrays(payload, [("<f8", k), ("<i8", k)])
         s.n = header["n"]
         return s

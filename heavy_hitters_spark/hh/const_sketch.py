@@ -53,11 +53,15 @@ class ConstSketchHH(LevelHierarchy):
             epsilon=self.epsilon, delta=delta * delta * phi / 16.0, b=b,
             hash_family=hash_family, seed_stream=stream,
         )
-        row_w = next_pow_2(int(math.ceil(1.0 / (self.epsilon * 0.25))))
+        row_w = self._row_width()
         self.levels = self._layout(
             next_pow_2(self.verify.w * self.verify.d), "row",
             lambda: CountMin(width=row_w, depth=1, hash_family=hash_family, seed_stream=stream),
         )
+
+    def _row_width(self) -> int:
+        """Per-level row width ``ceil(1/(eps*0.25))`` (const_sketch.c:15-71)."""
+        return next_pow_2(int(math.ceil(1.0 / (self.epsilon * 0.25))))
 
     # ------------------------------------------------------------------
     def _update_chunk(self, x, counts) -> None:
@@ -73,16 +77,19 @@ class ConstSketchHH(LevelHierarchy):
         return self.verify.point(items)
 
     # ------------------------------------------------------------------
-    def merge(self, other: "ConstSketchHH") -> "ConstSketchHH":
-        self.verify.merge(other.verify)
-        return super().merge(other)
+    def _children(self) -> list[Sketch]:
+        return [self.verify, *super()._children()]
+
+    def _merge(self, other: "ConstSketchHH") -> "ConstSketchHH":
+        self.verify._merge(other.verify)
+        return super()._merge(other)
 
     def _header(self):
         return {
             "phi": self.phi, "epsilon": self.epsilon, "delta": self.delta,
             "m": self.m, "gran": self.gran, "b": self.b,
             "family": self.hash_family, "norm": self.norm,
-            "level_kinds": [k for k, _ in self.levels],
+            "level_kinds": self.level_kinds,
             "level_seeds": [None if k == "exact" else s.seeds[0] for k, s in self.levels],
         }
 
@@ -94,19 +101,21 @@ class ConstSketchHH(LevelHierarchy):
 
     @classmethod
     def _from_parts(cls, header, payload) -> "ConstSketchHH":
-        verify, *blobs = unframe(payload)
-        levels = []
-        for kind, blob, seed in zip(header["level_kinds"], blobs, header["level_seeds"]):
-            counts = unpack_i64(blob)
-            if kind != "exact":
-                row = CountMin(width=len(counts), depth=1, hash_family=header["family"], seeds=[seed])
-                row.table, row.norm = counts.reshape(1, -1), header["norm"]
-                counts = row
-            levels.append((kind, counts))
+        kinds = header["level_kinds"]
+        verify, *blobs = unframe(payload, 1 + len(kinds))
         s = cls(
             phi=header["phi"], epsilon=header["epsilon"], delta=header["delta"],
             m=header["m"], gran=header["gran"], b=header["b"],
-            hash_family=header["family"], _state=(Sketch.from_bytes(verify), levels),
+            hash_family=header["family"], _state=(Sketch.from_bytes(verify), []),
         )
+        row_w = s._row_width()
+
+        def row(lvl, blob):
+            seeds = [header["level_seeds"][lvl]]
+            r = CountMin(width=row_w, depth=1, hash_family=s.hash_family, seeds=seeds)
+            r.table, r.norm = unpack_i64(blob, row_w).reshape(1, -1), header["norm"]
+            return r
+
+        s.levels = s._unpack_levels(kinds, blobs, row)
         s.norm = header["norm"]
         return s

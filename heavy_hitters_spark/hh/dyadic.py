@@ -17,7 +17,7 @@ from __future__ import annotations
 
 import numpy as np
 
-from ..core.base import Sketch, as_u64, frame, register, unframe, unpack_i64
+from ..core.base import Sketch, as_u64, frame, register, unframe
 from ..core.countmin import CountMin
 from ..core.countsketch import CountSketch
 from ..core.hashing import next_pow_2
@@ -93,7 +93,8 @@ class DyadicHH(LevelHierarchy):
     def range_count(self, lo: int, hi: int) -> int:
         """Sum of frequencies over [lo, hi] via canonical k-ary intervals:
         O(k log_k m) point queries instead of the reference's O(hi-lo)."""
-        assert 0 <= lo <= hi <= self.m
+        if not 0 <= lo <= hi <= self.m:
+            raise ValueError(f"range [{lo}, {hi}] is not inside [0, m={self.m}]")
         total, lvl, k = 0, 0, self.k
         while lo <= hi and lvl < self.logm:
             if lvl == self.logm - 1:
@@ -125,7 +126,7 @@ class DyadicHH(LevelHierarchy):
             "m": self.m, "gran": self.gran, "sketch_type": self.sketch_type,
             "b": self.b, "family": self.hash_family, "norm": self.norm,
             "conservative": self.conservative,
-            "level_kinds": [k for k, _ in self.levels],
+            "level_kinds": self.level_kinds,
             "level_sizes": [
                 (len(s) if k == "exact" else -1) for k, s in self.levels
             ],
@@ -139,15 +140,15 @@ class DyadicHH(LevelHierarchy):
 
     @classmethod
     def _from_parts(cls, header, payload) -> "DyadicHH":
-        levels = [
-            (kind, unpack_i64(blob) if kind == "exact" else Sketch.from_bytes(blob))
-            for kind, blob in zip(header["level_kinds"], unframe(payload))
-        ]
         s = cls(
             phi=header["phi"], epsilon=header["epsilon"], delta=header["delta"],
             m=header["m"], gran=header["gran"], sketch_type=header["sketch_type"],
             b=header["b"], hash_family=header["family"],
-            conservative=header["conservative"], _levels=levels,
+            conservative=header["conservative"], _levels=[],
+        )
+        kinds = header["level_kinds"]
+        s.levels = s._unpack_levels(
+            kinds, unframe(payload, len(kinds)), lambda _lvl, blob: Sketch.from_bytes(blob)
         )
         s.norm = header["norm"]
         return s

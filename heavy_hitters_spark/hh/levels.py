@@ -31,7 +31,7 @@ import math
 
 import numpy as np
 
-from ..core.base import Sketch, as_i64, as_u64, chunked_update, pack_i64, scatter_add
+from ..core.base import Sketch, as_i64, as_u64, chunked_update, pack_i64, scatter_add, unpack_i64
 
 UNIVERSE_32 = (1 << 32) - 1
 
@@ -40,10 +40,13 @@ class LevelHierarchy(Sketch):
     """``levels[lvl]`` is ``("exact", counts)`` or ``(kind, table)`` with
     ``table`` a CountMin or CountSketch over the level's prefixes."""
 
+    IDENTITY = ("m", "gran", "level_kinds")
+
     def __init__(self, phi, epsilon, delta, m, gran, b, hash_family) -> None:
         if epsilon is None:
             epsilon = phi / 2.0
-        assert phi > epsilon, "reference guard: phi must exceed epsilon (sketch.c:27)"
+        if not phi > epsilon:
+            raise ValueError(f"phi={phi} must exceed epsilon={epsilon} (sketch.c:27)")
         self.phi, self.epsilon, self.delta = phi, epsilon, delta
         self.m, self.gran = int(m), int(gran)
         self.k = 1 << gran
@@ -51,14 +54,21 @@ class LevelHierarchy(Sketch):
         self.logm = int(math.floor(math.log(max(self.m, 2), self.k))) + 1
         self.norm = 0
 
+    def _universes(self) -> list[int]:
+        """Number of prefixes at each level, bottom up."""
+        return [(self.m >> (self.gran * lvl)) + 1 for lvl in range(self.logm)]
+
     def _layout(self, cutoff: int, kind: str, make_table) -> list:
         """Exact counts for each level whose universe fits in ``cutoff``,
         else ``(kind, make_table())``, built in level order."""
-        universes = [(self.m >> (self.gran * lvl)) + 1 for lvl in range(self.logm)]
         return [
             ("exact", np.zeros(u, dtype=np.int64)) if u <= cutoff else (kind, make_table())
-            for u in universes
+            for u in self._universes()
         ]
+
+    @property
+    def level_kinds(self) -> list[str]:
+        return [k for k, _ in self.levels]
 
     # ------------------------------------------------------------------
     def update_batch(self, items, counts=None) -> None:
@@ -130,16 +140,28 @@ class LevelHierarchy(Sketch):
         return []
 
     # ------------------------------------------------------------------
-    def merge(self, other: "LevelHierarchy") -> "LevelHierarchy":
-        assert (type(self), self.m, self.gran) == (type(other), other.m, other.gran)
-        for (ka, sa), (kb, sb) in zip(self.levels, other.levels):
-            assert ka == kb
-            if ka == "exact":
+    def _children(self) -> list[Sketch]:
+        return [s for k, s in self.levels if k != "exact"]
+
+    def _merge(self, other: "LevelHierarchy") -> "LevelHierarchy":
+        for (kind, sa), (_, sb) in zip(self.levels, other.levels):
+            if kind == "exact":
                 sa += sb
             else:
-                sa.merge(sb)
+                sa._merge(sb)
         self.norm += other.norm
         return self
 
     def _level_blobs(self) -> list[bytes]:
         return [pack_i64(s) if k == "exact" else self._pack_table(s) for k, s in self.levels]
+
+    def _unpack_levels(self, kinds: list[str], blobs: list[bytes], unpack_table) -> list:
+        """Levels from their blobs: an exact level must hold its
+        universe's counts; ``unpack_table(lvl, blob)`` decodes the
+        others."""
+        if len(kinds) != self.logm:
+            raise ValueError(f"state declares {len(kinds)} levels; m and gran give {self.logm}")
+        return [
+            (kind, unpack_i64(blob, u) if kind == "exact" else unpack_table(lvl, blob))
+            for lvl, (kind, blob, u) in enumerate(zip(kinds, blobs, self._universes()))
+        ]

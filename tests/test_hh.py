@@ -141,7 +141,7 @@ def test_out_of_universe_ids_rejected_before_any_update(cls, n):
 
 
 def test_phi_guard():
-    with pytest.raises(AssertionError):
+    with pytest.raises(ValueError):
         DyadicHH(phi=0.01, epsilon=0.02, delta=0.1)  # phi must exceed eps
 
 

@@ -14,6 +14,7 @@ from heavy_hitters_spark.core import (
     MisraGries,
     SeedStream,
     Sketch,
+    TDigest,
 )
 
 
@@ -507,3 +508,67 @@ def test_misra_gries_combine_merge_edges():
         assert e <= exact[k]
         assert exact[k] - e <= mg.norm // (mg.k + 1) + mg.decrement
     assert np.all(np.diff(mg.items.astype(np.int64)) > 0)  # state stays sorted unique
+
+
+@pytest.mark.parametrize("family", ["ms", "ms2", "cwp2", "cw2p2"])
+def test_pow2_families_reject_non_pow2_width(family):
+    """A power-of-2-only hash family with an explicit width of 1000
+    would hash into only part of the columns (512 of them for ``ms``);
+    construction raises instead.
+    Power-of-2 and derived widths still construct and hash."""
+    from heavy_hitters_spark.core.hashing import POW2_FAMILIES
+
+    assert family in POW2_FAMILIES
+    for make in (CountMin, CountSketch):
+        with pytest.raises(ValueError) as err:
+            make(width=1000, depth=3, hash_family=family)
+        assert "power-of-2" in str(err.value)
+        for sk in (make(width=1024, depth=3, hash_family=family), make(epsilon=0.1, hash_family=family)):
+            sk.update_batch(np.arange(5000, dtype=np.uint64))
+            assert sk.w & (sk.w - 1) == 0
+    CountMin(width=1000, depth=3, hash_family="cw").update_batch(np.arange(10, dtype=np.uint64))
+
+
+def test_misra_gries_zero_weight_leaves_no_candidate():
+    """A zero weight (a rounded-down weight column) leaves the same
+    bytes as a state that never saw the id — no (id, 0) candidate."""
+    mg = MisraGries(k=8)
+    mg.update_batch(np.array([5, 6], dtype=np.uint64), np.array([0, 3], dtype=np.int64))
+    ref = MisraGries(k=8)
+    ref.update_batch(np.array([6], dtype=np.uint64), np.array([3], dtype=np.int64))
+    assert mg.to_bytes() == ref.to_bytes()
+    assert mg.candidates() == [(6, 3)]
+    mg.update_batch(np.array([7], dtype=np.uint64), np.array([0], dtype=np.int64))
+    assert mg.to_bytes() == ref.to_bytes()
+
+
+@pytest.mark.parametrize(
+    "make", [lambda: MisraGries(k=8), lambda: KLL(k=16), lambda: TDigest(compression=20)],
+    ids=["misra_gries", "kll", "tdigest"],
+)
+def test_insert_only_summaries_reject_negative_weights(make):
+    """MG, KLL and t-digest are cash-register summaries: a deletion
+    raises ValueError before the state changes, never a silent drop."""
+    sk = make()
+    sk.update_batch(np.array([1, 2], dtype=np.uint64), np.array([3, 4], dtype=np.int64))
+    before = sk.to_bytes()
+    with pytest.raises(ValueError) as err:
+        sk.update_batch(np.array([1, 2], dtype=np.uint64), np.array([-5, 1], dtype=np.int64))
+    assert "negative weights" in str(err.value)
+    assert sk.to_bytes() == before
+
+
+def test_argument_guards_raise_value_error():
+    """Argument guards are ValueErrors, not asserts (which -O strips)."""
+    from heavy_hitters_spark.core.countsketch import cs_dims
+    from heavy_hitters_spark.hh import DyadicHH
+
+    for p in (3, 19):
+        with pytest.raises(ValueError):
+            HLL(p=p)
+    with pytest.raises(ValueError):
+        cs_dims(0.01, 0.01, b=2)
+    hh = DyadicHH(phi=0.1, epsilon=0.05, delta=0.1, m=255, gran=4, width=64, depth=2)
+    for lo, hi in ((-1, 3), (5, 4), (0, 256)):
+        with pytest.raises(ValueError):
+            hh.range_count(lo, hi)

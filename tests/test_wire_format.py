@@ -1,4 +1,4 @@
-"""Pins the serialized state bytes of the linear sketches and KLL.
+"""Pins the serialized state bytes of every sketch type.
 
 Durable checkpoints and streaming state stores hold ``to_bytes()``
 output, so a refactor that changes a header key order, a seed draw, a
@@ -15,7 +15,17 @@ import hashlib
 import numpy as np
 import pytest
 
-from heavy_hitters_spark.core import HLL, KLL, CountMin, CountSketch, MultiSketch, SeedStream
+from heavy_hitters_spark.core import (
+    HLL,
+    KLL,
+    Bloom,
+    CountMin,
+    CountSketch,
+    MisraGries,
+    MultiSketch,
+    SeedStream,
+    TDigest,
+)
 from heavy_hitters_spark.core.base import Sketch
 from heavy_hitters_spark.hh import ConstSketchHH, DyadicHH
 
@@ -51,6 +61,10 @@ FACTORIES = {
         }
     ),
     "kll": lambda: KLL(k=200, seed=7),
+    "misra_gries": lambda: MisraGries(k=256),
+    "hll": lambda: HLL(p=10, seed=7),
+    "bloom": lambda: Bloom(capacity=20_000, fpp=0.01, seed=7),
+    "tdigest": lambda: TDigest(compression=100.0),
 }
 
 PINNED = {
@@ -64,6 +78,10 @@ PINNED = {
     "const_sketch_hh": "34bfb2b00aa2d2aea3ae1b18bee99ba7a16f4ecee1c8622dd3fa825c12ee46fe",
     "multi": "cac99cb2e29f272f66406fb4a4bb03e3569b672271cd549c037ca36e62bc34c8",
     "kll": "40f2a5a159b54e76418687321233e18fc56fbda34fd1d9c0fdc967d7605488f7",
+    "misra_gries": "f27646f8c3a113d95f45a7e66c7436904da596a236750003bde53b17ec7bbef1",
+    "hll": "b198a70984284f1416d24e6c631332cf50f6204622bb6c6eac0f896929ac5686",
+    "bloom": "54dea83fc60194c26eeaa284676c352294887bf0c55997524da1ca80a9ac864f",
+    "tdigest": "cf7d0d92e36621e7910f651995cadb8cc9c173061102a8410b16007b0115db6c",
 }
 
 
