@@ -4,7 +4,7 @@ mortzdk/heavy-hitters (reference at /root/reference, studied not
 ported; see SURVEY.md).
 
 Layers:
-- ``core``      pure-numpy mergeable sketches (CountMin, CountSketch,
+- ``core``      numpy mergeable sketches (CountMin, CountSketch,
                 MisraGries, HLL, Bloom, KLL) + bit-parity PRNG/hashes
 - ``hh``        hierarchical dyadic/k-ary heavy hitters + range queries
 - ``spark``     distributed partial-build + tree-merge aggregation,

@@ -67,9 +67,10 @@ class CountMin(HashedTable):
         seeds: list[tuple[int, int]] | None = None,
         conservative: bool = False,
         parameterization: str = "reference",
+        _table=None,
     ) -> None:
         self.conservative = conservative
-        super().__init__(epsilon, delta, b, hash_family, width, depth, seed_stream, seeds, parameterization)
+        super().__init__(epsilon, delta, b, hash_family, width, depth, seed_stream, seeds, parameterization, _table)
 
     def _update_chunk(self, x, counts) -> None:
         c = None if counts is None else as_i64(counts, len(x))
@@ -88,8 +89,14 @@ class CountMin(HashedTable):
             scatter_add(self.table.reshape(-1), self._flat(self._rows(x)), cc)
 
     def point(self, items) -> np.ndarray:
-        """Batch point query: min over rows (count_min.c:83-111)."""
-        return self._cells(self._rows(as_u64(np.atleast_1d(np.asarray(items))))).min(axis=0)
+        """Batch point query: min over rows (count_min.c:83-111). One
+        broadcast hash, then each row's gather folds into a running
+        minimum, with no d x n flat-index or counter matrix."""
+        h = self._rows(as_u64(np.atleast_1d(np.asarray(items))))
+        est = self.table[0].take(h[0])
+        for r in range(1, self.d):
+            np.minimum(est, self.table[r].take(h[r]), out=est)
+        return est
 
     def point_ge(self, items, th: float) -> tuple[np.ndarray, np.ndarray]:
         """Row-pruned ``point`` >= ``th``: the min over rows is >= th

@@ -78,8 +78,9 @@ class CountSketch(HashedTable):
         seed_stream: SeedStream | None = None,
         seeds: list[tuple[int, int, int, int]] | None = None,
         parameterization: str = "reference",
+        _table=None,
     ) -> None:
-        super().__init__(epsilon, delta, b, hash_family, width, depth, seed_stream, seeds, parameterization)
+        super().__init__(epsilon, delta, b, hash_family, width, depth, seed_stream, seeds, parameterization, _table)
 
     def _draw_seeds(self, stream) -> tuple[int, ...]:
         # bucket hash, then sign hash (count_median.c:47-52)

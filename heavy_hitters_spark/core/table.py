@@ -46,7 +46,10 @@ class HashedTable(Sketch):
         seed_stream: SeedStream | None,
         seeds: list[tuple[int, ...]] | None,
         parameterization: str,
+        table: np.ndarray | None = None,
     ) -> None:
+        """``table``: a decoded ``d x w`` counter table to adopt in place
+        of a fresh zero one."""
         fam = FAMILIES[hash_family]
         if (width is None) != (depth is None):
             # a partial override would silently fall back to the
@@ -71,7 +74,7 @@ class HashedTable(Sketch):
         # each seed as a (d, 1) column: one kernel call hashes every row
         self._seed_cols = np.array(self.seeds, dtype=np.uint64).T[:, :, None]
         self._offsets = (np.arange(self.d, dtype=np.int64) * self.w)[:, None]
-        self.table = np.zeros((self.d, self.w), dtype=np.int64)
+        self.table = np.zeros((self.d, self.w), dtype=np.int64) if table is None else table
         self.norm = 0
 
     def _draw_seeds(self, stream: SeedStream) -> tuple[int, ...]:
@@ -127,16 +130,17 @@ class HashedTable(Sketch):
 
     @classmethod
     def _from_parts(cls, header, payload) -> "HashedTable":
+        w, d = int(header["w"]), int(header["d"])
         s = cls(
             epsilon=header["epsilon"],
             delta=header["delta"],
             b=header["b"],
             hash_family=header["family"],
-            width=header["w"],
-            depth=header["d"],
+            width=w,
+            depth=d,
             seeds=header["seeds"],
+            _table=unpack_i64(payload, d * w).reshape(d, w),
             **{f: header[f] for f in cls.FLAGS},
         )
-        s.table = unpack_i64(payload, s.d * s.w).reshape(s.d, s.w)
         s.norm = header["norm"]
         return s

@@ -111,9 +111,11 @@ class ConstSketchHH(LevelHierarchy):
         row_w = s._row_width()
 
         def row(lvl, blob):
-            seeds = [header["level_seeds"][lvl]]
-            r = CountMin(width=row_w, depth=1, hash_family=s.hash_family, seeds=seeds)
-            r.table, r.norm = unpack_i64(blob, row_w).reshape(1, -1), header["norm"]
+            r = CountMin(
+                width=row_w, depth=1, hash_family=s.hash_family, seeds=[header["level_seeds"][lvl]],
+                _table=unpack_i64(blob, row_w).reshape(1, row_w),
+            )
+            r.norm = header["norm"]
             return r
 
         s.levels = s._unpack_levels(kinds, blobs, row)

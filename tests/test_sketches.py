@@ -400,9 +400,8 @@ def test_misra_gries_decrement_witness_on_ties():
 
 
 def test_wire_pack_roundtrip():
-    """Packed wire states (zlib envelope) round-trip and interop with
-    raw HHS1 blobs; packing a fresh template is ~150x smaller (the
-    partial-collect Amdahl term of the distributed build)."""
+    """Packed wire states (the HHL1 LZ4 envelope) round-trip and interop
+    with raw HHS1 blobs, and pack smaller than the raw state."""
     import numpy as np
 
     from heavy_hitters_spark.core import CountMin, SeedStream

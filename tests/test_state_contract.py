@@ -6,7 +6,11 @@
   ConstSketchHH with a different ``m``).
 - A merge across types raises ValueError.
 - Every prefix truncation of a state raises ValueError, raw or packed;
-  so do a packed blob that does not inflate and a malformed header.
+  so do a packed blob that does not inflate or inflates to another
+  length than it declares, and a malformed header.
+- No single-bit flip of a packed state decodes to another state: it
+  raises ValueError (the envelope's checksum catches the flips the LZ4
+  frame does not) or decodes to the very same bytes.
 
 None of this may rest on ``assert``: the module is run again in a
 ``python -O`` subprocess, which strips asserts.
@@ -19,8 +23,10 @@ import os
 import struct
 import subprocess
 import sys
+import zlib
 
 import numpy as np
+import pyarrow as pa
 import pytest
 
 from heavy_hitters_spark.core import (
@@ -36,8 +42,10 @@ from heavy_hitters_spark.core import (
 )
 from heavy_hitters_spark.core.base import (
     _REGISTRY,
+    HHL1_HEAD,
     MAGIC,
     WIRE_MAGIC,
+    ZLIB_MAGIC,
     Sketch,
     _load_builtin_types,
     pack_state,
@@ -143,6 +151,7 @@ def test_every_truncation_raises(kind):
     raw = sk.to_bytes()
     assert Sketch.from_bytes(raw).to_bytes() == raw
     assert unpack_state(pack_state(sk)).to_bytes() == raw
+    assert pack_state(sk)[:4] == b"HHL1"  # the truncations below cut the written envelope
     accepted = []
     for i in range(len(raw)):
         for decode in (Sketch.from_bytes, lambda b: unpack_state(pack_state_bytes(b))):
@@ -161,6 +170,49 @@ def test_every_truncation_raises(kind):
     assert accepted == []
 
 
+@pytest.mark.parametrize("kind", sorted(MAKE))
+def test_no_bit_flip_decodes_to_another_state(kind):
+    sk = _filled(MAKE[kind]())
+    raw, packed = sk.to_bytes(), pack_state(sk)
+    other = []
+    for bit in range(8 * len(packed)):
+        try:
+            if unpack_state(_with_flipped_bit(packed, bit)).to_bytes() != raw:
+                other.append(bit)
+        except ValueError:
+            pass
+    assert other == []
+
+
+def _with_flipped_bit(data: bytes, bit: int) -> bytes:
+    b = bytearray(data)
+    b[bit // 8] ^= 1 << (bit % 8)
+    return bytes(b)
+
+
+def _flip_only_the_checksum_sees(packed: bytes) -> bytes:
+    """``packed`` with the first single-bit flip of its LZ4 frame that
+    still inflates to a whole state of the declared length, but another
+    one: only the checksum tells it from the state that was packed."""
+    n, crc = HHL1_HEAD.unpack_from(packed, 4)
+    start = 4 + HHL1_HEAD.size
+    for bit in range(8 * start, 8 * len(packed)):
+        flipped = _with_flipped_bit(packed, bit)
+        try:
+            with pa.CompressedInputStream(pa.py_buffer(flipped[start:]), "lz4") as stream:
+                raw = stream.read(n + 1)
+        except (OSError, pa.ArrowException):
+            continue
+        if len(raw) != n or zlib.crc32(raw) == crc:
+            continue
+        try:
+            Sketch.from_bytes(raw)
+        except ValueError:
+            continue
+        return flipped
+    raise AssertionError("every flip of the frame is caught without the checksum")
+
+
 def _blob(header, payload: bytes = b"") -> bytes:
     hj = header if isinstance(header, bytes) else json.dumps(header).encode()
     return MAGIC + struct.pack("<I", len(hj)) + hj + payload
@@ -171,11 +223,29 @@ def _with_width_tag(raw: bytes, tag: int) -> bytes:
     return raw[: 8 + hlen] + bytes([tag]) + raw[9 + hlen :]
 
 
+def _with_declared_length(packed: bytes, delta: int) -> bytes:
+    """An HHL1 blob whose valid LZ4 frame sits under a declared raw
+    length ``delta`` bytes off the true one."""
+    (n,) = struct.unpack_from("<Q", packed, 4)
+    return WIRE_MAGIC + struct.pack("<Q", n + delta) + packed[12:]
+
+
+_PACKED_HLL = pack_state(_filled(HLL(p=4)))
+
+
 @pytest.mark.parametrize(
     "data",
     [
-        WIRE_MAGIC + b"not a zlib stream",
+        ZLIB_MAGIC + b"not a zlib stream",
+        ZLIB_MAGIC,
+        WIRE_MAGIC + HHL1_HEAD.pack(64, 0) + b"not an lz4 frame",
         WIRE_MAGIC,
+        WIRE_MAGIC + b"\x10\0\0",
+        WIRE_MAGIC + struct.pack("<Q", 64) + b"\0\0",  # a length but half a checksum
+        _with_declared_length(_PACKED_HLL, 1),
+        _with_declared_length(_PACKED_HLL, -1),
+        _with_declared_length(_PACKED_HLL, 1 << 62),  # refused before it is allocated
+        _flip_only_the_checksum_sees(_PACKED_HLL),
         _blob(b"{not json"),
         _blob([1, 2]),
         _blob({"type": "no_such_sketch"}),
@@ -183,12 +253,24 @@ def _with_width_tag(raw: bytes, tag: int) -> bytes:
         _filled(HLL(p=4)).to_bytes() + b"\0",  # trailing byte
         _with_width_tag(_filled(_cm()).to_bytes(), 3),
     ],
-    ids=["hhz1-garbage", "hhz1-empty", "bad-json", "non-object",
+    ids=["hhz1-garbage", "hhz1-empty", "hhl1-garbage", "hhl1-empty", "hhl1-short-length",
+         "hhl1-short-checksum", "hhl1-length-mismatch-long", "hhl1-length-mismatch-short",
+         "hhl1-huge-length", "hhl1-bit-flip",
+         "bad-json", "non-object",
          "unknown-type", "missing-field", "trailing-byte", "bad-width-tag"],
 )
 def test_malformed_state_raises(data):
     with pytest.raises(ValueError):
         unpack_state(data)
+
+
+@pytest.mark.parametrize("delta", [1, -1], ids=["long", "short"])
+def test_hhl1_length_mismatch_is_named(delta):
+    """The declared length itself is checked, not left to the decoder
+    to trip over the bytes it leaves."""
+    with pytest.raises(ValueError) as err:
+        unpack_state(_with_declared_length(_PACKED_HLL, delta))
+    assert "inflates to" in str(err.value)
 
 
 def test_contract_holds_under_python_O():
