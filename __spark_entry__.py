@@ -139,35 +139,21 @@ def _q_topk_users_weighted(spark, sf):
     fixtures' A[i][2] shape) through the driver gate; the turnstile
     (signed) path goes through CountSketch — see turnstile_net_cs."""
     from heavy_hitters_spark.core import MisraGries
+    from heavy_hitters_spark.queries import _events, _mg_exact_topk, _with_user_id
     from heavy_hitters_spark.spark import build_sketch
-    from heavy_hitters_spark.spark.keys import MASK32
 
-    k = 10
-    ev = spark.read.parquet(f"{sf}/events.parquet").select(
-        F.col("user_id"),
-        F.col("user_id").bitwiseAND(F.lit(MASK32)).alias("id"),
-        (F.col("value") * 100).cast("long").alias("w"),
-    )
+    ev = _with_user_id(_events(spark, sf)).withColumn("w", (F.col("value") * 100).cast("long"))
     mg, _ = build_sketch(ev, MisraGries(k=4096), id_col="id", weight_col="w")
-    cand = [int(i) for i, _ in mg.candidates()]
-    cand_df = spark.createDataFrame([(c,) for c in cand], "id long")
-    exact = (
-        ev.join(F.broadcast(cand_df), "id")
-        .groupBy("user_id")
-        .agg(F.sum("w").alias("weight"))
-        .orderBy(F.desc("weight"), F.asc("user_id"))
-        .limit(k)
-    )
-    rows = exact.collect()
-    kth = rows[-1]["weight"] if len(rows) >= k else 0
-    if kth <= mg.decrement:  # same decrement-witness certificate as topk_tokens
-        exact = (
-            ev.groupBy("user_id")
-            .agg(F.sum("w").alias("weight"))
-            .orderBy(F.desc("weight"), F.asc("user_id"))
-            .limit(k)
-        )
-    return exact
+    return _mg_exact_topk(ev, mg, "user_id", 10, weight_col="w")
+
+
+def _signed_user_events(spark, sf):
+    """The TURNSTILE events stream: user ids, with weight ``w`` = -1 for
+    an error event (a deletion) and +1 for any other (an insertion)."""
+    from heavy_hitters_spark.queries import _events, _with_user_id
+
+    sign = F.when(F.col("event_type") == "error", F.lit(-1)).otherwise(F.lit(1))
+    return _with_user_id(_events(spark, sf)).withColumn("w", sign.cast("long"))
 
 
 def _q_turnstile_net_cs(spark, sf):
@@ -182,16 +168,9 @@ def _q_turnstile_net_cs(spark, sf):
 
     from heavy_hitters_spark.core import CountSketch, SeedStream
     from heavy_hitters_spark.spark import build_sketch
-    from heavy_hitters_spark.spark.keys import MASK32
 
     probes = [10, 20, 30, 40, 50]
-    ev = spark.read.parquet(f"{sf}/events.parquet").select(
-        F.col("user_id").bitwiseAND(F.lit(MASK32)).alias("id"),
-        F.when(F.col("event_type") == "error", F.lit(-1))
-        .otherwise(F.lit(1))
-        .cast("long")
-        .alias("w"),
-    )
+    ev = _signed_user_events(spark, sf)
     cs_t = CountSketch(width=1 << 16, depth=7, hash_family="ms", seed_stream=SeedStream(1234, 5678))
     cs, _ = build_sketch(ev, cs_t, id_col="id", weight_col="w")
     est = cs.point(np.array(probes, dtype=np.uint64))
@@ -427,12 +406,10 @@ def _q_range_sum_cm(spark, sf):
     [10, 59] — exact here for the point_freq_cm reason; the scalable
     form is range_count_dyadic."""
     from heavy_hitters_spark.core import CountMin, SeedStream
+    from heavy_hitters_spark.queries import _events, _with_user_id
     from heavy_hitters_spark.spark import build_sketch
-    from heavy_hitters_spark.spark.keys import MASK32
 
-    ev = spark.read.parquet(f"{sf}/events.parquet").withColumn(
-        "id", F.col("user_id").bitwiseAND(F.lit(MASK32))
-    )
+    ev = _with_user_id(_events(spark, sf))
     cm_t = CountMin(width=1 << 18, depth=5, hash_family="ms", seed_stream=SeedStream(1234, 5678))
     cm, _ = build_sketch(ev, cm_t, id_col="id")
     return spark.createDataFrame(
@@ -520,18 +497,16 @@ def _q_phi_heavy_users_const(spark, sf):
     """Same phi-HH question answered by the hh_const_sketch variant
     (cheap per-level rows + verification sketch) + exact verify —
     deterministic, same oracle as phi_heavy_users."""
-    from heavy_hitters_spark.core import SeedStream
     from heavy_hitters_spark.hh import ConstSketchHH
-    from heavy_hitters_spark.queries import _verified_heavy_users
-    from heavy_hitters_spark.spark.keys import MASK32
-
-    phi = 0.005
-    ev = spark.read.parquet(f"{sf}/events.parquet").withColumn(
-        "id", F.col("user_id").bitwiseAND(F.lit(MASK32))
+    from heavy_hitters_spark.queries import (
+        _events,
+        _user_hierarchy,
+        _verified_heavy_users,
+        _with_user_id,
     )
-    hh = ConstSketchHH(phi=phi, epsilon=phi / 2, delta=0.05, m=MASK32, gran=8,
-                       seed_stream=SeedStream(1234, 5678))
-    return _verified_heavy_users(spark, ev, hh)
+
+    ev = _with_user_id(_events(spark, sf))
+    return _verified_heavy_users(ev, _user_hierarchy(0.005, cls=ConstSketchHH))
 
 
 def _q_phi_heavy_users_cs(spark, sf):
@@ -543,31 +518,15 @@ def _q_phi_heavy_users_cs(spark, sf):
     ``th − ε·L1``, count_median.h:46-49) — then exact net-frequency
     verification of the candidates. Deterministic: candidates only
     prune; the filter is the exact net count."""
-    from heavy_hitters_spark.core import SeedStream
-    from heavy_hitters_spark.hh import DyadicHH
-    from heavy_hitters_spark.queries import _verified_heavy_users
-    from heavy_hitters_spark.spark.keys import MASK32
+    from heavy_hitters_spark.queries import _user_hierarchy, _verified_heavy_users
 
-    phi = 0.005
-    ev = spark.read.parquet(f"{sf}/events.parquet").select(
-        F.col("user_id"),
-        F.col("user_id").bitwiseAND(F.lit(MASK32)).alias("id"),
-        F.when(F.col("event_type") == "error", F.lit(-1))
-        .otherwise(F.lit(1))
-        .cast("long")
-        .alias("w"),
-    )
     # width/depth override = the reference's -w/-h global dims
     # (precision_hh.c:116-150): the (eps, delta')-derived CS dims are
     # quadratic in 1/eps (~1.5 GB/level here) — the exact verification
     # below only needs candidate RECALL, which 2^16 x 7 delivers with
     # huge margin on a 2^8-ary prefix tree
-    hh = DyadicHH(
-        phi=phi, epsilon=phi / 2, delta=0.05, m=MASK32, gran=8,
-        sketch_type="count_sketch", seed_stream=SeedStream(1234, 5678),
-        width=1 << 16, depth=7,
-    )
-    return _verified_heavy_users(spark, ev, hh, weight_col="w")
+    hh = _user_hierarchy(0.005, sketch_type="count_sketch", width=1 << 16, depth=7)
+    return _verified_heavy_users(_signed_user_events(spark, sf), hh, weight_col="w")
 
 
 def _q_phi_heavy_users_binary(spark, sf):
@@ -577,20 +536,15 @@ def _q_phi_heavy_users_binary(spark, sf):
     oracle as phi_heavy_users. Closes the last reference HH variant
     without a gated driver query (gran=8 ktree, const-sketch, and the
     CS hierarchy are gated elsewhere)."""
-    from heavy_hitters_spark.core import SeedStream
-    from heavy_hitters_spark.hh import DyadicHH
-    from heavy_hitters_spark.queries import _verified_heavy_users
-    from heavy_hitters_spark.spark.keys import MASK32
+    from heavy_hitters_spark.queries import (
+        _events,
+        _user_hierarchy,
+        _verified_heavy_users,
+        _with_user_id,
+    )
 
-    phi = 0.005
-    ev = spark.read.parquet(f"{sf}/events.parquet").withColumn(
-        "id", F.col("user_id").bitwiseAND(F.lit(MASK32))
-    )
-    hh = DyadicHH(
-        phi=phi, epsilon=phi / 2, delta=0.05, m=MASK32, gran=1,
-        seed_stream=SeedStream(1234, 5678),
-    )
-    return _verified_heavy_users(spark, ev, hh)
+    ev = _with_user_id(_events(spark, sf))
+    return _verified_heavy_users(ev, _user_hierarchy(0.005, gran=1))
 
 
 def _q_hot_shingle_stats(spark, sf):
@@ -672,15 +626,17 @@ def _q_eval_hh_precision(spark, sf):
     exact verification), so the harness row is deterministic and the
     oracle only needs the exact phi-heavy count."""
     from heavy_hitters_spark.eval import hh_precision_recall
-    from heavy_hitters_spark.queries import phi_heavy_users
-    from heavy_hitters_spark.spark.keys import MASK32
+    from heavy_hitters_spark.queries import (
+        _events,
+        _user_hierarchy,
+        _verified_heavy_users,
+        _with_user_id,
+    )
 
     phi = 0.005
-    reported_users = [r["user_id"] for r in phi_heavy_users(spark, sf, phi=phi).collect()]
-    ev = spark.read.parquet(f"{sf}/events.parquet").withColumn(
-        "id", F.col("user_id").bitwiseAND(F.lit(MASK32))
-    )
-    return hh_precision_recall(spark, ev, reported_users, phi=phi, epsilon=0.0)
+    ev = _with_user_id(_events(spark, sf))  # one read for the query and the harness
+    reported = [r["user_id"] for r in _verified_heavy_users(ev, _user_hierarchy(phi)).collect()]
+    return hh_precision_recall(spark, ev, reported, phi=phi, epsilon=0.0)
 
 
 def _q_bloom_membership(spark, sf):
@@ -704,12 +660,10 @@ def _q_bloom_membership(spark, sf):
 
 def _q_quantiles_tdigest(spark, sf):
     from heavy_hitters_spark.core import TDigest
+    from heavy_hitters_spark.queries import _events_value_grid
     from heavy_hitters_spark.spark import build_sketch
 
-    ev = spark.read.parquet(f"{sf}/events.parquet").select(
-        (F.col("value") * 100).cast("long").alias("id")
-    )
-    td, _ = build_sketch(ev, TDigest(200), id_col="id")
+    td, _ = build_sketch(_events_value_grid(spark, sf), TDigest(200), id_col="v")
     qs = [0.1, 0.5, 0.9, 0.99]
     est = td.quantile(qs) / 100.0
     return spark.createDataFrame(

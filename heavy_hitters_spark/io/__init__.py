@@ -1,11 +1,3 @@
-from .pages import extract_text_col, pages_df, synthesize_pages
-from .streams import truth_df, weighted_stream_df, zipf_stream_df
+from .pages import extract_text_col, pages_df
 
-__all__ = [
-    "pages_df",
-    "extract_text_col",
-    "synthesize_pages",
-    "zipf_stream_df",
-    "weighted_stream_df",
-    "truth_df",
-]
+__all__ = ["pages_df", "extract_text_col"]

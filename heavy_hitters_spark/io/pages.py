@@ -22,7 +22,6 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql.types import (
     BinaryType,
     StringType,
@@ -159,25 +158,6 @@ def pages_df(
 
     rng = spark.range(n_rows, numPartitions=partitions)
     return rng.mapInPandas(gen, PAGES_SCHEMA)
-
-
-def synthesize_pages(
-    spark: SparkSession, out_dir: str, n_rows: int, **kw
-) -> None:
-    """Write pages.parquet + exact-frequency sidecar truth tables
-    (FIXTURES.md §1: like the Zipfian generator's '#id: freq' header)."""
-    df = pages_df(spark, n_rows, **kw)
-    df.write.mode("overwrite").parquet(f"{out_dir}/pages.parquet")
-    pages = spark.read.parquet(f"{out_dir}/pages.parquet")
-    tok = pages.select(F.explode(F.split("text", " ")).alias("token"))
-    tok.groupBy("token").count().withColumnRenamed("count", "freq").write.mode(
-        "overwrite"
-    ).parquet(f"{out_dir}/pages_truth_tokens.parquet")
-    pages.select(F.parse_url("url", F.lit("HOST")).alias("host")).groupBy(
-        "host"
-    ).count().withColumnRenamed("count", "freq").write.mode("overwrite").parquet(
-        f"{out_dir}/pages_truth_hosts.parquet"
-    )
 
 
 def extract_text_py(html: bytes) -> str:

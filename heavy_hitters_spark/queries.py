@@ -4,14 +4,25 @@ Two families:
 
 **Hybrid sketch→exact queries** (deterministic, oracle-checkable):
 the sketch pass scans once and produces a SMALL candidate set with a
-recall guarantee; a second exact pass — filtered to candidates via a
-broadcast join — rescopes counts exactly and applies the exact
-threshold/top-k. The output equals the all-exact answer whenever the
-sketch's recall certificate holds, and each function *checks* the
-certificate and falls back to the exact plan if it doesn't. At 100 TB
-this is the production shape: pass 1 is map-side-only (fixed-size
-states, no shuffle of raw updates), pass 2 shuffles only candidate-key
-rows.
+recall guarantee; a second exact pass rescopes counts exactly and
+applies the exact threshold/top-k. Each decision of that shape is made
+in one place:
+
+- ``_exact_over`` is the one exact pass: the candidate ids broadcast-
+  joined against the rows (or every row), grouped and aggregated.
+- ``_mg_exact_topk`` is the one Misra-Gries top-k certificate: any key
+  absent from the summary has true count <= ``mg.decrement``, so the
+  candidate answer stands only while its k-th count is above it;
+  otherwise the full exact plan runs. Counts or exact weight sums.
+- ``_verified_heavy_users`` is the one phi-heavy-user verify over a
+  hierarchy's ``query()`` candidates.
+- ``_exact_quantiles`` is the one exact-quantile pass: sketch windows
+  prune, ``_exact_quantiles_windowed`` certifies and resolves.
+
+Each query reads each table once and reuses the DataFrame for both
+passes. At 100 TB this is the production shape: pass 1 is map-side-only
+(fixed-size states, no shuffle of raw updates), pass 2 shuffles only
+candidate-key rows.
 
 **Sketch-estimate queries** (approximate, bounds-checked in tests):
 point frequency, HLL distinct, KLL quantiles, dyadic range counts, L2
@@ -23,14 +34,16 @@ from __future__ import annotations
 import math
 
 import numpy as np
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .core import HLL, KLL, CountMin, CountSketch, MisraGries, SeedStream
+from .core import HLL, KLL, CountMin, CountSketch, MisraGries, SeedStream, TDigest
 from .hh import DyadicHH
 from .spark import build_sketch, key_id, key_id_col, tokens
 from .spark.fused import build_token_sketch
 from .spark.keys import MASK32
+
+_QS = [0.1, 0.25, 0.5, 0.75, 0.9, 0.99]
 
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -53,8 +66,31 @@ def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/events.parquet")
 
 
-def _token_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return tokens(_docs(spark, sf_dir)).withColumn("id", key_id_col("token"))
+def _token_ids(docs: DataFrame) -> DataFrame:
+    return tokens(docs).withColumn("id", key_id_col("token"))
+
+
+def _with_user_id(ev: DataFrame) -> DataFrame:
+    """``ev`` plus the uint32 item id ``id`` of its ``user_id`` (the
+    hierarchy universe of every user query)."""
+    return ev.withColumn("id", F.col("user_id").bitwiseAND(F.lit(MASK32)))
+
+
+def _events_value_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The events value grid every quantile query reads: one integer
+    column ``v`` = value*100, truncated toward zero (matching
+    CAST(trunc(value*100) AS BIGINT) in SQL)."""
+    return _events(spark, sf_dir).select((F.col("value") * 100).cast("long").alias("v"))
+
+
+def _user_hierarchy(phi: float, cls=DyadicHH, **kw):
+    """The user-id hierarchy template (``DyadicHH`` or
+    ``ConstSketchHH``): epsilon = phi/2 and delta 0.05 over the 32-bit
+    universe, fixed seeds; ``kw`` overrides the class defaults."""
+    return cls(
+        phi=phi, epsilon=phi / 2, delta=0.05, m=MASK32,
+        seed_stream=SeedStream(1234, 5678), **kw,
+    )
 
 
 # ----------------------------------------------------------------------
@@ -62,10 +98,22 @@ def _token_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ----------------------------------------------------------------------
 
 
+def _exact_over(rows: DataFrame, cand: list[int] | None, key_col: str, agg: Column) -> DataFrame:
+    """The exact pass of every hybrid query: ``rows`` restricted to the
+    candidate ids ``cand`` (a broadcast join on ``id``; ``None`` keeps
+    every row), grouped by ``key_col`` and aggregated with ``agg``."""
+    if cand is not None:
+        cand_df = rows.sparkSession.createDataFrame([(c,) for c in cand], "id long")
+        rows = rows.join(F.broadcast(cand_df), "id")
+    return rows.groupBy(key_col).agg(agg)
+
+
 def _mg_exact_topk(
-    ids: DataFrame, mg: MisraGries, key_col: str, k: int
+    ids: DataFrame, mg: MisraGries, key_col: str, k: int, weight_col: str | None = None
 ) -> DataFrame:
     """Exact top-k from an MG candidate pass, with a SOUND certificate.
+    Ranks by ``count`` (reported as ``freq``), or with ``weight_col``
+    by the exact ``sum`` of it (reported as ``weight``).
 
     Any key absent from the MG summary has true count <= mg.decrement
     (the exactly-tracked cumulative subtraction, maintained through
@@ -74,44 +122,32 @@ def _mg_exact_topk(
     all-exact answer; otherwise fall back to the full exact plan.
     (A len(candidates)-based gate is unsound: _shrink can drop counters
     below k while decrement > 0 on tie-heavy data.)"""
-    spark = ids.sparkSession
+    name, agg = ("freq", F.count("*")) if weight_col is None else ("weight", F.sum(weight_col))
+
+    def top(cand: list[int] | None) -> DataFrame:
+        exact = _exact_over(ids, cand, key_col, agg.alias(name))
+        return exact.orderBy(F.desc(name), F.asc(key_col)).limit(k)
+
     cand = [int(i) for i, _ in mg.candidates()]
-
-    def full_exact() -> DataFrame:
-        return (
-            ids.groupBy(key_col)
-            .agg(F.count("*").alias("freq"))
-            .orderBy(F.desc("freq"), F.asc(key_col))
-            .limit(k)
-        )
-
     if not cand:
-        return full_exact()
-    cand_df = spark.createDataFrame([(c,) for c in cand], "id long")
-    exact = (
-        ids.join(F.broadcast(cand_df), "id")
-        .groupBy(key_col)
-        .agg(F.count("*").alias("freq"))
-        .orderBy(F.desc("freq"), F.asc(key_col))
-        .limit(k)
-    )
+        return top(None)
+    exact = top(cand)
     rows = exact.collect()
-    kth = rows[-1]["freq"] if len(rows) >= k else 0
-    if kth <= mg.decrement:
-        return full_exact()
-    return exact
+    kth = rows[-1][name] if len(rows) >= k else 0
+    return top(None) if kth <= mg.decrement else exact
 
 
 def topk_tokens(spark: SparkSession, sf_dir: str, k: int = 20, kc: int = 4096) -> DataFrame:
     """Exact top-k tokens via Misra-Gries candidates + exact rescoring.
 
     The MG pass runs on the FUSED build path (spark/fused.py: one Arrow
-    row per document, tokenize/dictionary-encode in Arrow C) — ~250x
-    less JVM->Python transfer than exploding tokens into partial_states.
+    row per document, tokenize + count in Arrow C) — ~250x less
+    JVM->Python transfer than exploding tokens into partial_states.
     The exact rescoring pass is pure Catalyst (explode + broadcast join
-    + groupBy)."""
-    mg, _ = build_token_sketch(_docs(spark, sf_dir), MisraGries(k=kc))
-    return _mg_exact_topk(_token_ids(spark, sf_dir), mg, "token", k)
+    + groupBy) over the same documents read."""
+    docs = _docs(spark, sf_dir)
+    mg, _ = build_token_sketch(docs, MisraGries(k=kc))
+    return _mg_exact_topk(_token_ids(docs), mg, "token", k)
 
 
 def phi_heavy_tokens(spark: SparkSession, sf_dir: str, phi: float = 0.02) -> DataFrame:
@@ -121,49 +157,29 @@ def phi_heavy_tokens(spark: SparkSession, sf_dir: str, phi: float = 0.02) -> Dat
     summary has true count <= mg.decrement; if decrement < phi*L1 the
     candidate set provably contains every phi-heavy token (kc is chosen
     so the worst-case bound L1/(kc+1) < phi*L1 already, but the witness
-    is checked, not assumed)."""
+    is checked, not assumed; on failure every token is verified)."""
     kc = max(4096, int(math.ceil(2.0 / phi)))
-    mg, _ = build_token_sketch(_docs(spark, sf_dir), MisraGries(k=kc))
-    ids = _token_ids(spark, sf_dir)
+    docs = _docs(spark, sf_dir)
+    mg, _ = build_token_sketch(docs, MisraGries(k=kc))
     total = mg.norm  # exact L1 (MG tracks it exactly)
-    if mg.decrement >= phi * total:
-        # certificate failed (cannot happen for kc >= 2/phi; belt+braces)
-        return (
-            ids.groupBy("token")
-            .agg(F.count("*").alias("freq"))
-            .where(F.col("freq") >= phi * total)
-            .orderBy(F.asc("token"))
-        )
-    cand = [int(i) for i, _ in mg.candidates()]
-    cand_df = spark.createDataFrame([(c,) for c in cand], "id long")
+    cand = None if mg.decrement >= phi * total else [int(i) for i, _ in mg.candidates()]
     return (
-        ids.join(F.broadcast(cand_df), "id")
-        .groupBy("token")
-        .agg(F.count("*").alias("freq"))
+        _exact_over(_token_ids(docs), cand, "token", F.count("*").alias("freq"))
         .where(F.col("freq") >= phi * total)
         .orderBy(F.asc("token"))
     )
 
 
-def _verified_heavy_users(
-    spark: SparkSession, ev: DataFrame, hh, weight_col: str | None = None
-) -> DataFrame:
+def _verified_heavy_users(ev: DataFrame, hh, weight_col: str | None = None) -> DataFrame:
     """The candidate-to-verify path of every phi-heavy-user query: build
-    the hierarchy template ``hh`` over ``ev``'s ``id`` column, broadcast
-    its ``query()`` candidates into a join with ``ev``, and keep the
-    user_ids whose exact count (``freq``; with ``weight_col``, the net
-    sum ``net_freq``) reaches ``phi * L1``."""
-    name = "freq" if weight_col is None else "net_freq"
+    the hierarchy template ``hh`` over ``ev``'s ``id`` column and keep
+    the ``query()`` candidates' user_ids whose exact count (``freq``;
+    with ``weight_col``, the net sum ``net_freq``) reaches ``phi * L1``."""
+    name, agg = ("freq", F.count("*")) if weight_col is None else ("net_freq", F.sum(weight_col))
     merged, _ = build_sketch(ev, hh, id_col="id", weight_col=weight_col)
     cand = [int(i) for i, _ in merged.query()]
-    if not cand:
-        return spark.createDataFrame([], f"user_id long, {name} long")
-    cand_df = spark.createDataFrame([(c,) for c in cand], "id long")
-    exact = F.count("*") if weight_col is None else F.sum(weight_col)
     return (
-        ev.join(F.broadcast(cand_df), "id")
-        .groupBy("user_id")
-        .agg(exact.alias(name))
+        _exact_over(ev, cand, "user_id", agg.alias(name))
         .where(F.col(name) >= merged.phi * merged.norm)
         .orderBy(F.asc("user_id"))
     )
@@ -173,12 +189,7 @@ def phi_heavy_users(spark: SparkSession, sf_dir: str, phi: float = 0.005) -> Dat
     """phi-heavy-hitter user_ids over events, via the hierarchical
     dyadic structure (reference semantics: recall of everything >=
     phi*L1 guaranteed) + exact verification pass."""
-    ev = _events(spark, sf_dir).withColumn("id", F.col("user_id").bitwiseAND(F.lit(MASK32)))
-    hh = DyadicHH(
-        phi=phi, epsilon=phi / 2, delta=0.05, m=MASK32, gran=8,
-        seed_stream=SeedStream(1234, 5678),
-    )
-    return _verified_heavy_users(spark, ev, hh)
+    return _verified_heavy_users(_with_user_id(_events(spark, sf_dir)), _user_hierarchy(phi))
 
 
 def topk_event_types(spark: SparkSession, sf_dir: str, k: int = 5) -> DataFrame:
@@ -244,9 +255,8 @@ def distinct_tokens_hll(spark: SparkSession, sf_dir: str, p: int = 14) -> DataFr
 def quantiles_events_value(spark: SparkSession, sf_dir: str, qs: list[float] | None = None) -> DataFrame:
     """KLL quantile estimates over events.value (values scaled to int
     ids for transport; KLL itself consumes doubles)."""
-    qs = qs or [0.1, 0.25, 0.5, 0.75, 0.9, 0.99]
-    ev = _events(spark, sf_dir).select((F.col("value") * 100).cast("long").alias("id"))
-    kll, _ = build_sketch(ev, KLL(k=256), id_col="id")
+    qs = qs or _QS
+    kll, _ = build_sketch(_events_value_grid(spark, sf_dir), KLL(k=256), id_col="v")
     est = kll.quantile(qs) / 100.0
     return spark.createDataFrame(
         [(float(q), float(v)) for q, v in zip(qs, est)], "q double, value_est double"
@@ -257,10 +267,8 @@ def range_count_users(spark: SparkSession, sf_dir: str, lo: int = 10, hi: int = 
     """Dyadic range-count estimate of events with user_id in [lo, hi]
     (O(k log m) point queries on the level sketches — the scalable form
     of the reference's naive range_sum, count_min.c:147-156)."""
-    ev = _events(spark, sf_dir).withColumn("id", F.col("user_id").bitwiseAND(F.lit(MASK32)))
-    hh = DyadicHH(phi=0.01, epsilon=0.005, delta=0.05, m=MASK32, gran=8,
-                  seed_stream=SeedStream(1234, 5678))
-    merged, _ = build_sketch(ev, hh, id_col="id")
+    ev = _with_user_id(_events(spark, sf_dir))
+    merged, _ = build_sketch(ev, _user_hierarchy(0.01), id_col="id")
     return spark.createDataFrame(
         [(lo, hi, int(merged.range_count(lo, hi)))], "lo long, hi long, range_est long"
     )
@@ -393,28 +401,23 @@ def _exact_quantiles_windowed(
     return out
 
 
-def _events_value_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # trunc toward zero, matching CAST(trunc(value*100) AS BIGINT) in SQL
-    return _events(spark, sf_dir).select((F.col("value") * 100).cast("long").alias("v"))
-
-
-def quantiles_events_value_exact(
-    spark: SparkSession, sf_dir: str, qs: list[float] | None = None, pad: float = 0.02
+def _exact_quantiles(
+    spark: SparkSession, sf_dir: str, template, qs: list[float] | None, pad: float
 ) -> DataFrame:
-    """EXACT quantiles via KLL pruning: the sketch proposes a value
-    window per q (quantile(q +- pad)), the exact passes certify + resolve
-    inside it (fallback to full exact when the certificate fails). Same
-    hybrid shape as topk_tokens: sketch for candidate pruning, Catalyst
-    for the exact answer."""
-    qs = qs or [0.1, 0.25, 0.5, 0.75, 0.9, 0.99]
+    """EXACT quantiles of the events value grid, pruned by a quantile
+    sketch (``template``, KLL or t-digest): the sketch proposes a value
+    window per q (quantile(q +- pad)), the exact passes certify +
+    resolve inside it (``_exact_quantiles_windowed``: rewindow, then
+    bisection, when the certificate fails)."""
+    qs = qs or _QS
     vals = _events_value_grid(spark, sf_dir)
-    kll, _ = build_sketch(vals, KLL(k=256), id_col="v")
+    sk, _ = build_sketch(vals, template, id_col="v")
 
     def make_windows(p: float) -> list[tuple[int, int]]:
         out = []
         for q in qs:
-            lo = kll.quantile(max(0.0, q - p))[0]
-            hi = kll.quantile(min(1.0, q + p))[0]
+            lo = sk.quantile(max(0.0, q - p))[0]
+            hi = sk.quantile(min(1.0, q + p))[0]
             out.append((int(math.floor(lo)) - 1, int(math.ceil(hi)) + 1))
         return out
 
@@ -429,6 +432,24 @@ def quantiles_events_value_exact(
         [(float(q), round(v / 100.0, 6)) for q, v in zip(qs, exact)],
         "q double, value_est double",
     ).orderBy("q")
+
+
+def quantiles_events_value_exact(
+    spark: SparkSession, sf_dir: str, qs: list[float] | None = None, pad: float = 0.02
+) -> DataFrame:
+    """EXACT quantiles via KLL pruning (``_exact_quantiles``). Same
+    hybrid shape as topk_tokens: sketch for candidate pruning, Catalyst
+    for the exact answer."""
+    return _exact_quantiles(spark, sf_dir, KLL(k=256), qs, pad)
+
+
+def quantiles_events_value_exact_tdigest(
+    spark: SparkSession, sf_dir: str, qs: list[float] | None = None, pad: float = 0.05
+) -> DataFrame:
+    """Same hybrid exact-quantile query with t-digest as the pruning
+    sketch; the certificate + fallback make the answer exact regardless
+    of digest accuracy."""
+    return _exact_quantiles(spark, sf_dir, TDigest(200), qs, pad)
 
 
 def topk_tokens_stream(spark: SparkSession, sf_dir: str, k: int = 20, kc: int = 4096) -> DataFrame:
@@ -446,14 +467,14 @@ def topk_tokens_stream(spark: SparkSession, sf_dir: str, k: int = 20, kc: int = 
 
     from .streaming.sketch_stream import merged_sketch, token_sketch_sink
 
+    docs = _docs(spark, sf_dir)
     state = tempfile.mkdtemp(prefix="hh_stream_state_")
     ckpt = tempfile.mkdtemp(prefix="hh_stream_ckpt_")
     try:
-        sch = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
         # the file-stream source requires a DIRECTORY; the testdata
         # tables are single files, so stream the dir with a glob filter
         stream = (
-            spark.readStream.schema(sch)
+            spark.readStream.schema(docs.schema)
             .option("pathGlobFilter", "documents.parquet")
             .parquet(sf_dir)
         )
@@ -467,7 +488,7 @@ def topk_tokens_stream(spark: SparkSession, sf_dir: str, k: int = 20, kc: int = 
     finally:
         shutil.rmtree(state, ignore_errors=True)
         shutil.rmtree(ckpt, ignore_errors=True)
-    return _mg_exact_topk(_token_ids(spark, sf_dir), mg, "token", k)
+    return _mg_exact_topk(_token_ids(docs), mg, "token", k)
 
 
 def windowed_event_counts_stream(
@@ -489,13 +510,12 @@ def windowed_event_counts_stream(
     state = tempfile.mkdtemp(prefix="hh_wstream_state_")
     ckpt = tempfile.mkdtemp(prefix="hh_wstream_ckpt_")
     try:
-        sch = spark.read.parquet(f"{sf_dir}/events.parquet").schema
         stream = (
-            spark.readStream.schema(sch)
+            spark.readStream.schema(_events(spark, sf_dir).schema)
             .option("pathGlobFilter", "events.parquet")
             .parquet(sf_dir)
         )
-        ev = stream.select("ts", F.col("user_id").bitwiseAND(F.lit(MASK32)).alias("id"))
+        ev = _with_user_id(stream)
         tmpl = CountMin(width=1 << 12, depth=3, seed_stream=SeedStream(1234, 5678))
         q = windowed_sketch_sink(
             ev, tmpl, state, ckpt, ts_col="ts", window=window, id_col="id"
@@ -519,36 +539,3 @@ def windowed_event_counts_stream(
         [(int(r["window_epoch"]), int(r["n_events"])) for r in rows],
         "window_epoch long, n_events long",
     ).orderBy("window_epoch")
-
-
-def quantiles_events_value_exact_tdigest(
-    spark: SparkSession, sf_dir: str, qs: list[float] | None = None, pad: float = 0.05
-) -> DataFrame:
-    """Same hybrid exact-quantile query with t-digest as the pruning
-    sketch (windows from quantile(q +- pad); certificate + fallback make
-    the answer exact regardless of digest accuracy)."""
-    from .core import TDigest
-
-    qs = qs or [0.1, 0.25, 0.5, 0.75, 0.9, 0.99]
-    vals = _events_value_grid(spark, sf_dir)
-    td, _ = build_sketch(vals, TDigest(200), id_col="v")
-
-    def make_windows(p: float) -> list[tuple[int, int]]:
-        out = []
-        for q in qs:
-            lo = td.quantile(max(0.0, q - p))[0]
-            hi = td.quantile(min(1.0, q + p))[0]
-            out.append((int(math.floor(lo)) - 1, int(math.ceil(hi)) + 1))
-        return out
-
-    # pad=0 would regenerate identical windows every retry round, so
-    # rewindow doubles from a floor pad instead
-    base_pad = max(pad, 0.005)
-    exact = _exact_quantiles_windowed(
-        vals, qs, make_windows(pad),
-        rewindow=lambda attempt: make_windows(base_pad * (2 ** attempt)),
-    )
-    return spark.createDataFrame(
-        [(float(q), round(v / 100.0, 6)) for q, v in zip(qs, exact)],
-        "q double, value_est double",
-    ).orderBy("q")

@@ -134,7 +134,10 @@ def _merge_group(t: pa.Table) -> pa.Table:
     from ..core import memtune  # noqa: F401
 
     t0 = time.perf_counter()
-    t = t.sort_by("part_id")  # stable; shuffle order varies run to run
+    # shuffle order varies run to run, and part_ids tie across the runs
+    # of a checkpoint or the micro-batches of a stream: the state bytes
+    # break the tie
+    t = t.sort_by([("part_id", "ascending"), ("state", "ascending")])
     blobs = t.column("state").to_pylist()
     acc = unpack_state(blobs[0])
     for blob in blobs[1:]:
@@ -216,9 +219,10 @@ def windowed_partial_states(
 
 def tree_merge(partials: DataFrame, fanin: int = 16, n_hint: int | None = None) -> tuple[Sketch, dict]:
     """Stage 2: fan-in rounds until <= fanin rows, then a driver fold in
-    ``part_id`` order, so the same partials give the same state bytes
-    whatever order the tasks finish in (MisraGries, KLL, t-digest and
-    conservative CountMin merges are order-sensitive).
+    ``part_id`` order (ties broken by the state bytes), so the same
+    partials give the same state bytes whatever order the tasks finish
+    or the rows arrive in (MisraGries, KLL, t-digest and conservative
+    CountMin merges are order-sensitive).
 
     Returns (merged sketch, aggregate metrics)."""
     cur = partials
@@ -231,7 +235,7 @@ def tree_merge(partials: DataFrame, fanin: int = 16, n_hint: int | None = None) 
             .applyInArrow(_merge_group, PARTIAL_SCHEMA)
         )
         n = groups
-    rows = sorted(cur.collect(), key=lambda r: r["part_id"])
+    rows = sorted(cur.collect(), key=lambda r: (r["part_id"], r["state"]))
     if not rows:
         raise ValueError("no partial states (empty input?)")
     acc = _driver_fold([r["state"] for r in rows])

@@ -7,12 +7,12 @@ the IPC dominates the build. This fused path ships one row per
 DOCUMENT and does tokenization in pyarrow C kernels inside the worker:
 
   scan (column-pruned text)
-    -> mapInArrow: split_pattern -> list_flatten -> dictionary_encode
-       (all Arrow C) -> xxh64 only on NEW dictionary tokens (memoized
+    -> mapInArrow: split_pattern -> list_flatten -> value_counts
+       (all Arrow C) -> xxh64 only on NEW distinct tokens (memoized
        token->id dict, Zipf vocab makes the hit rate ~100%)
-    -> bincount of the dictionary indices: the batch collapsed to
-       sorted (id, count) pairs, one weighted update_batch for the whole
-       template (every sketch type honours counts)
+    -> the batch collapsed to sorted (id, count) pairs, one weighted
+       update_batch for the whole template (every sketch type honours
+       counts)
     -> one packed state row per partition
     -> collect + left fold in partition order (aggregate.tree_merge)
 
@@ -71,34 +71,22 @@ def _fused_fn(template_bytes: bytes, text_col: str, split: str = " "):
             toks = pc.list_flatten(pc.split_pattern(texts, split))
             if len(toks) == 0:
                 continue
-            d = toks.dictionary_encode()
-            if isinstance(d, pa.ChunkedArray):
-                d = d.combine_chunks()
-            vocab = d.dictionary.to_pylist()
-            lut = np.empty(len(vocab), dtype=np.uint64)
-            empty_j = -1
+            # map-side combine: one (token, count) slot per distinct
+            # token; the empty token (parity with the keys.tokens
+            # filter) is dropped by its VALUE, i.e. its one slot, so a
+            # real token whose hash collides with h("") survives
+            vc = pc.value_counts(toks)
+            vc = vc.filter(pc.not_equal(vc.field("values"), ""))
+            vocab = vc.field("values").to_pylist()
+            u = np.empty(len(vocab), dtype=np.uint64)
             for j, tok in enumerate(vocab):
-                if tok == "":
-                    empty_j = j
                 h = memo.get(tok)
                 if h is None:
                     h = xxh64(tok.encode()) & MASK32
                     memo[tok] = h
-                lut[j] = h
-            idx = d.indices.to_numpy(zero_copy_only=False)
-            # map-side combine: the batch's (id, count) pairs, counted
-            # per dictionary slot from the indices tokenization produced
-            uc = np.bincount(idx, minlength=len(lut)).astype(np.int64)
-            u = lut
-            if empty_j >= 0:
-                # drop empty-string tokens (parity with keys.tokens
-                # filter) by DICTIONARY slot, so a real token whose
-                # hash collides with h("") survives
-                keep = np.ones(len(u), dtype=bool)
-                keep[empty_j] = False
-                u, uc = u[keep], uc[keep]
-            # sort, and collapse dictionary slots that hash to the same id
-            u, uc = collapse(u, uc)
+                u[j] = h
+            # sort, and collapse token slots that hash to the same id
+            u, uc = collapse(u, vc.field("counts").to_numpy())
             sk.update_batch(u, uc)
             n_rows += len(texts)
             n_upd += int(uc.sum())

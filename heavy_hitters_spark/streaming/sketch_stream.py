@@ -99,19 +99,17 @@ def token_sketch_sink(
     JVM->Python boundary per micro-batch than the fused path (the same
     explode-vs-fused trade the batch build made in round 3; ids are the
     identical xxhash64&mask32 stream, asserted in tests/test_fused.py).
-    The micro-batch is widened like the batch kernels (the file-stream
-    source hands a 1-2 split batch at bench scale). Same durable-state
-    contract as ``sketch_sink``: one partial-state row per partition,
-    idempotent batch_id-partitioned overwrite, merge with
-    ``merged_sketch``."""
+    The micro-batch is not widened, like ``build_token_sketch``'s input
+    (see ``queries._docs``). Same durable-state contract as
+    ``sketch_sink``: one partial-state row per partition, idempotent
+    batch_id-partitioned overwrite, merge with ``merged_sketch``."""
     from ..core.base import pack_state
-    from ..functions.dedup import _widen_narrow_scan
     from ..spark.fused import _fused_fn
 
     tb = pack_state(template)
     return _start_sink(
         stream_df, state_dir, checkpoint_dir, trigger_available_now,
-        lambda b: _widen_narrow_scan(b.select(text_col)).mapInArrow(_fused_fn(tb, text_col), PARTIAL_SCHEMA),
+        lambda b: b.select(text_col).mapInArrow(_fused_fn(tb, text_col), PARTIAL_SCHEMA),
     )
 
 

@@ -225,3 +225,36 @@ def test_simhash_capped_equals_uncapped_at_small_sf(spark):
            for r in q["simhash_pairs_capped"](spark, SF).collect()}
     assert cap == unc
     assert len(unc) > 0
+
+
+HYBRID = (
+    "topk_tokens", "phi_heavy_tokens", "phi_heavy_users", "phi_heavy_users_const",
+    "phi_heavy_users_cs", "phi_heavy_users_binary", "topk_event_types", "topk_urls",
+    "topk_hosts", "topk_users_weighted", "point_freq_cm", "range_count_dyadic",
+    "distinct_tokens_hll_rounded", "quantiles_kll_exact", "quantiles_tdigest_exact",
+    "eval_hh_precision", "topk_tokens_stream", "windowed_event_counts_stream",
+)
+
+
+@pytest.mark.parametrize("name", HYBRID)
+def test_hybrid_query_reads_each_table_once(spark, monkeypatch, name):
+    """A hybrid query reads each input table once and reuses the
+    DataFrame for its sketch and exact passes (a second
+    ``spark.read.parquet`` of the same table costs a schema-inference
+    job)."""
+    from collections import Counter
+
+    from pyspark.sql.readwriter import DataFrameReader
+
+    import __spark_entry__ as entry_mod
+
+    reads = Counter()
+    real = DataFrameReader.parquet
+
+    def counting(self, *paths, **kw):
+        reads.update(p for p in paths if p.startswith(SF))
+        return real(self, *paths, **kw)
+
+    monkeypatch.setattr(DataFrameReader, "parquet", counting)
+    entry_mod.queries()[name](spark, SF).collect()
+    assert reads and max(reads.values()) == 1, dict(reads)

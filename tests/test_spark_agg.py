@@ -188,3 +188,44 @@ def test_windowed_weighted_partials_match_filtered_builds(spark):
         assert unpack_state(r["state"]).to_bytes() == ref.to_bytes()
         assert r["n_rows"] == metrics["n_rows"] == int(m.sum())
         assert r["n_updates"] == metrics["n_updates"] == int(wts[m].sum())
+
+
+def test_tree_merge_breaks_part_id_ties_by_state(spark):
+    """Partials with equal part_ids (the runs of a checkpointed build,
+    the micro-batches of a stream: each restarts at part_id 0) fold in
+    the same order whatever order they arrive in, both in the driver
+    fold and in a fan-in group. MisraGries (small k) and KLL merges are
+    order-sensitive, so an arrival-order fold shows up in the bytes."""
+    import pyarrow as pa
+
+    from heavy_hitters_spark.core import KLL, MisraGries, MultiSketch
+    from heavy_hitters_spark.core.base import unpack_state
+    from heavy_hitters_spark.spark.aggregate import (
+        PARTIAL_ARROW,
+        PARTIAL_SCHEMA,
+        _merge_group,
+        state_row,
+    )
+
+    rng = np.random.default_rng(11)
+    rows = []
+    for _ in range(4):
+        sk = MultiSketch({"mg": MisraGries(k=4), "kll": KLL(k=8, seed=7)})
+        sk.update_batch(rng.zipf(1.3, 300).astype(np.uint64) % np.uint64(40))
+        rows.append(state_row(sk.to_bytes(), 0, 300, 300, 0.0))
+    orders = (rows, rows[::-1], rows[1:] + rows[:1])
+
+    folded = set()
+    for order in orders:
+        df = spark.createDataFrame([tuple(r.values()) for r in order], PARTIAL_SCHEMA)
+        sk, _ = tree_merge(df.coalesce(1), n_hint=1)
+        folded.add(sk.to_bytes())
+    assert len(folded) == 1
+
+    grouped = {
+        unpack_state(
+            _merge_group(pa.Table.from_pylist(order, schema=PARTIAL_ARROW)).column("state")[0].as_py()
+        ).to_bytes()
+        for order in orders
+    }
+    assert grouped == folded

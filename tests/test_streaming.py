@@ -95,3 +95,21 @@ def test_windowed_stream_replay_idempotent(spark, stream_src, tmp_path):
     for w in [r["window_start"] for r in states.select("window_start").distinct().collect()]:
         sk = merged_sketch(spark, str(tmp_path / "wstate2"), window_start=w)
         assert sk.norm == 20000  # NOT 40000: replay overwrote, not appended
+
+
+def test_token_stream_equals_batch(spark, tmp_path):
+    """The fused text sink (one micro-batch per file here) folds to the
+    same CountMin bytes as ``build_token_sketch`` over the same files."""
+    from heavy_hitters_spark.spark.fused import build_token_sketch
+    from heavy_hitters_spark.streaming.sketch_stream import token_sketch_sink
+
+    src = str(tmp_path / "docs")
+    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet").select("text")
+    docs.repartition(3).write.parquet(src)
+    stream = spark.readStream.schema("text string").option("maxFilesPerTrigger", 1).parquet(src)
+    q = token_sketch_sink(stream, _tmpl(), str(tmp_path / "state"), str(tmp_path / "ck"))
+    q.awaitTermination(180)
+    streamed = merged_sketch(spark, str(tmp_path / "state"))
+    batch, _ = build_token_sketch(spark.read.parquet(src), _tmpl())
+    assert streamed.norm == batch.norm > 0
+    assert streamed.to_bytes() == batch.to_bytes()
