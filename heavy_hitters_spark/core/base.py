@@ -74,10 +74,11 @@ class Sketch:
     ``update_batch(items, counts)`` takes weighted updates, and every
     type honours ``counts``: feeding a pre-aggregated (unique_items,
     counts) batch is a valid feed of the raw stream it collapses, so
-    map-side combiners (spark/fused.py) hand every sketch the collapsed
-    batch. CM, CS, MG and KLL give equal bytes either way (MG and KLL
-    collapse every batch themselves); HLL and Bloom ignore multiplicity
-    by set semantics; t-digest keeps its error bound.
+    the Spark task body (spark/aggregate.py) hands every sketch the
+    task's collapsed rows in ONE update. CM, CS, MG and KLL give equal
+    bytes either way (MG and KLL collapse every batch themselves); HLL
+    and Bloom ignore multiplicity by set semantics; t-digest keeps its
+    error bound.
 
     ``merge`` is concrete here and nowhere else: it raises ValueError
     on a different type or a differing ``IDENTITY`` attribute of the
@@ -347,10 +348,19 @@ def as_u64(items) -> np.ndarray:
     return a
 
 
-def collapse(items: np.ndarray, counts: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+def collapse(items: np.ndarray, counts: np.ndarray | None) -> tuple[np.ndarray, np.ndarray]:
     """Sorted (unique items, summed counts) of a weighted batch: one
     stable argsort and one ``np.add.reduceat`` over runs of equal items
-    (exact in int64, unlike a float-weighted bincount)."""
+    (exact in int64, unlike a float-weighted bincount). With ``counts``
+    None (one per item), integer items take a plain sort and run
+    lengths instead, several times cheaper: equal integers are equal
+    bits, so their order cannot show."""
+    if counts is None:
+        if items.dtype.kind in "iu":
+            xs = np.sort(items)
+            starts = np.flatnonzero(np.r_[True, xs[1:] != xs[:-1]])
+            return xs[starts], np.diff(np.r_[starts, len(xs)])
+        counts = np.ones(len(items), dtype=np.int64)
     order = np.argsort(items, kind="stable")
     xs, cs = items[order], counts[order]
     starts = np.flatnonzero(np.r_[True, xs[1:] != xs[:-1]])

@@ -142,6 +142,8 @@ class KLL(Sketch):
         return cw[idx].astype(np.int64)
 
     def _merge(self, other: "KLL") -> "KLL":
+        if not other.n and self.n:  # an empty partition's template: not even a coin
+            return self
         self._grow_to(len(other.compactors) - 1)
         for h, c in enumerate(other.compactors):
             if len(c):

@@ -7,16 +7,18 @@ shape is explicit here — and it is *better* at scale because each stage
 is a plain DataFrame with checkpointable rows:
 
   stage 1 (partial):  mapInArrow over the input partitions; each task
-      folds its Arrow batches into ONE sketch state (numpy kernels,
-      zero per-row Python) and emits a single serialized-state row with
-      lineage (partition id, input files, row count, wall time)
+      runs the one task body ``_task_fn``: it folds the (id, count)
+      pairs of all its Arrow batches into one set, updates the template
+      ONCE and emits a single serialized-state row with lineage
+      (partition id, input files, row count, wall time)
   stage 2 (merge):    iterative fan-in rounds — groupBy(pid % g) +
       applyInArrow merging each group to one row — until <= fanin rows
       remain, then a driver-side fold. This is the treeAggregate
       pattern expressed on DataFrames so intermediate rounds are
       inspectable and durable.
 
-Every stage (and the fused kernel in spark.fused) emits its rows
+The builds differ only in the adapter from a batch to (id, count)
+pairs (``_id_pairs``, ``fused._fused_fn``). Every stage emits its rows
 through ``state_row`` in the Arrow form of ``PARTIAL_SCHEMA``, so the
 state row format is decided here alone.
 
@@ -44,6 +46,7 @@ from collections.abc import Callable, Iterator
 import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
+from pyspark import TaskContext
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import to_arrow_schema
@@ -58,7 +61,7 @@ from pyspark.sql.types import (
 )
 
 from ..core import base
-from ..core.base import Sketch, merge_all, pack_state, unpack_state
+from ..core.base import Sketch, as_i64, collapse, merge_all, pack_state, unpack_state
 
 PARTIAL_SCHEMA = StructType(
     [
@@ -92,42 +95,125 @@ def state_row(raw: bytes, part_id: int, n_rows: int, n_updates: int, wall_ms: fl
     }
 
 
-def task_part_id() -> int:
-    """Partition id of the running Spark task (-1 outside a task)."""
-    from pyspark import TaskContext
+class _Run:
+    """The ``(id, count)`` pairs of one sign that a task has seen, as
+    runs: the first is sorted and collapsed once folded, the rest are
+    batches in any order, all with counts or all with None (one per
+    id). The pending runs are folded in once they outnumber the folded
+    pairs, so each pair is re-sorted O(log n) times per task, not once
+    per batch."""
 
-    ctx = TaskContext.get()
-    return ctx.partitionId() if ctx else -1
+    def __init__(self) -> None:
+        self.runs: list[tuple[np.ndarray, np.ndarray | None]] = []
+        self.n_folded = self.n_pending = 0
+
+    def add(self, ids: np.ndarray, counts: np.ndarray | None) -> None:
+        if len(ids):
+            self.runs.append((ids, counts))
+            self.n_pending += len(ids)
+            if self.n_pending > self.n_folded:
+                self.fold()
+
+    def fold(self) -> tuple[np.ndarray, np.ndarray] | None:
+        """The sorted, collapsed pairs, or None if there are none."""
+        if self.n_pending:
+            new = self.runs[1:] if self.n_folded else self.runs
+            counts = None if new[0][1] is None else np.concatenate([c for _, c in new])
+            run = collapse(np.concatenate([i for i, _ in new]), counts)
+            if self.n_folded:  # two sorted runs: collapse's stable sort merges them
+                run = collapse(*(np.concatenate(a) for a in zip(self.runs[0], run)))
+            self.runs, self.n_folded, self.n_pending = [run], len(run[0]), 0
+        return self.runs[0] if self.runs else None
 
 
-def _update(sk: Sketch, batch: pa.RecordBatch, id_col: str, weight_col: str | None) -> int:
-    """Fold one batch into ``sk``; returns its update count."""
-    ids = batch.column(id_col).to_numpy(zero_copy_only=False)
-    w = batch.column(weight_col).to_numpy(zero_copy_only=False) if weight_col else None
-    sk.update_batch(ids, w)
-    return len(ids) if w is None else int(abs(w).sum())
+def _task_fn(template_bytes: bytes, batch_pairs: Callable, windowed: bool = False):
+    """The one task body of every sketch build, for ``mapInArrow``.
+    ``batch_pairs(batch, memo)`` maps an Arrow batch to ``(ids, counts
+    or None, n_updates)``, with a ``memo`` dict that lives for the task.
+    The pairs are folded into one sorted set per output key (None, or
+    ``window_start``), counts >= 0 and < 0 apart: a +5 and a -3 on one
+    id never net to +2, so an insert-only sketch still raises. At task
+    end a template copy is updated ONCE per key: a state depends only
+    on the partition's rows, never on the Arrow batch size. Memory is
+    O(distinct ids per task and key), 16 B each (8 B id, 8 B count),
+    plus pending runs at most as long and one batch (``_Run``). A task
+    with no rows emits the template (a windowed one nothing). With
+    ``SKETCH_PROF_DIR`` set, it writes a JSON record of its phase times."""
 
-
-def _partial_fn(template_bytes: bytes, id_col: str, weight_col: str | None):
     def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         from ..core import memtune  # noqa: F401  (mallopt inside the worker)
 
-        sk = unpack_state(template_bytes)
-        t0 = time.perf_counter()
-        n_rows = n_upd = 0
+        enter_epoch, t0, t_serve = time.time(), time.perf_counter(), 0.0
+        memo: dict = {}
+        keyed: dict = {} if windowed else {None: [_Run(), _Run(), 0, 0]}
         files: set[str] = set()
-        for batch in batches:
+        src = iter(batches)
+        while True:
+            tb = time.perf_counter()
+            batch = next(src, None)
+            t_serve += time.perf_counter() - tb
+            if batch is None:
+                break
             if "__file" in batch.schema.names and batch.num_rows:
                 files.update(pc.unique(batch.column("__file")).to_pylist())
-            n_upd += _update(sk, batch, id_col, weight_col)
-            n_rows += batch.num_rows
-        row = state_row(
-            sk.to_bytes(), task_part_id(), n_rows, n_upd,
-            (time.perf_counter() - t0) * 1000.0, ",".join(sorted(files)),
-        )
-        yield pa.RecordBatch.from_pylist([row], schema=PARTIAL_ARROW)
+            parts = [(None, batch)]
+            if windowed:  # rows with a null window_start belong to no window
+                batch = batch.filter(pc.is_valid(batch.column("window_start")))
+                keys = batch.column("window_start").cast(pa.int64()).to_numpy()  # epoch us round-trip
+                parts = [(w, batch.filter(pa.array(keys == w))) for w in np.unique(keys).tolist()]
+            for key, rows in parts:
+                ent = keyed.get(key) or keyed.setdefault(key, [_Run(), _Run(), 0, 0])
+                ids, counts, n_updates = batch_pairs(rows, memo)
+                if counts is not None and (neg := counts < 0).any():
+                    ent[1].add(ids[neg], counts[neg])
+                    ids, counts = ids[~neg], counts[~neg]
+                ent[0].add(ids, counts)
+                ent[2] += rows.num_rows
+                ent[3] += n_updates
+        ctx = TaskContext.get()
+        part_id = ctx.partitionId() if ctx else -1
+        lineage, out, t_tb, t_pk = ",".join(sorted(files)), [], 0.0, 0.0
+        for key, (pos, neg, n_rows, n_updates) in keyed.items():
+            sk = unpack_state(template_bytes)
+            runs = [r for r in (pos.fold(), neg.fold()) if r is not None]
+            if runs:
+                sk.update_batch(*(np.concatenate(a) for a in zip(*runs)))
+            t1 = time.perf_counter()
+            raw = sk.to_bytes()
+            t2 = time.perf_counter()
+            wall_ms = (t2 - t0) * 1000.0 / len(keyed)
+            out.append({**state_row(raw, part_id, n_rows, n_updates, wall_ms, lineage), "window_start": key})
+            t_tb, t_pk = t_tb + t2 - t1, t_pk + time.perf_counter() - t2
+        prof_dir = os.environ.get("SKETCH_PROF_DIR")
+        if prof_dir:
+            import json
+
+            prof = {
+                "enter_epoch": enter_epoch, "part": part_id, "pid": os.getpid(), "serve_s": round(t_serve, 4),
+                "kernel_s": round(time.perf_counter() - t0 - t_serve - t_tb - t_pk, 4),
+                "to_bytes_s": round(t_tb, 4), "pack_s": round(t_pk, 4),
+                "publish_s": 0.0, "exit_epoch": time.time(),  # the states travel in the rows
+            }
+            with open(os.path.join(prof_dir, f"prof_{part_id}_{os.getpid()}_{int(time.time()*1e6)}.json"), "w") as f:
+                json.dump(prof, f)
+        if out:
+            yield pa.RecordBatch.from_pylist(out, schema=WINDOWED_PARTIAL_ARROW if windowed else PARTIAL_ARROW)
 
     return fn
+
+
+def _id_pairs(id_col: str, weight_col: str | None) -> Callable:
+    """The id-column builds' adapter: a batch's ids with its weights,
+    or with None (one per id) without a weight column."""
+
+    def pairs(batch: pa.RecordBatch, memo: dict) -> tuple[np.ndarray, np.ndarray | None, int]:
+        ids = batch.column(id_col).to_numpy(zero_copy_only=False)
+        if weight_col is None:
+            return ids, None, len(ids)
+        w = batch.column(weight_col).to_numpy(zero_copy_only=False)
+        return ids, as_i64(w, len(w)), int(np.abs(w).sum())
+
+    return pairs
 
 
 def _merge_group(t: pa.Table) -> pa.Table:
@@ -164,39 +250,7 @@ def partial_states(
     """Stage 1: one serialized sketch-state row per input partition."""
     cols = [id_col] + ([weight_col] if weight_col else [])
     sel = df.select(*cols, F.input_file_name().alias("__file")) if with_lineage else df.select(*cols)
-    return sel.mapInArrow(_partial_fn(pack_state(template), id_col, weight_col), PARTIAL_SCHEMA)
-
-
-def _windowed_partial_fn(template_bytes: bytes, id_col: str, weight_col: str | None):
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        from ..core import memtune  # noqa: F401
-
-        t0 = time.perf_counter()
-        sketches: dict = {}  # window_start (epoch us) -> [sketch, n_rows, n_updates]
-        for batch in batches:
-            ws = batch.column("window_start")
-            if ws.null_count:  # null event times belong to no window
-                batch = batch.filter(pc.is_valid(ws))
-            # group on the int64 epoch microseconds: they round-trip
-            # into the output timestamp column unchanged
-            keys = batch.column("window_start").cast(pa.int64()).to_numpy()
-            for w in np.unique(keys).tolist():
-                ent = sketches.get(w)
-                if ent is None:
-                    ent = sketches[w] = [unpack_state(template_bytes), 0, 0]
-                sub = batch.filter(pa.array(keys == w))
-                ent[2] += _update(ent[0], sub, id_col, weight_col)
-                ent[1] += sub.num_rows
-        pid = task_part_id()
-        wall = (time.perf_counter() - t0) * 1000.0 / max(1, len(sketches))
-        rows = [
-            {**state_row(sk.to_bytes(), pid, n_rows, n_upd, wall), "window_start": w}
-            for w, (sk, n_rows, n_upd) in sketches.items()
-        ]
-        if rows:
-            yield pa.RecordBatch.from_pylist(rows, schema=WINDOWED_PARTIAL_ARROW)
-
-    return fn
+    return sel.mapInArrow(_task_fn(pack_state(template), _id_pairs(id_col, weight_col)), PARTIAL_SCHEMA)
 
 
 def windowed_partial_states(
@@ -206,13 +260,13 @@ def windowed_partial_states(
     weight_col: str | None = None,
 ) -> DataFrame:
     """One serialized sketch-state row per (window_start, input
-    partition), in a SINGLE map-side pass: the kernel folds each Arrow
-    batch into a per-window sketch dict (windows per partition are
-    bounded — hours/days — so state stays small). No shuffle, no
-    per-window rescan of the input."""
+    partition), in a SINGLE map-side pass: the task body keeps one
+    (id, count) set per window and updates one template copy per window
+    at task end (windows per partition are bounded — hours/days). No
+    shuffle, no per-window rescan of the input."""
     cols = ["window_start", id_col] + ([weight_col] if weight_col else [])
     return df.select(*cols).mapInArrow(
-        _windowed_partial_fn(pack_state(template), id_col, weight_col),
+        _task_fn(pack_state(template), _id_pairs(id_col, weight_col), windowed=True),
         WINDOWED_PARTIAL_SCHEMA,
     )
 
@@ -292,14 +346,13 @@ def build_sketch_checkpointed(
     one with (id[, weight]) columns — e.g. tokenize + hash."""
     part_dir = os.path.join(checkpoint_dir, "partials")
     done: set[str] = set()
-    have_states = False
-    try:
-        existing = spark.read.parquet(part_dir)
-        have_states = True
-        for r in existing.select("files").collect():
+    # a first run has no committed partials file (no directory, or the
+    # _temporary of a run killed before its commit); a read error raises:
+    # an unreadable checkpoint is never recomputed and appended to
+    visible = spark._jvm.org.apache.hadoop.fs.Path(os.path.join(part_dir, "[^_.]*"))
+    if len(visible.getFileSystem(spark._jsc.hadoopConfiguration()).globStatus(visible)):
+        for r in spark.read.parquet(part_dir).select("files").collect():
             done.update(f for f in r["files"].split(",") if f)
-    except Exception:
-        pass  # first run: no checkpoint yet
 
     def norm(p: str) -> str:
         return "file://" + os.path.abspath(p.removeprefix("file://"))
@@ -333,8 +386,6 @@ def build_sketch_treeaggregate(
     """RDD.treeAggregate over serialized states — the canonical merge
     shape our DataFrame tree_merge must agree with (slow row-at-a-time
     Python path; used only to validate the fast path in tests)."""
-    import numpy as np
-
     tb = template.to_bytes()
     cols = [id_col] + ([weight_col] if weight_col else [])
 

@@ -2,8 +2,7 @@
 
 Designed for a 1000-executor cluster but testable on local[N]:
 - AQE on (runtime re-plan, skew-join splitting)
-- Arrow on, batch size aligned with the numpy kernels' chunk size so an
-  Arrow-UDF batch flows straight into one warm-memory kernel pass
+- Arrow on, with a fixed batch size (``ARROW_BATCH``)
 - shuffle partitions sized for the local harness; on a real cluster
   this is overridden by --conf
 
@@ -18,12 +17,15 @@ import os
 
 from pyspark.sql import SparkSession
 
+# rows per Arrow batch: it sets only speed (small batches keep worker
+# temporaries cache-resident), as a build updates once per task
+ARROW_BATCH = 8192
+
 
 def get_spark(
     master: str | None = None,
     app: str = "heavy-hitters-spark",
     shuffle_partitions: int | None = None,
-    arrow_batch: int = 8192,  # small batches keep worker temps cache-resident
 ) -> SparkSession:
     """Build (or get) the session. Without ``master``, the session runs
     on ``local[$SPARK_GRAFT_CPUS]``, or on ``local[*]`` when that is unset.
@@ -45,7 +47,7 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", str(arrow_batch))
+        .config("spark.sql.execution.arrow.maxRecordsPerBatch", str(ARROW_BATCH))
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         .config("spark.sql.files.maxPartitionBytes", "134217728")
         .config("spark.ui.enabled", "false")

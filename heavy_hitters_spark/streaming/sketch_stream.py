@@ -99,7 +99,8 @@ def token_sketch_sink(
     JVM->Python boundary per micro-batch than the fused path (the same
     explode-vs-fused trade the batch build made in round 3; ids are the
     identical xxhash64&mask32 stream, asserted in tests/test_fused.py).
-    The micro-batch is not widened, like ``build_token_sketch``'s input
+    One update per task: no state depends on the Arrow batch size. The
+    micro-batch is not widened, like ``build_token_sketch``'s input
     (see ``queries._docs``). Same durable-state contract as
     ``sketch_sink``: one partial-state row per partition, idempotent
     batch_id-partitioned overwrite, merge with ``merged_sketch``."""

@@ -18,10 +18,32 @@ def _tmpl():
 
 
 def test_fused_equals_explode(spark):
+    """Byte-equal even for the order-sensitive children (MG with a
+    small k, KLL, conservative CountMin): each task of either build
+    updates once with its partition's (id, count) pairs, however the
+    rows are cut into Arrow batches. The small batch size makes both
+    sides span several batches per task."""
+    from heavy_hitters_spark.core import KLL, MisraGries
+
+    def tmpl():
+        return MultiSketch({
+            **_tmpl().sketches,
+            "mg": MisraGries(k=16),
+            "kll": KLL(k=64, seed=7),
+            "ccm": CountMin(width=1 << 10, depth=3, conservative=True, seed_stream=SeedStream(1, 2)),
+        })
+
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    fused, m1 = build_token_sketch(docs, _tmpl(), text_col="text")
     ids = tokens(docs).withColumn("id", key_id_col("token"))
-    exploded, m2 = build_sketch(ids, _tmpl(), id_col="id")
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(conf)
+    spark.conf.set(conf, "64")
+    try:
+        fused, m1 = build_token_sketch(docs, tmpl(), text_col="text")
+        exploded, m2 = build_sketch(ids, tmpl(), id_col="id")
+    finally:
+        spark.conf.set(conf, old)
+    assert m1["n_rows"] > 64 * m1["n_partials"]  # several batches per task
     assert fused.to_bytes() == exploded.to_bytes()
     assert m1["n_updates"] == m2["n_updates"]
 

@@ -137,6 +137,51 @@ def test_checkpoint_resume(spark, tmp_path):
     assert np.array_equal(sk2.table, fresh.table)
 
 
+def _docs_file(tmp_path) -> str:
+    """One small parquet file of text rows."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    path = str(tmp_path / "docs.parquet")
+    pq.write_table(pa.table({"text": [f"w{i % 7} w{i % 11} w{i % 13}" for i in range(300)]}), path)
+    return path
+
+
+def _prepare(df):
+    return tokens(df).withColumn("id", key_id_col("token"))
+
+
+def test_checkpoint_after_uncommitted_first_run(spark, tmp_path):
+    """A first run killed before its commit leaves only
+    ``partials/_temporary``: the rerun is a first run."""
+    files = [_docs_file(tmp_path)]
+    ck = tmp_path / "ck"
+    (ck / "partials" / "_temporary" / "0").mkdir(parents=True)
+    sk, m = build_sketch_checkpointed(spark, files, _tmpl(), _prepare, checkpoint_dir=str(ck), id_col="id")
+    assert m["files_processed_this_run"] == 1
+    fresh, _ = build_sketch(_prepare(spark.read.parquet(files[0])), _tmpl(), id_col="id")
+    assert np.array_equal(sk.table, fresh.table)
+
+
+def test_checkpoint_unreadable_raises(spark, tmp_path):
+    """Only a checkpoint without committed partials is a first run: a
+    rerun over a checkpoint with a corrupt partials file raises, and
+    neither recomputes the files nor appends a second copy of their
+    states."""
+    files = [_docs_file(tmp_path)]
+    ck = str(tmp_path / "ck")
+    build_sketch_checkpointed(spark, files, _tmpl(), _prepare, checkpoint_dir=ck, id_col="id")
+    part_dir = os.path.join(ck, "partials")
+    data = sorted(glob.glob(os.path.join(part_dir, "*.parquet")))
+    assert data
+    with open(data[0], "wb") as f:
+        f.write(b"not a parquet file")
+    before = sorted(os.listdir(part_dir))
+    with pytest.raises(Exception):
+        build_sketch_checkpointed(spark, files, _tmpl(), _prepare, checkpoint_dir=ck, id_col="id")
+    assert sorted(os.listdir(part_dir)) == before
+
+
 def test_hll_distributed_merge(spark, ids_df):
     sk8, _ = build_sketch(ids_df.repartition(8), HLL(p=12), id_col="id")
     sk32, _ = build_sketch(ids_df.repartition(32), HLL(p=12), id_col="id")
@@ -161,7 +206,7 @@ def test_windowed_weighted_partials_match_filtered_builds(spark):
     import pyarrow as pa
 
     from heavy_hitters_spark.core.base import pack_state, unpack_state
-    from heavy_hitters_spark.spark.aggregate import _windowed_partial_fn
+    from heavy_hitters_spark.spark.aggregate import _id_pairs, _task_fn
 
     rng = np.random.default_rng(5)
     n = 2000
@@ -175,7 +220,7 @@ def test_windowed_weighted_partials_match_filtered_builds(spark):
         "id": pa.array(ids, pa.int64()),
         "w": pa.array(wts, pa.int64()),
     })
-    (out,) = list(_windowed_partial_fn(pack_state(_tmpl()), "id", "w")(iter([batch])))
+    (out,) = list(_task_fn(pack_state(_tmpl()), _id_pairs("id", "w"), windowed=True)(iter([batch])))
     got = {r["window_start"]: r for r in out.to_pylist()}
     assert sorted(got) == [w0, w0 + dt.timedelta(hours=1)]
     for start in (0, hour):

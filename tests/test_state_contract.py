@@ -5,6 +5,8 @@
   in a composite (a late MultiSketch child, a hierarchy's level table,
   ConstSketchHH with a different ``m``).
 - A merge across types raises ValueError.
+- Merging in an empty state (the template an empty partition emits)
+  leaves the receiver's bytes unchanged.
 - Every prefix truncation of a state raises ValueError, raw or packed;
   so do a packed blob that does not inflate or inflates to another
   length than it declares, and a malformed header.
@@ -142,6 +144,16 @@ def test_cross_type_merge_raises(kind):
             with pytest.raises(ValueError) as err:
                 recv.merge(_filled(MAKE[other]()))
             assert "cannot merge" in str(err.value)
+    assert recv.to_bytes() == before
+
+
+@pytest.mark.parametrize("kind", sorted(MAKE))
+def test_merging_an_empty_state_changes_nothing(kind):
+    """Every empty partition emits the template, so folding in an empty
+    state must leave a state's bytes as they were."""
+    recv = _filled(MAKE[kind]())
+    before = recv.to_bytes()
+    recv.merge(MAKE[kind]())
     assert recv.to_bytes() == before
 
 
