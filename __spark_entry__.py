@@ -167,6 +167,7 @@ def _q_turnstile_net_cs(spark, sf):
     import numpy as np
 
     from heavy_hitters_spark.core import CountSketch, SeedStream
+    from heavy_hitters_spark.queries import _sorted_frame
     from heavy_hitters_spark.spark import build_sketch
 
     probes = [10, 20, 30, 40, 50]
@@ -174,9 +175,9 @@ def _q_turnstile_net_cs(spark, sf):
     cs_t = CountSketch(width=1 << 16, depth=7, hash_family="ms", seed_stream=SeedStream(1234, 5678))
     cs, _ = build_sketch(ev, cs_t, id_col="id", weight_col="w")
     est = cs.point(np.array(probes, dtype=np.uint64))
-    return spark.createDataFrame(
-        [(int(u), int(e)) for u, e in zip(probes, est)], "user_id long, net_freq long"
-    ).orderBy("user_id")
+    return _sorted_frame(
+        spark, [(int(u), int(e)) for u, e in zip(probes, est)], "user_id long, net_freq long"
+    )
 
 
 def _q_simhash_pairs_planted(spark, sf):
@@ -249,14 +250,20 @@ def _q_simhash_pairs_capped(spark, sf):
     return near_dup_pairs_simhash(docs, max_hamming=7, max_bucket_size=2000)
 
 
+def _query_vectors(emb):
+    """The embeddings of vec_id 0..2, the ANN queries' probe vectors,
+    in vec_id order (three rows, sorted on the driver)."""
+    rows = emb.where(F.col("vec_id") < 3).select("vec_id", "embedding").collect()
+    return [r["embedding"] for r in sorted(rows, key=lambda r: r["vec_id"])]
+
+
 def _q_ann_topk(spark, sf):
     import numpy as np
 
     from heavy_hitters_spark.functions.similarity import brute_force_topk
 
     emb = spark.read.parquet(f"{sf}/embeddings.parquet")
-    qv = [r["embedding"] for r in emb.where(F.col("vec_id") < 3).orderBy("vec_id").collect()]
-    return brute_force_topk(emb, np.array(qv), k=10)
+    return brute_force_topk(emb, np.array(_query_vectors(emb)), k=10)
 
 
 def _q_ann_lsh_topk(spark, sf):
@@ -271,8 +278,7 @@ def _q_ann_lsh_topk(spark, sf):
     from heavy_hitters_spark.functions.similarity import lsh_topk
 
     emb = spark.read.parquet(f"{sf}/embeddings.parquet")
-    qv = [r["embedding"] for r in emb.where(F.col("vec_id") < 3).orderBy("vec_id").collect()]
-    return lsh_topk(emb, np.array(qv), k=10, n_planes=6, n_tables=16)
+    return lsh_topk(emb, np.array(_query_vectors(emb)), k=10, n_planes=6, n_tables=16)
 
 
 def _q_ann_ivf_topk(spark, sf):
@@ -283,8 +289,7 @@ def _q_ann_ivf_topk(spark, sf):
     from heavy_hitters_spark.functions.similarity import ivf_topk
 
     emb = spark.read.parquet(f"{sf}/embeddings.parquet")
-    qv = [r["embedding"] for r in emb.where(F.col("vec_id") < 3).orderBy("vec_id").collect()]
-    return ivf_topk(emb, np.array(qv), k=10, n_cells=32, n_probe=8)
+    return ivf_topk(emb, np.array(_query_vectors(emb)), k=10, n_cells=32, n_probe=8)
 
 
 def _q_ann_lsh_recall(spark, sf):
@@ -366,7 +371,7 @@ def _q_point_freq_cs(spark, sf):
     import numpy as np
 
     from heavy_hitters_spark.core import CountSketch, SeedStream
-    from heavy_hitters_spark.queries import _docs
+    from heavy_hitters_spark.queries import _docs, _sorted_frame
     from heavy_hitters_spark.spark import key_id
     from heavy_hitters_spark.spark.fused import build_token_sketch
 
@@ -374,9 +379,9 @@ def _q_point_freq_cs(spark, sf):
     cs_t = CountSketch(width=1 << 16, depth=7, hash_family="ms", seed_stream=SeedStream(1234, 5678))
     cs, _ = build_token_sketch(_docs(spark, sf), cs_t)
     est = cs.point(np.array([key_id(t) for t in probes], dtype=np.uint64))
-    return spark.createDataFrame(
-        [(t, int(e)) for t, e in zip(probes, est)], "token string, est_freq long"
-    ).orderBy("token")
+    return _sorted_frame(
+        spark, [(t, int(e)) for t, e in zip(probes, est)], "token string, est_freq long"
+    )
 
 
 def _q_above_threshold_cm(spark, sf):
@@ -386,7 +391,7 @@ def _q_above_threshold_cm(spark, sf):
     import numpy as np
 
     from heavy_hitters_spark.core import CountMin, SeedStream
-    from heavy_hitters_spark.queries import _docs
+    from heavy_hitters_spark.queries import _docs, _sorted_frame
     from heavy_hitters_spark.spark import key_id
     from heavy_hitters_spark.spark.fused import build_token_sketch
 
@@ -395,10 +400,10 @@ def _q_above_threshold_cm(spark, sf):
     cm, _ = build_token_sketch(_docs(spark, sf), cm_t)
     th = int(0.001 * cm.norm)
     hits = cm.above_threshold(np.array([key_id(t) for t in probes], dtype=np.uint64), th)
-    return spark.createDataFrame(
-        [(t, bool(h), th) for t, h in zip(probes, hits)],
+    return _sorted_frame(
+        spark, [(t, bool(h), th) for t, h in zip(probes, hits)],
         "token string, above boolean, threshold long",
-    ).orderBy("token")
+    )
 
 
 def _q_range_sum_cm(spark, sf):
@@ -646,29 +651,29 @@ def _q_bloom_membership(spark, sf):
     import numpy as np
 
     from heavy_hitters_spark.core import Bloom
-    from heavy_hitters_spark.spark import build_sketch, key_id, key_id_col, tokens
+    from heavy_hitters_spark.queries import _docs, _sorted_frame
+    from heavy_hitters_spark.spark import key_id
+    from heavy_hitters_spark.spark.fused import build_token_sketch
 
-    docs = spark.read.parquet(f"{sf}/documents.parquet")
-    ids = tokens(docs).withColumn("id", key_id_col("token"))
-    bloom, _ = build_sketch(ids, Bloom(capacity=1_000_000, fpp=0.001), id_col="id")
+    bloom, _ = build_token_sketch(_docs(spark, sf), Bloom(capacity=1_000_000, fpp=0.001))
     probes = ["the", "value", "zzz-not-a-token", "spark", "qqq-missing"]
     hits = bloom.contains(np.array([key_id(t) for t in probes], dtype=np.uint64))
-    return spark.createDataFrame(
-        [(t, bool(h)) for t, h in zip(probes, hits)], "token string, member boolean"
-    ).orderBy("token")
+    return _sorted_frame(
+        spark, [(t, bool(h)) for t, h in zip(probes, hits)], "token string, member boolean"
+    )
 
 
 def _q_quantiles_tdigest(spark, sf):
     from heavy_hitters_spark.core import TDigest
-    from heavy_hitters_spark.queries import _events_value_grid
+    from heavy_hitters_spark.queries import _events_value_grid, _sorted_frame
     from heavy_hitters_spark.spark import build_sketch
 
     td, _ = build_sketch(_events_value_grid(spark, sf), TDigest(200), id_col="v")
     qs = [0.1, 0.5, 0.9, 0.99]
     est = td.quantile(qs) / 100.0
-    return spark.createDataFrame(
-        [(float(q), float(v)) for q, v in zip(qs, est)], "q double, value_est double"
-    ).orderBy("q")
+    return _sorted_frame(
+        spark, [(float(q), float(v)) for q, v in zip(qs, est)], "q double, value_est double"
+    )
 
 
 def _q_media_features(spark, sf):  # noqa: ARG001 (synthetic media; sf-independent)

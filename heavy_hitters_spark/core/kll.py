@@ -89,15 +89,13 @@ class KLL(Sketch):
         vals = np.asarray(items, dtype=np.float64)
         if not len(vals):
             return
-        if counts is None:
-            vals, cnts = np.unique(vals, return_counts=True)
-        else:
-            cnts = as_i64(counts, len(vals))
-            if cnts.min() < 0:
+        if counts is not None:
+            counts = as_i64(counts, len(vals))
+            if counts.min() < 0:
                 # cash-register only: a deletion has no place in the
                 # compactors and would break the rank guarantee
                 raise ValueError("KLL is insert-only; negative weights rejected")
-            vals, cnts = collapse(vals, cnts)
+        vals, cnts = collapse(vals, counts)
         self.n += int(cnts.sum())
         # a count of w is sum(2^h for set bits h): one item per set bit
         for h in range(int(cnts.max()).bit_length()):
@@ -142,7 +140,12 @@ class KLL(Sketch):
         return cw[idx].astype(np.int64)
 
     def _merge(self, other: "KLL") -> "KLL":
-        if not other.n and self.n:  # an empty partition's template: not even a coin
+        # an empty side is the identity, not even a coin: an empty
+        # partition's template, or the empty state serving starts from
+        if not other.n:
+            return self
+        if not self.n:
+            self.compactors, self.n, self._coins = list(other.compactors), other.n, other._coins
             return self
         self._grow_to(len(other.compactors) - 1)
         for h, c in enumerate(other.compactors):

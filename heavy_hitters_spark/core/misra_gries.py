@@ -86,15 +86,11 @@ class MisraGries(Sketch):
             # CountSketch (signed counters).
             raise ValueError("MisraGries is insert-only; negative weights rejected")
         self.norm += int(c.sum())
-        if counts is None:
-            # unweighted fast path: sorted-unique counting, no add.at
-            ux, uc = np.unique(x, return_counts=True)
-        else:
-            ux, uc = collapse(x, c)
-            if not uc.all():
-                # a zero weight must not leave a (id, 0) candidate
-                keep = uc > 0
-                ux, uc = ux[keep], uc[keep]
+        ux, uc = collapse(x, None if counts is None else c)
+        if not uc.all():
+            # a zero weight must not leave a (id, 0) candidate
+            keep = uc > 0
+            ux, uc = ux[keep], uc[keep]
         self._combine(ux, uc)
 
     def point(self, items) -> np.ndarray:

@@ -17,12 +17,18 @@ in one place:
 - ``_verified_heavy_users`` is the one phi-heavy-user verify over a
   hierarchy's ``query()`` candidates.
 - ``_exact_quantiles`` is the one exact-quantile pass: sketch windows
-  prune, ``_exact_quantiles_windowed`` certifies and resolves.
+  prune, ``_exact_quantiles_windowed`` certifies once and bisects what
+  the certificate leaves open.
 
 Each query reads each table once and reuses the DataFrame for both
 passes. At 100 TB this is the production shape: pass 1 is map-side-only
 (fixed-size states, no shuffle of raw updates), pass 2 shuffles only
 candidate-key rows.
+
+A query runs a Spark job only to scan, build a sketch or aggregate.
+Rows the driver already holds are sorted in Python (``_sorted_frame``,
+the certificate's per-value counts), never through a Spark sort, and a
+failed quantile certificate goes straight to bisection.
 
 **Sketch-estimate queries** (approximate, bounds-checked in tests):
 point frequency, HLL distinct, KLL quantiles, dyadic range counts, L2
@@ -96,6 +102,13 @@ def _user_hierarchy(phi: float, cls=DyadicHH, **kw):
 # ----------------------------------------------------------------------
 # hybrid sketch -> exact
 # ----------------------------------------------------------------------
+
+
+def _sorted_frame(spark: SparkSession, rows: list[tuple], schema: str) -> DataFrame:
+    """The answer frame of rows the driver already holds, sorted in
+    Python by their leading column (unique in every caller): a local
+    relation that no Spark job sorts."""
+    return spark.createDataFrame(sorted(rows), schema)
 
 
 def _exact_over(rows: DataFrame, cand: list[int] | None, key_col: str, agg: Column) -> DataFrame:
@@ -242,9 +255,9 @@ def point_freq_tokens(spark: SparkSession, sf_dir: str, probe_tokens: list[str] 
     cm_t = CountMin(width=1 << 18, depth=5, hash_family="ms", seed_stream=SeedStream(1234, 5678))
     cm, _ = build_token_sketch(_docs(spark, sf_dir), cm_t)
     est = cm.point(np.array([key_id(t) for t in probe_tokens], dtype=np.uint64))
-    return spark.createDataFrame(
-        [(t, int(e)) for t, e in zip(probe_tokens, est)], "token string, est_freq long"
-    ).orderBy("token")
+    return _sorted_frame(
+        spark, [(t, int(e)) for t, e in zip(probe_tokens, est)], "token string, est_freq long"
+    )
 
 
 def distinct_tokens_hll(spark: SparkSession, sf_dir: str, p: int = 14) -> DataFrame:
@@ -258,9 +271,9 @@ def quantiles_events_value(spark: SparkSession, sf_dir: str, qs: list[float] | N
     qs = qs or _QS
     kll, _ = build_sketch(_events_value_grid(spark, sf_dir), KLL(k=256), id_col="v")
     est = kll.quantile(qs) / 100.0
-    return spark.createDataFrame(
-        [(float(q), float(v)) for q, v in zip(qs, est)], "q double, value_est double"
-    ).orderBy("q")
+    return _sorted_frame(
+        spark, [(float(q), float(v)) for q, v in zip(qs, est)], "q double, value_est double"
+    )
 
 
 def range_count_users(spark: SparkSession, sf_dir: str, lo: int = 10, hi: int = 59) -> DataFrame:
@@ -307,8 +320,9 @@ def _certify_windows(
     for lo, hi in windows:
         c = (F.col("v") >= int(lo)) & (F.col("v") <= int(hi))
         cond = c if cond is None else (cond | c)
-    in_win = (
-        vals.where(cond).groupBy("v").agg(F.count("*").alias("c")).orderBy("v").collect()
+    in_win = sorted(
+        (int(r["v"]), int(r["c"]))
+        for r in vals.where(cond).groupBy("v").agg(F.count("*").alias("c")).collect()
     )
     out: list[int | None] = []
     for i, (q, (lo, hi)) in enumerate(zip(qs, windows)):
@@ -316,11 +330,11 @@ def _certify_windows(
         cum = int(below_row[f"b{i}"])
         ans = None
         if cum < r:
-            for row in in_win:
-                if lo <= row["v"] <= hi:
-                    cum += row["c"]
+            for v, c in in_win:
+                if lo <= v <= hi:
+                    cum += c
                     if cum >= r:
-                        ans = int(row["v"])
+                        ans = v
                         break
         out.append(ans)
     return out, n_total
@@ -361,42 +375,23 @@ def _bisect_ranks(vals: DataFrame, ranks: list[int]) -> list[int]:
 
 
 def _exact_quantiles_windowed(
-    vals: DataFrame,
-    qs: list[float],
-    windows: list[tuple[int, int]],
-    rewindow=None,
-    max_rewindows: int = 4,
+    vals: DataFrame, qs: list[float], windows: list[tuple[int, int]]
 ) -> list[int]:
     """Exact q-quantiles of an integer column ``v`` given per-q value
     windows from a sketch. The windows only PRUNE — the result never
-    depends on the sketch's accuracy. Bounded fallback chain:
+    depends on the sketch's accuracy:
 
-    1. certify + resolve inside the given windows (the normal path);
-    2. on any failed certificate, ``rewindow(attempt)`` proposes wider
-       windows (the callers double the sketch pad) — up to
-       ``max_rewindows`` rounds, certified each time;
-    3. still-unresolved quantiles fall through to ``_bisect_ranks``:
-       one conditional agg per round, O(#qs) driver state.
+    1. one certification pass resolves each q inside its window (the
+       normal path);
+    2. a q whose certificate fails goes to ``_bisect_ranks``: one
+       conditional agg per round, O(#qs) driver state.
 
-    Nothing on this path ever collects the full distinct-value set (the
-    previous fallback's unbounded driver materialization — a 100x OOM
-    on high-cardinality grids)."""
+    Nothing on this path ever collects the full distinct-value set."""
     out, n_total = _certify_windows(vals, qs, windows)
-    attempt = 0
-    while any(a is None for a in out) and rewindow is not None and attempt < max_rewindows:
-        attempt += 1
-        wider = rewindow(attempt)
-        redo = [i for i, a in enumerate(out) if a is None]
-        sub, _ = _certify_windows(
-            vals, [qs[i] for i in redo], [wider[i] for i in redo]
-        )
-        for i, a in zip(redo, sub):
-            out[i] = a
     missing = [i for i, a in enumerate(out) if a is None]
     if missing:
         ranks = [max(1, math.ceil(qs[i] * n_total)) for i in missing]
-        resolved = _bisect_ranks(vals, ranks)
-        for i, v in zip(missing, resolved):
+        for i, v in zip(missing, _bisect_ranks(vals, ranks)):
             out[i] = v
     return out
 
@@ -407,31 +402,19 @@ def _exact_quantiles(
     """EXACT quantiles of the events value grid, pruned by a quantile
     sketch (``template``, KLL or t-digest): the sketch proposes a value
     window per q (quantile(q +- pad)), the exact passes certify +
-    resolve inside it (``_exact_quantiles_windowed``: rewindow, then
-    bisection, when the certificate fails)."""
+    resolve inside it (``_exact_quantiles_windowed``: bisection when the
+    certificate fails)."""
     qs = qs or _QS
     vals = _events_value_grid(spark, sf_dir)
     sk, _ = build_sketch(vals, template, id_col="v")
-
-    def make_windows(p: float) -> list[tuple[int, int]]:
-        out = []
-        for q in qs:
-            lo = sk.quantile(max(0.0, q - p))[0]
-            hi = sk.quantile(min(1.0, q + p))[0]
-            out.append((int(math.floor(lo)) - 1, int(math.ceil(hi)) + 1))
-        return out
-
-    # pad=0 would regenerate identical windows every retry round, so
-    # rewindow doubles from a floor pad instead
-    base_pad = max(pad, 0.005)
-    exact = _exact_quantiles_windowed(
-        vals, qs, make_windows(pad),
-        rewindow=lambda attempt: make_windows(base_pad * (2 ** attempt)),
-    )
-    return spark.createDataFrame(
-        [(float(q), round(v / 100.0, 6)) for q, v in zip(qs, exact)],
+    lo = sk.quantile([max(0.0, q - pad) for q in qs])
+    hi = sk.quantile([min(1.0, q + pad) for q in qs])
+    windows = [(int(math.floor(a)) - 1, int(math.ceil(b)) + 1) for a, b in zip(lo, hi)]
+    exact = _exact_quantiles_windowed(vals, qs, windows)
+    return _sorted_frame(
+        spark, [(float(q), round(v / 100.0, 6)) for q, v in zip(qs, exact)],
         "q double, value_est double",
-    ).orderBy("q")
+    )
 
 
 def quantiles_events_value_exact(
@@ -529,13 +512,12 @@ def windowed_event_counts_stream(
                 F.col("window_start").cast("long").alias("window_epoch"),
                 "n_events",
             )
-            .orderBy("window_epoch")
             .collect()
         )
     finally:
         shutil.rmtree(state, ignore_errors=True)
         shutil.rmtree(ckpt, ignore_errors=True)
-    return spark.createDataFrame(
-        [(int(r["window_epoch"]), int(r["n_events"])) for r in rows],
+    return _sorted_frame(
+        spark, [(int(r["window_epoch"]), int(r["n_events"])) for r in rows],
         "window_epoch long, n_events long",
-    ).orderBy("window_epoch")
+    )

@@ -364,8 +364,9 @@ def build_sketch_checkpointed(
         partials = partial_states(prepared, template, id_col, weight_col, with_lineage=True)
         partials.write.mode("append").parquet(part_dir)
     all_partials = spark.read.parquet(part_dir)
-    n = all_partials.count()
-    sketch, metrics = tree_merge(all_partials, n_hint=n)
+    # each appending task writes one file of one row: the file count is
+    # the row count, read from the file index without a job
+    sketch, metrics = tree_merge(all_partials, n_hint=len(all_partials.inputFiles()))
     metrics["resumed_files_skipped"] = len(input_paths) - len(missing)
     metrics["files_processed_this_run"] = len(missing)
     return sketch, metrics

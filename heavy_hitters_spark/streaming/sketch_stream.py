@@ -148,6 +148,9 @@ def merged_sketch(
     if window_start is not None:
         states = states.where(F.col("window_start") == F.lit(window_start))
     states = states.select([f.name for f in PARTIAL_SCHEMA.fields])
-    n = states.count()
-    sk, _ = tree_merge(states, n_hint=n)
+    # every writing task of _start_sink writes one file and emits at most
+    # one row per window, so the file count bounds the rows of one window
+    # (n_hint only sets the fan-in rounds); inputFiles() reads the file
+    # index the read already built, so no job counts the rows
+    sk, _ = tree_merge(states, n_hint=len(states.inputFiles()))
     return sk

@@ -23,7 +23,7 @@ def test_fused_equals_explode(spark):
     updates once with its partition's (id, count) pairs, however the
     rows are cut into Arrow batches. The small batch size makes both
     sides span several batches per task."""
-    from heavy_hitters_spark.core import KLL, MisraGries
+    from heavy_hitters_spark.core import KLL, Bloom, MisraGries
 
     def tmpl():
         return MultiSketch({
@@ -31,6 +31,7 @@ def test_fused_equals_explode(spark):
             "mg": MisraGries(k=16),
             "kll": KLL(k=64, seed=7),
             "ccm": CountMin(width=1 << 10, depth=3, conservative=True, seed_stream=SeedStream(1, 2)),
+            "bloom": Bloom(capacity=10_000, fpp=0.01),
         })
 
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")

@@ -155,10 +155,10 @@ def test_mg_exact_topk_certificate_on_ties(spark):
 
 def test_windowed_quantiles_bounded_fallback_adversarial(spark):
     """Certificate-failure path must stay BOUNDED: with windows that
-    completely miss every true quantile (sketch arbitrarily wrong) and
-    no rewindow, resolution goes through _bisect_ranks — O(#qs) driver
-    counters per round, never a full distinct-value collect — and still
-    returns the exact answers."""
+    completely miss every true quantile (sketch arbitrarily wrong),
+    resolution goes through _bisect_ranks — O(#qs) driver counters per
+    round, never a full distinct-value collect — and still returns the
+    exact answers."""
     import math as m
 
     from pyspark.sql import functions as F
@@ -169,45 +169,79 @@ def test_windowed_quantiles_bounded_fallback_adversarial(spark):
     qs = [0.1, 0.5, 0.99]
     # windows entirely below and entirely above the data
     bad = [(-100, -90), (10**9, 10**9 + 1), (-5, -1)]
-    got = _exact_quantiles_windowed(vals, qs, bad, rewindow=None)
+    got = _exact_quantiles_windowed(vals, qs, bad)
     exact = [7 * max(1, m.ceil(q * 1000)) for q in qs]
     assert got == exact
     # _bisect_ranks directly: exact value-at-rank on its own
     assert _bisect_ranks(vals, [1, 500, 1000]) == [7, 3500, 7000]
 
 
-def test_windowed_quantiles_rewindow_recovers(spark):
-    """A too-tiny pad that misses some quantiles must recover through
-    the doubled-pad rewindow rounds (still certified), without hitting
-    bisection."""
-    from pyspark.sql import functions as F
-
-    from heavy_hitters_spark.queries import _exact_quantiles_windowed
-
-    vals = spark.range(1, 1001).select(F.col("id").alias("v"))
-    qs = [0.25, 0.75]
-    calls = []
-
-    def rewindow(attempt):
-        calls.append(attempt)
-        w = 10 * (2 ** attempt)
-        return [(250 - w, 250 + w), (750 - w, 750 + w)]
-
-    # initial windows deliberately offset so the certificate fails
-    got = _exact_quantiles_windowed(vals, qs, [(100, 110), (900, 910)], rewindow=rewindow)
-    assert got == [250, 750]
-    assert calls  # the rewindow path actually ran
-
-
 def test_quantiles_exact_with_zero_pad_still_exact(spark):
     """pad=0 gives the narrowest possible sketch windows; the
-    certificate + rewindow chain must still produce the exact answer
-    (oracle semantics: quantile_disc)."""
+    certificate, with bisection for any rank it leaves open, must still
+    produce the exact answer (oracle semantics: quantile_disc)."""
     from heavy_hitters_spark.queries import quantiles_events_value_exact
 
     a = {r["q"]: r["value_est"] for r in quantiles_events_value_exact(spark, SF, pad=0.0).collect()}
     b = {r["q"]: r["value_est"] for r in quantiles_events_value_exact(spark, SF, pad=0.05).collect()}
     assert a == b
+
+
+def _no_spark_sort(monkeypatch, df):
+    """Make ``orderBy``/``sort`` raise on ``df``'s concrete DataFrame
+    class (the session's, not the ``pyspark.sql.DataFrame`` base)."""
+
+    def refuse(self, *cols, **kw):
+        raise AssertionError("rows the driver holds are sorted through Spark")
+
+    monkeypatch.setattr(type(df), "orderBy", refuse)
+    monkeypatch.setattr(type(df), "sort", refuse)
+
+
+def test_certify_windows_sorts_on_the_driver(spark, monkeypatch):
+    """The certificate's per-value counts are collected and sorted in
+    Python: the exact-quantile pass runs no Spark sort."""
+    from heavy_hitters_spark.queries import _exact_quantiles_windowed
+
+    vals = spark.range(1, 1001).select(F.col("id").alias("v"))
+    _no_spark_sort(monkeypatch, vals)
+    assert _exact_quantiles_windowed(vals, [0.25, 0.75], [(240, 260), (740, 760)]) == [250, 750]
+
+
+def test_ann_query_vectors_sorted_on_the_driver(spark, monkeypatch):
+    """The three ANN probe vectors come back in vec_id order with no
+    Spark sort."""
+    import __spark_entry__ as entry_mod
+
+    emb = spark.read.parquet(f"{SF}/embeddings.parquet")
+    want = [r["embedding"] for r in emb.where(F.col("vec_id") < 3).orderBy("vec_id").collect()]
+    _no_spark_sort(monkeypatch, emb)
+    assert entry_mod._query_vectors(emb) == want
+
+
+# answer frames of rows the driver holds -> the column they are sorted by
+SORTED_FRAMES = {
+    "point_freq_cm": "token", "point_freq_cs": "token", "above_threshold_cm": "token",
+    "bloom_membership": "token", "turnstile_net_cs": "user_id", "quantiles_kll": "q",
+    "quantiles_tdigest": "q", "quantiles_kll_exact": "q", "quantiles_tdigest_exact": "q",
+    "windowed_event_counts_stream": "window_epoch",
+}
+
+
+@pytest.mark.parametrize("name", sorted(SORTED_FRAMES))
+def test_driver_rows_frame_has_no_sort(spark, name):
+    """A frame built from rows the driver already holds is sorted in
+    Python: its optimized plan has no Sort (which would cost jobs at
+    collect), and its rows still come back in key order."""
+    import re
+
+    import __spark_entry__ as entry_mod
+
+    df = entry_mod.queries()[name](spark, SF)
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    assert not re.search(r"\bSort\b", plan), plan
+    keys = [r[SORTED_FRAMES[name]] for r in df.collect()]
+    assert keys and keys == sorted(keys) and len(set(keys)) == len(keys)
 
 
 def test_simhash_capped_equals_uncapped_at_small_sf(spark):

@@ -149,12 +149,16 @@ def test_cross_type_merge_raises(kind):
 
 @pytest.mark.parametrize("kind", sorted(MAKE))
 def test_merging_an_empty_state_changes_nothing(kind):
-    """Every empty partition emits the template, so folding in an empty
-    state must leave a state's bytes as they were."""
+    """Every empty partition emits the template, and serving starts
+    from an empty template, so an empty state is the merge identity on
+    either side: the merged bytes are the filled state's."""
     recv = _filled(MAKE[kind]())
     before = recv.to_bytes()
     recv.merge(MAKE[kind]())
     assert recv.to_bytes() == before
+    empty = MAKE[kind]()
+    empty.merge(_filled(MAKE[kind]()))
+    assert empty.to_bytes() == before
 
 
 @pytest.mark.parametrize("kind", sorted(MAKE))

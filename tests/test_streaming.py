@@ -58,7 +58,10 @@ def test_stream_equals_batch(spark, stream_src, tmp_path):
     assert np.array_equal(sk2.table, bulk.table)
 
 
-def test_windowed_stream(spark, stream_src, tmp_path):
+def test_windowed_stream(spark, stream_src, tmp_path, monkeypatch):
+    """Per-window merges. ``merged_sketch`` bounds a window's rows by
+    the state files (one file per writing task, at most one row per
+    window in it), so no count job runs before the merge."""
     src = spark.readStream.schema("id long, ts timestamp").parquet(
         str(stream_src) + "/*"
     )
@@ -71,6 +74,14 @@ def test_windowed_stream(spark, stream_src, tmp_path):
     states = spark.read.parquet(str(tmp_path / "wstate"))
     windows = sorted(r["window_start"] for r in states.select("window_start").distinct().collect())
     assert len(windows) == 2
+    for w in windows:
+        one = states.where(F.col("window_start") == F.lit(w))
+        assert 0 < one.count() <= len(one.inputFiles())
+
+    def no_count(self):
+        raise AssertionError("a count job before the merge")
+
+    monkeypatch.setattr(type(states), "count", no_count)  # the concrete class
     for w in windows:
         sk = merged_sketch(spark, str(tmp_path / "wstate"), window_start=w)
         assert sk.norm == 20000
