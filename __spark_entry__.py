@@ -18,19 +18,6 @@ from pyspark.sql import functions as F
 SF0001 = "/root/testdata/sf0.001"
 
 
-def _wide(df):
-    """Widen a 1-2 split bench-scale scan to kernel parallelism (see
-    functions.dedup._widen_narrow_scan) — applied ONLY where a
-    CPU-heavy per-doc text kernel dominates the query (regex quality
-    metrics, BPE segmentation, rolling-hash fingerprints); round-6
-    measurement showed widening the sub-second sketch-update builds
-    nets WORSE (repartition shuffle + 16x partial states + an extra
-    analysis per action), so those scans stay raw."""
-    from heavy_hitters_spark.functions.dedup import _widen_narrow_scan
-
-    return _widen_narrow_scan(df)
-
-
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship: phi-heavy-hitter tokens (sketch candidates + exact
     verify) over sf0.001 documents."""
@@ -74,16 +61,21 @@ def _q_token_count(spark, sf):
 
 
 def _q_bpe_token_count(spark, sf):
+    from heavy_hitters_spark.functions.dedup import _widen_narrow_scan
     from heavy_hitters_spark.functions.text import bpe_ish_count_col
 
-    docs = _wide(spark.read.parquet(f"{sf}/documents.parquet"))
+    # widened only where a CPU-heavy per-doc text kernel dominates
+    # (BPE segmentation, regex quality metrics, rolling-hash
+    # fingerprints); the sketch-build scans stay raw (see queries._docs)
+    docs = _widen_narrow_scan(spark.read.parquet(f"{sf}/documents.parquet"))
     return docs.select("doc_id", bpe_ish_count_col("text").alias("n_pieces"))
 
 
 def _q_quality_scores(spark, sf):
+    from heavy_hitters_spark.functions.dedup import _widen_narrow_scan
     from heavy_hitters_spark.functions.text import quality_scores
 
-    docs = _wide(spark.read.parquet(f"{sf}/documents.parquet"))
+    docs = _widen_narrow_scan(spark.read.parquet(f"{sf}/documents.parquet"))
     q = quality_scores(docs)
     return q.select(
         "doc_id",
@@ -207,16 +199,14 @@ def _q_simhash_pairs_planted(spark, sf):
 
 def _q_jaccard_pairs_capped(spark, sf):
     """The 100x-relevant capped path of jaccard_pairs: stop-shingles
-    with document frequency > 5 are dropped before pair generation
-    (web-scale hot-bucket bound), and the per-bucket ceiling is armed
-    too. Intersections count surviving shingles only; sizes stay exact
-    — the oracle applies the identical DF filter in SQL."""
+    with document frequency > 5 (a shingle's bucket size) are dropped
+    before pair generation (web-scale hot-bucket bound). Intersections
+    count surviving shingles only; sizes stay exact — the oracle
+    applies the identical DF filter in SQL."""
     from heavy_hitters_spark.functions.dedup import jaccard_pairs
 
     docs = spark.read.parquet(f"{sf}/documents.parquet")
-    return jaccard_pairs(
-        docs, threshold=0.2, n=3, max_shingle_df=5, max_bucket_size=5
-    )
+    return jaccard_pairs(docs, threshold=0.2, n=3, max_bucket_size=5)
 
 
 def _q_simhash_pairs(spark, sf):
@@ -350,9 +340,10 @@ def _q_events_user_range_exact(spark, sf):
 
 
 def _q_doc_fingerprints(spark, sf):
+    from heavy_hitters_spark.functions.dedup import _widen_narrow_scan
     from heavy_hitters_spark.functions.text import fingerprint_col
 
-    docs = _wide(spark.read.parquet(f"{sf}/documents.parquet"))
+    docs = _widen_narrow_scan(spark.read.parquet(f"{sf}/documents.parquet"))
     return docs.select("doc_id", fingerprint_col("text").alias("fp"))
 
 
@@ -568,7 +559,7 @@ def _q_hot_shingle_stats(spark, sf):
 
     # same narrow-scan widening as the pair queries: the shingle
     # generation is the CPU-heavy stage and the corpus parquet is 1-2
-    # splits at bench scale (round 6: 13.2 s -> ~1.5 s at sf1.0)
+    # splits at bench scale
     docs = _widen_narrow_scan(spark.read.parquet(f"{sf}/documents.parquet"))
     sh = _doc_shingle_hashes(docs, 3, "text", "doc_id")
     return hot_bucket_stats(sh, ["h"], max_bucket_size=5)

@@ -119,7 +119,6 @@ def jaccard_pairs(
     n: int = 3,
     text_col: str = "text",
     id_col: str = "doc_id",
-    max_shingle_df: int | None = None,
     max_bucket_size: int | None = None,
 ) -> DataFrame:
     """Exact n-gram Jaccard for all pairs sharing >= 1 shingle.
@@ -130,20 +129,14 @@ def jaccard_pairs(
     since shingles are distinct per doc) — one scan of the shingle
     table instead of a self-join that re-executes it on both sides.
 
-    ``max_shingle_df`` is the STOP-SHINGLE cap for web scale: shingles
-    appearing in more docs than the cap are dropped before pair
-    generation, bounding the otherwise-quadratic hot-shingle buckets.
-    With the cap on, pairs that share ONLY stop-shingles are missed and
-    intersections count non-stop shingles only (sizes stay exact) — a
-    documented recall/undercount trade; leave None for exact results.
-
-    ``max_bucket_size`` is the belt-and-braces per-bucket ceiling (see
-    _bucket_pairs_all). Both caps resolve to the same mechanism: a
+    ``max_bucket_size`` is the STOP-SHINGLE cap for web scale: a
     shingle's bucket size equals its document frequency (shingle rows
-    are distinct per doc), so the kernel drops buckets larger than
-    min(max_shingle_df, max_bucket_size) before expansion — semantics
-    identical to the historical dfreq-aggregation + semi-join plan,
-    minus its extra shuffle and duplicated shingle subtree.
+    are distinct per doc), so shingles appearing in more docs than the
+    cap are dropped before pair generation, bounding the
+    otherwise-quadratic hot-shingle buckets. With the cap on, pairs
+    that share ONLY stop-shingles are missed and intersections count
+    non-stop shingles only (sizes stay exact) — a documented
+    recall/undercount trade; leave None for exact results.
 
     Physical shape note (round 6): a two-kernel rewrite (sizes attached
     to shingle rows, pair-count fold + threshold filter in a second
@@ -155,8 +148,7 @@ def jaccard_pairs(
     aggregation stays in Catalyst."""
     # per-doc sizes map-side (no shuffle); pair generation over 8-byte
     # shingle hashes instead of shingle strings (narrower shuffle rows)
-    nbytes = _input_bytes(df)
-    df = _widen_narrow_scan(df, nbytes=nbytes)
+    df = _widen_narrow_scan(df)
     toks = F.split(F.col(text_col), " ")
     # sizes via DISTINCT HASH count — the same 64-bit shingle identity
     # the intersection counts already use (consistent under collision,
@@ -194,23 +186,17 @@ def jaccard_pairs(
         ).alias("sz"),
     )
     sh = _doc_shingle_hashes(df, n, text_col, id_col)
-    # max_shingle_df is implemented as a per-bucket ceiling inside the
-    # pair kernel: shingle rows are DISTINCT per doc, so a shingle's
-    # bucket size IS its document frequency, and dropping buckets with
-    # m > max_shingle_df before expansion is row-for-row identical to
-    # the round-5 plan's separate dfreq aggregation + semi-join — which
-    # re-evaluated the whole scan+shingle subtree on both sides of a
-    # 2.6M-row join (measured at sf1.0: the capped query spent more
-    # wall in that join than the uncapped query spent counting 127M
-    # pairs). Sizes stay full distinct counts, exactly as the oracle's.
-    cap = max_bucket_size
-    if max_shingle_df is not None:
-        cap = max_shingle_df if cap is None else min(cap, max_shingle_df)
+    # the cap is a per-bucket ceiling inside the pair kernel: shingle
+    # rows are DISTINCT per doc, so a shingle's bucket size IS its
+    # document frequency, and dropping buckets with m > max_bucket_size
+    # before expansion is row-for-row identical to the round-5 plan's
+    # separate dfreq aggregation + semi-join — which re-evaluated the
+    # whole scan+shingle subtree on both sides of a 2.6M-row join
+    # (measured at sf1.0: the capped query spent more wall in that
+    # join than the uncapped query spent counting 127M pairs). Sizes
+    # stay full distinct counts, exactly as the oracle's.
     inter = (
-        _bucket_pairs_all_kernel(
-            sh, "h", id_col, max_bucket_size=cap,
-            n_parts=_kernel_partitions(sh, nbytes=nbytes),
-        )
+        _bucket_pairs_all_kernel(sh, "h", id_col, max_bucket_size=max_bucket_size)
         .groupBy("doc_a", "doc_b")
         .agg(F.sum("cnt").alias("inter"))
     )
@@ -240,8 +226,8 @@ def _bucket_pairs_all(
     ``max_bucket_size`` drops buckets with more ids than the cap BEFORE
     pair expansion: one pathological bucket (boilerplate-heavy corpus)
     would otherwise materialize m^2 pairs in one task. Pairs that
-    co-occur ONLY in dropped buckets are missed (mirrors
-    ``max_shingle_df``); use ``hot_bucket_stats`` to size the cap."""
+    co-occur ONLY in dropped buckets are missed; use
+    ``hot_bucket_stats`` to size the cap."""
     ids = F.sort_array(F.collect_list(F.col(id_col))).alias("ids")
     pairs = F.filter(
         F.flatten(
@@ -313,7 +299,6 @@ def _bucket_pairs_all_kernel(
     bucket_col: str,
     id_col: str,
     max_bucket_size: int | None = None,
-    n_parts: int | None = None,
 ) -> DataFrame:
     """(doc_a, doc_b, cnt) partial co-occurrence counts from per-shingle
     buckets — the kernel replacement for the groupBy/collect_list plan:
@@ -355,71 +340,26 @@ def _bucket_pairs_all_kernel(
     # variance traced to those two unsmoothed workers (any per-worker
     # host stall lands 1:1 on the wall). Pair cost scales with
     # sum(m^2) per bucket, not bytes, so byte-based coalescing is the
-    # wrong policy here. The count is shuffle.partitions/4 (floor 4):
-    # full width measured WORSE in this sandbox (32 fresh workers pay
-    # multi-second first-touch warm-up and ~40ms/task fixed cost for
-    # ms-scale kernel work); a quarter keeps one wave of substantial
-    # tasks while scaling with the configured parallelism on a real
-    # cluster. Interleaved sweep (sf0.1 steady walls): AQE 3.8-9.8s
-    # erratic, n=32 4.8-5.5s, n=8 3.7-4.7s, n=4 3.4-4.6s.
-    if n_parts is None:
-        n_parts = _kernel_partitions(keyed)
-    return keyed.repartition(n_parts, F.col(bucket_col)).mapInPandas(
+    # wrong policy here (the count: _kernel_partitions).
+    return keyed.repartition(_kernel_partitions(keyed), F.col(bucket_col)).mapInPandas(
         part_fn, "doc_a long, doc_b long, cnt long"
     )
 
 
-def _input_bytes(df: DataFrame) -> int | None:
-    """Total size of the files backing ``df``'s scan (None when the
-    lineage has no file source or the files are not locally statable).
-    Used only to pick a partition count for the CPU-bound kernels —
-    a wrong answer degrades parallelism, never correctness."""
-    import os
-
-    try:
-        files = df.inputFiles()
-    except Exception:  # noqa: BLE001 (non-file sources)
-        return None
-    if not files:
-        return None
-    total = 0
-    for f in files:
-        p = f[7:] if f.startswith("file://") else f
-        try:
-            total += os.path.getsize(p)
-        except OSError:
-            return None
-    return total
-
-
-# scan-size threshold above which the quadratic-kernel exchanges use the
-# session's full shuffle width instead of the quarter-width tuned for
-# tiny inputs (see _kernel_partitions): below it, per-task fixed costs
-# (~40 ms) dominate ms-scale kernel slices (round-5 sweep at sf0.1:
-# n=8 beat n=32 by ~1 s steady-state); above it the pair kernels are
-# seconds-per-task CPU-bound and quarter width just idles 3/4 of the
-# configured parallelism (measured round 6 at sf1.0, ~5.9 MB scan:
-# shingle stage 9.2 s on the raw 2-split scan, 1.1 s at full width).
-_KERNEL_WIDE_BYTES = 4 << 20
-
-
-def _kernel_partitions(df: DataFrame, nbytes: int | None = None) -> int:
-    """Partition count for CPU-quadratic bucket kernels (see the
-    rationale at the _bucket_pairs_all_kernel call site). Scale-adaptive:
-    quarter shuffle width for tiny scans (task overhead dominates),
-    full shuffle width once the backing scan is big enough that each
-    task holds substantial kernel work — on a real cluster
-    spark.sql.shuffle.partitions is the configured wide value and any
-    real corpus clears the threshold, so this resolves to full width."""
+def _kernel_partitions(df: DataFrame) -> int:
+    """Partition count for the CPU-heavy per-doc and bucket kernels:
+    a quarter of the shuffle width, at least 4. Full width measured
+    WORSE on small corpora (fresh workers pay first-touch warm-up and
+    ~40 ms per task for ms-scale kernel slices); a quarter keeps one
+    wave of substantial tasks and still scales with the configured
+    parallelism. Interleaved sweep at sf0.1, 32-partition session
+    (steady walls): AQE 3.8-9.8 s erratic, n=32 4.8-5.5 s, n=8
+    3.7-4.7 s, n=4 3.4-4.6 s."""
     n_shuffle = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    if nbytes is None:
-        nbytes = _input_bytes(df)
-    if nbytes is not None and nbytes >= _KERNEL_WIDE_BYTES:
-        return max(4, n_shuffle)
     return max(4, n_shuffle // 4)
 
 
-def _widen_narrow_scan(df: DataFrame, nbytes: int | None = None) -> DataFrame:
+def _widen_narrow_scan(df: DataFrame) -> DataFrame:
     """Ensure minimum parallelism for the CPU-heavy per-doc kernels
     (shingle/minhash/simhash): a small corpus parquet is ONE 128 MB
     split, so the whole tokenize+hash stage would run as a single task
@@ -427,7 +367,7 @@ def _widen_narrow_scan(df: DataFrame, nbytes: int | None = None) -> DataFrame:
     host stall. On a web-scale corpus the scan already has thousands of
     splits and this is a no-op (the condition is on the SCAN's split
     count, so no shuffle is added at scale)."""
-    n_min = _kernel_partitions(df, nbytes=nbytes)
+    n_min = _kernel_partitions(df)
     if df.rdd.getNumPartitions() < n_min:
         return df.repartition(n_min)
     return df
@@ -438,13 +378,12 @@ def _bucket_pairs_kernel(
     bucket_col: str,
     id_col: str,
     max_bucket_size: int | None = None,
-    n_parts: int | None = None,
 ) -> DataFrame:
     """Distinct candidate pairs (doc_a < doc_b) via the same in-kernel
     expansion; pairs are deduped within the partition (sort + boundary)
     and globally (buckets of different partitions can emit the same
     pair). Used where the caller only needs the candidate SET."""
-    counted = _bucket_pairs_all_kernel(keyed, bucket_col, id_col, max_bucket_size, n_parts=n_parts)
+    counted = _bucket_pairs_all_kernel(keyed, bucket_col, id_col, max_bucket_size)
     return counted.select("doc_a", "doc_b").distinct()
 
 
@@ -454,8 +393,8 @@ def hot_bucket_stats(
     """Observability companion to the ``max_bucket_size`` guard: one row
     (n_buckets_dropped, n_ids_dropped, max_bucket_seen) describing what
     the cap would discard. Run it when tuning the cap; the pair
-    functions themselves drop silently (same contract as
-    ``max_shingle_df``) so the hot path stays one aggregation."""
+    functions themselves drop silently so the hot path stays one
+    aggregation."""
     sizes = keyed.groupBy(*bucket_cols).agg(F.count("*").alias("m"))
     return sizes.agg(
         F.coalesce(
@@ -531,7 +470,6 @@ def lsh_candidates(
     id_col: str = "doc_id",
     seed: int = 0x51A5,
     max_bucket_size: int | None = None,
-    n_parts: int | None = None,
 ) -> DataFrame:
     """Banded-LSH candidate pairs (doc_a < doc_b). rows_per_band =
     n_hashes // bands; collision threshold s* ~ (1/bands)^(1/rows).
@@ -564,9 +502,7 @@ def lsh_candidates(
     packed = banded.select(
         id_col, F.shiftleft(F.col("bh"), shift).bitwiseOR(F.col("band")).alias("bk")
     )
-    return _bucket_pairs_kernel(
-        packed, "bk", id_col, max_bucket_size=max_bucket_size, n_parts=n_parts
-    )
+    return _bucket_pairs_kernel(packed, "bk", id_col, max_bucket_size=max_bucket_size)
 
 
 def near_dup_pairs_minhash(
@@ -590,11 +526,9 @@ def near_dup_pairs_minhash(
     the LSH signatures for docs shorter than shingle_n tokens, so
     identical short docs verify at jaccard 1.0 instead of being
     silently dropped with an empty shingle set."""
-    nbytes = _input_bytes(df)
-    df = _widen_narrow_scan(df, nbytes=nbytes)
+    df = _widen_narrow_scan(df)
     cand = lsh_candidates(
-        df, n_hashes, bands, shingle_n, text_col, id_col,
-        max_bucket_size=max_bucket_size, n_parts=_kernel_partitions(df, nbytes=nbytes),
+        df, n_hashes, bands, shingle_n, text_col, id_col, max_bucket_size=max_bucket_size
     )
     # single-scan verification: joining a per-doc shingle-array table
     # once per pair side would execute the corpus-wide tokenize+hash
@@ -742,8 +676,7 @@ def near_dup_pairs_simhash(
     (ck, cv) keys to size the cap; None = exact recall guarantee."""
     if not 0 <= max_hamming <= 63:
         raise ValueError("max_hamming must be in [0, 63]")
-    nbytes = _input_bytes(df)
-    df = _widen_narrow_scan(df, nbytes=nbytes)
+    df = _widen_narrow_scan(df)
     if max_hamming == 0:
         sh0 = df.select(F.col(id_col), simhash_col(text_col).alias("sh"))
         return _bucket_pairs_kernel(
@@ -857,9 +790,7 @@ def near_dup_pairs_simhash(
     # CPU-quadratic in bucket size, so AQE's byte-based coalescing
     # (which collapsed this exchange to 1-2 tasks at sf0.1) both
     # serializes the work and amplifies single-worker host stalls
-    res = chunks.repartition(
-        _kernel_partitions(chunks, nbytes=nbytes), F.col("ck"), F.col("cv")
-    ).mapInPandas(
+    res = chunks.repartition(_kernel_partitions(chunks), F.col("ck"), F.col("cv")).mapInPandas(
         part_fn, "doc_a long, doc_b long, hamming long"
     )
     # uncapped: first-agreeing-chunk emission already yields each pair

@@ -6,7 +6,7 @@ import pytest
 def spark():
     from heavy_hitters_spark.spark import get_spark
 
-    s = get_spark("local[8]", shuffle_partitions=8)
+    s = get_spark("local[8]")
     s.sparkContext.setLogLevel("ERROR")
     yield s
     s.stop()

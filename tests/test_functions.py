@@ -287,7 +287,7 @@ def test_stop_shingle_cap_bounds_hot_buckets(spark):
     rows.append((500, rows[0][1]))  # true near-dup pair (0, 500): identical
     df = spark.createDataFrame(rows, "doc_id long, text string")
     # capped intersection drops the hot shingle: 3 shared of 4+4 -> 0.6
-    capped = jaccard_pairs(df, threshold=0.5, n=3, max_shingle_df=10)
+    capped = jaccard_pairs(df, threshold=0.5, n=3, max_bucket_size=10)
     got = {(r["doc_a"], r["doc_b"]): r["jaccard"] for r in capped.collect()}
     assert got.get((0, 500)) == 0.6
     # with the hot shingle dropped, unrelated docs share nothing
@@ -390,19 +390,6 @@ def test_max_bucket_size_guard(spark):
     stats = hot_bucket_stats(banded, ["band", "bh"], max_bucket_size=50).collect()[0]
     assert stats["n_buckets_dropped"] >= 32  # the mega bucket in every band
     assert stats["max_bucket_seen"] == 300
-
-
-def test_jaccard_pairs_bucket_cap(spark):
-    """jaccard_pairs' per-bucket ceiling bounds hot shingles even when
-    the DF-based stop-shingle pass is skipped (cap == df here since
-    buckets are per-shingle)."""
-    common = "zzz yyy xxx"
-    rows = [(i, f"{common} unique{i} tail{i} end{i}") for i in range(60)]
-    rows.append((500, rows[0][1]))
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    capped = jaccard_pairs(df, threshold=0.5, n=3, max_bucket_size=10)
-    got = {(r["doc_a"], r["doc_b"]): r["jaccard"] for r in capped.collect()}
-    assert got == {(0, 500): 0.6}  # same as max_shingle_df=10 on this data
 
 
 def test_simhash_radius0_and_validation(spark):

@@ -6,10 +6,9 @@ bit-for-bit.
 - SWAR popcount == LUT popcount (simhash verify kernel)
 - first-agreeing-chunk emission == per-chunk emission + distinct
   (uncapped simhash pair dedup-at-source)
-- max_shingle_df-as-bucket-cap == dfreq-filter semantics (jaccard)
+- max_bucket_size-as-stop-shingle-cap == dfreq-filter semantics (jaccard)
 - vectorized lang_id == the straightforward per-doc marker count
-- scale-adaptive kernel width: quarter width below the byte threshold,
-  full width above
+- kernel width: a quarter of the shuffle width, at least 4
 """
 
 from __future__ import annotations
@@ -56,7 +55,7 @@ def test_simhash_first_chunk_emission_equals_distinct(spark, rng):
 
 
 def test_jaccard_cap_equals_dfreq_filter(spark, rng):
-    """max_shingle_df implemented as the kernel bucket cap must equal
+    """max_bucket_size implemented as the kernel bucket cap must equal
     the literal spec: drop shingles with document frequency > cap, then
     count intersections over the surviving shingles (sizes unfiltered)."""
     from heavy_hitters_spark.functions.dedup import (
@@ -71,7 +70,7 @@ def test_jaccard_cap_equals_dfreq_filter(spark, rng):
     cap = 4
     got = {
         (r["doc_a"], r["doc_b"]): r["jaccard"]
-        for r in jaccard_pairs(df, threshold=0.1, n=3, max_shingle_df=cap).collect()
+        for r in jaccard_pairs(df, threshold=0.1, n=3, max_bucket_size=cap).collect()
     }
     # reference: dfreq filter in DataFrame ops, intersection via join
     sh = _doc_shingle_hashes(df, 3, "text", "doc_id")
@@ -132,27 +131,16 @@ def test_lang_id_kernel_matches_reference(spark):
 
 
 def test_kernel_partitions_scale_adaptive(spark, tmp_path):
-    """Quarter shuffle width for scans under the byte threshold, full
-    width above it, and the conservative quarter-width fallback when the
-    lineage has no statable files."""
-    from heavy_hitters_spark.functions.dedup import (
-        _KERNEL_WIDE_BYTES,
-        _input_bytes,
-        _kernel_partitions,
-    )
+    """Quarter shuffle width (at least 4) for any input, file-backed or
+    not: the kernel width scales with the configured parallelism only."""
+    from heavy_hitters_spark.functions.dedup import _kernel_partitions
 
-    small = spark.range(10).toDF("doc_id")  # no file source
-    assert _input_bytes(small) is None
     n_shuffle = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    assert _kernel_partitions(small) == max(4, n_shuffle // 4)
+    assert _kernel_partitions(spark.range(10).toDF("doc_id")) == max(4, n_shuffle // 4)
 
     p = str(tmp_path / "t.parquet")
     spark.range(100).toDF("doc_id").write.mode("overwrite").parquet(p)
-    df = spark.read.parquet(p)
-    nb = _input_bytes(df)
-    assert nb is not None and nb > 0
-    assert _kernel_partitions(df, nbytes=nb) == max(4, n_shuffle // 4)
-    assert _kernel_partitions(df, nbytes=_KERNEL_WIDE_BYTES) == max(4, n_shuffle)
+    assert _kernel_partitions(spark.read.parquet(p)) == max(4, n_shuffle // 4)
 
 
 def test_near_dup_groups_fallback_matches_fast_path(spark, rng, monkeypatch):
