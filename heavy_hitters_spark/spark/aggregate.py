@@ -18,7 +18,7 @@ is a plain DataFrame with checkpointable rows:
       inspectable and durable.
 
 The builds differ only in the adapter from a batch to (id, count)
-pairs (``_id_pairs``, ``fused._fused_fn``). Every stage emits its rows
+pairs (``_id_pairs``, ``fused._token_pairs``). Every stage emits its rows
 through ``state_row`` in the Arrow form of ``PARTIAL_SCHEMA``, so the
 state row format is decided here alone.
 
@@ -128,9 +128,9 @@ class _Run:
 
 def _task_fn(template_bytes: bytes, batch_pairs: Callable, windowed: bool = False):
     """The one task body of every sketch build, for ``mapInArrow``.
-    ``batch_pairs(batch, memo)`` maps an Arrow batch to ``(ids, counts
-    or None, n_updates)``, with a ``memo`` dict that lives for the task.
-    The pairs are folded into one sorted set per output key (None, or
+    ``batch_pairs(batch)`` maps an Arrow batch to ``(ids, counts or
+    None, n_updates)``; it keeps no state between batches. The pairs
+    are folded into one sorted set per output key (None, or
     ``window_start``), counts >= 0 and < 0 apart: a +5 and a -3 on one
     id never net to +2, so an insert-only sketch still raises. At task
     end a template copy is updated ONCE per key: a state depends only
@@ -144,7 +144,6 @@ def _task_fn(template_bytes: bytes, batch_pairs: Callable, windowed: bool = Fals
         from ..core import memtune  # noqa: F401  (mallopt inside the worker)
 
         enter_epoch, t0, t_serve = time.time(), time.perf_counter(), 0.0
-        memo: dict = {}
         keyed: dict = {} if windowed else {None: [_Run(), _Run(), 0, 0]}
         files: set[str] = set()
         src = iter(batches)
@@ -163,7 +162,7 @@ def _task_fn(template_bytes: bytes, batch_pairs: Callable, windowed: bool = Fals
                 parts = [(w, batch.filter(pa.array(keys == w))) for w in np.unique(keys).tolist()]
             for key, rows in parts:
                 ent = keyed.get(key) or keyed.setdefault(key, [_Run(), _Run(), 0, 0])
-                ids, counts, n_updates = batch_pairs(rows, memo)
+                ids, counts, n_updates = batch_pairs(rows)
                 if counts is not None and (neg := counts < 0).any():
                     ent[1].add(ids[neg], counts[neg])
                     ids, counts = ids[~neg], counts[~neg]
@@ -206,7 +205,7 @@ def _id_pairs(id_col: str, weight_col: str | None) -> Callable:
     """The id-column builds' adapter: a batch's ids with its weights,
     or with None (one per id) without a weight column."""
 
-    def pairs(batch: pa.RecordBatch, memo: dict) -> tuple[np.ndarray, np.ndarray | None, int]:
+    def pairs(batch: pa.RecordBatch) -> tuple[np.ndarray, np.ndarray | None, int]:
         ids = batch.column(id_col).to_numpy(zero_copy_only=False)
         if weight_col is None:
             return ids, None, len(ids)

@@ -2,6 +2,7 @@
 exploded Catalyst path (same xxhash64 ids, same seeds)."""
 
 import numpy as np
+import pytest
 
 from heavy_hitters_spark.core import CountMin, HLL, MultiSketch, SeedStream
 from heavy_hitters_spark.spark import build_sketch, key_id_col, tokens
@@ -115,29 +116,102 @@ def test_fused_preagg_routing_mixed_template(spark):
 def test_raw_path_empty_filter_is_slot_based(monkeypatch):
     """A real token whose xxh64&MASK32 collides with h("") must SURVIVE
     the fused kernel's empty-token filter: empty tokens are dropped by
-    DICTIONARY slot, not by hashed id, so such a token is still counted
-    (a filter on the hashed id array by value would silently drop
-    it). Forced by monkeypatching the hash so 'collider' ==
-    h(''), and calling the fused kernel in-process (no Spark needed)."""
+    VALUE, not by hashed id, so such a token is still counted (a filter
+    on the hashed id array would silently drop it). Forced by
+    monkeypatching the kernel's hash, ``keys.xxh64_array``, so that
+    'collider' == h(''), and calling the fused kernel in-process (no
+    Spark needed)."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
     from heavy_hitters_spark.core import KLL
     from heavy_hitters_spark.core.base import pack_state, unpack_state
     from heavy_hitters_spark.spark import keys as keys_mod
     from heavy_hitters_spark.spark.fused import _fused_fn
 
-    real = keys_mod.xxh64
-    monkeypatch.setattr(
-        keys_mod, "xxh64", lambda b: real(b"") if b == b"collider" else real(b)
-    )
+    real, seen = keys_mod.xxh64_array, []
 
-    import pyarrow as pa
+    def colliding(arr):
+        h = real(arr)
+        hit = np.array(pc.equal(arr, "collider").to_pylist(), dtype=bool)
+        h[hit] = keys_mod.xxh64(b"")
+        seen.append(int(hit.sum()))
+        return h
+
+    monkeypatch.setattr(keys_mod, "xxh64_array", colliding)
 
     # split on ' ': ['collider', '', 'collider', 'x'] -> 3 real tokens
     batch = pa.RecordBatch.from_pydict({"text": ["collider  collider x"]})
     fn = _fused_fn(pack_state(KLL(k=200, seed=7)), "text")
     (out,) = list(fn(iter([batch])))
+    assert seen == [1]  # the kernel hashed through the patched function
     assert out.column("n_updates")[0].as_py() == 3  # r5 code recorded 1
     kll = unpack_state(out.column("state")[0].as_py())
     assert kll.n == 3
+
+
+def test_null_row_bytes_are_not_tokens():
+    """Arrow leaves a null row's offset span unspecified: bytes under a
+    null slot, in a sliced batch too, must not be counted."""
+    import pyarrow as pa
+
+    from heavy_hitters_spark.core import HLL
+    from heavy_hitters_spark.core.base import pack_state, unpack_state
+    from heavy_hitters_spark.spark.fused import _fused_fn
+    from heavy_hitters_spark.spark.keys import key_id
+
+    data = b"skip a bzzz hidden c"
+    offs = np.array([0, 5, 8, 18, 20], dtype=np.int32)  # "skip ", "a b", "zzz hidden", " c"
+    valid = np.packbits([1, 1, 0, 1], bitorder="little")
+    text = pa.Array.from_buffers(pa.string(), 4, [pa.py_buffer(valid), pa.py_buffer(offs), pa.py_buffer(data)])
+    batch = pa.RecordBatch.from_arrays([text], ["text"]).slice(1)
+    fn = _fused_fn(pack_state(HLL(p=10)), "text")
+    (out,) = list(fn(iter([batch])))
+    assert out.column("n_updates")[0].as_py() == 3  # a, b, c
+    assert out.column("n_rows")[0].as_py() == 3
+    want = HLL(p=10)
+    want.update_batch(np.array([key_id(t) for t in "abc"], dtype=np.uint64), np.ones(3, dtype=np.int64))
+    assert unpack_state(out.column("state")[0].as_py()).to_bytes() == want.to_bytes()
+
+
+# separator edge cases for the fused kernel's byte-level token split:
+# leading, trailing and double spaces, empty / blank / null rows, tabs
+# and newlines inside tokens (not separators), multibyte UTF-8, and
+# tokens of >= 32 bytes (xxh64's stripe path)
+EDGE_ROWS = [
+    " lead", "trail ", "double  space", "", " ", "   ", None, "a",
+    "tab\there new\nline", "\t \n", "héllo wörld ü 日本語 😀", "😀 😀",
+    "x" * 32, "y" * 33 + " " + "z" * 64 + "  " + "ü" * 40, None, "a a a",
+] * 3
+
+
+@pytest.mark.parametrize("conf", [
+    {"spark.sql.execution.arrow.maxRecordsPerBatch": "3"},
+    {"spark.sql.execution.arrow.useLargeVarTypes": "true"},
+], ids=["batch3", "large_var_types"])
+def test_fused_equals_explode_edge_rows(spark, conf):
+    """The fused build's token split matches Catalyst's split + explode
+    + filter(token != '') on separator edge cases, byte for byte, in
+    3-row batches and over large_string (int64-offset) columns."""
+    from heavy_hitters_spark.core import KLL, MisraGries
+
+    def tmpl():
+        return MultiSketch({**_tmpl().sketches, "mg": MisraGries(k=8), "kll": KLL(k=64, seed=7)})
+
+    docs = spark.createDataFrame([(t,) for t in EDGE_ROWS], "text string").repartition(3)
+    old = {k: spark.conf.get(k) for k in conf}
+    for k, v in conf.items():
+        spark.conf.set(k, v)
+    try:
+        fused, m1 = build_token_sketch(docs, tmpl(), text_col="text")
+        exploded, m2 = build_sketch(tokens(docs).withColumn("id", key_id_col("token")), tmpl(), id_col="id")
+    finally:
+        for k, v in old.items():
+            spark.conf.set(k, v)
+    n_tokens = sum(len([t for t in r.split(" ") if t]) for r in EDGE_ROWS if r is not None)
+    assert m1["n_updates"] == m2["n_updates"] == n_tokens
+    assert m1["n_rows"] == len(EDGE_ROWS)
+    assert fused.to_bytes() == exploded.to_bytes()
 
 
 def test_build_is_deterministic_partition_order_fold(spark):

@@ -15,7 +15,10 @@ sys.path.insert(0, {REPO!r})
 from heavy_hitters_spark.spark import get_spark
 
 s = get_spark()
-print("PROBE", s.sparkContext.master, s.conf.get("spark.sql.shuffle.partitions"))
+print("PROBE", s.sparkContext.master, *(s.conf.get(k) for k in (
+    "spark.sql.shuffle.partitions", "spark.driver.memory", "spark.ui.enabled",
+    "spark.sql.execution.arrow.maxRecordsPerBatch",
+)))
 s.stop()
 """
 
@@ -33,8 +36,12 @@ def test_spark_submit_master_and_confs_take_effect(tmp_path):
     submit = os.path.join(_find_spark_home(), "bin", "spark-submit")
     env = dict(os.environ, PYSPARK_PYTHON=sys.executable, PYSPARK_DRIVER_PYTHON=sys.executable)
     out = subprocess.run(
-        [submit, "--master", "local[3]", "--conf", "spark.sql.shuffle.partitions=7", str(probe)],
+        [submit, "--master", "local[3]", "--driver-memory", "2g",
+         "--conf", "spark.sql.shuffle.partitions=7", "--conf", "spark.ui.enabled=true",
+         "--conf", "spark.sql.execution.arrow.maxRecordsPerBatch=1000", str(probe)],
         capture_output=True, text=True, env=env, timeout=600, check=True,
     ).stdout
     line = [ln for ln in out.splitlines() if ln.startswith("PROBE ")][-1]
-    assert line.split()[1:] == ["local[3]", "7"]
+    # get_spark sets driver memory, the UI and the batch size too, but
+    # only where the submit left them unset
+    assert line.split()[1:] == ["local[3]", "7", "2g", "true", "1000"]
