@@ -4,10 +4,17 @@
 - n-gram Jaccard similarity   map-side shingle hashing + bucket
                               pair-expansion kernel + Catalyst count
                               aggregation
-- MinHash + LSH near-dup      signatures in an Arrow pandas kernel,
+- MinHash + LSH near-dup      signatures in an arrow_udf kernel,
                               banding + bucket-join in DataFrame ops,
                               exact-Jaccard verification on candidates
 - SimHash near-dup            64-bit simhash + hamming-ball bucket join
+
+Python kernels take Arrow arrays and return Arrow arrays: the per-row
+ones (MinHash, SimHash) are ``arrow_udf``s, the whole-partition ones
+(bucket pairs, SimHash verify) ``mapInArrow`` tasks. A batch of
+per-document hash arrays is read as one flat vector plus its row
+lengths (``_list_segments``) and reduced per document by numpy
+``reduceat`` — no pandas and no per-row Python.
 
 Scale shape: every candidate-generation join is on a *bucket key*
 (band hash / simhash chunk), never a cross join; verification touches
@@ -20,7 +27,8 @@ to the raw text and hashes shingles for the matched rows only
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, LongType
@@ -140,7 +148,7 @@ def jaccard_pairs(
 
     Physical shape note (round 6): a two-kernel rewrite (sizes attached
     to shingle rows, pair-count fold + threshold filter in a second
-    mapInPandas) was measured and REJECTED — the extra 126M-row
+    Python partition kernel) was measured and REJECTED — the extra 126M-row
     JVM->Python->JVM round-trip (5 GB each way at sf1.0) cost far more
     than the Catalyst groupBy it replaced (107 s vs 21.6 s noop walls);
     a 16g driver-heap variant and shuffle-partition sweeps (64/128/200)
@@ -247,17 +255,14 @@ def _bucket_pairs_all(
     )
 
 
-def _pair_indices_by_size(key: np.ndarray, ids: np.ndarray, max_bucket_size: int | None):
-    """Vectorized in-kernel bucket pair expansion: sort by (bucket, id),
-    find bucket boundaries, then expand i<j index pairs for ALL buckets
-    of each distinct size at once (offsets[:, None] + triu template) —
-    no per-bucket Python loop, no per-group array allocation. Returns
-    (order, ai, bi): the lexsort order plus pair indices INTO THE SORTED
-    arrays with ids[order][ai] < ids[order][bi] STRICTLY (a final mask
-    drops the self-pairs that duplicate (bucket, id) input rows would
-    otherwise produce from positional i<j expansion), so callers can
-    gather ids AND any per-row payload (e.g. set sizes) at the pair
-    positions."""
+def _pairs_by_size(key: np.ndarray, ids: np.ndarray, max_bucket_size: int | None):
+    """(doc_a, doc_b) value pairs with doc_a < doc_b, one per (bucket,
+    pair) co-occurrence — the contract of the Catalyst reference
+    (_bucket_pairs_all). Vectorized in-kernel expansion: sort by
+    (bucket, id), find bucket boundaries, then expand i<j index pairs
+    for ALL buckets of each distinct size at once (offsets[:, None] +
+    triu template) — no per-bucket Python loop, no per-group array
+    allocation."""
     order = np.lexsort((ids, key))
     k_s, id_s = key[order], ids[order]
     bounds = np.flatnonzero(np.r_[True, k_s[1:] != k_s[:-1], True])
@@ -270,28 +275,15 @@ def _pair_indices_by_size(key: np.ndarray, ids: np.ndarray, max_bucket_size: int
     for m in np.unique(szs):
         o = offs[szs == m]  # all buckets of this size, vectorized
         ti, tj = np.triu_indices(int(m), k=1)
-        out_a.append((o[:, None] + ti[None, :]).ravel())
-        out_b.append((o[:, None] + tj[None, :]).ravel())
+        out_a.append(id_s[(o[:, None] + ti[None, :]).ravel()])
+        out_b.append(id_s[(o[:, None] + tj[None, :]).ravel()])
     if not out_a:
-        e = np.empty(0, dtype=np.int64)
-        return order, e, e
-    ai = np.concatenate(out_a)
-    bi = np.concatenate(out_b)
-    # ids ascend within a bucket, so positional i<j gives id_s[ai] <=
-    # id_s[bi]; equality happens exactly for duplicated (bucket, id) rows
-    strict = id_s[ai] < id_s[bi]
-    if not strict.all():
-        ai, bi = ai[strict], bi[strict]
-    return order, ai, bi
-
-
-def _pairs_by_size(key: np.ndarray, ids: np.ndarray, max_bucket_size: int | None):
-    """(doc_a, doc_b) value pairs with doc_a < doc_b, matching the
-    Catalyst reference (_bucket_pairs_all) contract for any caller —
-    thin wrapper over _pair_indices_by_size."""
-    order, ai, bi = _pair_indices_by_size(key, ids, max_bucket_size)
-    id_s = ids[order]
-    return id_s[ai], id_s[bi]
+        return id_s[:0], id_s[:0]
+    a, b = np.concatenate(out_a), np.concatenate(out_b)
+    # ids ascend within a bucket, so positional i<j gives a <= b;
+    # equality happens exactly for duplicated (bucket, id) rows
+    strict = a < b
+    return a[strict], b[strict]
 
 
 def _bucket_pairs_all_kernel(
@@ -309,27 +301,22 @@ def _bucket_pairs_all_kernel(
     (pair, count) rows. Downstream sums partials per pair (buckets never
     span partitions, pairs may)."""
 
-    def part_fn(pdfs):
+    def part_fn(batches):
         from ..core import memtune  # noqa: F401
 
-        pdfs = list(pdfs)
-        if not pdfs:
+        batches = list(batches)
+        if not batches:
             return
-        pdf = pd.concat(pdfs, ignore_index=True)
-        key = pdf[bucket_col].to_numpy()
-        ids = pdf[id_col].to_numpy()
-        a, b = _pairs_by_size(key, ids, max_bucket_size)
+        tbl = pa.Table.from_batches(batches)
+        a, b = _pairs_by_size(tbl[bucket_col].to_numpy(), tbl[id_col].to_numpy(), max_bucket_size)
         if not len(a):
             return
         order = np.lexsort((b, a))
         a_s, b_s = a[order], b[order]
         bnd = np.flatnonzero(np.r_[True, (a_s[1:] != a_s[:-1]) | (b_s[1:] != b_s[:-1]), True])
-        yield pd.DataFrame(
-            {
-                "doc_a": a_s[bnd[:-1]],
-                "doc_b": b_s[bnd[:-1]],
-                "cnt": np.diff(bnd).astype(np.int64),
-            }
+        yield pa.RecordBatch.from_arrays(
+            [a_s[bnd[:-1]], b_s[bnd[:-1]], np.diff(bnd).astype(np.int64)],
+            names=["doc_a", "doc_b", "cnt"],
         )
 
     # EXPLICIT partition count (exempt from AQE coalescing): without it
@@ -341,7 +328,7 @@ def _bucket_pairs_all_kernel(
     # host stall lands 1:1 on the wall). Pair cost scales with
     # sum(m^2) per bucket, not bytes, so byte-based coalescing is the
     # wrong policy here (the count: _kernel_partitions).
-    return keyed.repartition(_kernel_partitions(keyed), F.col(bucket_col)).mapInPandas(
+    return keyed.repartition(_kernel_partitions(keyed), F.col(bucket_col)).mapInArrow(
         part_fn, "doc_a long, doc_b long, cnt long"
     )
 
@@ -431,32 +418,29 @@ def minhash_col(text_col, n_hashes: int = 128, shingle_n: int = 3, seed: int = 0
 
     Shingle hashing is JVM-side (shingle_hashes_col); the Arrow kernel
     only computes the n_hashes affine minima over the hash arrays — one
-    flatten + n_hashes (multiply, add, segmented-min) C passes per
+    flat vector + n_hashes (multiply, add, segmented-min) C passes per
     batch, no per-token Python anywhere. Signatures are bit-identical
     to hashing driver-side with spark.keys.xxh64 (same seed-42 xxhash64)."""
-    from pyspark.sql.functions import pandas_udf
+    from pyspark.sql.functions import arrow_udf
 
-    from .segmented import flatten_segments, segment_min
-
-    @pandas_udf(ArrayType(LongType()))
-    def _mh(hashes: pd.Series) -> pd.Series:
+    @arrow_udf(ArrayType(LongType()))
+    def _mh(hashes: pa.Array) -> pa.Array:
         from ..core import memtune  # noqa: F401
 
         n = len(hashes)
-        if n == 0:
-            return pd.Series([], dtype=object)
         # per-hash affine mixers a*x+b over splitmix-derived constants
         ab = splitmix64(np.arange(2 * n_hashes, dtype=np.uint64), seed)
         a = ab[:n_hashes] | np.uint64(1)
         b = ab[n_hashes:]
-        flat, starts, _, nz = flatten_segments(hashes)
-        sig = np.empty((n, n_hashes), dtype=np.uint64)
-        with np.errstate(over="ignore"):
-            for j in range(n_hashes):
-                sig[nz, j] = segment_min(a[j] * flat + b[j], starts)
-        sig[~nz] = np.uint64(0)  # unreachable: every doc has >= 1 shingle
-        out = sig.view(np.int64)
-        return pd.Series([row.tolist() for row in out])
+        flat, starts, _, nz = _list_segments(hashes)
+        # empty rows stay 0 (unreachable: every doc has >= 1 shingle)
+        sig = np.zeros((n, n_hashes), dtype=np.uint64)
+        if len(flat):
+            with np.errstate(over="ignore"):
+                for j in range(n_hashes):
+                    sig[nz, j] = np.minimum.reduceat(a[j] * flat + b[j], starts)
+        offsets = np.arange(0, n * n_hashes + 1, n_hashes, dtype=np.int32)
+        return pa.ListArray.from_arrays(offsets, sig.view(np.int64).ravel())
 
     return _mh(shingle_hashes_col(text_col, shingle_n))
 
@@ -588,57 +572,52 @@ def token_hashes_col(text_col):
     ).otherwise(F.array().cast("array<long>"))
 
 
+def _list_segments(arr: pa.Array) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
+    """A batch of ``array<long>`` rows as (flat uint64 values, starts and
+    lengths of the non-empty rows, non-empty mask). ``flatten()`` honours
+    a sliced batch's offset and skips null rows, which count as empty;
+    ``starts`` index ``flat`` for ``np.*.reduceat``, which needs every
+    segment non-empty."""
+    lens = pc.list_value_length(arr).fill_null(0).to_numpy().astype(np.int64)
+    nz = lens > 0
+    lens_nz = lens[nz]
+    starts = np.zeros(len(lens_nz), dtype=np.int64)
+    np.cumsum(lens_nz[:-1], out=starts[1:])
+    flat = arr.flatten().to_numpy(zero_copy_only=False).view(np.uint64)
+    return flat, starts, lens_nz, nz
+
+
+def _simhash_bits(hv: np.ndarray, starts: np.ndarray, lens: np.ndarray) -> np.ndarray:
+    """Per-segment SimHash of the mixed token hashes ``hv``: bit b is
+    set where more than half of the segment's tokens have bit b set
+    (the sign of the +-1 sum). All 64 bits are unpacked into one
+    (tokens, 64) matrix (little-endian byte view + bitorder="little"
+    puts bit b in column b) and reduced in ONE segmented sum; the
+    uint32 accumulator is exact up to 2^32 tokens per segment."""
+    bits = np.unpackbits(hv.view(np.uint8).reshape(-1, 8), axis=1, bitorder="little")
+    pop = np.add.reduceat(bits, starts, axis=0, dtype=np.uint32)
+    over = 2 * pop.astype(np.int64) > lens[:, None]
+    return np.packbits(over, axis=1, bitorder="little").view(np.uint64).ravel()
+
+
 def simhash_col(text_col, seed: int = 0x51AA):
     """64-bit SimHash over whitespace tokens (sign of per-bit weight
-    sums). Token hashing is JVM-side; the Arrow kernel unpacks all 64
-    bits of the flattened hash vector into one (tokens, 64) bit matrix
-    and takes a single segmented sum over it (falls back to 64
-    shift+mask+segmented-sum passes for docs with >= 2^16 tokens) — no
-    per-token Python either way. Bit-identical to the driver-side
-    xxh64+splitmix64 chain and to the loop form (unit-pinned)."""
-    from pyspark.sql.functions import pandas_udf
+    sums). Token hashing is JVM-side; the Arrow kernel mixes the flat
+    hash vector and reduces it per document in one segmented sum
+    (``_simhash_bits``) — no per-token Python. Bit-identical to the
+    driver-side xxh64+splitmix64 chain and to the per-bit loop form
+    (unit-pinned)."""
+    from pyspark.sql.functions import arrow_udf
 
-    from .segmented import flatten_segments, segment_sum
-
-    @pandas_udf(LongType())
-    def _sh(hashes: pd.Series) -> pd.Series:
+    @arrow_udf(LongType())
+    def _sh(hashes: pa.Array) -> pa.Array:
         from ..core import memtune  # noqa: F401
 
-        n = len(hashes)
-        if n == 0:
-            return pd.Series([], dtype="int64")
-        flat, starts, lens_nz, nz = flatten_segments(hashes)
-        out = np.zeros(n, dtype=np.int64)
+        flat, starts, lens_nz, nz = _list_segments(hashes)
+        out = np.zeros(len(hashes), dtype=np.int64)
         if len(flat):
-            hv = splitmix64(flat, seed)
-            if len(lens_nz) and lens_nz.max() < (1 << 16):
-                # vectorized form: unpack all 64 bits at once (little-
-                # endian byte view + bitorder="little" puts bit b of the
-                # uint64 in column b) and do ONE segmented reduce over
-                # the (n_tokens, 64) matrix — ~4x less memory traffic
-                # than 64 separate shift+mask+reduceat passes. uint16
-                # accumulator is exact for per-doc token counts < 2^16
-                # (the guard above); longer docs take the loop below.
-                bits = np.unpackbits(
-                    hv.view(np.uint8).reshape(-1, 8), axis=1, bitorder="little"
-                )
-                pop = np.add.reduceat(bits.astype(np.uint16), starts, axis=0)
-                cmp = (2 * pop.astype(np.int64)) > lens_nz[:, None]
-                sh = (
-                    np.packbits(cmp.astype(np.uint8), axis=1, bitorder="little")
-                    .view(np.uint64)
-                    .ravel()
-                )
-            else:
-                sh = np.zeros(len(lens_nz), dtype=np.uint64)
-                one = np.uint64(1)
-                for b in range(64):
-                    ones = ((hv >> np.uint64(b)) & one).astype(np.int64)
-                    pop = segment_sum(ones, starts)  # per-doc popcount of bit b
-                    # sign of sum(+-1) == (2*pop > len)
-                    sh |= ((2 * pop > lens_nz).astype(np.uint64)) << np.uint64(b)
-            out[nz] = sh.view(np.int64)
-        return pd.Series(out)
+            out[nz] = _simhash_bits(splitmix64(flat, seed), starts, lens_nz).view(np.int64)
+        return pa.array(out)
 
     return _sh(token_hashes_col(text_col))
 
@@ -701,7 +680,7 @@ def near_dup_pairs_simhash(
     ).select(id_col, "sh", F.col("c.ck").alias("ck"), F.col("c.cv").alias("cv"))
     cap = max_bucket_size
     # per-bucket pairwise popcount verify as a VECTORIZED numpy kernel:
-    # repartition by bucket key + mapInPandas with IN-KERNEL grouping
+    # repartition by bucket key + mapInArrow with IN-KERNEL grouping
     # (np boundary detection) — one Python invocation per partition, not
     # per bucket (applyInPandas over thousands of tiny buckets measured
     # ~4 s of pure per-group overhead on 5k docs). Hot buckets cost
@@ -734,19 +713,19 @@ def near_dup_pairs_simhash(
     def part_fn(batches):
         from ..core import memtune  # noqa: F401
 
-        pdfs = list(batches)  # groups are whole within a partition
-        if not pdfs:
+        batches = list(batches)  # groups are whole within a partition
+        if not batches:
             return
-        pdf = pd.concat(pdfs, ignore_index=True)
+        tbl = pa.Table.from_batches(batches)
         # packed (ck, cv) bucket key: cv < 2^32 is guaranteed here
         # because n_chunks >= 2 (radius 0 short-circuits above) bounds
         # chunk widths at ceil(64/2) = 32 bits
-        key = (pdf["ck"].to_numpy().astype(np.int64) << 32) | pdf["cv"].to_numpy().astype(np.int64)
-        ids0 = pdf[id_col].to_numpy()
+        key = (tbl["ck"].to_numpy().astype(np.int64) << 32) | tbl["cv"].to_numpy()
+        ids0 = tbl[id_col].to_numpy()
         # sort by (bucket, id): groups contiguous, ids ascending in-group
         order = np.lexsort((ids0, key))
         ids_s, keys = ids0[order], key[order]
-        sig_s = pdf["sh"].to_numpy()[order].astype(np.int64).view(np.uint64)
+        sig_s = tbl["sh"].to_numpy()[order].view(np.uint64)
         bounds = np.flatnonzero(np.r_[True, keys[1:] != keys[:-1], True])
         out_a, out_b, out_h = [], [], []
         for g0, g1 in zip(bounds[:-1], bounds[1:]):
@@ -777,12 +756,9 @@ def near_dup_pairs_simhash(
                 out_b.append(ids[ci + i0])
                 out_h.append(pc[ri, ci].astype(np.int64))
         if out_a:
-            yield pd.DataFrame(
-                {
-                    "doc_a": np.concatenate(out_a),
-                    "doc_b": np.concatenate(out_b),
-                    "hamming": np.concatenate(out_h),
-                }
+            yield pa.RecordBatch.from_arrays(
+                [np.concatenate(out_a), np.concatenate(out_b), np.concatenate(out_h)],
+                names=["doc_a", "doc_b", "hamming"],
             )
 
     # explicit numPartitions for the same reason as
@@ -790,7 +766,7 @@ def near_dup_pairs_simhash(
     # CPU-quadratic in bucket size, so AQE's byte-based coalescing
     # (which collapsed this exchange to 1-2 tasks at sf0.1) both
     # serializes the work and amplifies single-worker host stalls
-    res = chunks.repartition(_kernel_partitions(chunks), F.col("ck"), F.col("cv")).mapInPandas(
+    res = chunks.repartition(_kernel_partitions(chunks), F.col("ck"), F.col("cv")).mapInArrow(
         part_fn, "doc_a long, doc_b long, hamming long"
     )
     # uncapped: first-agreeing-chunk emission already yields each pair

@@ -10,13 +10,20 @@
 At 100 TB the brute-force path is a single map-side pass per query
 batch (no shuffle; queries broadcast); the LSH path trades recall for a
 bucket-join. Both return exact cosine scores for everything they emit.
+
+The Python kernels take and return Arrow arrays: the per-row ones
+(LSH signatures, IVF cell) are ``arrow_udf``s, the per-partition ones
+(scoring, cosine verify) ``mapInArrow`` tasks. A batch of embeddings is
+read as one (rows, dim) matrix (``_matrix``) — no pandas and no
+per-row Python.
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
-from pyspark.sql import DataFrame
+import pyarrow as pa
+import pyarrow.compute as pc
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
@@ -35,6 +42,38 @@ def _normalize(mat: np.ndarray) -> np.ndarray:
     return mat / n
 
 
+def _matrix(vecs: pa.Array, dim: int) -> np.ndarray:
+    """A batch of ``array<float|double>`` rows as one float64 (rows,
+    dim) matrix, read off the flattened values. A row of any other
+    length (a null row counts as length 0) raises ``ValueError``."""
+    lens = pc.list_value_length(vecs).fill_null(0).to_numpy()
+    if (lens != dim).any():
+        raise ValueError(f"embedding rows must have length {dim}, got {lens.min()} to {lens.max()}")
+    return vecs.flatten().to_numpy(zero_copy_only=False).astype(np.float64).reshape(len(vecs), dim)
+
+
+def _ranked_topk(src: DataFrame, score_fn, k: int, id_col: str) -> DataFrame:
+    """The global top-k per query over the (query_id, id, score) rows
+    that ``score_fn`` (a ``mapInArrow`` task over ``src``) emits: rank
+    by score descending, then id ascending; scores rounded to 6
+    places."""
+    schema = StructType(
+        [
+            StructField("query_id", LongType()),
+            StructField(id_col, LongType()),
+            StructField("score", DoubleType()),
+        ]
+    )
+    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc(id_col))
+    return (
+        src.mapInArrow(score_fn, schema)
+        .withColumn("rank", F.row_number().over(w))
+        .where(F.col("rank") <= k)
+        .select("query_id", id_col, F.round("score", 6).alias("score"), "rank")
+        .orderBy("query_id", "rank")
+    )
+
+
 def brute_force_topk(
     emb: DataFrame,
     queries: np.ndarray,
@@ -47,46 +86,26 @@ def brute_force_topk(
     finishes it (total shuffled rows = k * partitions * n_queries)."""
     q = _normalize(np.asarray(queries, dtype=np.float64))
     nq = q.shape[0]
-    schema = StructType(
-        [
-            StructField("query_id", LongType()),
-            StructField(id_col, LongType()),
-            StructField("score", DoubleType()),
-        ]
-    )
 
     def part_topk(batches):
         from ..core import memtune  # noqa: F401
 
-        ids_all, score_all = [], []
-        for pdf in batches:
-            if not len(pdf):
+        for batch in batches:
+            if not batch.num_rows:
                 continue
-            mat = np.stack(pdf[vec_col].to_numpy())
-            mat = _normalize(mat.astype(np.float64))
-            scores = q @ mat.T  # nq x batch
-            ids = pdf[id_col].to_numpy()
+            scores = q @ _normalize(_matrix(batch[vec_col], q.shape[1])).T  # nq x batch
             kk = min(k, scores.shape[1])
             top = np.argpartition(-scores, kk - 1, axis=1)[:, :kk]
-            for qi in range(nq):
-                ids_all.append(np.column_stack([np.full(kk, qi), ids[top[qi]]]))
-                score_all.append(scores[qi, top[qi]])
-        if not ids_all:
-            return
-        idm = np.concatenate(ids_all)
-        sc = np.concatenate(score_all)
-        yield pd.DataFrame({"query_id": idm[:, 0], id_col: idm[:, 1], "score": sc})
+            yield pa.RecordBatch.from_arrays(
+                [
+                    np.repeat(np.arange(nq, dtype=np.int64), kk),
+                    batch[id_col].to_numpy()[top.ravel()],
+                    np.take_along_axis(scores, top, axis=1).ravel(),
+                ],
+                names=["query_id", id_col, "score"],
+            )
 
-    local = emb.select(id_col, vec_col).mapInPandas(part_topk, schema)
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc(id_col))
-    return (
-        local.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", id_col, F.round("score", 6).alias("score"), "rank")
-        .orderBy("query_id", "rank")
-    )
+    return _ranked_topk(emb.select(id_col, vec_col), part_topk, k, id_col)
 
 
 def _random_planes(n_planes: int, dim: int, seed: int) -> np.ndarray:
@@ -141,35 +160,20 @@ def _rescore_topk(
     global top-k per query — the shared tail of every ANN variant.
     One Arrow pass for the dot products; the window tops out at
     k * candidates-per-query shuffled rows."""
-    schema = StructType(
-        [
-            StructField("query_id", LongType()),
-            StructField(id_col, LongType()),
-            StructField("score", DoubleType()),
-        ]
-    )
 
     def rescore(batches):
         from ..core import memtune  # noqa: F401
 
-        for pdf in batches:
-            if not len(pdf):
+        for batch in batches:
+            if not batch.num_rows:
                 continue
-            mat = _normalize(np.stack(pdf[vec_col].to_numpy()).astype(np.float64))
-            qi = pdf["query_id"].to_numpy()
-            sc = np.einsum("ij,ij->i", q[qi], mat)
-            yield pd.DataFrame({"query_id": qi, id_col: pdf[id_col].to_numpy(), "score": sc})
+            qi = batch["query_id"].to_numpy()
+            sc = np.einsum("ij,ij->i", q[qi], _normalize(_matrix(batch[vec_col], q.shape[1])))
+            yield pa.RecordBatch.from_arrays(
+                [qi, batch[id_col].to_numpy(), sc], names=["query_id", id_col, "score"]
+            )
 
-    scored = cand.mapInPandas(rescore, schema)
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc(id_col))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", id_col, F.round("score", 6).alias("score"), "rank")
-        .orderBy("query_id", "rank")
-    )
+    return _ranked_topk(cand, rescore, k, id_col)
 
 
 def multitable_sig_col(
@@ -178,23 +182,22 @@ def multitable_sig_col(
     """array<long> of hyperplane sign-bucket ids, one per LSH table —
     ALL tables in one Arrow kernel pass (one matmul against the stacked
     plane matrix), instead of n_tables separate UDF scans."""
-    from pyspark.sql.functions import pandas_udf
+    from pyspark.sql.functions import arrow_udf
 
     planes = np.concatenate(
         [_random_planes(n_planes, dim, seed_base + seed_step * t) for t in range(n_tables)]
     )  # (n_tables*n_planes) x dim
     weights = 1 << np.arange(n_planes, dtype=np.int64)
 
-    @pandas_udf(ArrayType(LongType()))
-    def _sig(s: pd.Series) -> pd.Series:
+    @arrow_udf(ArrayType(LongType()))
+    def _sig(vecs: pa.Array) -> pa.Array:
         from ..core import memtune  # noqa: F401
 
-        if not len(s):
-            return pd.Series([], dtype=object)
-        mat = np.stack(s.to_numpy()).astype(np.float64)
-        bits = (mat @ planes.T) > 0  # n x (tables*planes)
-        sigs = bits.reshape(len(mat), n_tables, n_planes) @ weights  # n x tables
-        return pd.Series([row.tolist() for row in sigs])
+        n = len(vecs)
+        bits = (_matrix(vecs, dim) @ planes.T) > 0  # n x (tables*planes)
+        sigs = bits.reshape(n, n_tables, n_planes) @ weights  # n x tables
+        offsets = np.arange(0, n * n_tables + 1, n_tables, dtype=np.int32)
+        return pa.ListArray.from_arrays(offsets, sigs.ravel())
 
     return _sig(vec_col if not isinstance(vec_col, str) else F.col(vec_col))
 
@@ -254,23 +257,18 @@ def cosine_near_dup_pairs(
     def cos_fn(batches):
         from ..core import memtune  # noqa: F401
 
-        for pdf in batches:
-            if not len(pdf):
+        for batch in batches:
+            if not batch.num_rows:
                 continue
-            a = np.stack(pdf["va"].to_numpy()).astype(np.float64)
-            b = np.stack(pdf["vb"].to_numpy()).astype(np.float64)
+            a, b = _matrix(batch["va"], dim), _matrix(batch["vb"], dim)
             dot = np.einsum("ij,ij->i", a, b)
             na = np.sqrt(np.einsum("ij,ij->i", a, a))
             nb = np.sqrt(np.einsum("ij,ij->i", b, b))
-            yield pd.DataFrame(
-                {
-                    "id_a": pdf["id_a"].to_numpy(),
-                    "id_b": pdf["id_b"].to_numpy(),
-                    "cosine": dot / (na * nb),
-                }
+            yield pa.RecordBatch.from_arrays(
+                [batch["id_a"], batch["id_b"], dot / (na * nb)], names=["id_a", "id_b", "cosine"]
             )
 
-    scored = folded.mapInPandas(cos_fn, "id_a long, id_b long, cosine double")
+    scored = folded.mapInArrow(cos_fn, "id_a long, id_b long, cosine double")
     return (
         scored.where(F.col("cosine") >= threshold)
         .select("id_a", "id_b", F.round("cosine", 6).alias("cosine"))
@@ -344,18 +342,16 @@ def train_ivf_centroids(
 
 def ivf_assign_col(vec_col, centroids: np.ndarray):
     """int: nearest-centroid cell id (one Arrow-batched matmul)."""
-    from pyspark.sql.functions import pandas_udf
+    from pyspark.sql.functions import arrow_udf
 
     cent = np.asarray(centroids, dtype=np.float64)
 
-    @pandas_udf(LongType())
-    def _cell(s: pd.Series) -> pd.Series:
+    @arrow_udf(LongType())
+    def _cell(vecs: pa.Array) -> pa.Array:
         from ..core import memtune  # noqa: F401
 
-        if not len(s):
-            return pd.Series([], dtype="int64")
-        mat = _normalize(np.stack(s.to_numpy()).astype(np.float64))
-        return pd.Series((mat @ cent.T).argmax(axis=1).astype(np.int64))
+        mat = _normalize(_matrix(vecs, cent.shape[1]))
+        return pa.array((mat @ cent.T).argmax(axis=1).astype(np.int64))
 
     return _cell(vec_col if not isinstance(vec_col, str) else F.col(vec_col))
 

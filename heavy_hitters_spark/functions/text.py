@@ -1,13 +1,16 @@
 """Text-analysis operators for training-data pipelines (brief: language
 ID, quality scoring, token counting, document fingerprinting). All hot
 paths are stock Catalyst expressions (codegen, no Python) except the
-rolling-hash fingerprint, which is an Arrow-batched pandas kernel.
+language-ID marker count and the rolling-hash fingerprint: tokens are
+hashed JVM-side and one ``arrow_udf`` per operator reduces each
+document's hash array in numpy (``dedup._list_segments``), Arrow arrays
+in and out.
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType
@@ -77,11 +80,10 @@ def lang_id(df: DataFrame, text_col: str = "text") -> DataFrame:
     maximum). Marker identity is 64-bit xxhash equality — the same
     hash-identity contract as the shingle/dedup operators (a non-marker
     token colliding with a marker hash at ~2^-64 would miscount)."""
-    from pyspark.sql.functions import pandas_udf
+    from pyspark.sql.functions import arrow_udf
 
     from ..spark.keys import xxh64
-    from .dedup import _widen_narrow_scan, token_hashes_col
-    from .segmented import flatten_segments, segment_sum
+    from .dedup import _list_segments, _widen_narrow_scan, token_hashes_col
 
     langs = list(LANG_MARKERS)  # tie-break order
     marker_hashes = [
@@ -89,29 +91,28 @@ def lang_id(df: DataFrame, text_col: str = "text") -> DataFrame:
         for lg in langs
     ]
 
-    @pandas_udf("pred_lang string, marker_hits long")
-    def _lid(hashes: pd.Series) -> pd.DataFrame:
+    @arrow_udf("pred_lang string, marker_hits long")
+    def _lid(hashes: pa.Array) -> pa.Array:
         from ..core import memtune  # noqa: F401
 
-        n = len(hashes)
-        pred = np.full(n, "und", dtype=object)
-        hits = np.zeros(n, dtype=np.int64)
-        if n:
-            flat, starts, lens_nz, nz = flatten_segments(hashes)
-            if len(flat):
-                scores = np.empty((len(langs), len(starts)), dtype=np.int64)
-                for li, mh in enumerate(marker_hashes):
-                    pos = np.searchsorted(mh, flat)
-                    pos[pos == len(mh)] = 0
-                    hit = (mh[pos] == flat).astype(np.int64)
-                    scores[li] = segment_sum(hit, starts)
-                best = np.argmax(scores, axis=0)  # first max = langs order
-                best_s = scores[best, np.arange(len(starts))]
-                hits[nz] = best_s
-                lang_arr = np.array(langs, dtype=object)
-                pred_nz = np.where(best_s > 0, lang_arr[best], "und")
-                pred[nz] = pred_nz
-        return pd.DataFrame({"pred_lang": pred, "marker_hits": hits})
+        flat, starts, _, nz = _list_segments(hashes)
+        # index into langs + ["und"]: rows without a marker hit stay "und"
+        pred = np.full(len(hashes), len(langs), dtype=np.int64)
+        hits = np.zeros(len(hashes), dtype=np.int64)
+        if len(flat):
+            scores = np.empty((len(langs), len(starts)), dtype=np.int64)
+            for li, mh in enumerate(marker_hashes):
+                pos = np.searchsorted(mh, flat)
+                pos[pos == len(mh)] = 0
+                scores[li] = np.add.reduceat((mh[pos] == flat).astype(np.int64), starts)
+            best = np.argmax(scores, axis=0)  # first max = langs order
+            best_s = scores[best, np.arange(len(starts))]
+            hits[nz] = best_s
+            pred[nz] = np.where(best_s > 0, best, len(langs))
+        return pa.StructArray.from_arrays(
+            [pa.array(langs + ["und"]).take(pred), pa.array(hits)],
+            names=["pred_lang", "marker_hits"],
+        )
 
     df = _widen_narrow_scan(df)
     th = token_hashes_col(F.lower(F.col(text_col)))
@@ -131,21 +132,17 @@ def fingerprint_col(text: str | Column = "text", seed: int = 0xF1E5) -> Column:
     Token hashing is JVM-side (xxhash64 in an array transform); the
     Arrow kernel computes the power table once per batch and reduces
     each document with one segmented uint64 sum — no per-token Python."""
-    from pyspark.sql.functions import pandas_udf
+    from pyspark.sql.functions import arrow_udf
 
-    from .dedup import token_hashes_col
-    from .segmented import flatten_segments, segment_sum
+    from .dedup import _list_segments, token_hashes_col
 
-    @pandas_udf(LongType())
-    def _fp(hashes: pd.Series) -> pd.Series:
+    @arrow_udf(LongType())
+    def _fp(hashes: pa.Array) -> pa.Array:
         from ..core import memtune  # noqa: F401
 
-        n = len(hashes)
-        if n == 0:
-            return pd.Series([], dtype="int64")
         P = np.uint64(1099511628211)  # FNV-ish odd multiplier
-        flat, starts, lens_nz, nz = flatten_segments(hashes)
-        out = np.full(n, np.int64(np.uint64(seed).view(np.int64)), dtype=np.int64)
+        flat, starts, lens_nz, nz = _list_segments(hashes)
+        out = np.full(len(hashes), np.uint64(seed).view(np.int64), dtype=np.int64)
         if len(flat):
             with np.errstate(over="ignore"):
                 th = splitmix64(flat, seed)
@@ -156,9 +153,9 @@ def fingerprint_col(text: str | Column = "text", seed: int = 0xF1E5) -> Column:
                 # exponent of token j in doc: len - 1 - position
                 pos = np.arange(len(flat), dtype=np.int64) - np.repeat(starts, lens_nz)
                 expo = np.repeat(lens_nz, lens_nz) - 1 - pos
-                h = segment_sum(th * pw[expo], starts)  # wraps mod 2^64
+                h = np.add.reduceat(th * pw[expo], starts)  # wraps mod 2^64
                 h += np.uint64(seed) * pw[lens_nz]
             out[nz] = h.view(np.int64)
-        return pd.Series(out)
+        return pa.array(out)
 
     return _fp(token_hashes_col(text))

@@ -43,13 +43,11 @@ def get_spark(master: str | None = None, app: str = "heavy-hitters-spark") -> Sp
         "spark.ui.enabled": "false",
         # throughput collector: Arrow serialization allocates heavily and
         # G1's pause pattern penalizes many concurrent local task threads.
-        # Eight GC threads keep GC bursts from oversubscribing the cores
-        # the Python workers run on. SPARK_GRAFT_JAVA_OPTS is appended
-        # last, and HotSpot keeps the last value of a repeated flag, so a
-        # ParallelGCThreads given there wins. JVM options only apply when
-        # THIS call launches the JVM (see docstring).
+        # The GC thread count is the JVM's default. SPARK_GRAFT_JAVA_OPTS
+        # is appended, so GC flags given there apply. JVM options only
+        # apply when THIS call launches the JVM (see docstring).
         "spark.driver.extraJavaOptions": (
-            "-XX:+UseParallelGC -XX:ParallelGCThreads=8 " + os.environ.get("SPARK_GRAFT_JAVA_OPTS", "")
+            "-XX:+UseParallelGC " + os.environ.get("SPARK_GRAFT_JAVA_OPTS", "")
         ).strip(),
     }
     # spark-submit hands its JVM to the Python driver through this

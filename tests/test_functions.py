@@ -646,17 +646,19 @@ def test_widen_narrow_scan_contract(spark):
 
 
 def test_simhash_vectorized_equals_loop_form():
-    """The unpackbits matrix form of the simhash kernel must be
-    bit-identical to the 64-pass shift+mask loop (the >= 2^16-token
-    fallback) on the same hash vectors — including ties (2*pop == len,
-    sign bit 0) and single-token docs."""
+    """The library's one-pass simhash reduction (dedup._simhash_bits)
+    must be bit-identical to the 64-pass shift+mask loop on the same
+    hash vectors — including ties (2*pop == len, sign bit 0),
+    single-token docs and docs of more than 2^16 tokens, one of them
+    with per-bit counts past 2^16."""
     import numpy as np
 
-    from heavy_hitters_spark.functions.dedup import splitmix64
+    from heavy_hitters_spark.functions.dedup import _simhash_bits, splitmix64
 
     rng = np.random.RandomState(7)
-    lens = [1, 2, 3, 17, 250, 4096]
-    segs = [rng.randint(0, 2**63, size=m).astype(np.uint64) for m in lens]
+    lens = [1, 2, 3, 17, 250, 4096, 70_000, 70_000]
+    segs = [rng.randint(0, 2**63, size=m).astype(np.uint64) for m in lens[:-1]]
+    segs.append(np.full(lens[-1], segs[0][0]))  # per-bit counts of 0 or 70,000
     flat = np.concatenate(segs)
     starts = np.zeros(len(lens), dtype=np.int64)
     np.cumsum(np.array(lens[:-1]), out=starts[1:])
@@ -671,10 +673,105 @@ def test_simhash_vectorized_equals_loop_form():
         pop = np.add.reduceat(ones, starts)
         sh_ref |= ((2 * pop > lens_nz).astype(np.uint64)) << np.uint64(b)
 
-    # vectorized form (mirrors simhash_col's fast path)
-    bits = np.unpackbits(hv.view(np.uint8).reshape(-1, 8), axis=1, bitorder="little")
-    pop_m = np.add.reduceat(bits.astype(np.uint16), starts, axis=0)
-    cmp = (2 * pop_m.astype(np.int64)) > lens_nz[:, None]
-    sh_vec = np.packbits(cmp.astype(np.uint8), axis=1, bitorder="little").view(np.uint64).ravel()
+    assert np.array_equal(sh_ref, _simhash_bits(hv, starts, lens_nz))
 
-    assert np.array_equal(sh_ref, sh_vec)
+
+def _driver_kernel_refs(txt, n_hashes=16, shingle_n=3):
+    """Driver-side (minhash, simhash, fingerprint, lang_id) of one text
+    through spark.keys.xxh64 and splitmix64, with the seeds of the
+    library defaults. A null text is an empty token list, and its one
+    MinHash shingle hashes as Spark's xxhash64(null), the seed 42."""
+    from heavy_hitters_spark.core.hashing import splitmix64
+    from heavy_hitters_spark.functions.text import LANG_MARKERS
+    from heavy_hitters_spark.spark.keys import xxh64
+
+    toks = txt.split(" ") if txt else []
+    if txt is None:
+        hv = np.array([42], dtype=np.uint64)
+    else:
+        grams = [" ".join(toks)] if len(toks) < shingle_n else {
+            " ".join(toks[j : j + shingle_n]) for j in range(len(toks) - shingle_n + 1)
+        }
+        hv = np.array([xxh64(g.encode()) for g in grams], dtype=np.uint64)
+    ab = splitmix64(np.arange(2 * n_hashes, dtype=np.uint64), 0x51A5)
+    a, b = (ab[:n_hashes] | np.uint64(1))[:, None], ab[n_hashes:][:, None]
+    with np.errstate(over="ignore"):
+        mh = (a * hv[None, :] + b).min(axis=1).view(np.int64).tolist()
+    th = np.array([xxh64(t.encode()) for t in toks], dtype=np.uint64)
+    sh = 0
+    if toks:
+        bits = np.arange(64, dtype=np.uint64)
+        ones = ((splitmix64(th, 0x51AA)[:, None] >> bits) & np.uint64(1)).astype(np.int64)
+        v = (2 * ones - 1).sum(axis=0)
+        sh = int(np.uint64(((v > 0).astype(np.uint64) << bits).sum(dtype=np.uint64)).view(np.int64))
+    h, P = np.uint64(0xF1E5), np.uint64(1099511628211)
+    with np.errstate(over="ignore"):
+        for x in splitmix64(th, 0xF1E5):
+            h = h * P + x
+    scores = [sum(t in ms for t in (txt or "").lower().split(" ")) for ms in LANG_MARKERS.values()]
+    best = max(range(len(scores)), key=lambda i: (scores[i], -i))
+    lid = (list(LANG_MARKERS)[best], scores[best]) if scores[best] else ("und", 0)
+    return mh, sh, int(h.view(np.int64)), lid
+
+
+def test_kernel_edge_rows_small_batches(spark):
+    """The per-row Arrow kernels on edge rows in 3-row batches (many
+    short batches per task): null text, "", double spaces, docs shorter
+    than shingle_n and a doc of more than 2^16 tokens match the
+    driver-side references; the list-offset reader honours slices, null
+    rows and large_list; ragged embedding rows raise ValueError."""
+    import pyarrow as pa
+
+    from heavy_hitters_spark.functions.dedup import _list_segments, minhash_col, simhash_col
+    from heavy_hitters_spark.functions.similarity import _matrix, ivf_assign_col
+
+    long_doc = " ".join(("der", "und", "the", f"w{i % 997}")[i % 4] for i in range(70_000))
+    texts = [None, "", "x  y", "a b", "  the   the  ", long_doc, "single", None,
+             "the quick brown fox jumps over the lazy dog", "la la la", "der hund und die katze"]
+    df = spark.createDataFrame(list(enumerate(texts)), "doc_id long, text string").repartition(2)
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(conf)
+    spark.conf.set(conf, "3")
+    try:
+        got = {
+            r["doc_id"]: [None, r["sh"], r["fp"]]
+            for r in df.select(
+                "doc_id", simhash_col("text").alias("sh"), fingerprint_col("text").alias("fp")
+            ).collect()
+        }
+        # the long doc (id 5) skips MinHash: the Catalyst shingle
+        # expression is quadratic in a document's token count
+        short = df.where(F.col("doc_id") != 5)
+        for r in short.select("doc_id", minhash_col("text", n_hashes=16).alias("mh")).collect():
+            got[r["doc_id"]][0] = r["mh"]
+        lid = {r["doc_id"]: (r["pred_lang"], r["marker_hits"]) for r in lang_id(df).collect()}
+        emb = spark.createDataFrame(
+            [(0, [1.0, 0.0]), (1, [0.0, 1.0]), (2, [1.0, 1.0]), (3, [1.0]), (4, [0.5, 0.5])],
+            "vec_id long, embedding array<float>",
+        )
+        cells = emb.select(ivf_assign_col("embedding", np.eye(2)).alias("cell"))
+        with pytest.raises(Exception) as err:
+            cells.collect()
+        assert "ValueError" in str(err.value)
+    finally:
+        spark.conf.set(conf, old)
+    for i, txt in enumerate(texts):
+        mh, sh, fp, ref_lid = _driver_kernel_refs(txt)
+        assert got[i] == [None if i == 5 else mh, sh, fp], f"doc {i}"
+        assert lid[i] == ref_lid, f"doc {i}"
+    assert lid[5] == ("de", 35_000)
+
+    # null rows backed by non-empty value spans, sliced, and large_list
+    offsets, values = [0, 2, 4, 4, 5, 8, 10, 11], pa.array(range(1, 12), pa.int64())
+    mask = pa.array([False, True, False, False, False, True, False])
+    for arr in (pa.ListArray.from_arrays(offsets, values, mask=mask),
+                pa.LargeListArray.from_arrays(offsets, values, mask=mask)):
+        for part in (arr, arr.slice(1), arr.slice(3, 3)):
+            rows = part.to_pylist()
+            flat, starts, lens, nz = _list_segments(part)
+            assert flat.tolist() == [x for r in rows if r for x in r]
+            assert lens.tolist() == [len(r) for r in rows if r]
+            assert starts.tolist() == np.r_[0, np.cumsum(lens)[:-1]].tolist()
+            assert nz.tolist() == [bool(r) for r in rows]
+    with pytest.raises(ValueError):
+        _matrix(pa.array([[1.0, 2.0], [3.0]]), 2)

@@ -1,6 +1,7 @@
 """Local mimic of the driver's correctness gate: run each queries()
 entry on Spark and its oracle_sql() on DuckDB at sf0.01, compare row
-count / columns / order-insensitive values.
+count / columns / order-insensitive values. Each line ends with the
+query's Spark wall time (the query call plus ``toPandas``).
 
 Usage: python tools/check_oracles.py [query ...]
 """
@@ -8,6 +9,7 @@ Usage: python tools/check_oracles.py [query ...]
 from __future__ import annotations
 
 import sys
+import time
 
 import duckdb
 import pandas as pd
@@ -49,14 +51,16 @@ def main() -> None:
     for name, fn in qs.items():
         if only and name not in only:
             continue
+        t0 = time.perf_counter()
         try:
             sdf = fn(spark, SF).toPandas()
         except Exception as e:  # noqa: BLE001
             print(f"[FAIL] {name}: spark error {type(e).__name__}: {e}")
             failures.append(name)
             continue
+        wall = f" ({time.perf_counter() - t0:.2f} s)"
         if name not in oracles:
-            print(f"[rows-only] {name}: {len(sdf)} rows, cols={list(sdf.columns)}")
+            print(f"[rows-only] {name}: {len(sdf)} rows, cols={list(sdf.columns)}{wall}")
             continue
         try:
             odf = con.execute(oracles[name]).fetchdf()
@@ -80,11 +84,12 @@ def main() -> None:
             except AssertionError as e:
                 msg = str(e).splitlines()[0]
         if ok_cols and ok_rows and ok_vals:
-            print(f"[OK]   {name}: {len(a)} rows")
+            print(f"[OK]   {name}: {len(a)} rows{wall}")
         else:
             print(
                 f"[FAIL] {name}: rows {len(a)} vs {len(b)}, cols {list(a.columns)} vs {list(b.columns)}"
                 + ("" if ok_vals or not (ok_cols and ok_rows) else f", values: {msg}")
+                + wall
             )
             failures.append(name)
     spark.stop()
