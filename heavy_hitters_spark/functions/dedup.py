@@ -80,13 +80,19 @@ def dedup_exact(df: DataFrame, key_col: str = "text", id_col: str = "doc_id") ->
 
 def shingle_grams(toks, n: int):
     """array<string> of token n-grams; EMPTY array for docs with fewer
-    than n tokens (unguarded, F.sequence(0, size-n) is descending for
-    size<n and F.slice start 0 throws INVALID_PARAMETER_VALUE.START)."""
+    than n tokens (unguarded, a negative repeat count is an error and
+    F.slice start 0 throws INVALID_PARAMETER_VALUE.START). ``toks`` is
+    evaluated once per row: ``array_repeat`` hands it to the lambda as
+    its element, once per shingle."""
+    # a lambda that named ``toks`` would re-evaluate it (a split) per
+    # shingle, quadratic in the token count; binding it as an outer
+    # lambda variable instead leaves a Python UDF over the result
+    # unextractable in a self-union (the LSH candidate sides)
     return F.when(
         F.size(toks) >= n,
         F.transform(
-            F.sequence(F.lit(0), F.size(toks) - n),
-            lambda i: F.array_join(F.slice(toks, i + 1, n), " "),
+            F.array_repeat(toks, F.size(toks) - n + 1),
+            lambda t, i: F.array_join(F.slice(t, i + 1, n), " "),
         ),
     ).otherwise(F.array().cast("array<string>"))
 

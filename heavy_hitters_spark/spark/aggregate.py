@@ -9,13 +9,14 @@ is a plain DataFrame with checkpointable rows:
   stage 1 (partial):  mapInArrow over the input partitions; each task
       runs the one task body ``_task_fn``: it folds the (id, count)
       pairs of all its Arrow batches into one set, updates the template
-      ONCE and emits a single serialized-state row with lineage
-      (partition id, input files, row count, wall time)
+      ONCE and emits a single serialized-state row (partition id, row
+      count, wall time; with ``with_lineage``, its input files)
   stage 2 (merge):    iterative fan-in rounds — groupBy(pid % g) +
-      applyInArrow merging each group to one row — until <= fanin rows
-      remain, then a driver-side fold. This is the treeAggregate
-      pattern expressed on DataFrames so intermediate rounds are
-      inspectable and durable.
+      applyInArrow merging each group to one row — until <= FANIN rows
+      remain, then a driver-side fold; all of it one in-order fold
+      (``_fold``), for fresh and stored states alike. This is the
+      treeAggregate pattern expressed on DataFrames so intermediate
+      rounds are inspectable and durable.
 
 The builds differ only in the adapter from a batch to (id, count)
 pairs (``_id_pairs``, ``fused._token_pairs``). Every stage emits its rows
@@ -29,8 +30,9 @@ tests/test_merge_invariance.py.
 
 Scale notes (100 TB / 1000 executors):
 - one state row per input partition (~800k partitions at 128 MB splits)
-  → stage-2 round 1 reduces 800k rows to 50k groups, round 2 to ~3k,
-  round 3 to fanin; shuffle volume per round = states only, never data
+  → with FANIN = 64, stage-2 round 1 reduces 800k rows to 12,500
+  groups, round 2 to 196, round 3 to 4, which the driver folds; shuffle
+  volume per round = states only, never data
 - the input-side explode/groupBy stays in whole-stage codegen; the only
   Python is the Arrow-batched sketch kernel
 - hot-key skew is irrelevant to sketch state size (fixed) and the
@@ -41,7 +43,7 @@ from __future__ import annotations
 
 import os
 import time
-from collections.abc import Callable, Iterator
+from collections.abc import Callable, Iterable, Iterator
 
 import numpy as np
 import pyarrow as pa
@@ -61,7 +63,13 @@ from pyspark.sql.types import (
 )
 
 from ..core import base
-from ..core.base import Sketch, as_i64, collapse, merge_all, pack_state, unpack_state
+from ..core.base import Sketch, as_i64, collapse, pack_state, unpack_state
+
+# rows a fan-in round merges into one; tree_merge folds on the driver
+# once at most FANIN rows remain. 64, not 16: a build over 32 splits
+# took 1.43 s folding 32 states on the driver, 1.60 s with one round
+# (medians of 5, ROADMAP aim 2)
+FANIN = 64
 
 PARTIAL_SCHEMA = StructType(
     [
@@ -215,26 +223,31 @@ def _id_pairs(id_col: str, weight_col: str | None) -> Callable:
     return pairs
 
 
+def _fold(parts: Iterable[tuple[int, bytes]]) -> Sketch:
+    """The one merge of every path: a left fold over packed states in
+    (``part_id``, state bytes) order, each decoded only when merged."""
+    # finish, shuffle and arrival order vary run to run, and MisraGries,
+    # KLL, t-digest and conservative CountMin merges are order-sensitive;
+    # part_ids tie across the runs of a checkpoint or the micro-batches
+    # of a stream, so the state bytes break the tie
+    blobs = iter(sorted(parts))
+    acc = unpack_state(next(blobs)[1])
+    for _, blob in blobs:
+        acc = acc.merge(unpack_state(blob))
+    return acc
+
+
 def _merge_group(t: pa.Table) -> pa.Table:
     from ..core import memtune  # noqa: F401
 
     t0 = time.perf_counter()
-    # shuffle order varies run to run, and part_ids tie across the runs
-    # of a checkpoint or the micro-batches of a stream: the state bytes
-    # break the tie
-    t = t.sort_by([("part_id", "ascending"), ("state", "ascending")])
-    blobs = t.column("state").to_pylist()
-    acc = unpack_state(blobs[0])
-    for blob in blobs[1:]:
-        acc = acc.merge(unpack_state(blob))
-    files = ",".join(sorted({f for f in t.column("files").to_pylist() if f}))[:65536]
+    acc = _fold(zip(t.column("part_id").to_pylist(), t.column("state").to_pylist()))
     row = state_row(
         acc.to_bytes(),
         pc.min(t.column("part_id")).as_py(),
         pc.sum(t.column("n_rows")).as_py(),
         pc.sum(t.column("n_updates")).as_py(),
         pc.sum(t.column("wall_ms")).as_py() + (time.perf_counter() - t0) * 1000.0,
-        files,
     )
     return pa.Table.from_pylist([row], schema=PARTIAL_ARROW)
 
@@ -270,43 +283,27 @@ def windowed_partial_states(
     )
 
 
-def tree_merge(partials: DataFrame, fanin: int = 16, n_hint: int | None = None) -> tuple[Sketch, dict]:
-    """Stage 2: fan-in rounds until <= fanin rows, then a driver fold in
-    ``part_id`` order (ties broken by the state bytes), so the same
-    partials give the same state bytes whatever order the tasks finish
-    or the rows arrive in (MisraGries, KLL, t-digest and conservative
-    CountMin merges are order-sensitive).
+def tree_merge(partials: DataFrame, n_hint: int | None = None) -> tuple[Sketch, dict]:
+    """Stage 2: fan-in rounds until <= ``FANIN`` rows, then the same
+    in-order fold (``_fold``) on the driver. ``n_hint`` bounds the rows
+    (it only sets the rounds); by default, the partition count.
 
     Returns (merged sketch, aggregate metrics)."""
     cur = partials
     n = n_hint if n_hint is not None else cur.rdd.getNumPartitions()
-    while n > fanin:
-        groups = max(1, (n + fanin - 1) // fanin)
-        cur = (
-            cur.withColumn("g", F.col("part_id") % groups)
-            .groupBy("g")
-            .applyInArrow(_merge_group, PARTIAL_SCHEMA)
-        )
-        n = groups
-    rows = sorted(cur.collect(), key=lambda r: (r["part_id"], r["state"]))
+    while n > FANIN:
+        n = -(-n // FANIN)
+        cur = cur.withColumn("g", F.col("part_id") % n).groupBy("g").applyInArrow(_merge_group, PARTIAL_SCHEMA)
+    rows = cur.collect()
     if not rows:
         raise ValueError("no partial states (empty input?)")
-    acc = _driver_fold([r["state"] for r in rows])
     metrics = {
         "n_rows": sum(r["n_rows"] for r in rows),
         "n_updates": sum(r["n_updates"] for r in rows),
         "wall_ms": sum(r["wall_ms"] for r in rows),
         "n_partials": len(rows),
     }
-    return acc, metrics
-
-
-def _driver_fold(blobs: list) -> Sketch:
-    """Sequential left fold of the collected states, in the order given
-    (``tree_merge`` passes them in ``part_id`` order). A fixed fold
-    order keeps the order-sensitive merges byte-deterministic; at most
-    ``fanin`` states reach it, so it runs serially on the driver."""
-    return merge_all([unpack_state(b) for b in blobs])
+    return _fold((r["part_id"], r["state"]) for r in rows), metrics
 
 
 def build_sketch(
@@ -314,14 +311,23 @@ def build_sketch(
     template: Sketch,
     id_col: str = "id",
     weight_col: str | None = None,
-    with_lineage: bool = False,
 ) -> tuple[Sketch, dict]:
     """End-to-end: partial build + tree merge. ``df`` must already carry
     the uint32 id column (see spark.keys.key_id_col). The partial states
     come back to the driver through ``collect`` and fold in partition
     order (``tree_merge``)."""
-    partials = partial_states(df, template, id_col, weight_col, with_lineage)
-    return tree_merge(partials, n_hint=df.rdd.getNumPartitions())
+    return tree_merge(partial_states(df, template, id_col, weight_col, with_lineage=False))
+
+
+def merge_stored(spark: SparkSession, path: str, where=None) -> tuple[Sketch, dict]:
+    """Merges the state rows stored under ``path`` (a checkpoint, a
+    sink's store) that match the Column ``where``."""
+    # a writing task writes one file of at most one row per window: the
+    # file index bounds the rows without a job
+    states = spark.read.parquet(path)
+    if where is not None:
+        states = states.where(where)
+    return tree_merge(states.select(*PARTIAL_SCHEMA.fieldNames()), n_hint=len(states.inputFiles()))
 
 
 # ----------------------------------------------------------------------
@@ -344,28 +350,25 @@ def build_sketch_checkpointed(
     tests/test_spark_agg.py). ``prepare`` maps the raw file DataFrame to
     one with (id[, weight]) columns — e.g. tokenize + hash."""
     part_dir = os.path.join(checkpoint_dir, "partials")
+    hpath, conf = spark._jvm.org.apache.hadoop.fs.Path, spark._jsc.hadoopConfiguration()
     done: set[str] = set()
     # a first run has no committed partials file (no directory, or the
     # _temporary of a run killed before its commit); a read error raises:
     # an unreadable checkpoint is never recomputed and appended to
-    visible = spark._jvm.org.apache.hadoop.fs.Path(os.path.join(part_dir, "[^_.]*"))
-    if len(visible.getFileSystem(spark._jsc.hadoopConfiguration()).globStatus(visible)):
+    visible = hpath(os.path.join(part_dir, "[^_.]*"))
+    if len(visible.getFileSystem(conf).globStatus(visible)):
         for r in spark.read.parquet(part_dir).select("files").collect():
             done.update(f for f in r["files"].split(",") if f)
 
-    def norm(p: str) -> str:
-        return "file://" + os.path.abspath(p.removeprefix("file://"))
+    def qualified(p: str) -> str:  # as input_file_name() gives it: URL-encoded
+        jp = hpath(p)
+        return jp.getFileSystem(conf).makeQualified(jp).toUri().toString()
 
-    missing = [p for p in input_paths if norm(p) not in done]
+    missing = [p for p in input_paths if qualified(p) not in done]
     if missing:
-        raw = spark.read.parquet(*missing)
-        prepared = prepare(raw)
-        partials = partial_states(prepared, template, id_col, weight_col, with_lineage=True)
+        partials = partial_states(prepare(spark.read.parquet(*missing)), template, id_col, weight_col)
         partials.write.mode("append").parquet(part_dir)
-    all_partials = spark.read.parquet(part_dir)
-    # each appending task writes one file of one row: the file count is
-    # the row count, read from the file index without a job
-    sketch, metrics = tree_merge(all_partials, n_hint=len(all_partials.inputFiles()))
+    sketch, metrics = merge_stored(spark, part_dir)
     metrics["resumed_files_skipped"] = len(input_paths) - len(missing)
     metrics["files_processed_this_run"] = len(missing)
     return sketch, metrics

@@ -15,7 +15,8 @@ DOCUMENT and tokenizes in numpy and pyarrow C kernels inside the worker:
     -> the (id, count) pairs of all batches folded into one set, ONE
        weighted update_batch of the whole template at task end
        (aggregate._task_fn, the task body of every build)
-    -> one packed state row per partition
+    -> one packed state row per partition (token_partial_states, also
+       the stage 1 of streaming.token_sketch_sink)
     -> collect + left fold in partition order (aggregate.tree_merge)
 
 The ids are the same xxhash64&mask32 ids as spark.keys.key_id_col, so
@@ -32,9 +33,6 @@ from pyspark.sql import DataFrame
 
 from ..core.base import Sketch, pack_state
 from .aggregate import PARTIAL_SCHEMA, _task_fn, tree_merge
-
-# fan-in of the fused build's merge rounds (aggregate.tree_merge)
-FANIN = 64
 
 
 def _segments(text: pa.Array) -> pa.Array:
@@ -93,6 +91,12 @@ def _fused_fn(template_bytes: bytes, text_col: str):
     return _task_fn(template_bytes, _token_pairs(text_col))
 
 
+def token_partial_states(df: DataFrame, template: Sketch, text_col: str = "text") -> DataFrame:
+    """The text build's stage 1, as ``aggregate.partial_states`` is the
+    id-column builds': one packed state row per input partition."""
+    return df.select(text_col).mapInArrow(_fused_fn(pack_state(template), text_col), PARTIAL_SCHEMA)
+
+
 def build_token_sketch(
     df: DataFrame,
     template: Sketch,
@@ -103,5 +107,4 @@ def build_token_sketch(
     fraction of the JVM->Python transfer. Each task ships one packed
     state; ``tree_merge`` folds them in partition order, so the same
     input and template give byte-equal states on every run."""
-    partials = df.select(text_col).mapInArrow(_fused_fn(pack_state(template), text_col), PARTIAL_SCHEMA)
-    return tree_merge(partials, fanin=FANIN, n_hint=df.rdd.getNumPartitions())
+    return tree_merge(token_partial_states(df, template, text_col))

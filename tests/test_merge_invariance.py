@@ -121,8 +121,8 @@ def test_kll_bounds_under_merge_shapes(rng):
 
 
 def test_driver_fold_stays_in_invariance_class(rng):
-    """ADVICE r04 #2: the threaded pairwise driver fold
-    (spark.aggregate._driver_fold) replaced a sequential left fold; pin
+    """The driver fold (spark.aggregate._fold: the in-order left fold of
+    every merge path, each packed state decoded only when merged); pin
     its invariance-class claim directly. For LINEAR sketches the folded
     state must be BYTE-identical to the sequential fold. For the
     order-sensitive MisraGries, state bytes may legitimately differ
@@ -131,7 +131,7 @@ def test_driver_fold_stays_in_invariance_class(rng):
     decrement-witness recall the hybrid queries rely on), so the
     exact-rescored top-k is identical."""
     from heavy_hitters_spark.core.base import pack_state
-    from heavy_hitters_spark.spark.aggregate import _driver_fold
+    from heavy_hitters_spark.spark.aggregate import _fold
 
     data = (rng.zipf(1.2, 200000) % 10000).astype(np.uint64)
     exact = np.bincount(data.astype(np.int64), minlength=10000).astype(np.int64)
@@ -144,7 +144,7 @@ def test_driver_fold_stays_in_invariance_class(rng):
         s.update_batch(p)
         lin_states.append(s)
     blobs = [pack_state(s) for s in lin_states]
-    folded = _driver_fold(blobs)
+    folded = _fold(enumerate(blobs))
     seq = merge_all([CountMin.from_bytes(s.to_bytes()) for s in lin_states])
     assert folded.to_bytes() == seq.to_bytes()
 
@@ -155,7 +155,7 @@ def test_driver_fold_stays_in_invariance_class(rng):
         s.update_batch(p)
         mg_states.append(s)
     blobs = [pack_state(s) for s in mg_states]
-    tree = _driver_fold(blobs)
+    tree = _fold(enumerate(blobs))
     seq = merge_all([MisraGries.from_bytes(s.to_bytes()) for s in mg_states])
     k = 10
     true_top = sorted(range(10000), key=lambda i: (-exact[i], i))[:k]

@@ -162,7 +162,7 @@ def test_near_dup_groups_fallback_matches_fast_path(spark, rng, monkeypatch):
     assert (1000, 0) in fast and (2000, 0) in fast
 
 
-def test_tree_merge_folds_in_partition_order(spark):
+def test_tree_merge_folds_in_partition_order(spark, monkeypatch):
     """tree_merge must fold the collected partials in part_id order,
     whatever order they arrive in, so order-sensitive states come out
     deterministic. MisraGries(k=4) rows in a scrambled part_id order
@@ -171,6 +171,7 @@ def test_tree_merge_folds_in_partition_order(spark):
 
     from heavy_hitters_spark.core import MisraGries
     from heavy_hitters_spark.core.base import pack_state, unpack_state
+    from heavy_hitters_spark.spark import aggregate
     from heavy_hitters_spark.spark.aggregate import PARTIAL_SCHEMA, tree_merge
 
     rng = np.random.default_rng(3)
@@ -191,13 +192,15 @@ def test_tree_merge_folds_in_partition_order(spark):
     rows = [(p, blobs[p], 400, 400, 0.0, 0, "") for p in order]
     partials = spark.createDataFrame(rows, PARTIAL_SCHEMA)
     assert [r["part_id"] for r in partials.collect()] == order
-    got, m = tree_merge(partials, fanin=16, n_hint=len(order))
+    monkeypatch.setattr(aggregate, "FANIN", 16)
+    got, m = tree_merge(partials, n_hint=len(order))
     assert m["n_partials"] == 6
     assert got.to_bytes() == ref.to_bytes()
 
     # one fan-in round (groups part_id % 2) folds each group in part_id
     # order too: (p0 p2 p4) then (p1 p3 p5)
     ref2 = fold([0, 2, 4]).merge(fold([1, 3, 5]))
-    got2, m2 = tree_merge(partials, fanin=3, n_hint=len(order))
+    monkeypatch.setattr(aggregate, "FANIN", 3)
+    got2, m2 = tree_merge(partials, n_hint=len(order))
     assert m2["n_partials"] == 2
     assert got2.to_bytes() == ref2.to_bytes()

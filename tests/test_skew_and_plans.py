@@ -112,6 +112,45 @@ def test_shingle_hashing_is_jvm_side(spark):
         assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
 
 
+def _lambda_bodies(plan: str) -> list[str]:
+    """The text of every ``lambdafunction(...)`` in a plan string."""
+    out, start = [], plan.find("lambdafunction(")
+    while start >= 0:
+        depth, i = 0, start + len("lambdafunction")
+        while True:
+            depth += {"(": 1, ")": -1}.get(plan[i], 0)
+            i += 1
+            if depth == 0:
+                break
+        out.append(plan[start:i])
+        start = plan.find("lambdafunction(", start + 1)
+    return out
+
+
+def test_shingle_split_runs_once_per_document(spark):
+    """Every shingle site splits a document once: no ``split`` under a
+    lambda function in the optimized plan (a split inside the shingle
+    ``transform`` re-runs per shingle, quadratic in the token count)."""
+    from heavy_hitters_spark.functions.dedup import (
+        _doc_shingle_hashes,
+        jaccard_pairs,
+        shingle_hashes_col,
+        shingles_df,
+    )
+
+    docs = spark.read.parquet(f"{SF}/documents.parquet")
+    for df in (
+        shingles_df(docs),
+        _doc_shingle_hashes(docs, 3, "text", "doc_id"),
+        jaccard_pairs(docs, threshold=0.5),
+        docs.select(shingle_hashes_col("text").alias("h")),
+    ):
+        plan = df._jdf.queryExecution().optimizedPlan().toString()
+        bodies = _lambda_bodies(plan)
+        assert "split(" in plan and bodies
+        assert not [b for b in bodies if "split(" in b]
+
+
 def test_minhash_verify_has_no_shingle_self_join(spark):
     """near_dup_pairs_minhash verification joins per-doc shingle ARRAYS
     on doc ids (narrow) — the plan must not contain a join keyed on the

@@ -48,11 +48,14 @@ def test_distributed_equals_bulk(spark, ids_df):
         assert metrics["n_rows"] == bulk.norm
 
 
-def test_tree_merge_multiple_rounds(spark, ids_df):
-    """fanin=2 over 32 partitions forces several merge rounds."""
+def test_tree_merge_multiple_rounds(spark, ids_df, monkeypatch):
+    """FANIN=2 over 32 partitions forces several merge rounds."""
+    from heavy_hitters_spark.spark import aggregate
+
+    monkeypatch.setattr(aggregate, "FANIN", 2)
     bulk = _bulk_cm(ids_df)
     partials = partial_states(ids_df.repartition(32), _tmpl(), id_col="id")
-    sk, metrics = tree_merge(partials, fanin=2, n_hint=32)
+    sk, metrics = tree_merge(partials, n_hint=32)
     assert np.array_equal(sk.table, bulk.table)
     assert metrics["n_partials"] <= 2
 
@@ -168,6 +171,26 @@ def test_checkpoint_after_uncommitted_first_run(spark, tmp_path):
     assert m["files_processed_this_run"] == 1
     fresh, _ = build_sketch(_prepare(spark.read.parquet(files[0])), _tmpl(), id_col="id")
     assert np.array_equal(sk.table, fresh.table)
+
+
+def test_checkpoint_resume_path_with_space(spark, tmp_path):
+    """A file whose path is not already a canonical URI (here: spaces,
+    which ``input_file_name()`` URL-encodes) is recognized as done on
+    the rerun: processed once, counted once."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    d = tmp_path / "ck test dir"
+    d.mkdir()
+    path = str(d / "docs a.parquet")
+    pq.write_table(pa.table({"text": [f"w{i % 7} w{i % 11}" for i in range(300)]}), path)
+    ck = str(d / "ck")
+    sk1, m1 = build_sketch_checkpointed(spark, [path], _tmpl(), _prepare, checkpoint_dir=ck, id_col="id")
+    sk2, m2 = build_sketch_checkpointed(spark, [path], _tmpl(), _prepare, checkpoint_dir=ck, id_col="id")
+    assert (m1["files_processed_this_run"], m2["files_processed_this_run"]) == (1, 0)
+    assert m2["resumed_files_skipped"] == 1
+    assert sk1.norm == sk2.norm == 600
+    assert sk2.to_bytes() == sk1.to_bytes()
 
 
 def test_checkpoint_unreadable_raises(spark, tmp_path):
