@@ -45,7 +45,7 @@ from pyspark.sql import functions as F
 
 from .core import HLL, KLL, CountMin, CountSketch, MisraGries, SeedStream, TDigest
 from .hh import DyadicHH
-from .spark import build_sketch, key_id, key_id_col, tokens
+from .spark import build_sketch, hosts, key_id, key_id_col, tokens
 from .spark.fused import build_token_sketch
 from .spark.keys import MASK32
 
@@ -236,9 +236,7 @@ def topk_hosts(spark: SparkSession, sf_dir: str, k: int = 10, kc: int = 4096) ->
     """Exact top-k hosts (parse_url(url,'HOST') — JVM-side) via MG
     candidates + exact rescoring; the reference's whole NUST/DARPA input
     path is per-host/IP heavy hitters (precision_hh.c:543,597)."""
-    hosts_df = _docs_urls(spark, sf_dir).select(
-        F.parse_url(F.col("url"), F.lit("HOST")).alias("host")
-    ).withColumn("id", key_id_col("host"))
+    hosts_df = hosts(_docs_urls(spark, sf_dir)).withColumn("id", key_id_col("host"))
     mg, _ = build_sketch(hosts_df, MisraGries(k=kc), id_col="id")
     return _mg_exact_topk(hosts_df, mg, "host", k)
 

@@ -1,10 +1,5 @@
-from .aggregate import (
-    build_sketch,
-    build_sketch_checkpointed,
-    build_sketch_treeaggregate,
-    partial_states,
-    tree_merge,
-)
+from .aggregate import build_sketch, build_sketch_treeaggregate, partial_states, tree_merge
+from .fused import build_sketch_checkpointed
 from .keys import hosts, key_id, key_id_col, tokens, xxh64
 from .session import get_spark
 

@@ -10,7 +10,8 @@ is a plain DataFrame with checkpointable rows:
       runs the one task body ``_task_fn``: it folds the (id, count)
       pairs of all its Arrow batches into one set, updates the template
       ONCE and emits a single serialized-state row (partition id, row
-      count, wall time; with ``with_lineage``, its input files)
+      count, wall time; the input files it read when its batches carry
+      a ``__file`` column, as the checkpointed build's do)
   stage 2 (merge):    iterative fan-in rounds — groupBy(pid % g) +
       applyInArrow merging each group to one row — until <= FANIN rows
       remain, then a driver-side fold; all of it one in-order fold
@@ -257,12 +258,10 @@ def partial_states(
     template: Sketch,
     id_col: str = "id",
     weight_col: str | None = None,
-    with_lineage: bool = True,
 ) -> DataFrame:
     """Stage 1: one serialized sketch-state row per input partition."""
     cols = [id_col] + ([weight_col] if weight_col else [])
-    sel = df.select(*cols, F.input_file_name().alias("__file")) if with_lineage else df.select(*cols)
-    return sel.mapInArrow(_task_fn(pack_state(template), _id_pairs(id_col, weight_col)), PARTIAL_SCHEMA)
+    return df.select(*cols).mapInArrow(_task_fn(pack_state(template), _id_pairs(id_col, weight_col)), PARTIAL_SCHEMA)
 
 
 def windowed_partial_states(
@@ -316,7 +315,7 @@ def build_sketch(
     the uint32 id column (see spark.keys.key_id_col). The partial states
     come back to the driver through ``collect`` and fold in partition
     order (``tree_merge``)."""
-    return tree_merge(partial_states(df, template, id_col, weight_col, with_lineage=False))
+    return tree_merge(partial_states(df, template, id_col, weight_col))
 
 
 def merge_stored(spark: SparkSession, path: str, where=None) -> tuple[Sketch, dict]:
@@ -328,50 +327,6 @@ def merge_stored(spark: SparkSession, path: str, where=None) -> tuple[Sketch, di
     if where is not None:
         states = states.where(where)
     return tree_merge(states.select(*PARTIAL_SCHEMA.fieldNames()), n_hint=len(states.inputFiles()))
-
-
-# ----------------------------------------------------------------------
-# Checkpointed, file-granular build with per-partition lineage + resume.
-# ----------------------------------------------------------------------
-
-
-def build_sketch_checkpointed(
-    spark: SparkSession,
-    input_paths: list[str],
-    template: Sketch,
-    prepare: Callable[[DataFrame], DataFrame],
-    checkpoint_dir: str,
-    id_col: str = "id",
-    weight_col: str | None = None,
-) -> tuple[Sketch, dict]:
-    """Resumable build: lineage is the input FILE set. Completed files'
-    partial states are durable parquet under ``checkpoint_dir``; a rerun
-    processes only files with no state rows yet (kill-and-rerun test:
-    tests/test_spark_agg.py). ``prepare`` maps the raw file DataFrame to
-    one with (id[, weight]) columns — e.g. tokenize + hash."""
-    part_dir = os.path.join(checkpoint_dir, "partials")
-    hpath, conf = spark._jvm.org.apache.hadoop.fs.Path, spark._jsc.hadoopConfiguration()
-    done: set[str] = set()
-    # a first run has no committed partials file (no directory, or the
-    # _temporary of a run killed before its commit); a read error raises:
-    # an unreadable checkpoint is never recomputed and appended to
-    visible = hpath(os.path.join(part_dir, "[^_.]*"))
-    if len(visible.getFileSystem(conf).globStatus(visible)):
-        for r in spark.read.parquet(part_dir).select("files").collect():
-            done.update(f for f in r["files"].split(",") if f)
-
-    def qualified(p: str) -> str:  # as input_file_name() gives it: URL-encoded
-        jp = hpath(p)
-        return jp.getFileSystem(conf).makeQualified(jp).toUri().toString()
-
-    missing = [p for p in input_paths if qualified(p) not in done]
-    if missing:
-        partials = partial_states(prepare(spark.read.parquet(*missing)), template, id_col, weight_col)
-        partials.write.mode("append").parquet(part_dir)
-    sketch, metrics = merge_stored(spark, part_dir)
-    metrics["resumed_files_skipped"] = len(input_paths) - len(missing)
-    metrics["files_processed_this_run"] = len(missing)
-    return sketch, metrics
 
 
 # ----------------------------------------------------------------------

@@ -19,6 +19,10 @@ DOCUMENT and tokenizes in numpy and pyarrow C kernels inside the worker:
        the stage 1 of streaming.token_sketch_sink)
     -> collect + left fold in partition order (aggregate.tree_merge)
 
+The checkpointed build (``build_sketch_checkpointed``) is this build
+with its lineage read at the scan: no Python operator stands between
+the file reader and ``input_file_name()``, so each row names its files.
+
 The ids are the same xxhash64&mask32 ids as spark.keys.key_id_col, so
 fused-built sketches are interchangeable with explode-built ones
 (asserted in tests/test_fused.py).
@@ -26,13 +30,16 @@ fused-built sketches are interchangeable with explode-built ones
 
 from __future__ import annotations
 
+import os
+
 import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from ..core.base import Sketch, pack_state
-from .aggregate import PARTIAL_SCHEMA, _task_fn, tree_merge
+from .aggregate import PARTIAL_SCHEMA, _task_fn, merge_stored, tree_merge
 
 
 def _segments(text: pa.Array) -> pa.Array:
@@ -97,14 +104,63 @@ def token_partial_states(df: DataFrame, template: Sketch, text_col: str = "text"
     return df.select(text_col).mapInArrow(_fused_fn(pack_state(template), text_col), PARTIAL_SCHEMA)
 
 
-def build_token_sketch(
-    df: DataFrame,
-    template: Sketch,
-    text_col: str = "text",
-) -> tuple[Sketch, dict]:
+def build_token_sketch(df: DataFrame, template: Sketch, text_col: str = "text") -> tuple[Sketch, dict]:
     """One-pass fused build over a text column; returns (sketch, metrics).
     Equivalent result to tokens(df) -> key_id_col -> build_sketch, at a
     fraction of the JVM->Python transfer. Each task ships one packed
     state; ``tree_merge`` folds them in partition order, so the same
     input and template give byte-equal states on every run."""
     return tree_merge(token_partial_states(df, template, text_col))
+
+
+# ----------------------------------------------------------------------
+# Checkpointed, file-granular build with per-partition lineage + resume.
+# ----------------------------------------------------------------------
+
+
+def _file_uris(spark: SparkSession, paths: list[str]) -> dict[str, str]:
+    """Each input file once, keyed by the URI ``input_file_name()`` gives
+    it (``/a b/c``, ``file:/a b/c`` and ``file:///a b/c`` all give
+    ``file:///a%20b/c``), valued by its first spelling. A directory, a
+    missing path or a ``,`` (it joins a row's files) raises ``ValueError``."""
+    hpath, conf = spark._jvm.org.apache.hadoop.fs.Path, spark._jsc.hadoopConfiguration()
+    uris: dict[str, str] = {}
+    for p in paths:
+        jp = hpath(p)
+        fs = jp.getFileSystem(conf)
+        st = fs.getFileStatus(jp) if fs.exists(jp) else None
+        if st is None or st.isDirectory():
+            raise ValueError(f"a checkpointed build input must be an existing file: {p!r}")
+        uri = st.getPath().toUri().toString()
+        if "," in uri:
+            raise ValueError(f"a checkpointed build input path must not contain ',': {p!r}")
+        uris.setdefault(uri, p)
+    return uris
+
+
+def build_sketch_checkpointed(
+    spark: SparkSession, input_paths: list[str], template: Sketch, checkpoint_dir: str, text_col: str = "text"
+) -> tuple[Sketch, dict]:
+    """Resumable fused text build over parquet files, lineage the input
+    FILE set: each task's state row and the files it read are appended
+    under ``checkpoint_dir``; a rerun processes only the files no stored
+    row names, then merges every stored row (``aggregate.merge_stored``)."""
+    files = _file_uris(spark, input_paths)
+    part_dir = os.path.join(checkpoint_dir, "partials")
+    visible = spark._jvm.org.apache.hadoop.fs.Path(os.path.join(part_dir, "[^_.]*"))
+    done: set[str] = set()
+    # a first run has no committed partials file (no directory, or the
+    # _temporary of a run killed before its commit); a read error raises:
+    # an unreadable checkpoint is never recomputed and appended to
+    if len(visible.getFileSystem(spark._jsc.hadoopConfiguration()).globStatus(visible)):
+        for r in spark.read.parquet(part_dir).select("files").collect():
+            done.update(r["files"].split(","))
+    missing = [p for uri, p in files.items() if uri not in done]
+    if missing:
+        scan = spark.read.parquet(*missing).select(text_col, F.input_file_name().alias("__file"))
+        fn = _fused_fn(pack_state(template), text_col)
+        scan.mapInArrow(fn, PARTIAL_SCHEMA).write.mode("append").parquet(part_dir)
+    sketch, metrics = merge_stored(spark, part_dir)
+    metrics["resumed_files_skipped"] = len(files) - len(missing)
+    metrics["files_processed_this_run"] = len(missing)
+    return sketch, metrics

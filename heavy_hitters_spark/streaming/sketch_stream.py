@@ -74,8 +74,7 @@ def sketch_sink(
     into sketch states and stops. Returns the StreamingQuery; await it,
     then read the merged sketch with ``merged_sketch(spark, state_dir)``."""
     return _start_sink(
-        stream_df, state_dir, checkpoint_dir,
-        lambda b: partial_states(b, template, id_col, weight_col, with_lineage=False),
+        stream_df, state_dir, checkpoint_dir, lambda b: partial_states(b, template, id_col, weight_col)
     )
 
 
@@ -94,9 +93,7 @@ def token_sketch_sink(
     (see ``queries._docs``). Same drain-and-stop, durable-state contract
     as ``sketch_sink``: one partial-state row per partition, idempotent
     batch_id-partitioned overwrite, merge with ``merged_sketch``."""
-    return _start_sink(
-        stream_df, state_dir, checkpoint_dir, lambda b: token_partial_states(b, template, text_col)
-    )
+    return _start_sink(stream_df, state_dir, checkpoint_dir, lambda b: token_partial_states(b, template, text_col))
 
 
 def windowed_sketch_sink(

@@ -1,8 +1,10 @@
 """A retried task gives the same state bytes: on a ``local[2,2]``
 master (two slots, a task may fail once), partition 0 of every build
-raises on its first attempt after it has read all its rows. The fused
+raises on its first attempt after it has read its rows. The fused
 build, an id-column build and a checkpointed append must each give the
-bytes of a clean run, and the checkpoint must hold one row per task."""
+bytes of a clean run, and the checkpoint must hold one row per task,
+each naming the files its task read (three files packed into two
+tasks)."""
 
 import json
 import os
@@ -21,6 +23,7 @@ SCRIPT = textwrap.dedent(
     from heavy_hitters_spark.core import KLL, CountMin, MisraGries, SeedStream
     from heavy_hitters_spark.core.multi import MultiSketch
     from heavy_hitters_spark.spark import build_sketch, build_sketch_checkpointed, get_spark, key_id_col, tokens
+    from heavy_hitters_spark.spark import fused as fused_module
     from heavy_hitters_spark.spark.fused import build_token_sketch
 
     tmp = sys.argv[1]
@@ -34,16 +37,33 @@ SCRIPT = textwrap.dedent(
             "kll": KLL(k=16, seed=7),
         })
 
+    def fail_first_attempt(tag):
+        # partition 0 raises on its first attempt
+        ctx = TaskContext.get()
+        if tag and ctx.partitionId() == 0 and ctx.attemptNumber() == 0:
+            open(os.path.join(marks, f"{tag}_{ctx.stageId()}"), "w").close()
+            raise RuntimeError("first attempt of partition 0 fails")
+
     def flaky(df, tag):
-        # a pass-through of the rows; partition 0 raises at the end of
-        # its first attempt, once the build task has read every row
+        # a pass-through of the rows that fails once the build task has read every row
         def fn(batches):
             yield from batches
-            ctx = TaskContext.get()
-            if tag and ctx.partitionId() == 0 and ctx.attemptNumber() == 0:
-                open(os.path.join(marks, f"{tag}_{ctx.stageId()}"), "w").close()
-                raise RuntimeError("first attempt of partition 0 fails")
+            fail_first_attempt(tag)
         return df.mapInArrow(fn, df.schema)
+
+    token_pairs = fused_module._token_pairs
+
+    def flaky_token_pairs(tag):
+        # the checkpointed build's adapter, pickled with the task: it
+        # fails once it has read and counted the task's rows
+        def make(text_col):
+            inner = token_pairs(text_col)
+            def pairs(batch):
+                out = inner(batch)
+                fail_first_attempt(tag)
+                return out
+            return pairs
+        return make
 
     paths = []
     for f in range(3):
@@ -53,9 +73,6 @@ SCRIPT = textwrap.dedent(
 
     spark = get_spark("local[2,2]")
     spark.sparkContext.setLogLevel("FATAL")
-    # one file per task: input_file_name() above a Python operator
-    # (the pass-through below) names only a task's current file
-    spark.conf.set("spark.sql.files.openCostInBytes", str(1 << 30))
     out = {}
     try:
         docs = spark.read.parquet(*paths)
@@ -64,8 +81,11 @@ SCRIPT = textwrap.dedent(
             fused, _ = build_token_sketch(flaky(docs, tag and tag + "_fused"), template())
             by_id, _ = build_sketch(flaky(ids, tag and tag + "_ids"), template(), id_col="id")
             ck = os.path.join(tmp, "ck_" + (tag or "clean"))
-            prepare = lambda df: flaky(tokens(df).withColumn("id", key_id_col("token")), tag and tag + "_ck")
-            ckpt, m = build_sketch_checkpointed(spark, paths, template(), prepare, ck, id_col="id")
+            fused_module._token_pairs = flaky_token_pairs(tag and tag + "_ck")
+            try:
+                ckpt, m = build_sketch_checkpointed(spark, paths, template(), ck)
+            finally:
+                fused_module._token_pairs = token_pairs
             rows = spark.read.parquet(os.path.join(ck, "partials")).collect()
             out[tag or "clean"] = {
                 "fused": fused.to_bytes().hex(),
@@ -98,8 +118,9 @@ def test_retried_task_gives_same_bytes(tmp_path):
     clean, failed = out["clean"], out["fail"]
     for key in ("fused", "ids", "ckpt"):
         assert failed[key] == clean[key], key
-    # one committed row per task (file): the failed attempt left none
+    # one committed row per task: the failed attempt left none; Spark
+    # packs the three small files into two tasks
     assert failed["ckpt_files"] == clean["ckpt_files"] == 3
     assert failed["ckpt_rows"] == clean["ckpt_rows"]
-    assert len(failed["ckpt_rows"]) == failed["tasks"] == 3
+    assert len(failed["ckpt_rows"]) == failed["tasks"] == 2
     assert sorted(f for _, fs in failed["ckpt_rows"] for f in fs) == [f"docs{i}.parquet" for i in range(3)]

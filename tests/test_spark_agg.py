@@ -20,6 +20,7 @@ from heavy_hitters_spark.spark import (
     tokens,
     tree_merge,
 )
+from heavy_hitters_spark.spark.fused import build_token_sketch
 
 
 @pytest.fixture(scope="module")
@@ -98,11 +99,11 @@ def test_weighted_build_kll(spark):
         assert lo - 0.02 <= q <= hi + 0.02, (q, v)
 
 
-def test_lineage_and_metrics(spark):
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    ids = tokens(docs).withColumn("id", key_id_col("token"))
-    partials = partial_states(ids, _tmpl(), id_col="id", with_lineage=True)
-    rows = partials.collect()
+def test_lineage_and_metrics(spark, tmp_path):
+    """The checkpoint's stored rows carry each task's lineage + metrics."""
+    ck = str(tmp_path / "ck")
+    build_sketch_checkpointed(spark, ["/root/testdata/sf0.001/documents.parquet"], _tmpl(), ck)
+    rows = spark.read.parquet(os.path.join(ck, "partials")).collect()
     assert all(r["n_rows"] >= 0 and r["wall_ms"] >= 0 and r["state_bytes"] > 0 for r in rows)
     assert any("documents.parquet" in (r["files"] or "") for r in rows)
     assert len({r["part_id"] for r in rows}) == len(rows)
@@ -119,12 +120,9 @@ def test_checkpoint_resume(spark, tmp_path, monkeypatch):
     assert files[0] in src
     ck = str(tmp_path / "ck")
 
-    def prepare(df):
-        return tokens(df).withColumn("id", key_id_col("token"))
-
-    # full fresh build (no checkpoint)
+    # full fresh build (no checkpoint), through the explode path
     docs = spark.read.parquet(files[0])
-    fresh, _ = build_sketch(prepare(docs), _tmpl(), id_col="id")
+    fresh, _ = build_sketch(_token_ids(docs), _tmpl(), id_col="id")
 
     def no_count(self):
         raise AssertionError("a count job before the merge")
@@ -133,14 +131,10 @@ def test_checkpoint_resume(spark, tmp_path, monkeypatch):
 
     # run 1: pretend we only got through half the file list -> here the
     # unit is files, so simulate with an empty done-state then resume
-    sk1, m1 = build_sketch_checkpointed(
-        spark, files, _tmpl(), prepare, checkpoint_dir=ck, id_col="id"
-    )
+    sk1, m1 = build_sketch_checkpointed(spark, files, _tmpl(), checkpoint_dir=ck)
     assert m1["files_processed_this_run"] == 1
     # run 2: resume — nothing left to process, same result
-    sk2, m2 = build_sketch_checkpointed(
-        spark, files, _tmpl(), prepare, checkpoint_dir=ck, id_col="id"
-    )
+    sk2, m2 = build_sketch_checkpointed(spark, files, _tmpl(), checkpoint_dir=ck)
     assert m2["files_processed_this_run"] == 0
     assert m2["resumed_files_skipped"] == 1
     assert np.array_equal(sk1.table, fresh.table)
@@ -157,7 +151,8 @@ def _docs_file(tmp_path) -> str:
     return path
 
 
-def _prepare(df):
+def _token_ids(df):
+    """The explode-path ids of a text DataFrame, for a reference build."""
     return tokens(df).withColumn("id", key_id_col("token"))
 
 
@@ -167,16 +162,18 @@ def test_checkpoint_after_uncommitted_first_run(spark, tmp_path):
     files = [_docs_file(tmp_path)]
     ck = tmp_path / "ck"
     (ck / "partials" / "_temporary" / "0").mkdir(parents=True)
-    sk, m = build_sketch_checkpointed(spark, files, _tmpl(), _prepare, checkpoint_dir=str(ck), id_col="id")
+    sk, m = build_sketch_checkpointed(spark, files, _tmpl(), checkpoint_dir=str(ck))
     assert m["files_processed_this_run"] == 1
-    fresh, _ = build_sketch(_prepare(spark.read.parquet(files[0])), _tmpl(), id_col="id")
+    fresh, _ = build_sketch(_token_ids(spark.read.parquet(files[0])), _tmpl(), id_col="id")
     assert np.array_equal(sk.table, fresh.table)
 
 
 def test_checkpoint_resume_path_with_space(spark, tmp_path):
     """A file whose path is not already a canonical URI (here: spaces,
     which ``input_file_name()`` URL-encodes) is recognized as done on
-    the rerun: processed once, counted once."""
+    the rerun in every spelling of it (``/abs``, Hadoop's ``file:/abs``,
+    ``file:///abs``, and each run given another): processed once,
+    counted once."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -184,13 +181,80 @@ def test_checkpoint_resume_path_with_space(spark, tmp_path):
     d.mkdir()
     path = str(d / "docs a.parquet")
     pq.write_table(pa.table({"text": [f"w{i % 7} w{i % 11}" for i in range(300)]}), path)
+    spellings = [path, "file:" + path, "file://" + path]
+    for i, spelling in enumerate(spellings):
+        ck = str(d / f"ck {i}")
+        sk1, m1 = build_sketch_checkpointed(spark, [spelling], _tmpl(), checkpoint_dir=ck)
+        sk2, m2 = build_sketch_checkpointed(spark, [spelling], _tmpl(), checkpoint_dir=ck)
+        assert (m1["files_processed_this_run"], m2["files_processed_this_run"]) == (1, 0), spelling
+        assert m2["resumed_files_skipped"] == 1
+        assert sk1.norm == sk2.norm == 600
+        assert sk2.to_bytes() == sk1.to_bytes()
+    # all three spellings in one input list name one file
+    sk, m = build_sketch_checkpointed(spark, spellings, _tmpl(), checkpoint_dir=str(d / "ck all"))
+    assert (m["files_processed_this_run"], m["resumed_files_skipped"]) == (1, 0)
+    assert sk.to_bytes() == sk1.to_bytes()
+
+
+def test_checkpoint_rejects_directory_and_missing_inputs(spark, tmp_path):
+    """The lineage is a set of files: a directory input (whose files no
+    stored row would ever name), a missing one, or one with a ``,`` in
+    its path (the separator of a row's stored files, so a rerun would
+    never find it done) raises ``ValueError`` before any job runs, and
+    writes no checkpoint."""
+    path = _docs_file(tmp_path)
+    comma = str(tmp_path / "a,b.parquet")
+    os.link(path, comma)
+    ck = tmp_path / "ck"
+    sc = spark.sparkContext
+    sc.setJobGroup("checkpoint_rejects", "checkpoint_rejects")
+    try:
+        for bad in (str(tmp_path), str(tmp_path / "missing.parquet"), comma):
+            with pytest.raises(ValueError):
+                build_sketch_checkpointed(spark, [path, bad], _tmpl(), checkpoint_dir=str(ck))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup("checkpoint_rejects")) == []
+    assert not ck.exists()
+
+
+def test_checkpoint_lineage_multi_file_tasks(spark, tmp_path):
+    """Three small files read as two tasks (Spark packs small files into
+    one split): each stored row names exactly the files its task read,
+    a rerun processes none, and the merged state bytes equal a fresh
+    ``build_token_sketch`` over the same files."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from heavy_hitters_spark.core import KLL, MisraGries, MultiSketch
+
+    def tmpl():
+        return MultiSketch({"cm": _tmpl(), "mg": MisraGries(k=8), "kll": KLL(k=16, seed=7)})
+
+    d = tmp_path / "ck test dir"
+    d.mkdir()
+    n_rows = {f"docs{f}.parquet": 100 << f for f in range(3)}  # every subset has its own sum
+    files = []
+    for name, n in n_rows.items():
+        files.append(str(d / name))
+        pq.write_table(pa.table({"text": [f"w{i % 7} w{i % 11} {name[:5]}" for i in range(n)]}), files[-1])
     ck = str(d / "ck")
-    sk1, m1 = build_sketch_checkpointed(spark, [path], _tmpl(), _prepare, checkpoint_dir=ck, id_col="id")
-    sk2, m2 = build_sketch_checkpointed(spark, [path], _tmpl(), _prepare, checkpoint_dir=ck, id_col="id")
-    assert (m1["files_processed_this_run"], m2["files_processed_this_run"]) == (1, 0)
-    assert m2["resumed_files_skipped"] == 1
-    assert sk1.norm == sk2.norm == 600
-    assert sk2.to_bytes() == sk1.to_bytes()
+    spark.conf.set("spark.sql.files.minPartitionNum", "2")
+    try:
+        assert spark.read.parquet(*files).rdd.getNumPartitions() == 2
+        sk1, m1 = build_sketch_checkpointed(spark, files, tmpl(), checkpoint_dir=ck)
+        sk2, m2 = build_sketch_checkpointed(spark, files, tmpl(), checkpoint_dir=ck)
+        fresh, _ = build_token_sketch(spark.read.parquet(*files), tmpl())
+    finally:
+        spark.conf.unset("spark.sql.files.minPartitionNum")
+    rows = spark.read.parquet(os.path.join(ck, "partials")).collect()
+    assert len(rows) == 2
+    named = [[f.rsplit("/", 1)[-1] for f in r["files"].split(",")] for r in rows]
+    assert sorted(f for fs in named for f in fs) == sorted(n_rows)
+    for r, fs in zip(rows, named):
+        assert r["n_rows"] == sum(n_rows[f] for f in fs), (r["n_rows"], fs)
+    assert (m1["files_processed_this_run"], m2["files_processed_this_run"]) == (3, 0)
+    assert sk1.to_bytes() == sk2.to_bytes() == fresh.to_bytes()
 
 
 def test_checkpoint_unreadable_raises(spark, tmp_path):
@@ -200,7 +264,7 @@ def test_checkpoint_unreadable_raises(spark, tmp_path):
     states."""
     files = [_docs_file(tmp_path)]
     ck = str(tmp_path / "ck")
-    build_sketch_checkpointed(spark, files, _tmpl(), _prepare, checkpoint_dir=ck, id_col="id")
+    build_sketch_checkpointed(spark, files, _tmpl(), checkpoint_dir=ck)
     part_dir = os.path.join(ck, "partials")
     data = sorted(glob.glob(os.path.join(part_dir, "*.parquet")))
     assert data
@@ -208,7 +272,7 @@ def test_checkpoint_unreadable_raises(spark, tmp_path):
         f.write(b"not a parquet file")
     before = sorted(os.listdir(part_dir))
     with pytest.raises(Exception):
-        build_sketch_checkpointed(spark, files, _tmpl(), _prepare, checkpoint_dir=ck, id_col="id")
+        build_sketch_checkpointed(spark, files, _tmpl(), checkpoint_dir=ck)
     assert sorted(os.listdir(part_dir)) == before
 
 
